@@ -22,7 +22,7 @@ object Graft {
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
-    graft.functions.Udfs.registerAll(s)
+    graft.functions.Catalog.register(s)
     s
   }
 }

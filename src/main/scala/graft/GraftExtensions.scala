@@ -2,19 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions hook: injects the engine's native expressions so
-  * any session built with
+/** SparkSessionExtensions hook: any session built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) gets them without calling
-  * [[graft.functions.Udfs.registerAll]] — the deployment-grade
-  * registration path for a shared cluster.
+  * `.withExtensions(new GraftExtensions)`) gets the engine's planner and
+  * optimizer rules and every SQL function of
+  * [[graft.functions.Catalog]] — the deployment-grade registration path
+  * for a shared cluster. Sessions built without it get the same
+  * functions from [[graft.functions.Catalog.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
 
   override def apply(e: SparkSessionExtensions): Unit = {
     // analysis-phase guardrail (opt-in via spark.graft.guard.noCartesian)
@@ -24,69 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.AsOfJoinRules.PushFilterThroughAsOfJoin)
     e.injectOptimizerRule(_ => graft.plans.AsOfJoinRules.PruneAsOfJoinRight)
-    e.injectFunction((
-      FunctionIdentifier("lap_time_millis"),
-      info("lap_time_millis", "lap_time_millis(ms BIGINT) - millis to MM:SS.mmm"),
-      (exprs: Seq[Expression]) => graft.functions.LapTimeMillis(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("dot_arr"),
-      info("dot_arr", "dot_arr(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) - dot product"),
-      (exprs: Seq[Expression]) => graft.functions.DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("jaccard_sorted"),
-      info("jaccard_sorted", "jaccard_sorted(a, b) - jaccard of sorted distinct arrays"),
-      (exprs: Seq[Expression]) => graft.functions.JaccardSorted(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      info("graft_shingles", "graft_shingles(toks ARRAY<STRING>, n INT) - distinct sorted n-shingles"),
-      (exprs: Seq[Expression]) => graft.functions.Shingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash_min"),
-      info("rolling_hash_min", "rolling_hash_min(s STRING, k INT) - min Karp-Rabin k-window hash"),
-      (exprs: Seq[Expression]) => graft.functions.RollingHashMin(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "shingle_hashes(toks ARRAY<STRING>, n INT) - sorted distinct xxhash64 of n-shingles"),
-      (exprs: Seq[Expression]) => graft.functions.ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("minhash_signature"),
-      info("minhash_signature", "minhash_signature(sh ARRAY<BIGINT>, k INT) - k Carter-Wegman min-hashes"),
-      (exprs: Seq[Expression]) => graft.functions.MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("srp_bands"),
-      info("srp_bands", "srp_bands(v ARRAY<DOUBLE>, bands INT, bits INT) - band-tagged hyperplane LSH codes"),
-      (exprs: Seq[Expression]) => graft.functions.SrpBands(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("simhash_signature"),
-      info("simhash_signature", "simhash_signature(toks ARRAY<STRING>) - 64-bit simhash"),
-      (exprs: Seq[Expression]) => graft.functions.SimhashSignature(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("kll_sketch_agg"),
-      info("kll_sketch_agg", "kll_sketch_agg(v BIGINT[, k INT]) - mergeable KLL quantile sketch"),
-      (exprs: Seq[Expression]) => graft.functions.KllSketchAgg(exprs(0),
-        graft.functions.KllSketch.kArg(exprs))))
-    e.injectFunction((
-      FunctionIdentifier("kll_merge_agg"),
-      info("kll_merge_agg", "kll_merge_agg(sk BINARY[, k INT]) - union stored KLL sketches"),
-      (exprs: Seq[Expression]) => graft.functions.KllMergeAgg(exprs(0),
-        graft.functions.KllSketch.kArg(exprs))))
-    e.injectFunction((
-      FunctionIdentifier("kll_sketch_quantile"),
-      info("kll_sketch_quantile", "kll_sketch_quantile(sk BINARY, q DOUBLE) - inclusive quantile"),
-      (exprs: Seq[Expression]) => graft.functions.KllSketchQuantile(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("countmin_agg"),
-      info("countmin_agg", "countmin_agg(tok STRING) - 4x256 Count-Min counter plane (md5-window hashes)"),
-      (exprs: Seq[Expression]) => graft.functions.CountMinAgg(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("countmin_merge_agg"),
-      info("countmin_merge_agg", "countmin_merge_agg(cells ARRAY<BIGINT>) - union stored Count-Min planes"),
-      (exprs: Seq[Expression]) => graft.functions.CountMinMergeAgg(exprs.head)))
+    graft.functions.Catalog.entries.foreach(f =>
+      e.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
   }
 }

@@ -12,8 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * version is already codegen-friendly; this exists as the engine's
   * demonstration of a native Catalyst scalar extension (SURVEY.md §4.3):
   * one static Java call instead of a concat/lpad expression tree,
-  * null-safe via UnaryExpression's default null handling, registered for
-  * SQL use by [[Udfs.registerAll]].
+  * null-safe via UnaryExpression's default null handling; built as a
+  * Column by [[graft.functions.lapTime]], named `lap_time_millis` in
+  * SQL by [[Catalog]].
   */
 case class LapTimeMillis(child: Expression)
     extends UnaryExpression {

@@ -31,58 +31,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * in BOTH the vector and the centroid, mirroring the equi-join on
   * `pos`.
   *
-  * Like [[DotProduct]]/[[SrpBands]], instances are built through the
-  * session function registry; the geometry rides the SQL call as
-  * nested `array(...)` literals (≤ ~10 KB of text for the standard
-  * dims=64/cells=16/m=8/ks=16 geometry), evaluated once at plan build.
+  * Operator code builds these as Columns through the typed builders
+  * of [[graft.functions]] (`cellAsg`, `cellResidual`, `pqCodes`,
+  * `pqDist2`); the geometry stays typed `Array[Long]` inside the node
+  * (cells·dims + m·ks·dsub longs for the standard dims=64/cells=16/
+  * m=8/ks=16 geometry) and has no SQL name.
   */
 object PqCodec {
-
-  private def longArray(e: Expression): Array[Long] =
-    e.eval().asInstanceOf[ArrayData].toLongArray()
-
-  private def longMatrix(e: Expression): Array[Array[Long]] =
-    e.eval().asInstanceOf[ArrayData]
-      .toObjectArray(ArrayType(LongType))
-      .map(_.asInstanceOf[ArrayData].toLongArray())
-
-  private def longCube(e: Expression): Array[Array[Array[Long]]] =
-    e.eval().asInstanceOf[ArrayData]
-      .toObjectArray(ArrayType(ArrayType(LongType)))
-      .map(_.asInstanceOf[ArrayData]
-        .toObjectArray(ArrayType(LongType))
-        .map(_.asInstanceOf[ArrayData].toLongArray()))
-
-  /** SQL literal text for a geometry array (L-suffixed so the literal
-    * parses as BIGINT, matching [[longArray]]'s decode).
-    */
-  def sqlArr(a: Array[Long]): String =
-    a.map(v => s"${v}L").mkString("array(", ",", ")")
-
-  def sqlMat(m: Array[Array[Long]]): String =
-    m.map(sqlArr).mkString("array(", ",", ")")
-
-  def sqlCube(c: Array[Array[Array[Long]]]): String =
-    c.map(sqlMat).mkString("array(", ",", ")")
-
-  /** Register the codec builders on `reg` (idempotent; the pattern of
-    * [[graft.ops.Similarity]]'s `ensureRegistered`).
-    */
-  def register(
-      reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit = {
-    reg.createOrReplaceTempFunction("pq_cell_asg", exprs =>
-      CellArgmin(exprs(0), longArray(exprs(1)), longMatrix(exprs(2))),
-      "built-in")
-    reg.createOrReplaceTempFunction("pq_residual", exprs =>
-      CellResidual(exprs(0), exprs(1), longArray(exprs(2)),
-        longMatrix(exprs(3))), "built-in")
-    reg.createOrReplaceTempFunction("pq_codes", exprs =>
-      PqCodes(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue(),
-        longMatrix(exprs(2)), longCube(exprs(3))), "built-in")
-    reg.createOrReplaceTempFunction("pq_dist2", exprs =>
-      PqDist2(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue(),
-        longMatrix(exprs(2)), longCube(exprs(3))), "built-in")
-  }
 
   /** Shared exact-integer argmin: index into `cents`/`cn2` (iterated
     * ascending, strict `<` — ties keep the earliest = lowest id) of
@@ -258,9 +213,9 @@ case class PqCodes(child: Expression, dsub: Int,
   def codes(xs: ArrayData): ArrayData = {
     val m = subCids.length
     // fixed-dims contract (ADVICE r16) — see CellArgmin.assign
-    if (xs.numElements() < m * dsub)
+    if (xs.numElements() != m * dsub)
       throw new IllegalArgumentException(
-        s"pq_codes: vector length ${xs.numElements()} < m·dsub = ${m * dsub}")
+        s"pq_codes: vector length ${xs.numElements()} != m·dsub = ${m * dsub}")
     val out = new Array[Long](m)
     var s = 0
     while (s < m) {
@@ -314,9 +269,9 @@ case class PqDist2(child: Expression, dsub: Int,
   def dists(xs: ArrayData): ArrayData = {
     val m = subCids.length
     // fixed-dims contract (ADVICE r16) — see CellArgmin.assign
-    if (xs.numElements() < m * dsub)
+    if (xs.numElements() != m * dsub)
       throw new IllegalArgumentException(
-        s"pq_dist2: vector length ${xs.numElements()} < m·dsub = ${m * dsub}")
+        s"pq_dist2: vector length ${xs.numElements()} != m·dsub = ${m * dsub}")
     val out = new Array[Long](m)
     var s = 0
     while (s < m) {

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udf
 
-/** The engine's user-extension surface (SURVEY.md §2.B last row): one of
-  * each extension point, registered under stable SQL names.
+/** The engine's demonstration UDF and UDAF (SURVEY.md §2.B last row),
+  * registered as `lap_time_udf` and `top_k_events` by
+  * [[Catalog.register]].
   *
   * Preference order in this engine is native expressions > custom Catalyst
   * Expression > Scala UDF; the UDF exists to demonstrate the registration
@@ -16,54 +17,6 @@ object Udfs {
   /** Scalar Scala UDF: millis → "MM:SS.mmm" (null-safe). */
   val formatLapTimeUdf = udf((ms: java.lang.Long) =>
     if (ms == null) null else LapTimeMillis.format(ms))
-
-  /** Register all extensions on a session:
-    *  - `lap_time_millis(col)`  — native codegen'd Expression
-    *  - `lap_time_udf(col)`     — black-box Scala UDF equivalent
-    *  - `top_k_events(id, score)` — typed Aggregator (bounded top-k heap)
-    *  - `dot_arr(a, b)` / `jaccard_sorted(a, b)` / `graft_shingles(t, n)`
-    *    / `shingle_hashes(t, n)` — the similarity/dedup kernels
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "lap_time_millis", exprs => LapTimeMillis(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "dot_arr", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "jaccard_sorted", exprs => JaccardSorted(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingles", exprs => Shingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_hash_min", exprs => RollingHashMin(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "srp_bands", exprs => SrpBands(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "kll_sketch_agg",
-      exprs => KllSketchAgg(exprs(0), KllSketch.kArg(exprs)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "kll_merge_agg",
-      exprs => KllMergeAgg(exprs(0), KllSketch.kArg(exprs)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "kll_sketch_quantile",
-      exprs => KllSketchQuantile(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "countmin_agg", exprs => CountMinAgg(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "countmin_merge_agg", exprs => CountMinMergeAgg(exprs(0)), "built-in")
-    spark.udf.register("lap_time_udf", formatLapTimeUdf)
-    spark.udf.register("top_k_events",
-      org.apache.spark.sql.functions.udaf(new TopKAggregator(3)))
-  }
 }
 
 /** Bounded top-k accumulator over (id, score) pairs: keeps the k largest

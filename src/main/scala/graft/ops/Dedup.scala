@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.{jaccard, minhash, shingleHashes, shingles, simhash}
 
 /** Distributed deduplication operators for LLM training-data pipelines.
   *
@@ -26,48 +27,10 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Distinct n-token shingles of a whitespace-tokenized token array —
-    * one compiled pass via [[graft.functions.Shingles]] (the composable
-    * `array_distinct(transform(sequence(...)))` form ran interpreted and
-    * dominated the dedup input stage). Callers must have run
-    * [[registerShingleFn]] on the owning session (pipeline entry points
-    * here and in TextStats do).
-    */
-  def shingles(toks: String, n: Int = 3): Column =
-    expr(s"graft_shingles($toks, $n)")
-
-  /** Register the shingle expression on a session (idempotent). */
-  def registerShingleFn(df: DataFrame): DataFrame = {
-    df.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => graft.functions.Shingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    df
-  }
-
-  /** Hashed n-shingle set (sorted distinct `array<bigint>`) — the dedup
-    * pipelines' canonical shingle representation, via
-    * [[graft.functions.ShingleHashes]]: one compiled pass, no shingle
-    * strings materialized, ~8 bytes per shingle through every downstream
-    * shuffle/cache instead of the string. Callers must have run
-    * [[registerShingleHashFn]] on the owning session.
-    */
-  def shingleHashes(toks: String, n: Int = 3): Column =
-    expr(s"shingle_hashes($toks, $n)")
-
-  /** Register the hashed-shingle expression on a session (idempotent). */
-  def registerShingleHashFn(df: DataFrame): DataFrame = {
-    df.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => graft.functions.ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    df
-  }
-
   /** (doc key, shingle) long table — the inverted-index layout. */
   def explodeShingles(df: DataFrame, key: String, text: String, n: Int = 3): DataFrame =
-    registerShingleFn(df).withColumn("toks", split(col(text), " "))
-      .withColumn("shingle", explode(shingles("toks", n)))
+    df.withColumn("toks", split(col(text), " "))
+      .withColumn("shingle", explode(shingles(col("toks"), n)))
       .select(col(key), col("shingle"))
 
   /** Exact dedup: keep the lowest key per content digest. One shuffle on
@@ -83,19 +46,16 @@ object Dedup {
 
   /** MinHash signatures: `numHashes` columns h0..h{k-1}, each the min of a
     * Carter-Wegman family over the doc's HASHED shingle set (`sh` must be
-    * `array<bigint>` from [[shingleHashes]]). Computed map-side from the
-    * shingle ARRAY — zero shuffle (the explode + groupBy formulation
-    * re-shuffles rows that were already grouped) — in ONE codegen'd pass
-    * via [[graft.functions.MinHashSignature]] (k interpreted
+    * `array<bigint>` from [[graft.functions.shingleHashes]]). Computed
+    * map-side from the shingle ARRAY — zero shuffle (the explode + groupBy
+    * formulation re-shuffles rows that were already grouped) — in ONE
+    * codegen'd pass via [[graft.functions.MinHashSignature]] (k interpreted
     * `array_min(transform(...))` HOFs measured ~3× slower; the k-from-1
     * family removes the remaining k byte-hashes per shingle).
     */
   def minhashSignatures(docsWithShingles: DataFrame, key: String, numHashes: Int): DataFrame = {
-    docsWithShingles.sparkSession.sessionState.functionRegistry
-      .createOrReplaceTempFunction("minhash_signature",
-        exprs => graft.functions.MinHashSignature(exprs.head, numHashes), "built-in")
     val withSig = docsWithShingles
-      .withColumn("sig", expr("minhash_signature(sh)"))
+      .withColumn("sig", minhash(col("sh"), numHashes))
     val sigCols = (0 until numHashes).map(j => col("sig").getItem(j).as(s"h$j"))
     withSig.select(col(key) +: sigCols: _*)
   }
@@ -135,8 +95,8 @@ object Dedup {
 
   /** Exact Jaccard verification of candidate pairs against the hashed
     * shingle sets (`sh` = sorted distinct `array<bigint>` from
-    * [[shingleHashes]]); emits jaccard scaled to integer millionths
-    * (portable floats). The verify join ships ~8 bytes per shingle
+    * [[graft.functions.shingleHashes]]); emits jaccard scaled to integer
+    * millionths (portable floats). The verify join ships ~8 bytes per shingle
     * instead of the string, and the per-pair check is the codegen'd
     * linear-merge [[graft.functions.JaccardSorted]] on longs (the
     * hash-set array_intersect/array_union pair was the verify
@@ -158,9 +118,6 @@ object Dedup {
   def verifyJaccardSides(candidates: DataFrame, shA: DataFrame,
                          shB: DataFrame, key: String, threshold: Double,
                          broadcastB: Boolean = false): DataFrame = {
-    shA.sparkSession.sessionState.functionRegistry
-      .createOrReplaceTempFunction("jaccard_sorted",
-        exprs => graft.functions.JaccardSorted(exprs(0), exprs(1)), "built-in")
     val sa = shA.select(col(key).as("key_a"), col("sh").as("sh_a"))
     val sb0 = shB.select(col(key).as("key_b"), col("sh").as("sh_b"))
     // broadcastB: caller-guaranteed bounded b side AND candidate set
@@ -170,7 +127,7 @@ object Dedup {
     val cand = if (broadcastB) broadcast(candidates) else candidates
     val sb = if (broadcastB) broadcast(sb0) else sb0
     cand.join(sa, "key_a").join(sb, "key_b")
-      .withColumn("jac", expr("jaccard_sorted(sh_a, sh_b)"))
+      .withColumn("jac", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jac") >= threshold)
       .select(col("key_a"), col("key_b"),
         floor(col("jac") * 1e6).cast("long").as("jaccard_e6"))
@@ -184,9 +141,9 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, key: String, text: String,
                       numHashes: Int = 32, rowsPerBand: Int = 2,
                       shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(registerShingleHashFn(docs).select(col(key), col(text)))
+    val withSh = Par.fanOut(docs.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes("toks", shingleSize))
+      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
       .filter(size(col("sh")) > 0)
       .select(col(key), col("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -206,9 +163,9 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, key: String, text: String,
                         shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(registerShingleHashFn(docs).select(col(key), col(text)))
+    val withSh = Par.fanOut(docs.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes("toks", shingleSize))
+      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
       .filter(size(col("sh")) > 0)
       .select(col(key), col("sh"), size(col("sh")).as("sz"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -253,9 +210,9 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, key: String, text: String,
                        shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(registerShingleHashFn(docs).select(col(key), col(text)))
+    val withSh = Par.fanOut(docs.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes("toks", shingleSize))
+      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
       .filter(size(col("sh")) > 0)
       .select(col(key), col("sh"), size(col("sh")).cast("long").as("sz"))
     val inv = withSh.select(col(key), explode(col("sh")).as("shingle"))
@@ -281,10 +238,9 @@ object Dedup {
   def incrementalNearDups(corpus: DataFrame, fresh: DataFrame, key: String,
                           text: String, numHashes: Int = 32, rowsPerBand: Int = 2,
                           shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    def prep(df: DataFrame) = Par.fanOut(
-        registerShingleHashFn(df).select(col(key), col(text)))
+    def prep(df: DataFrame) = Par.fanOut(df.select(col(key), col(text)))
       .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes("toks", shingleSize))
+      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
       .filter(size(col("sh")) > 0)
       .select(col(key), col("sh"))
     val corpusSh = prep(corpus)
@@ -316,18 +272,18 @@ object Dedup {
     * number of distinct eval docs hit and distinct shared shingles.
     *
     * Scale shape: the overlap is an inverted-index equi join keyed on
-    * the 8-byte shingle hash ([[shingleHashes]]), never a doc×doc
-    * product. Eval corpora are benchmark-sized (≪ training corpus), so
+    * the 8-byte shingle hash ([[graft.functions.shingleHashes]]), never a
+    * doc×doc product. Eval corpora are benchmark-sized (≪ training corpus), so
     * the exploded eval shingle table is broadcast and the 100 TB train
     * side streams map-side; the only shuffle is the per-doc aggregate.
     */
   def contaminationReport(train: DataFrame, evalSet: DataFrame, key: String,
                           text: String, shingleSize: Int = 3): DataFrame = {
     def shingleTable(df: DataFrame, keyAs: String) =
-      registerShingleHashFn(df).select(col(key), col(text))
+      df.select(col(key), col(text))
         .withColumn("toks", split(col(text), " "))
         .select(col(key).as(keyAs),
-          explode(shingleHashes("toks", shingleSize)).as("sh"))
+          explode(shingleHashes(col("toks"), shingleSize)).as("sh"))
     val ev = shingleTable(evalSet, "eval_id")
     shingleTable(Par.fanOut(train), key)
       .join(broadcast(ev), "sh")
@@ -348,12 +304,9 @@ object Dedup {
     * per-doc groups the input already had.
     */
   def simhashChunks(docs: DataFrame, key: String, text: String): DataFrame = {
-    docs.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_signature",
-      exprs => graft.functions.SimhashSignature(exprs.head), "built-in")
     val withSig = docs
       .withColumn("toks", split(col(text), " "))
-      .withColumn("sig", expr("simhash_signature(toks)"))
+      .withColumn("sig", simhash(col("toks")))
     withSig.select(col(key) +:
       (0 until SimhashChunks).map(c => col("sig").getItem(c).as(s"sh$c")): _*)
   }

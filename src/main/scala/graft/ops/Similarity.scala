@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.{cellAsg, cellResidual, dot, pqCodes, pqDist2, srpBands}
 
 /** Embedding similarity search over `array<float>` columns.
   *
@@ -25,20 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Register the native expressions on the session owning `df`
-    * (idempotent).
-    */
-  private def ensureRegistered(df: DataFrame): Unit = {
-    val reg = df.sparkSession.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "dot_arr", exprs => graft.functions.DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "srp_bands", exprs => graft.functions.SrpBands(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    graft.functions.PqCodec.register(reg)
-  }
-
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
   /** Quantization scale for distributed centroid means: per-dimension
@@ -54,7 +41,7 @@ object Similarity {
   private def side(df: DataFrame, key: String, vec: String,
                    keyAs: String, vecAs: String, normAs: String): DataFrame =
     df.select(col(key).as(keyAs), asDouble(col(vec)).as(vecAs))
-      .withColumn(normAs, sqrt(expr(s"dot_arr($vecAs, $vecAs)")))
+      .withColumn(normAs, sqrt(dot(col(vecAs), col(vecAs))))
 
   /** Banded view: one row per (row, band) keyed by the band-tagged
     * bucket code, so a plain equi join on `bucket` is the per-band
@@ -64,7 +51,7 @@ object Similarity {
   private def banded(df: DataFrame, bands: Int, bitsPerBand: Int,
                      vecCol: String, keep: Column*): DataFrame =
     df.select(keep :+
-      explode(expr(s"srp_bands($vecCol, $bands, $bitsPerBand)")).as("bucket"): _*)
+      explode(srpBands(col(vecCol), bands, bitsPerBand)).as("bucket"): _*)
 
   /** SRP band-bucket rows `(key, bucket)` — the persistent-index unit
     * of the streaming embedding gate ([[graft.streaming.EmbGate]]):
@@ -75,10 +62,9 @@ object Similarity {
     */
   def srpBuckets(corpus: DataFrame, key: String, vec: String,
                  bands: Int, bitsPerBand: Int): DataFrame = {
-    ensureRegistered(corpus)
     corpus.select(col(key), asDouble(col(vec)).as("_v"))
       .select(col(key),
-        explode(expr(s"srp_bands(_v, $bands, $bitsPerBand)")).as("bucket"))
+        explode(srpBands(col("_v"), bands, bitsPerBand)).as("bucket"))
   }
 
   /** Exact-cosine verification of `(key_a, key_b)` candidate pairs
@@ -99,7 +85,6 @@ object Similarity {
   def verifyCosineSides(cands: DataFrame, vecsA: DataFrame, vecsB: DataFrame,
                         key: String, vec: String, threshold: Double,
                         broadcastB: Boolean = false): DataFrame = {
-    ensureRegistered(vecsA)
     val a = side(vecsA, key, vec, "key_a", "va", "na")
     val b0 = side(vecsB, key, vec, "key_b", "vb", "nb")
     // broadcastB: the caller guarantees the b side AND the candidate
@@ -110,11 +95,11 @@ object Similarity {
     // small by construction; candidate pairs are 16 bytes/row)
     if (broadcastB)
       broadcast(cands).join(a, Seq("key_a")).join(broadcast(b0), Seq("key_b"))
-        .withColumn("cos", expr("dot_arr(va, vb)") / (col("na") * col("nb")))
+        .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
         .filter(col("cos") >= threshold)
         .select(col("key_a"), col("key_b"))
     else cands.join(a, Seq("key_a")).join(b0, Seq("key_b"))
-      .withColumn("cos", expr("dot_arr(va, vb)") / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("key_a"), col("key_b"))
   }
@@ -122,7 +107,6 @@ object Similarity {
   /** Exact brute-force top-k cosine neighbors for a query subset. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, key: String,
                      vec: String, k: Int): DataFrame = {
-    ensureRegistered(corpus)
     val q = broadcast(side(queries, key, vec, "q_id", "q_vec", "q_norm"))
     // The q×corpus dot products run map-side on the corpus scan's own
     // partitioning — fan a narrow corpus out so they use every core.
@@ -132,7 +116,7 @@ object Similarity {
       .partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     q.join(c, col("q_id") =!= col("n_id"))
-      .withColumn("cos", expr("dot_arr(q_vec, n_vec)") / (col("q_norm") * col("n_norm")))
+      .withColumn("cos", dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("rnk"),
@@ -149,20 +133,19 @@ object Similarity {
     */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, key: String,
                     vec: String, label: String, k: Int): DataFrame = {
-    ensureRegistered(corpus)
     val q = broadcast(queries
       .select(col(key).as("q_id"), asDouble(col(vec)).as("q_vec"),
         col(label).as("q_label"))
-      .withColumn("q_norm", sqrt(expr("dot_arr(q_vec, q_vec)"))))
+      .withColumn("q_norm", sqrt(dot(col("q_vec"), col("q_vec")))))
     val c = Par.fanOut(corpus.select(col(key), col(vec), col(label)))
       .select(col(key).as("n_id"), asDouble(col(vec)).as("n_vec"),
         col(label).as("n_label"))
-      .withColumn("n_norm", sqrt(expr("dot_arr(n_vec, n_vec)")))
+      .withColumn("n_norm", sqrt(dot(col("n_vec"), col("n_vec"))))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("n_id").asc)
     q.join(c, col("q_id") =!= col("n_id") && col("q_label") =!= col("n_label"))
-      .withColumn("cos", expr("dot_arr(q_vec, n_vec)") / (col("q_norm") * col("n_norm")))
+      .withColumn("cos", dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("q_label"), col("n_id"), col("n_label"),
@@ -180,14 +163,13 @@ object Similarity {
     */
   def cosinePairs(corpus: DataFrame, key: String, vec: String,
                   threshold: Double): DataFrame = {
-    ensureRegistered(corpus)
     // Pairwise compute runs on the streamed side's partitioning — fan a
     // narrow corpus out once; both join sides reuse the exchange.
     val wide = Par.fanOut(corpus.select(col(key), col(vec)))
     val a = side(wide, key, vec, "vec_a", "va", "na")
     val b = side(wide, key, vec, "vec_b", "vb", "nb")
     a.join(b, col("vec_a") < col("vec_b"))
-      .withColumn("cos", expr("dot_arr(va, vb)") / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"),
         floor(col("cos") * 1e6).cast("long").as("cos_e6"))
@@ -218,7 +200,6 @@ object Similarity {
   def cosinePairsBlocked(corpus: DataFrame, key: String, vec: String,
                          threshold: Double, bands: Int = 96,
                          bitsPerBand: Int = 8): DataFrame = {
-    ensureRegistered(corpus)
     val wide = side(Par.fanOut(corpus.select(col(key), col(vec))),
       key, vec, "vec_a", "va", "na")
     val a = banded(wide, bands, bitsPerBand, "va",
@@ -235,7 +216,7 @@ object Similarity {
     // bucket; at 100 TB broadcast is never the right shape here.
     a.hint("shuffle_hash").join(b.hint("shuffle_hash"), Seq("bucket"))
       .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos", expr("dot_arr(va, vb)") / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"),
         floor(col("cos") * 1e6).cast("long").as("cos_e6"))
@@ -250,7 +231,6 @@ object Similarity {
     */
   def srpCandidatePairs(corpus: DataFrame, key: String, vec: String,
                         bands: Int = 96, bitsPerBand: Int = 8): DataFrame = {
-    ensureRegistered(corpus)
     val wide = side(Par.fanOut(corpus.select(col(key), col(vec))),
       key, vec, "vec_a", "va", "na")
     // same shuffle_hash pin as [[cosinePairsBlocked]]: the explode's
@@ -276,7 +256,6 @@ object Similarity {
     */
   def kmeansCentroids(corpus: DataFrame, key: String, vec: String,
                       k: Int, iters: Int): DataFrame = {
-    ensureRegistered(corpus)
     var cents = side(corpus.orderBy(col(key)).limit(k),
       key, vec, "cell_id", "cent", "cent_norm")
     if (iters > 0) {
@@ -289,7 +268,7 @@ object Similarity {
         // vector×centroid expansion
         val assigned = members.join(broadcast(cents))
           .withColumn("sim",
-            expr("dot_arr(n_vec, cent)") / (col("n_norm") * col("cent_norm")))
+            dot(col("n_vec"), col("cent")) / (col("n_norm") * col("cent_norm")))
           .groupBy(col("n_id"))
           .agg(min_by(struct(col("cell_id"), col("n_vec")),
             struct((-col("sim")).as("neg_sim"), col("cell_id"))).as("best"))
@@ -303,7 +282,7 @@ object Similarity {
           .agg(transform(array_sort(collect_list(struct(col("pos"),
               (col("sx").cast("double") / col("cnt") / MeanScale).as("m")))),
             s => s.getField("m")).as("cent"))
-          .withColumn("cent_norm", sqrt(expr("dot_arr(cent, cent)")))
+          .withColumn("cent_norm", sqrt(dot(col("cent"), col("cent"))))
           .localCheckpoint(true)
       }
     }
@@ -323,7 +302,6 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, key: String, vec: String,
               k: Int, cells: Int = 16, nprobe: Int = 4,
               refineIters: Int = 0): DataFrame = {
-    ensureRegistered(corpus)
     val cents = broadcast(kmeansCentroids(corpus, key, vec, cells, refineIters))
     ivfProbe(ivfAssign(corpus, cents, key, vec), queries, cents,
       key, vec, k, nprobe)
@@ -340,7 +318,7 @@ object Similarity {
     side(Par.fanOut(xs.select(col(key), col(vec))),
         key, vec, "n_id", "n_vec", "n_norm")
       .join(cents)
-      .withColumn("sim", expr("dot_arr(n_vec, cent)") / (col("n_norm") * col("cent_norm")))
+      .withColumn("sim", dot(col("n_vec"), col("cent")) / (col("n_norm") * col("cent_norm")))
       .groupBy(col("n_id"))
       .agg(min_by(struct(col("cell_id"), col("n_vec"), col("n_norm")),
         struct((-col("sim")).as("neg_sim"), col("cell_id"))).as("best"))
@@ -358,7 +336,7 @@ object Similarity {
       .partitionBy(col("q_id")).orderBy(col("sim").desc, col("cell_id").asc)
     val queryCells = side(queries, key, vec, "q_id", "q_vec", "q_norm")
       .join(cents)
-      .withColumn("sim", expr("dot_arr(q_vec, cent)") / (col("q_norm") * col("cent_norm")))
+      .withColumn("sim", dot(col("q_vec"), col("cent")) / (col("q_norm") * col("cent_norm")))
       .withColumn("crnk", row_number().over(probeW))
       .filter(col("crnk") <= nprobe)
       .select(col("q_id"), col("q_vec"), col("q_norm"), col("cell_id"))
@@ -366,7 +344,7 @@ object Similarity {
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
     broadcast(queryCells).join(corpusCells, Seq("cell_id"))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", expr("dot_arr(q_vec, n_vec)") / (col("q_norm") * col("n_norm")))
+      .withColumn("cos", dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
       .withColumn("rnk", row_number().over(topW))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("rnk"),
@@ -390,7 +368,6 @@ object Similarity {
                                  key: String, vec: String, dims: Int,
                                  cells: Int, m: Int, ks: Int,
                                  refineIters: Int): DataFrame = {
-    ensureRegistered(base)
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
     val dsub = dims / m
     // frozen geometry from the base build (a deployment reads these
@@ -411,7 +388,6 @@ object Similarity {
   private[graft] def ivfPqEncode(newBatch: DataFrame, cc: DataFrame,
                                  cb: DataFrame, key: String, vec: String,
                                  dsub: Int): DataFrame = {
-    ensureRegistered(newBatch)
     // array-native (r16): the frozen geometry collects to driver
     // arrays (cells·dims + m·ks·dsub longs — index metadata) and the
     // whole encode — coarse argmin, residual, per-subspace code argmin
@@ -420,18 +396,16 @@ object Similarity {
     // the shard-merge key's 100 TB recipe describes. (The former form
     // checkpointed dims×-exploded rows and paid two broadcast-join
     // argmins per batch.)
-    val (ccIds, ccCents) = collectCoarseGeo(cc)
     val (subCids, subCents) = collectCbGeo(cb, dsub)
-    import graft.functions.PqCodec.{sqlArr, sqlMat}
-    val asgE = s"pq_cell_asg(xs, ${sqlArr(ccIds)}, ${sqlMat(ccCents)})"
-    val residE =
-      s"pq_residual(xs, cell_id, ${sqlArr(ccIds)}, ${sqlMat(ccCents)})"
+    val (ccIds, ccCents) = collectCoarseGeo(cc, subCids.length * dsub)
     latticeVecs(newBatch.select(
         col(key).cast("long").as("n_id"), col(vec)), "n_id", vec)
-      .select(col("n_id"), expr(asgE).as("cell_id"), col("xs"))
-      .select(col("n_id"), col("cell_id"), expr(residE).as("xs"))
+      .select(col("n_id"), cellAsg(col("xs"), ccIds, ccCents).as("cell_id"),
+        col("xs"))
+      .select(col("n_id"), col("cell_id"),
+        cellResidual(col("xs"), col("cell_id"), ccIds, ccCents).as("xs"))
       .select(col("cell_id"), col("n_id"),
-        posexplode(expr(pqCodesSql("xs", dsub, subCids, subCents)))
+        posexplode(pqCodes(col("xs"), dsub, subCids, subCents))
           .as(Seq("sub", "cid")))
       .select(col("cell_id"), col("n_id"), col("sub"), col("cid"))
   }
@@ -467,7 +441,6 @@ object Similarity {
                          queries: DataFrame, key: String, vec: String,
                          k: Int, cells: Int = 16,
                          nprobe: Int = 4): DataFrame = {
-    ensureRegistered(base)
     // centroids from the BASE build only — the frozen index geometry
     val cents = broadcast(kmeansCentroids(base, key, vec, cells, 0))
     val corpusCells = ivfAssign(base, cents, key, vec)
@@ -551,27 +524,29 @@ object Similarity {
     * parameter-sized like [[ivfPqProbeCells]]'s nprobe cells, never
     * data-sized).
     */
-  private[graft] def collectCoarseGeo(cc: DataFrame)
+  private[graft] def collectCoarseGeo(cc: DataFrame, dims: Int)
       : (Array[Long], Array[Array[Long]]) = {
     val rows = cc.select(col("cell_id").cast("long"), col("pos").cast("int"),
       col("ce").cast("long")).collect()
     val byId = rows.groupBy(_.getLong(0)).toArray.sortBy(_._1)
-    val ids = byId.map(_._1)
+    // dense-geometry contract: every cell holds exactly one row per pos
+    // in [0, dims). A cell with a missing, extra or duplicated pos row (a
+    // truncated or hand-landed coarse table) would otherwise yield a
+    // centroid whose absent coordinates read as 0 in the dot/norm but
+    // pass through unsubtracted in pq_residual. A corrupt store must
+    // fail loudly, not skew residuals.
+    require(byId.nonEmpty, "coarse geometry is empty")
+    byId.foreach { case (id, rs) =>
+      require(rs.map(_.getInt(1)).sorted.sameElements(0 until dims),
+        s"coarse geometry is not dense: cell $id has ${rs.length} pos " +
+          s"rows, want exactly one per pos in 0..${dims - 1}")
+    }
     val cents = byId.map { case (_, rs) =>
-      val a = new Array[Long](rs.map(_.getInt(1)).max + 1)
+      val a = new Array[Long](dims)
       rs.foreach(r => a(r.getInt(1)) = r.getLong(2))
       a
     }
-    // dense-geometry contract (ADVICE r16): a cell missing trailing pos
-    // rows (a truncated or hand-landed coarse table) would silently
-    // yield a SHORT centroid whose absent coordinates read as 0 in the
-    // dot/norm but pass through unsubtracted in pq_residual — matching
-    // the old inner-join semantics only while every cell is dense. A
-    // corrupt store must fail loudly, not skew residuals.
-    require(cents.nonEmpty && cents.forall(_.length == cents(0).length),
-      s"coarse geometry is not dense: centroid lengths " +
-        s"${cents.map(_.length).distinct.mkString(",")} differ across cells")
-    (ids, cents)
+    (byId.map(_._1), cents)
   }
 
   /** Collect a PQ codebook `(sub, cid, pos, ce)` to per-sub driver
@@ -643,16 +618,6 @@ object Similarity {
         org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
-  /** SQL text of the [[graft.functions.PqCodes]] call for a trained
-    * codebook (the geometry rides the call as BIGINT array literals).
-    */
-  private def pqCodesSql(xsCol: String, dsub: Int,
-                         subCids: Array[Array[Long]],
-                         subCents: Array[Array[Array[Long]]]): String = {
-    import graft.functions.PqCodec.{sqlCube, sqlMat}
-    s"pq_codes($xsCol, $dsub, ${sqlMat(subCids)}, ${sqlCube(subCents)})"
-  }
-
   /** Array-native PQ training over `(n_id, xs array<long>)` vectors:
     * the SAME seeding (the `ks` vectors at ids `[seedFrom,
     * seedFrom+ks)`, cid = id), the SAME Lloyd rounds (assign by exact
@@ -685,7 +650,7 @@ object Similarity {
     }
     for (_ <- 0 until refineIters) {
       val upd = vecs
-        .select(expr(pqCodesSql("xs", dsub, subCids, subCents)).as("cids"),
+        .select(pqCodes(col("xs"), dsub, subCids, subCents).as("cids"),
           posexplode(col("xs")).as(Seq("pos", "xe")))
         .filter(col("pos") < lit(m * dsub))
         .select(expr(s"CAST(pos DIV $dsub AS INT)").as("sub"), col("pos"),
@@ -737,7 +702,6 @@ object Similarity {
   private[graft] def pqFit(corpus: DataFrame, key: String, vec: String,
                            dims: Int, m: Int, ks: Int, refineIters: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    ensureRegistered(corpus)
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
     val dsub = dims / m
     val vecs = latticeVecs(Par.fanOut(corpus.select(
@@ -745,7 +709,7 @@ object Similarity {
       .localCheckpoint(true)
     val (subCids, subCents) = pqTrainVec(vecs, dsub, m, ks, refineIters)
     val codes = vecs.select(col("n_id"),
-      posexplode(expr(pqCodesSql("xs", dsub, subCids, subCents)))
+      posexplode(pqCodes(col("xs"), dsub, subCids, subCents))
         .as(Seq("sub", "cid")))
     (explodeLattice(vecs, "n_id", dsub),
       cbFromGeo(corpus.sparkSession, dsub, subCids, subCents), codes)
@@ -763,21 +727,18 @@ object Similarity {
   def pqDistortion(corpus: DataFrame, key: String, vec: String,
                    dims: Int, m: Int = 8, ks: Int = 16,
                    refineIters: Int = 1): DataFrame = {
-    ensureRegistered(corpus)
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
     val dsub = dims / m
     val vecs = latticeVecs(Par.fanOut(corpus.select(
       col(key).cast("long").as("n_id"), col(vec))), "n_id", vec)
       .localCheckpoint(true)
     val (subCids, subCents) = pqTrainVec(vecs, dsub, m, ks, refineIters)
-    import graft.functions.PqCodec.{sqlCube, sqlMat}
     // per-(vector, sub) assigned cid and exact squared distance to its
     // centroid in one map pass (pq_dist2 recomputes the same argmin as
     // pq_codes), then one partial-aggregated m·ks-group rollup —
     // replaces the former codes ⋈ lattice-rows ⋈ codebook join chain
-    val d2E = s"pq_dist2(xs, $dsub, ${sqlMat(subCids)}, ${sqlCube(subCents)})"
-    vecs.select(expr(d2E).as("ds"),
-        posexplode(expr(pqCodesSql("xs", dsub, subCids, subCents)))
+    vecs.select(pqDist2(col("xs"), dsub, subCids, subCents).as("ds"),
+        posexplode(pqCodes(col("xs"), dsub, subCids, subCents))
           .as(Seq("sub", "cid")))
       .select(col("sub"), col("cid"), expr("ds[sub]").as("d2"))
       .groupBy(col("sub"), col("cid"))
@@ -952,7 +913,6 @@ object Similarity {
   private[graft] def ivfPqBuild(corpus: DataFrame, key: String, vec: String,
                                 dims: Int, cells: Int, m: Int, ks: Int,
                                 refineIters: Int): (DataFrame, DataFrame) = {
-    ensureRegistered(corpus)
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
     val dsub = dims / m
     // array-native (r16): ONE eager checkpoint of the quantized
@@ -970,20 +930,19 @@ object Similarity {
       .sortBy(_.getLong(0))
     val ccIds = ccRows.map(_.getLong(0))
     val ccCents = ccRows.map(_.getSeq[Long](1).toArray)
-    import graft.functions.PqCodec.{sqlArr, sqlMat}
-    val asgE = s"pq_cell_asg(xs, ${sqlArr(ccIds)}, ${sqlMat(ccCents)})"
-    val residE =
-      s"pq_residual(xs, cell_id, ${sqlArr(ccIds)}, ${sqlMat(ccCents)})"
     // 2. residual vectors, the cell assignment riding alongside
-    val resid = vecs.select(col("n_id"), expr(asgE).as("cell_id"), col("xs"))
-      .select(col("n_id"), col("cell_id"), expr(residE).as("xs"))
+    val resid = vecs
+      .select(col("n_id"), cellAsg(col("xs"), ccIds, ccCents).as("cell_id"),
+        col("xs"))
+      .select(col("n_id"), col("cell_id"),
+        cellResidual(col("xs"), col("cell_id"), ccIds, ccCents).as("xs"))
     // 3. PQ codebooks + codes over residuals — seeded PAST the coarse
     // centroids (see pqFit: centroid residuals are zero); codes carry
     // their cell to become the inverted-list postings
     val (subCids, subCents) =
       pqTrainVec(resid, dsub, m, ks, refineIters, seedFrom = cells)
     val postings = resid.select(col("cell_id"), col("n_id"),
-        posexplode(expr(pqCodesSql("xs", dsub, subCids, subCents)))
+        posexplode(pqCodes(col("xs"), dsub, subCids, subCents))
           .as(Seq("sub", "cid")))
       .select(col("cell_id"), col("n_id"), col("sub"), col("cid"))
     (postings, cbFromGeo(corpus.sparkSession, dsub, subCids, subCents))
@@ -1032,7 +991,6 @@ object Similarity {
                                      key: String, vec: String, dims: Int,
                                      cells: Int, m: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    ensureRegistered(corpus)
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
     val dsub = dims / m
     val qrows = pqLattice(queries.select(col(key).cast("long").as("q_id"),
@@ -1045,7 +1003,7 @@ object Similarity {
     val (ccIds, ccCents) = collectCoarseGeo(
       coarseLattice(pqLattice(corpus.select(
         col(key).cast("long").as("n_id"), col(vec))
-        .filter(col(key) < cells), "n_id", vec, dsub), cells))
+        .filter(col(key) < cells), "n_id", vec, dsub), cells), dims)
     val cc = ccFromGeo(corpus.sparkSession, ccIds, ccCents)
     (qrows, cc, ivfPqCellTerms(qrows, "q_id", cc))
   }
@@ -1132,7 +1090,6 @@ object Similarity {
     */
   def bruteForceTopKL2(corpus: DataFrame, queries: DataFrame, key: String,
                        vec: String, k: Int): DataFrame = {
-    ensureRegistered(corpus)
     val q = broadcast(queries.select(col(key).cast("long").as("q_id"),
       asDouble(col(vec)).as("qv")))
     val c = Par.fanOut(corpus.select(col(key).cast("long").as("n_id"),
@@ -1141,8 +1098,8 @@ object Similarity {
       .partitionBy(col("q_id")).orderBy(col("d2_e9").asc, col("n_id").asc)
     q.join(c, col("q_id") =!= col("n_id"))
       .withColumn("d2_e9", floor(lit(1e9) *
-        (expr("dot_arr(qv, qv)") - expr("2 * dot_arr(qv, nv)") +
-          expr("dot_arr(nv, nv)"))).cast("long"))
+        (dot(col("qv"), col("qv")) - lit(2) * dot(col("qv"), col("nv")) +
+          dot(col("nv"), col("nv")))).cast("long"))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("rnk"), col("d2_e9"))
@@ -1161,7 +1118,6 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, key: String, vec: String,
               k: Int, bands: Int = 16, bitsPerBand: Int = 4): DataFrame = {
-    ensureRegistered(corpus)
     val c = banded(side(Par.fanOut(corpus.select(col(key), col(vec))),
         key, vec, "n_id", "n_vec", "n_norm"),
       bands, bitsPerBand, "n_vec", col("n_id"), col("n_vec"), col("n_norm"))
@@ -1176,7 +1132,7 @@ object Similarity {
       // a pair can collide in several bands; duplicates are identical
       // rows, so key-only dedup is safe and avoids hashing the vectors
       .dropDuplicates(Seq("q_id", "n_id"))
-      .withColumn("cos", expr("dot_arr(q_vec, n_vec)") / (col("q_norm") * col("n_norm")))
+      .withColumn("cos", dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
       .withColumn("rnk", row_number().over(topW))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("rnk"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.shingles
 
 /** Text analysis operators for LLM-pipeline curation: token statistics,
   * language identification (marker-token heuristic), quality scoring,
@@ -87,8 +88,8 @@ object TextStats {
     * (map-side partial counts, one shuffle on the n-gram).
     */
   def topNgrams(docs: DataFrame, text: String, n: Int, k: Int): DataFrame =
-    Dedup.registerShingleFn(docs).withColumn("toks", tokens(col(text)))
-      .withColumn("ngram", explode(Dedup.shingles("toks", n)))
+    docs.withColumn("toks", tokens(col(text)))
+      .withColumn("ngram", explode(shingles(col("toks"), n)))
       .groupBy(col("ngram"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("n_docs").desc, col("ngram").asc)
@@ -318,9 +319,8 @@ object TextStats {
     */
   def fingerprints(docs: DataFrame, key: String, text: String,
                    shingleSize: Int = 3): DataFrame =
-    Dedup.registerShingleFn(docs)
-      .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", Dedup.shingles("toks", shingleSize))
+    docs.withColumn("toks", split(col(text), " "))
+      .withColumn("sh", shingles(col("toks"), shingleSize))
       .select(
         col(key),
         md5(col(text)).as("text_md5"),

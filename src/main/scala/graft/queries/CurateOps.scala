@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.nfc
 import graft.model.Tables
 import graft.ops.{BloomJoin, Privacy, Retrieval, Sessions, TextStats}
 
@@ -764,7 +765,6 @@ object CurateOps {
     * the full pipeline for the oracle.
     */
   private val qTextNormalize: Q = (s, d) => {
-    graft.functions.Udfs.registerAll(s)
     // NFC runs FIRST — on the raw string — so decomposed and precomposed
     // encodings of the same character collapse BEFORE case folding and
     // the punctuation strip see them; normalizing after the strip would
@@ -772,9 +772,8 @@ object CurateOps {
     // 'e'+U+0301 and U+00E9 differently, fragmenting the keys
     Tables.customer(s, d)
       .select(col("c_custkey"),
-        expr("trim(regexp_replace(" +
-          "lower(nfc_normalize(c_name)), '[^a-z0-9]+', ' '))")
-          .as("norm_name"))
+        trim(regexp_replace(lower(nfc(col("c_name"))),
+          "[^a-z0-9]+", " ")).as("norm_name"))
       .orderBy("c_custkey")
   }
 

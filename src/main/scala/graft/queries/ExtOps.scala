@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
-import graft.functions.Udfs
+import graft.functions.{Catalog, lapTime}
 import graft.ops.Multimodal
 
 /** Extension-surface queries: the custom Catalyst Expression, the Scala
@@ -15,17 +15,16 @@ object ExtOps {
 
   /** Millis → "MM:SS.mmm" via the native codegen'd Expression. */
   private val qExprLapTime: Q = (s, d) => {
-    Udfs.registerAll(s)
     Tables.events(s, d)
       .withColumn("lap_ms", floor(col("value") * 1000.0).cast("long"))
-      .withColumn("lap_time", expr("lap_time_millis(lap_ms)"))
+      .withColumn("lap_time", lapTime(col("lap_ms")))
       .select(col("event_id"), col("lap_time"))
       .orderBy(col("event_id"))
   }
 
   /** Same semantics through the black-box Scala UDF registration path. */
   private val qUdfLapTime: Q = (s, d) => {
-    Udfs.registerAll(s)
+    Catalog.register(s)
     Tables.events(s, d)
       .withColumn("lap_ms", floor(col("value") * 1000.0).cast("long"))
       .withColumn("lap_time", expr("lap_time_udf(lap_ms)"))
@@ -35,7 +34,7 @@ object ExtOps {
 
   /** Typed Aggregator: bounded top-3 per group with map-side heaps. */
   private val qUdafTopk: Q = (s, d) => {
-    Udfs.registerAll(s)
+    Catalog.register(s)
     Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(expr("top_k_events(event_id, value)").as("topk"))

@@ -140,7 +140,7 @@ private[queries] object LlmDedupOps {
     * (source, shingle) postings self-joined on the shingle, so a
     * shingle in k sources fans to k(k−1)/2 pairs — bounded by
     * |sources|², NEVER document-pairs. At petabyte scale swap the
-    * shingle strings for [[graft.ops.Dedup.shingleHashes]] 64-bit
+    * shingle strings for [[graft.functions.shingleHashes]] 64-bit
     * postings (8 bytes/posting through the shuffle); strings here keep
     * the oracle exact. Per-source vocabulary sizes re-join as
     * broadcasts (one row per source).

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.cellAsg
 import graft.model.Tables
 import graft.ops.{Dedup, Similarity, TextStats}
 
@@ -35,7 +36,7 @@ private[queries] object LlmModelOps {
     *
     * Array-native (r16, the [[graft.functions.PqCodec]] discipline):
     * the corpus checkpoints once as `(vec_id, xs array<long>)`;
-    * assignment is the map-side `pq_cell_asg` codegen argmin against
+    * assignment is the map-side [[graft.functions.cellAsg]] argmin against
     * driver-collected centroids (k·dims longs — model metadata, the
     * bounded-collect rule), and each Lloyd update is one partial-
     * aggregated groupBy whose exchange carries ≤ k·dims groups,
@@ -45,8 +46,6 @@ private[queries] object LlmModelOps {
     * centroid table is a LocalTableScan.
     */
   private[queries] def kmeansFit(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.functions.PqCodec.register(s.sessionState.functionRegistry)
-    import graft.functions.PqCodec.{sqlArr, sqlMat}
     val vecs = Tables.embeddings(s, d)
       .select(col("vec_id"), transform(col("embedding").cast("array<double>"),
         x => round(x * Similarity.MeanScale).cast("long")).as("xs"))
@@ -55,10 +54,10 @@ private[queries] object LlmModelOps {
     val seed = vecs.filter(col("vec_id") < 8L).collect().sortBy(_.getLong(0))
     var ids = seed.map(_.getLong(0))
     var cents = seed.map(_.getSeq[Long](1).toArray)
-    def asgE = s"pq_cell_asg(xs, ${sqlArr(ids)}, ${sqlMat(cents)})"
     def update(): Unit = {
       val upd = vecs
-        .select(expr(asgE).as("k"), posexplode(col("xs")).as(Seq("pos", "xe")))
+        .select(cellAsg(col("xs"), ids, cents).as("k"),
+          posexplode(col("xs")).as(Seq("pos", "xe")))
         .groupBy("k", "pos")
         // sign-split: component sums go negative, where Spark DIV
         // (truncate) and DuckDB // (floor) disagree — divide magnitudes
@@ -84,7 +83,7 @@ private[queries] object LlmModelOps {
         org.apache.spark.sql.types.IntegerType, nullable = false),
       org.apache.spark.sql.types.StructField("ce",
         org.apache.spark.sql.types.LongType, nullable = false))))
-    (cent, vecs.select(col("vec_id"), expr(asgE).as("k")))
+    (cent, vecs.select(col("vec_id"), cellAsg(col("xs"), ids, cents).as("k")))
   }
 
   private[queries] val qKmeans: Q = (s, d) => {

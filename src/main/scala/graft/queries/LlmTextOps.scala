@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{countMin, rollingHashMin}
 import graft.model.Tables
 import graft.ops.{Dedup, Similarity, TextStats}
 
@@ -115,11 +116,10 @@ private[queries] object LlmTextOps {
     * exactly with zero raw-token rescan.
     */
   private[queries] val qCountminNative: Q = (s, d) => {
-    graft.functions.Udfs.registerAll(s)
     val toks = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
-    val sk = toks.agg(expr("countmin_agg(tok)").as("sk"))
+    val sk = toks.agg(countMin(col("tok")).as("sk"))
     val exact = toks.groupBy("tok").agg(count(lit(1)).as("exact"))
       .orderBy(col("exact").desc, col("tok").asc).limit(10)
     val est = (0 until 4).map(r =>
@@ -198,10 +198,9 @@ private[queries] object LlmTextOps {
     * windows (graft.functions.RollingHashMin, O(n) per doc).
     */
   private[queries] val qFingerprintRolling: Q = (s, d) => {
-    graft.functions.Udfs.registerAll(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
-        expr("rolling_hash_min(text, 16)").as("min_window_hash"))
+        rollingHashMin(col("text"), 16).as("min_window_hash"))
       .orderBy(col("doc_id"))
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{kllQuantile, kllSketch}
 import graft.model.Tables
 
 /** Generalized relational surface (SURVEY.md §2.B): join types, aggregation
@@ -381,17 +382,16 @@ object Relational {
     * nation) is BatchOpsSpec-pinned equal to direct sketching.
     */
   private val qKllQuantiles: Q = (s, d) => {
-    graft.functions.Udfs.registerAll(s)
     Tables.customer(s, d)
       .select(col("c_nationkey"),
         expr("CAST(round(c_acctbal * 100.0) AS BIGINT)").as("cents"))
       .groupBy("c_nationkey")
-      .agg(expr("kll_sketch_agg(cents, 2048)").as("sk"),
+      .agg(kllSketch(col("cents"), 2048).as("sk"),
         count(lit(1)).as("n_rows"))
       .select(col("c_nationkey"),
-        expr("kll_sketch_quantile(sk, 0.25)").as("p25_cents"),
-        expr("kll_sketch_quantile(sk, 0.5)").as("p50_cents"),
-        expr("kll_sketch_quantile(sk, 0.75)").as("p75_cents"),
+        kllQuantile(col("sk"), 0.25).as("p25_cents"),
+        kllQuantile(col("sk"), 0.5).as("p50_cents"),
+        kllQuantile(col("sk"), 0.75).as("p75_cents"),
         col("n_rows"))
       .orderBy("c_nationkey")
   }

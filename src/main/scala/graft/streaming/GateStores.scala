@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Shared plumbing of the streaming ingest gates ([[IngestGate]],
   * [[EmbGate]], [[AnnIngest]]): the durable per-batch store layout, the
@@ -78,24 +79,34 @@ private[graft] object GateStores {
     *
     * Batch semantics are unchanged: every task completes (or fails)
     * before this returns, so the enclosing foreachBatch still owns the
-    * batch's commit point, and the first failure rethrows — a failed
-    * store write fails the batch exactly as it did sequentially.
+    * batch's commit point, and a failure rethrows — a failed store write
+    * fails the batch exactly as it did sequentially. The rethrown error
+    * is the failure of the earliest task in `tasks` order, with every
+    * other task's failure attached as suppressed, so none is dropped. A
+    * fatal error (VirtualMachineError, InterruptedException, …) rethrows
+    * as soon as it arrives, without waiting for the siblings.
     */
   def inParallel(tasks: Seq[() => Unit]): Unit =
     if (tasks.size <= 1) tasks.foreach(_())
     else {
-      val errs = java.util.Collections.synchronizedList(
-        new java.util.ArrayList[Throwable]())
-      val threads = tasks.zipWithIndex.map { case (t, i) =>
-        val th = new Thread(
-          () => try t() catch { case e: Throwable => errs.add(e): Unit },
+      val done = new java.util.concurrent.LinkedBlockingQueue[(Int, Option[Throwable])]()
+      tasks.zipWithIndex.foreach { case (t, i) =>
+        val th = new Thread(() => done.put((i,
+          try { t(); None } catch { case e: Throwable => Some(e) })),
           s"gate-store-par-$i")
         th.setDaemon(true)
         th.start()
-        th
       }
-      threads.foreach(_.join())
-      if (!errs.isEmpty) throw errs.get(0)
+      val errs = new Array[Throwable](tasks.size)
+      for (_ <- tasks.indices) done.take() match {
+        case (i, Some(NonFatal(e))) => errs(i) = e
+        case (_, Some(fatal)) => throw fatal
+        case (_, None) => ()
+      }
+      errs.filter(_ != null).distinct match {
+        case Array() => ()
+        case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      }
     }
 
   /** Per-batch store landing. `files = 1` is the fixture default (a

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.functions.shingleHashes
 import graft.ops.{Dedup, Par}
 
 /** Streaming near-duplicate INGESTION GATE — the continuous-corpus form
@@ -90,10 +91,9 @@ object IngestGate {
           () => GateStores.maybeCompact(ss, idxDir, upTo = batchId - 1,
             partitionCols = Seq("bgrp")): Unit,
           () => GateStores.maybeCompact(ss, shDir, upTo = batchId - 1): Unit))
-        val withSh = Par.fanOut(
-          Dedup.registerShingleHashFn(batch).select(col("doc_id"), col("text")))
+        val withSh = Par.fanOut(batch.select(col("doc_id"), col("text")))
           .withColumn("toks", split(col("text"), " "))
-          .withColumn("sh", Dedup.shingleHashes("toks", 3))
+          .withColumn("sh", shingleHashes(col("toks"), 3))
           .filter(size(col("sh")) > 0)
           .select(col("doc_id"), col("sh"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

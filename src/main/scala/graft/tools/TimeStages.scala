@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.functions.shingleHashes
 import graft.ops.Dedup
 
 /** Stage-level timing for the MinHash pipeline (diagnostic). */
@@ -19,9 +20,9 @@ object TimeStages {
       println(f"$label%-22s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
     }
     val docs = graft.model.Tables.documents(spark, d)
-    val withSh = Dedup.registerShingleHashFn(docs)
+    val withSh = docs
       .withColumn("toks", split(col("text"), " "))
-      .withColumn("sh", Dedup.shingleHashes("toks", 3))
+      .withColumn("sh", shingleHashes(col("toks"), 3))
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

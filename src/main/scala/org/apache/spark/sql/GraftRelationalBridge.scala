@@ -1,15 +1,26 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into the `private[sql]` Dataset constructor so graft's custom
-  * logical operators (e.g. [[graft.plans.AsOfJoin]]) can surface as
-  * ordinary DataFrames. Living in Spark's package namespace purely for
-  * access — the standard technique third-party Catalyst extensions use
-  * to materialize a hand-built LogicalPlan; no Spark behavior is
-  * modified or overridden here.
+/** Bridge into Spark's `private[sql]` classic-API constructors so
+  * graft's custom Catalyst nodes surface as ordinary API values: a
+  * hand-built logical operator (e.g. [[graft.plans.AsOfJoin]]) as a
+  * DataFrame, a custom expression (the kernels of
+  * [[graft.functions]]) as a Column. Living in Spark's package
+  * namespace purely for access — the standard technique third-party
+  * Catalyst extensions use; no Spark behavior is modified or
+  * overridden here.
   */
 object GraftRelationalBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Catalyst expression as a Column (unresolved children resolve
+    * when the Column is used in a plan).
+    */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The Catalyst expression behind a Column. */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }

@@ -240,7 +240,7 @@ class BatchOpsSpec extends AnyFunSuite {
     // the mergeable-quantile contract: sketching fine partitions and
     // merging must answer the coarse grain identically to sketching it
     // directly (exact regime: every group under k=200 items)
-    graft.functions.Udfs.registerAll(spark)
+    graft.functions.Catalog.register(spark)
     val c = graft.model.Tables.customer(spark, sf)
       .select(col("c_nationkey"),
         expr("CAST(round(c_acctbal * 100.0) AS BIGINT)").as("cents"))

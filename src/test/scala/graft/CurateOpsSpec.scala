@@ -406,7 +406,7 @@ class CurateOpsSpec extends AnyFunSuite {
   }
 
   test("nfc_normalize recomposes combining marks; identity on normalized input") {
-    graft.functions.Udfs.registerAll(spark)
+    graft.functions.Catalog.register(spark)
     // "é" decomposed (e + U+0301) vs precomposed (U+00E9): NFC must make
     // them THE SAME string — the property the corpus (ASCII) can't test
     val decomposed = "Cafe\u0301"

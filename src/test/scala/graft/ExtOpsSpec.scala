@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{LapTimeMillis, Udfs}
+import graft.functions.{Catalog, LapTimeMillis}
 import graft.ops.Multimodal
 
 class ExtOpsSpec extends AnyFunSuite {
@@ -10,7 +10,7 @@ class ExtOpsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("LapTimeMillis expression formats and stays null-safe in codegen") {
-    Udfs.registerAll(spark)
+    Catalog.register(spark)
     val got = Seq[Option[Long]](Some(83456L), None, Some(59L)).toDF("ms")
       .selectExpr("lap_time_millis(ms) AS s")
       .collect().map(r => Option(r.getString(0))).toSeq
@@ -18,7 +18,7 @@ class ExtOpsSpec extends AnyFunSuite {
   }
 
   test("LapTimeMillis rejects non-long input at analysis time") {
-    Udfs.registerAll(spark)
+    Catalog.register(spark)
     val err = intercept[Exception] {
       Seq("x").toDF("s").selectExpr("lap_time_millis(s)").collect()
     }
@@ -26,7 +26,7 @@ class ExtOpsSpec extends AnyFunSuite {
   }
 
   test("UDF and native expression agree everywhere") {
-    Udfs.registerAll(spark)
+    Catalog.register(spark)
     val df = graft.model.Tables.events(spark, sf)
       .withColumn("ms", floor($"value" * 1000).cast("long"))
     val diff = df.selectExpr("lap_time_millis(ms) a", "lap_time_udf(ms) b")
@@ -35,7 +35,7 @@ class ExtOpsSpec extends AnyFunSuite {
   }
 
   test("TopKAggregator keeps the k largest with deterministic ties") {
-    Udfs.registerAll(spark)
+    Catalog.register(spark)
     val df = Seq((1L, 5.0, "a"), (2L, 9.0, "a"), (3L, 9.0, "a"), (4L, 1.0, "a"))
       .toDF("id", "score", "g")
     val got = df.groupBy($"g").agg(expr("top_k_events(id, score)").as("t"))
@@ -44,20 +44,19 @@ class ExtOpsSpec extends AnyFunSuite {
   }
 
   test("custom expressions reject wrong input types at analysis time") {
-    Udfs.registerAll(spark)
-    graft.ops.Dedup.registerShingleFn(spark.range(1).toDF())
+    import graft.functions.{dot, jaccard, shingles}
     val dotErr = intercept[Exception] {
       Seq((Array("x"), Array(1.0))).toDF("a", "b")
-        .selectExpr("dot_arr(a, b)").collect()
+        .select(dot($"a", $"b")).collect()
     }
     assert(dotErr.getMessage.contains("ARRAY<DOUBLE>"))
     val jacErr = intercept[Exception] {
       Seq((Array(1.0), Array(2.0))).toDF("a", "b")
-        .selectExpr("jaccard_sorted(a, b)").collect()
+        .select(jaccard($"a", $"b")).collect()
     }
     assert(jacErr.getMessage.toUpperCase.contains("ARRAY"))
     val shErr = intercept[Exception] {
-      Seq(Array(1L, 2L)).toDF("a").selectExpr("graft_shingles(a, 3)").collect()
+      Seq(Array(1L, 2L)).toDF("a").select(shingles($"a", 3)).collect()
     }
     assert(shErr.getMessage.contains("ARRAY<STRING>"))
   }
@@ -73,7 +72,7 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(minHash(UTF8String.fromString(s), k) == direct)
     // shorter than the window → sentinel (rendered as null by the expr)
     assert(minHash(UTF8String.fromString("short"), 8) == -1L)
-    Udfs.registerAll(spark)
+    Catalog.register(spark)
     val viaSql = Seq("short", s).toDF("t")
       .selectExpr("rolling_hash_min(t, 8) AS h")
       .collect().map(r => Option(r.get(0))).toSeq
@@ -100,7 +99,7 @@ class ExtOpsSpec extends AnyFunSuite {
     // on repeated n-grams and the empty case
     val df = Seq("a b c d", "x y x y x y", "a b").toDF("text")
       .selectExpr("split(text, ' ') AS toks")
-    graft.functions.Udfs.registerAll(spark)
+    Catalog.register(spark)
     val rows = df.selectExpr(
       "shingle_hashes(toks, 3) AS fused",
       "array_sort(array_distinct(transform(graft_shingles(toks, 3), s -> xxhash64(s)))) AS composed"
@@ -111,7 +110,7 @@ class ExtOpsSpec extends AnyFunSuite {
   }
 
   test("ShingleHashes skips null tokens (as if filtered) instead of NPE") {
-    graft.functions.Udfs.registerAll(spark)
+    Catalog.register(spark)
     val rows = Seq(Seq("a", null, "b", "c"), Seq(null, null), Seq("a", "b", null))
       .toDF("toks")
       .selectExpr(
@@ -126,7 +125,7 @@ class ExtOpsSpec extends AnyFunSuite {
     // ran first, so the documented equivalence
     // shingle_hashes(toks,n) == sort(distinct(transform(shingles(toks,n), xxhash64)))
     // holds for null-containing arrays too
-    graft.functions.Udfs.registerAll(spark)
+    Catalog.register(spark)
     val rows = Seq(Seq("a", null, "b", "c"), Seq("x", "y", null, "x", "y"), Seq[String](null, null))
       .toDF("toks")
       .selectExpr(

@@ -561,20 +561,27 @@ class PlanSpec extends AnyFunSuite {
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()
     try {
-      val s = Graft.session(master = "local[2]", shufflePartitions = 2)
+      // operator code must never rebind a SQL name on the caller's
+      // session: after the dedup signature pass at k=32 and the ingest
+      // gate, SQL minhash_signature(sh, 8) still returns 8 hashes, and
+      // nothing logs a replaced function
+      val (s, replaced) = replacedFunctionWarnings {
+        val s = Graft.session(master = "local[2]", shufflePartitions = 2)
+        val sh = s.range(4).selectExpr("id AS doc_id",
+          "shingle_hashes(array('a', 'b', 'c', CAST(id AS STRING)), 2) AS sh")
+        val sigs = graft.ops.Dedup.minhashSignatures(sh, "doc_id", 32)
+        assert(sigs.columns.length == 33 && sigs.collect().length == 4)
+        assert(graft.streaming.IngestGate.replayNearDupGate(s, sf).count() > 0)
+        s
+      }
+      assert(replaced.isEmpty, replaced.mkString("\n"))
+      val k = s.sql("SELECT size(minhash_signature(" +
+        "shingle_hashes(array('a','b','c','d'), 2), 8))").collect().head.getInt(0)
+      assert(k == 8, s"SQL minhash_signature(sh, 8) returned $k hashes")
       assert(s.conf.get("spark.sql.shuffle.partitions") == "2")
       assert(s.sql("SELECT lap_time_millis(1500L)").collect().head.getString(0) == "00:01.500")
-      // all nine custom expressions resolve through the extension path
-      val probe = s.sql(
-        """SELECT dot_arr(array(1.0d, 2.0d), array(3.0d, 4.0d)),
-          |  jaccard_sorted(array('a','b'), array('b','c')),
-          |  size(graft_shingles(array('a','b','c'), 2)),
-          |  rolling_hash_min('abcdefghijklmnopqr', 16),
-          |  size(minhash_signature(shingle_hashes(array('a','b','c'), 2), 8)),
-          |  simhash_signature(array('a','b')),
-          |  size(srp_bands(array(1.0d, -2.0d), 4, 2))""".stripMargin).collect().head
-      assert(probe.getDouble(0) == 11.0 && probe.getInt(2) == 2)
-      assert(probe.getInt(6) == 4)
+      // every catalog function resolves through the extension path
+      assertCatalogResolves(s)
     } finally {
       org.apache.spark.sql.SparkSession.setActiveSession(shared)
       org.apache.spark.sql.SparkSession.setDefaultSession(shared)

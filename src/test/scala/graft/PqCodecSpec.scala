@@ -1,22 +1,20 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the array-native PQ codec expressions
-  * ([[graft.functions.PqCodec]]) to the join-form argmin they replaced
-  * (r16): same exact-integer terms, same lowest-id tie rule, same
-  * surviving-cell semantics — the properties the ANN keys' hash gates
-  * rest on.
+  * ([[graft.functions.PqCodec]], built through the typed Column
+  * builders of [[graft.functions]]) to the join-form argmin they
+  * replaced (r16): same exact-integer terms, same lowest-id tie rule,
+  * same surviving-cell semantics — the properties the ANN keys' hash
+  * gates rest on.
   */
 class PqCodecSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  graft.functions.PqCodec.register(spark.sessionState.functionRegistry)
-
-  import graft.functions.PqCodec.{sqlArr, sqlCube, sqlMat}
+  import graft.functions.{cellAsg, cellResidual, pqCodes, pqDist2}
 
   // deterministic 12-vector, dims=8 lattice fixture; values chosen so
   // several vectors are equidistant between centroids (tie exercise)
@@ -46,7 +44,7 @@ class PqCodecSpec extends AnyFunSuite {
     val ids = Array(0L, 3L, 7L)
     val cents = Array(vecOf(0L), vecOf(3L), vecOf(7L))
     val got = vecs.select($"n_id",
-        expr(s"pq_cell_asg(xs, ${sqlArr(ids)}, ${sqlMat(cents)})").as("cell"))
+        cellAsg($"xs", ids, cents).as("cell"))
       .as[(Long, Long)].collect().toMap
     (0L until 12L).foreach { i =>
       assert(got(i) == refArgmin(vecOf(i), ids, cents),
@@ -60,8 +58,7 @@ class PqCodecSpec extends AnyFunSuite {
     // two IDENTICAL centroids under different ids: every vector ties
     val c = vecOf(1L)
     val got = vecs.select(
-        expr(s"pq_cell_asg(xs, ${sqlArr(Array(2L, 9L))}, " +
-          s"${sqlMat(Array(c, c))})").as("cell"))
+        cellAsg($"xs", Array(2L, 9L), Array(c, c)).as("cell"))
       .as[Long].collect()
     assert(got.forall(_ == 2L))
   }
@@ -71,10 +68,9 @@ class PqCodecSpec extends AnyFunSuite {
     val cents = Array(vecOf(0L), vecOf(3L))
     val got = vecs
       .select($"n_id", $"xs",
-        expr(s"pq_cell_asg(xs, ${sqlArr(ids)}, ${sqlMat(cents)})").as("cell"))
+        cellAsg($"xs", ids, cents).as("cell"))
       .select($"n_id", $"cell",
-        expr(s"pq_residual(xs, cell, ${sqlArr(ids)}, ${sqlMat(cents)})")
-          .as("rxs"))
+        cellResidual($"xs", $"cell", ids, cents).as("rxs"))
       .as[(Long, Long, Array[Long])].collect()
     got.foreach { case (i, cell, rxs) =>
       val c = cents(ids.indexOf(cell))
@@ -92,8 +88,7 @@ class PqCodecSpec extends AnyFunSuite {
     val sub1 = Array(tied, tied, vecOf(9L).slice(dsub, dims))
     val cids = Array(Array(10L, 20L, 30L), Array(1L, 2L, 3L))
     val got = vecs.select($"n_id",
-        expr(s"pq_codes(xs, $dsub, ${sqlMat(cids)}, " +
-          s"${sqlCube(Array(sub0, sub1))})").as("codes"))
+        pqCodes($"xs", dsub, cids, Array(sub0, sub1)).as("codes"))
       .as[(Long, Array[Long])].collect()
     got.foreach { case (i, codes) =>
       assert(codes.length == 2)
@@ -158,18 +153,28 @@ class PqCodecSpec extends AnyFunSuite {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(e => Option(e.getMessage).getOrElse("")).toSeq
     val e1 = intercept[Exception] {
-      short.select(
-        expr(s"pq_cell_asg(xs, ${sqlArr(ids)}, ${sqlMat(cents)})")).collect()
+      short.select(cellAsg($"xs", ids, cents)).collect()
     }
     assert(rootChain(e1).exists(_.contains("pq_cell_asg")))
     val dsub = 4
     val subs = Array(vecOf(2L).take(dsub), vecOf(5L).take(dsub))
     val e2 = intercept[Exception] {
-      short.select(
-        expr(s"pq_codes(xs, $dsub, ${sqlMat(Array(Array(1L, 2L)))}, " +
-          s"${sqlCube(Array(subs))})")).collect()
+      short.select(pqCodes($"xs", dsub, Array(Array(1L, 2L)), Array(subs)))
+        .collect()
     }
     assert(rootChain(e2).exists(_.contains("pq_codes")))
+    // exact length: a vector LONGER than m·dsub fails too, instead of
+    // silently dropping its tail (here m·dsub = 4 < 8 = dims)
+    val e3 = intercept[Exception] {
+      vecs.select(pqCodes($"xs", dsub, Array(Array(1L, 2L)), Array(subs)))
+        .collect()
+    }
+    assert(rootChain(e3).exists(_.contains("pq_codes: vector length 8 != m·dsub = 4")))
+    val e4 = intercept[Exception] {
+      vecs.select(pqDist2($"xs", dsub, Array(Array(1L, 2L)), Array(subs)))
+        .collect()
+    }
+    assert(rootChain(e4).exists(_.contains("pq_dist2: vector length 8 != m·dsub = 4")))
   }
 
   test("collectCoarseGeo rejects a sparse coarse table (ADVICE r16)") {
@@ -179,13 +184,33 @@ class PqCodecSpec extends AnyFunSuite {
       (3L, 0, 20L)
     ).toDF("cell_id", "pos", "ce")
     val e = intercept[IllegalArgumentException] {
-      graft.ops.Similarity.collectCoarseGeo(sparse)
+      graft.ops.Similarity.collectCoarseGeo(sparse, dims = 2)
     }
     assert(e.getMessage.contains("not dense"))
     // and the dense form of the same table passes
     val dense = sparse.union(Seq((3L, 1, 21L)).toDF("cell_id", "pos", "ce"))
-    val (idsOk, centsOk) = graft.ops.Similarity.collectCoarseGeo(dense)
+    val (idsOk, centsOk) = graft.ops.Similarity.collectCoarseGeo(dense, dims = 2)
     assert(idsOk.sameElements(Array(0L, 3L)))
     assert(centsOk.forall(_.length == 2))
+    // a table dense but shorter than the caller's dims is rejected too
+    intercept[IllegalArgumentException] {
+      graft.ops.Similarity.collectCoarseGeo(dense, dims = 3)
+    }
+    // cell 3 skips pos 1 but keeps pos 2: both centroids span
+    // max(pos)+1 = 3, so a cross-cell length check alone would pass it
+    // and read the hole as a 0 coordinate
+    val holed = Seq(
+      (0L, 0, 10L), (0L, 1, 11L), (0L, 2, 12L),
+      (3L, 0, 20L), (3L, 2, 22L)
+    ).toDF("cell_id", "pos", "ce")
+    val eh = intercept[IllegalArgumentException] {
+      graft.ops.Similarity.collectCoarseGeo(holed, dims = 3)
+    }
+    assert(eh.getMessage.contains("not dense") && eh.getMessage.contains("cell 3"))
+    // a duplicated pos row in place of the hole fails the same way
+    val duped = holed.union(Seq((3L, 0, 20L)).toDF("cell_id", "pos", "ce"))
+    intercept[IllegalArgumentException] {
+      graft.ops.Similarity.collectCoarseGeo(duped, dims = 3)
+    }
   }
 }

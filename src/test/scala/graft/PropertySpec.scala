@@ -419,6 +419,21 @@ class PropertySpec extends AnyFunSuite {
         .collect().head
       assert(got.getString(0) == "01:23.456")
       assert(got.getDouble(1) == 11.0)
+      // every catalog function is injected, and the registrar (which adds
+      // only the two demonstration UDFs here) replaces none of them
+      assertCatalogResolves(s2)
+      // a plain session gets the same functions from the registrar, which
+      // keeps a function its user registered under a catalog name
+      val plain = spark.newSession()
+      val reg = plain.sessionState.functionRegistry
+      reg.createOrReplaceTempFunction("dot_arr",
+        _ => org.apache.spark.sql.catalyst.expressions.Literal(42), "scala_udf")
+      graft.functions.Catalog.register(plain)
+      assert(plain.sql("SELECT dot_arr(array(1.0d), array(1.0d))")
+        .collect().head.getInt(0) == 42, "the registrar replaced dot_arr")
+      reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier("dot_arr"))
+      graft.functions.Catalog.register(plain)
+      assertCatalogResolves(plain)
       // the planner strategy and both optimizer rules ride the same
       // extension — a deployment-configured session needs no runtime
       // registration through ops/AsOf
@@ -688,7 +703,7 @@ class PropertySpec extends AnyFunSuite {
     // counters are plain sums, so sketch mergeability is EXACT — the
     // property that lets per-shard sketches land as 8 KB columns and
     // answer the corpus question later with zero raw-token rescan
-    graft.functions.Udfs.registerAll(spark)
+    graft.functions.Catalog.register(spark)
     val toks = graft.model.Tables.documents(spark, sf)
       .select($"source", explode(split($"text", " ")).as("tok"))
       .filter($"tok" =!= "")

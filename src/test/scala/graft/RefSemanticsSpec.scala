@@ -19,6 +19,65 @@ object TestSpark {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Every [[graft.functions.Catalog]] entry resolves on `s` to the
+    * catalog's own entry (not a same-named function from elsewhere);
+    * after the registrar both demonstration UDFs resolve too, and
+    * neither that call nor a further one replaces a builder already
+    * present.
+    */
+  def assertCatalogResolves(s: SparkSession): Unit = {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = s.sessionState.functionRegistry
+    def builders(names: Seq[String]) =
+      names.map(n => reg.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+    def assertKept(names: Seq[String], before: Seq[AnyRef]): Unit =
+      names.zip(before.zip(builders(names))).foreach { case (n, (b0, b1)) =>
+        assert(b0 eq b1, s"the registrar replaced $n")
+      }
+    val entries = graft.functions.Catalog.entries
+    entries.foreach(e => assert(
+      reg.lookupFunction(FunctionIdentifier(e.name)).map(_.getUsage)
+        .contains(e.usage), s"${e.name} does not resolve to its catalog entry"))
+    val names = entries.map(_.name)
+    val before = builders(names)
+    graft.functions.Catalog.register(s)
+    assertKept(names, before)
+    val all = names ++ Seq("lap_time_udf", "top_k_events")
+    all.foreach(n => assert(s.catalog.functionExists(n), s"$n does not resolve"))
+    val again = builders(all)
+    graft.functions.Catalog.register(s)
+    assertKept(all, again)
+  }
+
+  /** `body`'s result and the "replaced a previously registered function"
+    * warnings Spark's function registry logged while it ran.
+    */
+  def replacedFunctionWarnings[A](body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val msgs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("replaced-functions", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit =
+        msgs.add(e.getMessage.getFormattedMessage): Unit
+    }
+    app.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .asInstanceOf[Logger]
+    logger.addAppender(app)
+    try {
+      val out = body
+      import scala.jdk.CollectionConverters._
+      (out, msgs.asScala.toSeq
+        .filter(_.contains("replaced a previously registered function")))
+    } finally {
+      logger.removeAppender(app)
+      app.stop()
+    }
+  }
 }
 
 /** Reference-semantics unit tests (SURVEY.md §5.2.2): each asserts a

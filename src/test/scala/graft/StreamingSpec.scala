@@ -48,7 +48,7 @@ class StreamingSpec extends AnyFunSuite {
     // integration a custom native aggregate most easily breaks. The
     // window's median over integer cents must equal the explicit
     // order statistic over the same rows (exact regime: 9 items ≪ k).
-    graft.functions.Udfs.registerAll(spark)
+    graft.functions.Catalog.register(spark)
     implicit val sc = spark.sqlContext
     val in = MemoryStream[Ev]
     val q = in.toDF().withWatermark("ts", "10 minutes")
@@ -1115,5 +1115,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage == "boom")
     assert(survivors.get() == 2,
       "non-failing siblings must still complete before the rethrow")
+    // two store tasks fail and the later one finishes first: the
+    // rethrown error is the earlier task's, carrying the other as
+    // suppressed, so neither failure is dropped
+    val late = new java.util.concurrent.CountDownLatch(1)
+    val e2 = intercept[IllegalStateException] {
+      graft.streaming.GateStores.inParallel(Seq(
+        () => { late.await(); throw new IllegalStateException("first store") },
+        () => { try throw new IllegalArgumentException("second store")
+                finally late.countDown() },
+        () => ()))
+    }
+    assert(e2.getMessage == "first store")
+    assert(e2.getSuppressed.map(_.getMessage).toSeq == Seq("second store"))
   }
 }
