@@ -36,10 +36,6 @@ object Expressions {
         lpad(millis.cast("string"), 3, "0")))
   }
 
-  /** Seconds (possibly fractional) → "MM:SS.mmm". */
-  def formatLapTimeSeconds(sec: Column): Column =
-    formatLapTime((sec * 1000.0).cast("long"))
-
   /** Timestamp → ISO-8601 "yyyy-MM-ddTHH:mm:ssZ"; null (NaT) → "". */
   def isoTimestamp(ts: Column): Column =
     coalesce(date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'"), lit(""))

@@ -19,7 +19,6 @@ object ExtOps {
       .withColumn("lap_ms", floor(col("value") * 1000.0).cast("long"))
       .withColumn("lap_time", lapTime(col("lap_ms")))
       .select(col("event_id"), col("lap_time"))
-      .orderBy(col("event_id"))
   }
 
   /** Same semantics through the black-box Scala UDF registration path. */

@@ -10,8 +10,9 @@ import graft.ops.Expressions._
   * nest-to-array, JSON flattening, broadcast lookup join, upsert merge).
   *
   * Each entry is paired with ANSI SQL in [[RefOps.oracle]] for the driver's
-  * DuckDB differential check. All queries end in a total ORDER BY so row
-  * order is deterministic on both sides; money aggregates go through exact
+  * DuckDB differential check, which compares rows order-free on both
+  * sides: `ORDER BY` only where order feeds a result (`LIMIT`, rank,
+  * first/last, an ordered write). Money aggregates go through exact
   * integer cents; no `collect()` anywhere — every operator is a pure
   * distributed plan that scales by partitioning.
   */
@@ -23,7 +24,6 @@ object RefOps {
     Tables.orders(s, d)
       .filter(col("o_orderstatus") === "F")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .orderBy(col("o_orderkey"))
 
   /** F2 dags/racedag.py:43 `.iloc[0]` — first row after a deterministic sort. */
   private val qLimit: Q = (s, d) =>
@@ -39,7 +39,6 @@ object RefOps {
         col("l_orderkey").as("order_key"),
         col("l_linenumber").as("line_no"),
         col("l_quantity").as("qty"))
-      .orderBy(col("order_key"), col("line_no"))
 
   /** F4 dags/practicedag.py:64 `dropna` — derive a nullable column then
     * drop null rows (testdata has no physical nulls, so nulls are derived).
@@ -146,7 +145,6 @@ object RefOps {
             x => concat(x.getField("event_id").cast("string"), lit(":"),
               x.getField("event_type"))),
           ",").as("events_str"))
-      .orderBy(col("user_id"))
 
   /** J1 dags/driverstandings.py:20 — JSON path extraction with schema. */
   private val qJsonExplode: Q = (s, d) => {
@@ -172,7 +170,6 @@ object RefOps {
     val sup = Tables.supplier(s, d)
     li.join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"), "inner")
       .select(col("l_orderkey"), col("l_linenumber"), col("s_name"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
   }
 
   /** K1 dags/racedag.py:68-73 — keyed upsert as anti-join + union (the
@@ -187,7 +184,6 @@ object RefOps {
       .withColumn("price_cents",
         round(col("price_cents") * 1.1).cast("long"))
     graft.ops.Sinks.mergeByKey(base, updates, Seq("o_orderkey"))
-      .orderBy(col("o_orderkey"))
   }
 
   /** S1 dags/driverstandings.py:66-68 — JSON document source → flatten.

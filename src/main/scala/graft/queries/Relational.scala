@@ -10,8 +10,11 @@ import graft.model.Tables
   * families, window functions, sort/top-k, set operations, and the scalar
   * function families. All are Spark built-ins so Catalyst's rewrites
   * (pushdown, pruning, join selection, partial aggregation, top-k) apply;
-  * determinism rules follow §5.2 (total ORDER BY, exact integer cents,
-  * unique window-order tiebreaks).
+  * determinism rules follow §5.2 (exact integer cents, unique
+  * window-order tiebreaks). `ORDER BY` only where order feeds a result
+  * (`LIMIT`, rank, first/last, an ordered write): results are compared
+  * order-free on both sides, so a trailing sort with no consumer is
+  * pure cost.
   */
 /** Row type for the typed-Dataset aggregation query (top-level so the
   * product encoder's TypeTag resolves).
@@ -32,7 +35,6 @@ object Relational {
     val c = Tables.customer(s, d)
     o.join(c, o("o_custkey") === c("c_custkey"), "inner")
       .select(col("o_orderkey"), col("c_name"), col("c_mktsegment"))
-      .orderBy(col("o_orderkey"))
   }
 
   private val qJoinLeft: Q = (s, d) => {
@@ -125,7 +127,6 @@ object Relational {
         last(when(col("event_type") === "view", col("ts")), ignoreNulls = true).over(w))
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("last_view_ts"))
-      .orderBy(col("event_id"))
   }
 
   /** As-of join through the NATIVE Catalyst operator
@@ -288,7 +289,6 @@ object Relational {
         min(col("l_quantity").cast("long")).as("min_qty"),
         max(col("l_quantity").cast("long")).as("max_qty"),
         count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   private val qCountDistinct: Q = (s, d) =>
     Tables.lineitem(s, d)
@@ -296,7 +296,6 @@ object Relational {
       .agg(
         countDistinct(col("l_suppkey")).as("n_supp"),
         countDistinct(col("l_partkey")).as("n_part"))
-      .orderBy(col("l_returnflag"))
 
   /** HLL sketch — approximate by design, so no SQL oracle (rows-only). */
   private val qApproxDistinct: Q = (s, d) =>
@@ -412,7 +411,6 @@ object Relational {
     Tables.lineitem(s, d)
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(sum(col("l_quantity").cast("long")).as("sum_qty"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
 
   private val qCube: Q = (s, d) =>
     Tables.lineitem(s, d)
@@ -567,7 +565,6 @@ object Relational {
       .withColumn("drnk", dense_rank().over(w))
       .filter(col("rnk") <= 10)
       .select(col("o_orderpriority"), col("rnk"), col("drnk"), col("o_orderkey"))
-      .orderBy(col("o_orderpriority"), col("rnk"), col("o_orderkey"))
   }
 
   private val qWindowLag: Q = (s, d) => {
@@ -589,7 +586,6 @@ object Relational {
     Tables.events(s, d)
       .withColumn("running_cents", sum(cents(col("value"))).over(w))
       .select(col("event_id"), col("user_id"), col("running_cents"))
-      .orderBy(col("event_id"))
   }
 
   /** ntile / lead / first_value / last_value with explicit frames. */
@@ -703,7 +699,6 @@ object Relational {
     c.filter(col("c_mktsegment") === "AUTOMOBILE").select(col("c_custkey"))
       .union(c.filter(col("c_acctbal") > 5000.0).select(col("c_custkey")))
       .distinct()
-      .orderBy(col("c_custkey"))
   }
 
   private val qIntersect: Q = (s, d) => {
@@ -873,7 +868,6 @@ object Relational {
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
       .groupBy(col("event_type"))
       .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
-      .orderBy(col("event_type"))
 
   /** Scalar semi-structured PARSING surface beside `q_json_funcs`'s
     * JSON path: `from_csv` and `from_xml` (Spark 4 scalar XML) each

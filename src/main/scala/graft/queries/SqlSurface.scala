@@ -710,7 +710,6 @@ object SqlSurface {
         sup, "s_suppkey",
         col("l_orderkey") * 8 + col("l_linenumber"), salts = 8)
       .select(col("l_orderkey"), col("l_linenumber"), col("s_name"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
   }
 
   /** Generator/UDTF shape: one row per token. */

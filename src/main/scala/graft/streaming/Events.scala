@@ -25,17 +25,6 @@ object Events {
     */
   case class Alert(user_id: Long, trigger_event_id: Long, total_cents: Long)
 
-  /** Streaming source over a parquet events directory. */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(batchSchema).parquet(s"$dir/events.parquet")
-    if (batchSchema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-    else raw
-  }
-
   /** Tumbling 1-hour counts per event type, 10-minute watermark. */
   def tumblingCounts(events: DataFrame,
                      windowLen: String = "1 hour",

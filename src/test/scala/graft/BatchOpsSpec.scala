@@ -210,6 +210,64 @@ class BatchOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("q_approx_distinct: HLL estimate within 3x its rsd of the exact count") {
+    val exact = graft.model.Tables.lineitem(spark, sf).groupBy("l_returnflag")
+      .agg(countDistinct("l_orderkey").as("exact_orders"))
+    val got = q("q_approx_distinct").join(exact, "l_returnflag").collect()
+    assert(got.length == exact.count())
+    got.foreach { r =>
+      val (approx, ex) = (r.getAs[Long]("approx_orders"), r.getAs[Long]("exact_orders"))
+      assert(math.abs(approx - ex) <= 3 * 0.02 * ex,
+        s"flag ${r.get(0)}: approx $approx vs exact $ex")
+    }
+  }
+
+  test("q_approx_percentile: p50 and p99 rank error within ceil(n/accuracy) per group") {
+    // a returned value v covers the 1-based ranks (#below v, #at-or-below v];
+    // its rank error is the distance from that range to the target q·n.
+    // Ranks are whole, so the sketch's ε·n bound (ε = 1/accuracy) holds
+    // rounded up to a whole rank
+    val li = graft.model.Tables.lineitem(spark, sf)
+      .select(col("l_returnflag"), col("l_extendedprice"))
+    val got = q("q_approx_percentile").collect()
+    assert(got.length == li.select("l_returnflag").distinct().count())
+    got.foreach { r =>
+      val flag = r.getAs[String]("l_returnflag")
+      val xs = li.filter(col("l_returnflag") === flag)
+      val n = xs.count()
+      Seq(0.5 -> "p50_price", 0.99 -> "p99_price").foreach { case (p, c) =>
+        val v = r.getAs[Double](c)
+        val row = xs.agg(
+          count(when(col("l_extendedprice") < v, 1)),
+          count(when(col("l_extendedprice") <= v, 1))).head()
+        val (below, atOrBelow) = (row.getLong(0), row.getLong(1))
+        val target = p * n
+        val err = math.max(0.0, math.max(below + 1 - target, target - atOrBelow))
+        assert(err <= math.ceil(n / 1000.0), s"flag $flag $c=$v: ranks ($below, $atOrBelow] " +
+          s"vs target $target of $n")
+      }
+    }
+  }
+
+  test("q_current_ts: every ingested_at lies inside the action's wall-clock bracket") {
+    import java.time.{Instant, LocalDateTime, ZoneId}
+    import java.time.temporal.ChronoUnit
+    val zone = ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val df = q("q_current_ts")
+    // the rendering keeps whole seconds, so the bracket opens on one
+    val before = Instant.now().truncatedTo(ChronoUnit.SECONDS)
+    val got = df.collect()
+    val after = Instant.now()
+    assert(got.length == graft.model.Tables.events(spark, sf).count())
+    got.foreach { r =>
+      val s = r.getAs[String]("ingested_at")
+      assert(s.endsWith("Z"), s)
+      val t = LocalDateTime.parse(s.dropRight(1)).atZone(zone).toInstant
+      assert(!t.isBefore(before) && !t.isAfter(after),
+        s"event ${r.get(0)}: ingested_at $s outside [$before, $after]")
+    }
+  }
+
   test("Ivm.maintain equals the direct join on every delta corner") {
     import spark.implicits._
     // bag semantics matter: duplicate keys on both sides must fan out

@@ -97,6 +97,30 @@ class F1PipelinesSpec extends AnyFunSuite {
     assert(got(1).getAs[String]("timestamp").nonEmpty)
   }
 
+  test("constructorStandings flattens Ergast JSON with sentinel defaults (constructorstandings.py:17-38)") {
+    val payload =
+      """{"MRData":{"StandingsTable":{"StandingsLists":[{"ConstructorStandings":[
+        |{"position":"1","positionText":"1","points":"589","wins":"9",
+        | "Constructor":{"constructorId":"mclaren","name":"McLaren"}},
+        |{"positionText":"-","points":"0",
+        | "Constructor":{"constructorId":"sauber"}}
+        |]}]}}}""".stripMargin.replaceAll("\n", "")
+    val got = F1Pipelines.constructorStandings(spark, payload)
+      .orderBy($"points".desc).collect()
+    assert(got.length == 2)
+    assert(got(0).getAs[String]("constructorId") == "mclaren")
+    assert(got(0).getAs[String]("constructorName") == "McLaren")
+    assert(got(0).getAs[Int]("points") == 589)
+    assert(got(0).getAs[Int]("position") == 1)
+    assert(got(0).getAs[Int]("wins") == 9)
+    // missing position / wins / name → sentinel 0 or "Unknown"
+    assert(got(1).getAs[Int]("position") == 0)
+    assert(got(1).getAs[String]("positionText") == "-")
+    assert(got(1).getAs[Int]("wins") == 0)
+    assert(got(1).getAs[String]("constructorName") == "Unknown")
+    assert(got(1).getAs[String]("timestamp").nonEmpty)
+  }
+
   test("schedule renders session dates ISO with NaT → empty (scheduledag.py:35-59)") {
     val events = Seq(
       (1, "Australia", "Australian GP 2025", "Australian GP", "conventional",

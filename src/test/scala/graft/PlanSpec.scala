@@ -128,6 +128,32 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
   }
 
+  test("analytics keys with no consumer for order plan no global sort; LIMIT keys keep top-k") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // results are compared order-free, so a trailing global sort here
+    // would only add a sampling job, a range exchange and a sort
+    val unordered = Seq("q_filter_eq", "q_project", "q_collect_struct",
+      "q_broadcast_join", "q_upsert_merge", "q_join_inner", "q_join_asof",
+      "q_groupby_agg", "q_count_distinct", "q_rollup", "q_window_rank",
+      "q_window_running", "q_union", "q_json_funcs", "q_join_salted",
+      "q_expr_laptime")
+    unordered.foreach { k =>
+      val plan = SparkEntry.queries(k)(spark, sf).queryExecution.executedPlan
+      val ordering = walkPlan(plan).collect {
+        case s: SortExec if s.global => s.nodeName
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[RangePartitioning] => "Exchange rangepartitioning"
+      }
+      assert(ordering.isEmpty, s"$k plans $ordering:\n${plan.toString.take(2000)}")
+    }
+    Seq("q_topk", "q_sql_tpch_q3").foreach { k =>
+      val p = planOf(k)
+      assert(p.contains("TakeOrderedAndProject"), s"$k:\n${p.take(2000)}")
+    }
+  }
+
   test("q_join_range stays an equi hash/merge join with range residual") {
     val p = planOf("q_join_range")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
