@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -43,6 +44,20 @@ object SparkEntry {
       graft.queries.EngageOps.registry ++
       graft.queries.GraphOps.registry ++
       graft.queries.SqlSurface.registry
+
+  /** The durable-table materializers by `_derive_*` name, in dependency
+    * order. Each derives its table once per JVM
+    * ([[graft.ops.DurableTable]]) and returns its row count, so a
+    * first call is the honest derivation cost and later calls read
+    * through.
+    */
+  val derives: ListMap[String, (SparkSession, String) => Long] = ListMap(
+    "_derive_copurchase" -> graft.queries.GraphOps.materializeEdges _,
+    "_derive_oriented_edges" -> graft.queries.GraphOps.materializeOriented _,
+    "_derive_dedup_clusters" -> graft.queries.LlmOps.materializeClusters _,
+    "_derive_match_pairs" -> graft.queries.LlmOps.materializeMatchPairs _,
+    "_derive_ann_index" -> graft.queries.LlmOps.materializeAnnIndex _,
+    "_derive_partsupp" -> graft.queries.SqlSurface.materializePartsupp _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

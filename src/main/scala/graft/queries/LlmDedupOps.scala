@@ -23,8 +23,9 @@ private[queries] object LlmDedupOps {
 
   /** 32 hashes × 2 rows/band = 16 bands: candidate-recall at the J=0.5
     * threshold is 1-(1-0.25)^16 ≈ 0.99 and ≈1 at the J ≥ 0.8 the corpus
-    * actually contains; TimeStages' recall audit shows 0 pairs missed vs
-    * the exact PPJoin ground truth. 64 hashes doubled the banded explode
+    * actually contains; LlmOpsSpec's recall audit pins 0 pairs missed
+    * (and none extra) vs the exact PPJoin ground truth `q_dedup_ngram`
+    * at sf0.01. 64 hashes doubled the banded explode
     * + candidate shuffle for no recall gain.
     */
   private[queries] val qDedupMinhash: Q = (s, d) =>

@@ -186,7 +186,7 @@ object AnnIngest {
         val ss = batch.sparkSession
         // section labels (guide §1.5): foreachBatch runs all jobs on one
         // thread, so the thread-local description attributes each job to
-        // its pipeline stage in the UI / ProfileKey without any cost
+        // its pipeline stage in the UI and in graft.tools.Profile at no cost
         def label(sec: String): Unit =
           ss.sparkContext.setJobDescription(s"ann-ingest b$batchId: $sec")
         label("fold")

@@ -673,8 +673,7 @@ object Events {
     val prevWscg = s.conf.get(wscgKey)
     val query =
       try {
-        s.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_REPLAY_PARTS", "4"))
+        s.conf.set("spark.sql.shuffle.partitions", "4")
         s.conf.set(noDataKey, "false")
         s.conf.set(wscgKey, "false")
         asofEnrichWatermarked(stream, delay = s"$delaySec seconds")

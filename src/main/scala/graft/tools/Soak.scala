@@ -125,21 +125,8 @@ object Soak {
 
     // shared durable tables first, timed, so per-key readings report
     // steady-state cost (the Bench discipline)
-    val derives = Seq[(String, () => Long)](
-      "_derive_copurchase" ->
-        (() => graft.queries.GraphOps.materializeEdges(spark, soakDir)),
-      "_derive_oriented_edges" ->
-        (() => graft.queries.GraphOps.materializeOriented(spark, soakDir)),
-      "_derive_dedup_clusters" ->
-        (() => graft.queries.LlmOps.materializeClusters(spark, soakDir)),
-      "_derive_match_pairs" ->
-        (() => graft.queries.LlmOps.materializeMatchPairs(spark, soakDir)),
-      "_derive_ann_index" ->
-        (() => graft.queries.LlmOps.materializeAnnIndex(spark, soakDir)),
-      "_derive_partsupp" ->
-        (() => graft.queries.SqlSurface.materializePartsupp(spark, soakDir))
-    ).map { case (name, fn) =>
-      val (sec, ok) = timed(fn())
+    val derives = graft.SparkEntry.derives.toSeq.map { case (name, fn) =>
+      val (sec, ok) = timed(fn(spark, soakDir))
       dropBlocks()
       println(f"[soak] $name%-28s ${if (ok) f"$sec%8.1f s" else "FAILED"}")
       (name, if (ok) sec else -1.0)

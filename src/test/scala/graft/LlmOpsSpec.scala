@@ -28,6 +28,15 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(pairs.contains((0L, 3L)))          // exact dup: J = 1
     assert(pairs.contains((0L, 1L)))          // near dup: 6/8 shingles shared
     assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
+    // recall audit: the exact n-gram pipeline shares the minhash key's
+    // oracle (Jaccard >= 0.5), so on the sf0.01 corpus the banded LSH
+    // must miss no pair and admit none
+    val sf01 = sf.replace("sf0.001", "sf0.01")
+    val lsh = SparkEntry.queries("q_dedup_minhash")(spark, sf01)
+    val exact = SparkEntry.queries("q_dedup_ngram")(spark, sf01)
+    assert(lsh.columns.toSeq == exact.columns.toSeq)
+    val (l, e) = (lsh.collect().toSet, exact.collect().toSet)
+    assert(e.nonEmpty && l == e, s"missed ${(e -- l).take(5)}; extra ${(l -- e).take(5)}")
   }
 
   test("simhashPairs: identical docs have hamming 0; unrelated docs excluded") {

@@ -614,6 +614,39 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("Profile records a key's layers, goes on past a failed key, and leaves no listener") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val before = org.apache.spark.sql.ListenerCounts(spark)
+    val dir = java.nio.file.Files.createTempDirectory("profile").toFile
+    try {
+      val Seq(filter, unknown, stream) =
+        Seq("q_filter_eq", "q_no_such_key", "q_stream_asof_wm")
+          .map(k => graft.tools.Profile.profile(spark, sf, k, dir))
+      assert(org.apache.spark.sql.ListenerCounts(spark) == before)
+      def num(r: collection.Map[String, Any], k: String): Double =
+        r(k).asInstanceOf[Number].doubleValue
+      assert(!filter.contains("error"), filter)
+      assert(num(filter, "exec.jobs") >= 1, filter)
+      assert(num(filter, "exec.tasks") >= num(filter, "exec.jobs"), filter)
+      assert(num(filter, "plans.queries") >= 1, filter)
+      Seq("analysis", "optimization", "planning").foreach(p =>
+        assert(num(filter, s"plans.${p}_ms") >= 0, filter))
+      val df = SparkEntry.queries("q_filter_eq")(spark, sf)
+      df.collect()
+      val exchanges = new AdaptiveSparkPlanHelper {}
+        .collectWithSubqueries(df.queryExecution.executedPlan) { case e: Exchange => e }
+      assert(num(filter, "plans.exchanges") == exchanges.size, filter)
+      assert(new java.io.File(dir, "q_filter_eq.plan.txt").length > 0)
+      assert(unknown("error").toString.contains("q_no_such_key"), unknown)
+      assert(!stream.contains("error"), stream)
+      assert(stream("streaming.batches").asInstanceOf[Seq[_]].nonEmpty, stream)
+    } finally {
+      dir.listFiles.foreach(_.delete)
+      dir.delete()
+    }
+  }
+
   test("join strategy hints steer the physical join as documented") {
     import org.apache.spark.sql.functions.col
     // the escape hatch when stats mislead the planner at 100 TB: a

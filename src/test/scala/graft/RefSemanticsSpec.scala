@@ -154,6 +154,10 @@ class RefSemanticsSpec extends AnyFunSuite {
 
   test("driver contract: every oracle key has a query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    // the rows-only keys: sketch internals and a wall-clock timestamp
+    // have no DuckDB equivalent; any other key without an oracle is a gap
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet == Set(
+      "q_approx_distinct", "q_hll_merge", "q_approx_percentile", "q_current_ts"))
   }
 
   test("flagship entry returns rows at sf0.001") {
