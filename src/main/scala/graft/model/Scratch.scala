@@ -23,17 +23,8 @@ object Scratch {
   // Best-effort — a kill -9 skips it, and the next run neither reads
   // nor collides with the orphan.
   sys.addShutdownHook {
-    val it = created.iterator()
-    while (it.hasNext) {
-      val dir = new java.io.File(it.next())
-      if (dir.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(dir)
-      }
-    }
+    created.forEach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)): Unit)
   }
 
   /** Scratch path for query `key` over data dir `d`. The dir component

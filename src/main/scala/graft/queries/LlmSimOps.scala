@@ -1543,7 +1543,7 @@ private[queries] object LlmSimOps {
     * ([[streamEmbGateSql]]'s bit-mirrored banding + exact cosine,
     * reduced to the rejected set) composed with the frozen-geometry
     * encode ([[frozenFitCtes]] with the cut at the first slice —
-    * `slices` is interpolated from [[graft.streaming.AnnIngest.Slices]]
+    * `slices` is interpolated from [[graft.streaming.GateStores.Slices]]
     * so the fixture and the oracle state the ONE slice rule — and
     * [[frozenEncodeSql]] over every ADMITTED vector): one statement
     * covering gate decisions, geometry training, cell routing, and
@@ -1963,26 +1963,26 @@ private[queries] object LlmSimOps {
       ks = 16, cells = 16),
     "q_stream_ann_ingest" -> streamAnnIngestSql(0.4, EmbBands, EmbBits,
       dims = 64, m = 8, ks = 16, cells = 16,
-      slices = graft.streaming.AnnIngest.Slices),
+      slices = graft.streaming.GateStores.Slices),
     "q_stream_ann_ingest_wide" -> streamAnnIngestWideSql(WideThreshold,
       WideBands, WideBits, dims = 64, m = 8, ks = 16, cells = 16,
-      slices = graft.streaming.AnnIngest.Slices),
+      slices = graft.streaming.GateStores.Slices),
     "q_stream_ann_delete" -> streamAnnDeleteSql(0.4, EmbBands, EmbBits,
       dims = 64, m = 8, ks = 16, cells = 16,
-      slices = graft.streaming.AnnIngest.Slices,
+      slices = graft.streaming.GateStores.Slices,
       deleteAfter = graft.streaming.AnnIngest.DeleteAfterBatch,
       modulo = graft.streaming.AnnIngest.DeleteMod,
       residue = graft.streaming.AnnIngest.DeleteResidue),
     "q_stream_ann_query" -> streamAnnQuerySql(0.4, EmbBands, EmbBits,
       dims = 64, m = 8, ks = 16, cells = 16,
-      slices = graft.streaming.AnnIngest.Slices,
+      slices = graft.streaming.GateStores.Slices,
       deleteAfter = graft.streaming.AnnIngest.DeleteAfterBatch,
       modulo = graft.streaming.AnnIngest.DeleteMod,
       residue = graft.streaming.AnnIngest.DeleteResidue,
       nprobe = 4, k = 5, shortlist = 50),
     "q_stream_ann_recall" -> streamAnnRecallSql(0.4, EmbBands, EmbBits,
       dims = 64, m = 8, ks = 16, cells = 16,
-      slices = graft.streaming.AnnIngest.Slices,
+      slices = graft.streaming.GateStores.Slices,
       deleteAfter = graft.streaming.AnnIngest.DeleteAfterBatch,
       modulo = graft.streaming.AnnIngest.DeleteMod,
       residue = graft.streaming.AnnIngest.DeleteResidue,

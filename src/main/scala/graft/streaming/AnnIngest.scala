@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import graft.model.Scratch
 import graft.ops.Similarity
+import GateStores.Store
 
 /** The full streaming ANN INGEST pipeline — [[EmbGate]]'s near-dup
   * gate COMPOSED with the IVFADC index write path: embedding
@@ -22,9 +23,9 @@ import graft.ops.Similarity
   *
   * Contract (stated identically by the committed DuckDB oracle):
   * every vector encodes against the geometry trained on the FIRST
-  * slice (vec_id < max/[[Slices]] + 1 — the fixture's slice width, a
-  * pure function of the corpus; the oracle interpolates the SAME
-  * [[Slices]] constant); a vector's postings land iff the gate admits
+  * slice (vec_id < max/[[GateStores.Slices]] + 1 — the fixture's slice
+  * width, a pure function of the corpus; the oracle interpolates the
+  * SAME constant); a vector's postings land iff the gate admits
   * it (no earlier banded candidate with cosine ≥ threshold). Batch
   * 0's own postings are exactly this statement too: the build's final
   * encode assigns against the trained codebook, so "build then keep
@@ -65,21 +66,15 @@ import graft.ops.Similarity
   * reconstruction from all 768 known hyperplanes — recovers at most a
   * coarse DIRECTION estimate, never the stored values. A deployment
   * for which even a direction sketch is over the line simply extends
-  * the tombstone anti-join to the band-index fold (one more
-  * `tombstones =` argument below) and trades away the audit trail;
-  * this pipeline keeps the codes because the gate's decisions are
-  * otherwise unauditable after erasure. The documented consequence:
+  * the tombstone anti-join to the band-index fold (an `eraseKey` on
+  * its store below) and trades away the audit trail; this pipeline
+  * keeps the codes because the gate's decisions are otherwise
+  * unauditable after erasure. The documented consequence:
   * without the raw vector no candidate against a deleted id can
   * cosine-verify, so a re-upload of deleted content IS re-admitted —
   * a takedown genuinely forgets the content rather than keeping its
   * bytes to veto re-uploads (the GDPR-posture trade, spec-pinned in
   * StreamingSpec's erased-predecessor test).
-  *
-  * Idempotence: the [[GateStores]] discipline — per-batch Overwrite
-  * subdirectories, probes read strictly-earlier batches only;
-  * StreamingSpec kills a run between batches and proves the resumed
-  * run lands identical stores (including a kill exactly between the
-  * tombstone landing and its checkpoint commit).
   *
   * Degenerate batch-0 behavior (ADVICE r16): the geometry build fails
   * loud — not silently empty — if the first slice does not populate
@@ -90,14 +85,6 @@ import graft.ops.Similarity
   * base snapshot instead.
   */
 object AnnIngest {
-  private val fixtureLock = new Object
-
-  /** Micro-batch count — see [[IngestGate.Slices]]. The committed
-    * oracle ([[graft.queries.LlmSimOps]]) interpolates this constant
-    * into its slice rule, so changing it re-states both sides at once.
-    */
-  val Slices = 3
-
   /** Delete-variant constants, interpolated into the committed oracle:
     * the takedown arrives after batch [[DeleteAfterBatch]] commits, and
     * removes every arrived id ≡ [[DeleteResidue]] (mod [[DeleteMod]]) —
@@ -117,10 +104,8 @@ object AnnIngest {
                       m: Int, ks: Int, refineIters: Int,
                       ns: String = "ann_ingest"): DataFrame =
     replayInternal(s, d, threshold, bands, bitsPerBand, dims, cells, m, ks,
-      refineIters, ns = ns,
-      ckpt = graft.model.Scratch.dir(s"${ns}_ckpt", d) + "/" +
-        java.util.UUID.randomUUID().toString.take(8),
-      wipeStores = true, crashAtBatch = None, delete = false)
+      refineIters, ns = ns, ckpt = GateStores.freshCkpt(ns, d),
+      wipeStores = true, crash = None, delete = false)
 
   /** The ingest replay with a takedown injected after
     * [[DeleteAfterBatch]] — returns the SURVIVING postings (tombstoned
@@ -133,9 +118,8 @@ object AnnIngest {
                             refineIters: Int): DataFrame =
     replayInternal(s, d, threshold, bands, bitsPerBand, dims, cells, m, ks,
       refineIters, ns = "ann_ingest_del",
-      ckpt = graft.model.Scratch.dir("ann_ingest_del_ckpt", d) + "/" +
-        java.util.UUID.randomUUID().toString.take(8),
-      wipeStores = true, crashAtBatch = None, delete = true)
+      ckpt = GateStores.freshCkpt("ann_ingest_del", d),
+      wipeStores = true, crash = None, delete = true)
 
   /** The delete-replay's frozen-geometry store — the residual codebook
     * a SERVING tier reads (the "index file"), landed once by batch 0 of
@@ -143,152 +127,109 @@ object AnnIngest {
     * the surviving postings into the full read path.
     */
   def deleteGeometry(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graft.model.Scratch.dir("ann_ingest_del_geo", d) + "/b0")
+    s.read.parquet(Scratch.dir("ann_ingest_del_geo", d) + "/b0")
 
-  /** Lifecycle-exposed form — see [[EmbGate.replayInternal]] for the
-    * restart-spec contract of `ckpt` / `wipeStores` / `crashAtBatch`.
-    * `ns` namespaces the scratch stores so the plain and delete
-    * variants never read each other's state; `delete` arms the
-    * [[DeleteAfterBatch]] takedown.
+  /** [[GateStores.replay]]'s `ckpt` / `wipeStores` / `crash` exposed for
+    * the restart specs. `ns` namespaces the scratch stores so the plain
+    * and delete variants never read each other's state; `delete` arms
+    * the [[DeleteAfterBatch]] takedown.
     */
   private[graft] def replayInternal(s: SparkSession, d: String,
       threshold: Double, bands: Int, bitsPerBand: Int, dims: Int,
       cells: Int, m: Int, ks: Int, refineIters: Int, ns: String,
-      ckpt: String, wipeStores: Boolean, crashAtBatch: Option[Long],
+      ckpt: String, wipeStores: Boolean, crash: Option[GateStores.Crash],
       delete: Boolean): DataFrame = {
     val dsub = dims / m
     val embs = graft.model.Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"))
-    // the arrival fixture is shared between the variants (read-only
-    // after creation); the mutable stores are namespaced by `ns`
-    val srcDir = new java.io.File(graft.model.Scratch.dir("ann_ingest_src", d))
-    GateStores.landSliceFixture(embs, "vec_id", srcDir, Slices, fixtureLock)
-    val idxDir = graft.model.Scratch.dir(s"${ns}_idx", d)
-    val vecDir = graft.model.Scratch.dir(s"${ns}_vec", d)
-    val geoDir = graft.model.Scratch.dir(s"${ns}_geo", d)
-    val postDir = graft.model.Scratch.dir(s"${ns}_post", d)
-    val tombDir = graft.model.Scratch.dir(s"${ns}_tomb", d)
-    if (wipeStores)
-      GateStores.wipe(Seq(idxDir, vecDir, geoDir, postDir, tombDir))
+    // the postings AND the raw-vector folds anti-join the accumulated
+    // tombstones out — physical erasure of a deleted vector's bytes
+    // (its serving postings and its raw embedding, the most sensitive
+    // artifact) rides the compaction rewrite. The band index
+    // deliberately folds WITHOUT tombstones: band codes are
+    // non-invertible and are retained as the audit trail of ingest
+    // history.
+    val idx = Store(Scratch.dir(s"${ns}_idx", d), Seq("bgrp"))
+    val vec = Store(Scratch.dir(s"${ns}_vec", d), eraseKey = Some("vec_id"))
+    val post = Store(Scratch.dir(s"${ns}_post", d), Seq("cell_id"),
+      eraseKey = Some("n_id"))
+    val geoDir = Scratch.dir(s"${ns}_geo", d)
+    val tombDir = Scratch.dir(s"${ns}_tomb", d)
     def tombstones(before: Long): Option[DataFrame] =
       GateStores.readStoreOpt(s, tombDir, before)
     // the geometry froze at batch 0 and never changes, so batch-1+
     // encodes share ONE read plan per store instead of re-running
     // parquet footer inference twice per batch (r16); plain memo —
-    // single foreachBatch thread, no synchronization needed
+    // one micro-batch at a time, no synchronization needed
     var geoMemo: Option[(DataFrame, DataFrame)] = None
-    val stream = s.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.getPath + "/gate_*.parquet")
-    val query = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        // section labels (guide §1.5): foreachBatch runs all jobs on one
-        // thread, so the thread-local description attributes each job to
-        // its pipeline stage in the UI and in graft.tools.Profile at no cost
-        def label(sec: String): Unit =
-          ss.sparkContext.setJobDescription(s"ann-ingest b$batchId: $sec")
-        label("fold")
-        // fold the settled tails before probing; the postings AND the
-        // raw-vector folds anti-join the accumulated tombstones out —
-        // physical erasure of a deleted vector's bytes (its serving
-        // postings and its raw embedding, the most sensitive artifact)
-        // rides the compaction rewrite. The band index deliberately
-        // folds WITHOUT tombstones: band codes are non-invertible
-        // (they cannot reconstruct content) and are retained as the
-        // audit trail of ingest history.
-        // the three stores fold concurrently (disjoint dirs; each task's
-        // tombstone read of tombDir is read-only — GateStores.inParallel)
-        GateStores.inParallel(Seq(
-          () => GateStores.maybeCompact(ss, idxDir, upTo = batchId - 1,
-            partitionCols = Seq("bgrp")): Unit,
-          () => GateStores.maybeCompact(ss, vecDir, upTo = batchId - 1,
-            tombstones = tombstones(batchId),
-            tombstoneKey = "vec_id"): Unit,
-          () => GateStores.maybeCompact(ss, postDir, upTo = batchId - 1,
-            partitionCols = Seq("cell_id"),
-            tombstones = tombstones(batchId)): Unit))
-        // ---- 1. the gate: EmbGate's exact rule, shared code; erased
-        // predecessors are invisible to verification (see gateBatch) ----
-        label("gate")
-        val (vecs, buckets, dupSrc) =
-          EmbGate.gateBatch(batch, batchId, idxDir, vecDir, threshold,
-            bands, bitsPerBand, tombstones = tombstones(batchId))
-        // rejected ids are batch-bounded — broadcast the anti-join side
-        val rejected = dupSrc.select(col("vec_id"))
-        val admitted = vecs.join(broadcast(rejected), Seq("vec_id"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // ---- 2. the encode: frozen after batch 0 ----
-        label("encode")
-        val postings =
-          if (batchId == 0L) {
-            // build the geometry on the WHOLE first slice, land the
-            // residual codebook AND the coarse lattice, keep admitted
-            // vectors' postings ("build then keep admitted" ≡
-            // encode-vs-frozen: the build's final encode assigns against
-            // the trained codebook)
-            val (p0, cb) = Similarity.ivfPqBuild(vecs, "vec_id", "embedding",
-              dims, cells, m, ks, refineIters)
-            // the frozen coarse coordinates land once, so batch-1+
-            // encodes read ~cells rows instead of re-deriving the
-            // lattice from a pinned vector slice every batch (and the
-            // vector store is free to compact its b0 away); the two
-            // geometry landings are independent writes — overlap them
-            GateStores.inParallel(Seq(
-              () => GateStores.land(cb, s"$geoDir/b0"),
-              () => GateStores.land(Similarity.coarseFromBase(vecs, "vec_id",
-                "embedding", dsub, cells), s"$geoDir/cc")))
-            p0.join(broadcast(admitted.select(col("vec_id").as("n_id"))),
-              Seq("n_id"))
-          } else {
-            val (cb, cc) = geoMemo.getOrElse {
-              val g = (ss.read.parquet(s"$geoDir/b0"),
-                ss.read.parquet(s"$geoDir/cc"))
-              geoMemo = Some(g)
-              g
-            }
-            Similarity.ivfPqEncode(admitted, cc, cb,
-              "vec_id", "embedding", dsub)
-          }
-        // postings partitioned by cell: the inverted-list layout — a
-        // reader probing nprobe cells opens nprobe/cells of the files
-        label("land")
-        // three independent landing writes to disjoint stores — overlap
-        // their fixed per-job latency (the takedown below reads the
-        // vector store INCLUDING this batch, so it stays strictly after)
-        GateStores.inParallel(Seq(
-          () => GateStores.land(postings, s"$postDir/b$batchId",
-            partitionCols = Seq("cell_id")),
-          () => GateStores.land(GateStores.withBandGroup(buckets),
-            s"$idxDir/b$batchId", partitionCols = Seq("bgrp")),
-          () => GateStores.land(vecs, s"$vecDir/b$batchId")))
-        if (delete && batchId == DeleteAfterBatch) {
-          // the takedown: everything arrived so far (this batch
-          // included — before = batchId+1) matching the id rule.
-          // Overwrite per-batch landing = replay-idempotent like every
-          // other store write.
-          val tombs = GateStores.readStoreOpt(ss, vecDir, batchId + 1)
-            .getOrElse(throw new IllegalStateException(
-              s"takedown at batch $batchId found an empty vector store at $vecDir"))
-            .filter(col("vec_id") % DeleteMod === DeleteResidue)
-            .select(col("vec_id").as("n_id"))
-          GateStores.land(tombs, s"$tombDir/b$batchId")
-        }
-        admitted.unpersist()
-        buckets.unpersist()
-        vecs.unpersist()
-        if (crashAtBatch.contains(batchId))
-          throw new RuntimeException(s"injected crash after batch $batchId")
-        ()
+    // the takedown: after batch DeleteAfterBatch lands, everything
+    // arrived so far (this batch included — before = id+1) matching the
+    // id rule
+    def takedown(b: GateStores.Batch): Unit =
+      if (delete && b.id == DeleteAfterBatch) {
+        val tombs = GateStores.readStoreOpt(b.ss, vec.dir, b.id + 1)
+          .getOrElse(throw new IllegalStateException(
+            s"takedown at batch ${b.id} found an empty vector store at ${vec.dir}"))
+          .filter(col("vec_id") % DeleteMod === DeleteResidue)
+          .select(col("vec_id").as("n_id"))
+        GateStores.land(tombs, s"$tombDir/b${b.id}")
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try query.awaitTermination()
-    finally if (crashAtBatch.isEmpty) GateStores.rmTree(ckpt)
-    val landed = GateStores.readStoreOpt(s, postDir)
+    // the arrival fixture is shared between the variants (read-only
+    // after creation); the mutable stores are namespaced by `ns`
+    GateStores.replay(s, ns, embs, "vec_id", Scratch.dir("ann_ingest_src", d),
+        stores = Seq(idx, vec, post, Store(geoDir), Store(tombDir)),
+        folded = Seq(idx, vec, post), ckpt, wipeStores, crash,
+        tombstones = tombstones, afterLanding = takedown) { b =>
+      // ---- 1. the gate: EmbGate's exact rule, shared code; erased
+      // predecessors are invisible to verification ----
+      val (vecs, buckets, dupSrc) =
+        EmbGate.gateBatch(b, idx.dir, vec.dir, threshold,
+          bands, bitsPerBand, tombstones = tombstones(b.id))
+      // rejected ids are batch-bounded — broadcast the anti-join side
+      val rejected = dupSrc.select(col("vec_id"))
+      val admitted = b.persist(
+        vecs.join(broadcast(rejected), Seq("vec_id"), "left_anti"))
+      // ---- 2. the encode: frozen after batch 0 ----
+      b.label("encode")
+      val postings =
+        if (b.id == 0L) {
+          // build the geometry on the WHOLE first slice, land the
+          // residual codebook AND the coarse lattice, keep admitted
+          // vectors' postings ("build then keep admitted" ≡
+          // encode-vs-frozen: the build's final encode assigns against
+          // the trained codebook)
+          val (p0, cb) = Similarity.ivfPqBuild(vecs, "vec_id", "embedding",
+            dims, cells, m, ks, refineIters)
+          // the frozen coarse coordinates land once, so batch-1+
+          // encodes read ~cells rows instead of re-deriving the
+          // lattice from a pinned vector slice every batch (and the
+          // vector store is free to compact its b0 away); the two
+          // geometry landings are independent writes — overlap them
+          GateStores.inParallel(Seq(
+            () => GateStores.land(cb, s"$geoDir/b0"),
+            () => GateStores.land(Similarity.coarseFromBase(vecs, "vec_id",
+              "embedding", dsub, cells), s"$geoDir/cc")))
+          p0.join(broadcast(admitted.select(col("vec_id").as("n_id"))),
+            Seq("n_id"))
+        } else {
+          val (cb, cc) = geoMemo.getOrElse {
+            val g = (b.ss.read.parquet(s"$geoDir/b0"),
+              b.ss.read.parquet(s"$geoDir/cc"))
+            geoMemo = Some(g)
+            g
+          }
+          Similarity.ivfPqEncode(admitted, cc, cb,
+            "vec_id", "embedding", dsub)
+        }
+      // postings partitioned by cell: the inverted-list layout — a
+      // reader probing nprobe cells opens nprobe/cells of the files
+      Seq(post -> postings,
+        idx -> GateStores.withBandGroup(buckets),
+        vec -> vecs)
+    }
+    val landed = GateStores.readStoreOpt(s, post.dir)
       .getOrElse(throw new IllegalStateException(
-        s"replay landed no postings: empty store at $postDir"))
+        s"replay landed no postings: empty store at ${post.dir}"))
       .select(col("cell_id").cast("long").as("cell_id"), col("n_id"),
         col("sub"), col("cid"))
     // tombstoned postings are hidden even where compaction has not yet

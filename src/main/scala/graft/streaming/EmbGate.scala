@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import graft.model.Scratch
 import graft.ops.Similarity
+import GateStores.Store
 
 /** Streaming EMBEDDING near-duplicate ingestion gate — the vector-space
   * sibling of [[IngestGate]]: embedding rows arrive in micro-batches,
@@ -16,8 +17,9 @@ import graft.ops.Similarity
   * store), not operator memory, so it survives restarts and grows
   * append-only; per batch the probe cost is (batch buckets) ⋈ index —
   * proportional to the BATCH — and raw vectors are fetched for
-  * verification candidates only (the [[gateBatch]] two-half
-  * discipline), never joined corpus×corpus.
+  * verification candidates only, never joined corpus×corpus. The
+  * lifecycle and the probe/verify step are [[GateStores.replay]] and
+  * [[GateStores.dupSources]].
   *
   * Contract (stated identically by the committed DuckDB oracle, which
   * bit-mirrors the SRP hyperplanes like `q_dedup_embedding`): vector
@@ -30,195 +32,60 @@ import graft.ops.Similarity
   * in the index probe otherwise — exactly once either way — so the
   * decisions are a pure function of the corpus and the gate hash-gates
   * against the oracle's one-sentence restatement.
-  *
-  * Idempotence: the [[GateStores]] discipline — per-batch Overwrite
-  * subdirectories, probes read strictly-earlier batches only — so an
-  * at-least-once replay (including a run killed mid-batch and resumed
-  * from its checkpoint; StreamingSpec exercises exactly that)
-  * reproduces byte-identical decisions.
   */
 object EmbGate {
-  private val fixtureLock = new Object
-
-  /** Micro-batch count of the replay fixture — see
-    * [[IngestGate.Slices]] for the 3-batch argument; exposed for the
-    * spec's cross-batch assertion.
+  /** One micro-batch of the SRP embedding gate, shared by this gate and
+    * [[AnnIngest]]'s composed pipeline: band the batch, then
+    * [[GateStores.dupSources]] with exact cosine. Returns (vecs,
+    * buckets, dupSrc); vecs and buckets are persisted on `b`.
+    * `tombstones` hides erased predecessors from verification
+    * ([[AnnIngest]]'s takedown). Consequence, stated in the delete
+    * contract: a re-upload of deleted content IS re-admitted once its
+    * predecessor is erased — a takedown genuinely forgets the content
+    * (the retained band codes are non-invertible and cannot veto
+    * without the vector).
     */
-  val Slices = 3
-
-  /** One micro-batch of the SRP embedding gate, shared verbatim by this
-    * gate and [[AnnIngest]]'s composed pipeline: band the batch, build
-    * the candidate set (strictly-earlier index probe + same-batch
-    * ordered self-join — every a<b pair with a shared band exactly
-    * once), verify by exact cosine, reduce to the min admitted
-    * predecessor per vector.
-    *
-    * The verify's STORE fetch obeys the [[GateStores.PruneStoreBytes]]
-    * cutover: a small accumulated store reads straight into the verify
-    * join (one stage — at fixture/soak scale the candidate set dwarfs
-    * the store, so an id semi-join would cost more than it saves),
-    * while a large store is pruned to the vectors whose index rows
-    * collide with a batch bucket — the fetch becomes ∝ candidates, the
-    * only shape that survives a 100 TB corpus where the store dwarfs
-    * any batch's candidates. Returns (vecs, buckets, dupSrc);
-    * vecs/buckets arrive persisted — the caller lands the stores and
-    * unpersists.
-    *
-    * `tombstones` (an `n_id` delete set, [[AnnIngest]]'s takedown
-    * path): tombstoned ids are hidden from the store fetch, so an
-    * erased predecessor can no longer cosine-verify a candidate — the
-    * visibility rule matches the PHYSICAL state after the store's
-    * tombstone fold, and decisions stay a pure function of
-    * (corpus, takedown schedule) rather than of when folds happen to
-    * fire. Consequence, stated in the delete contract: a re-upload of
-    * deleted content IS re-admitted once its predecessor is erased —
-    * a takedown genuinely forgets the content (the retained band
-    * codes are non-invertible and cannot veto without the vector).
-    */
-  private[graft] def gateBatch(batch: DataFrame, batchId: Long,
-      idxDir: String, vecDir: String, threshold: Double,
-      bands: Int, bitsPerBand: Int,
+  private[graft] def gateBatch(b: GateStores.Batch, idxDir: String,
+      vecDir: String, threshold: Double, bands: Int, bitsPerBand: Int,
       tombstones: Option[DataFrame] = None)
       : (DataFrame, DataFrame, DataFrame) = {
-    val ss = batch.sparkSession
-    val vecs = batch.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val buckets = Similarity.srpBuckets(vecs, "vec_id", "embedding",
-        bands, bitsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val index = GateStores.readBandIndexStore(ss, idxDir, batchId)
-      .map(_.select(col("vec_id"), col("bucket")))
-    // prior-batch candidates: probe the persistent band index with THIS
-    // batch's buckets (cost ∝ batch); same-batch candidates: the
-    // ordered self-join
-    // The batch's bucket rows are BOUNDED (one micro-batch × bands), so
-    // every join against them broadcasts the batch side: the persistent
-    // index streams map-side through the probe instead of being
-    // exchanged by bucket — the broadcast-the-small-side shape that
-    // holds at any store size (guide §3.1; probe cost stays ∝ batch).
-    val candPrev = index match {
-      case None => ss.emptyDataFrame
-        .select(lit(0L).as("key_a"), lit(0L).as("key_b")).limit(0)
-      case Some(idx) => idx
-        .select(col("vec_id").as("key_a"), col("bucket"))
-        .join(broadcast(buckets.select(col("vec_id").as("key_b"),
-          col("bucket"))), Seq("bucket"))
-        .select(col("key_a"), col("key_b"))
-    }
-    val candSame = buckets.select(col("vec_id").as("key_a"), col("bucket"))
-      .join(broadcast(buckets.select(col("vec_id").as("key_b"),
-        col("bucket"))), Seq("bucket"))
-      .filter(col("key_a") < col("key_b"))
-      .select(col("key_a"), col("key_b"))
-    // no distinct: a pair colliding in several bands verifies once per
-    // collision and collapses in dupSrc's min-aggregate — redundant
-    // map-side flops are strictly cheaper than an exchange of the whole
-    // candidate set to dedup it first (the cosinePairsBlocked argument;
-    // plan: one Exchange removed per batch)
-    val cands = candPrev.unionByName(candSame)
-    val allVecs = GateStores.readStoreOpt(ss, vecDir, batchId) match {
-      case None => vecs
-      case Some(store0) =>
-        // takedowns: erased vectors are invisible to verification (the
-        // logical form of the physical erasure the next fold performs)
-        val store = tombstones match {
-          case Some(t) => store0.join(
-            t.select(col("n_id").as("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-          case None => store0
-        }
-        val fetched =
-          if (GateStores.storeBytesBefore(vecDir, batchId)
-              < GateStores.PruneStoreBytes)
-            store
-          else {
-            GateStores.prunedFetches.incrementAndGet(): Unit
-            store.join(
-              index.get.join(
-                  broadcast(buckets.select(col("bucket")).distinct()),
-                  Seq("bucket"), "left_semi")
-                .select(col("vec_id")).distinct(),
-              Seq("vec_id"), "left_semi")
-          }
-        fetched.unionByName(vecs)
-    }
-    // Sides form: key_b always names a THIS-batch vector (both candidate
-    // halves construct it so), so the b-side join builds on the
-    // micro-batch alone — at 100 TB that is batch-sized instead of
-    // store-sized
-    val dupSrc = Similarity.verifyCosineSides(cands, allVecs, vecs,
-        "vec_id", "embedding", threshold, broadcastB = true)
-      .groupBy(col("key_b").as("vec_id"))
-      .agg(min(col("key_a")).as("dup_src"))
+    val vecs = b.persist(b.rows.select(col("vec_id"), col("embedding")))
+    val buckets = b.persist(Similarity.srpBuckets(vecs, "vec_id", "embedding",
+      bands, bitsPerBand))
+    val dupSrc = GateStores.dupSources(b, vecs, buckets, "vec_id",
+      Seq("bucket"), idxDir, vecDir,
+      Similarity.verifyCosineSides(_, _, _, "vec_id", "embedding",
+        threshold, broadcastB = true),
+      tombstones)
     (vecs, buckets, dupSrc)
   }
 
   def replayEmbNearDupGate(s: SparkSession, d: String, threshold: Double,
                            bands: Int, bitsPerBand: Int): DataFrame =
     replayInternal(s, d, threshold, bands, bitsPerBand,
-      ckpt = graft.model.Scratch.dir("emb_gate_ckpt", d) + "/" +
-        java.util.UUID.randomUUID().toString.take(8),
-      wipeStores = true, crashAtBatch = None)
+      ckpt = GateStores.freshCkpt("emb_gate", d),
+      wipeStores = true, crash = None)
 
-  /** The replay with its lifecycle knobs exposed for the restart spec:
-    * a fixed checkpoint + `wipeStores = false` resumes a killed run
-    * against its surviving stores; `crashAtBatch` injects a failure
-    * AFTER that batch's stores land but BEFORE the checkpoint commits —
-    * the worst at-least-once window, forcing the resumed run to
-    * re-execute the batch over its own first attempt's files.
+  /** [[GateStores.replay]]'s `ckpt` / `wipeStores` / `crash` exposed for
+    * the restart specs.
     */
   private[graft] def replayInternal(s: SparkSession, d: String,
       threshold: Double, bands: Int, bitsPerBand: Int, ckpt: String,
-      wipeStores: Boolean, crashAtBatch: Option[Long]): DataFrame = {
+      wipeStores: Boolean, crash: Option[GateStores.Crash]): DataFrame = {
     val embs = graft.model.Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"))
-    val srcDir = new java.io.File(graft.model.Scratch.dir("emb_gate_src", d))
-    GateStores.landSliceFixture(embs, "vec_id", srcDir, Slices, fixtureLock)
-    val decDir = graft.model.Scratch.dir("emb_gate_dec", d)
-    val idxDir = graft.model.Scratch.dir("emb_gate_idx", d)
-    val vecDir = graft.model.Scratch.dir("emb_gate_vec", d)
-    if (wipeStores) GateStores.wipe(Seq(decDir, idxDir, vecDir))
-    val stream = s.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.getPath + "/gate_*.parquet")
-    val query = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // fold the settled tail (ids <= batchId-1 are committed) before
-        // probing — the probe then reads snapshot + short tail instead
-        // of one plan per historical micro-batch; the two stores fold
-        // concurrently (disjoint dirs — GateStores.inParallel)
-        GateStores.inParallel(Seq(
-          () => GateStores.maybeCompact(s, idxDir, upTo = batchId - 1,
-            partitionCols = Seq("bgrp")): Unit,
-          () => GateStores.maybeCompact(s, vecDir, upTo = batchId - 1): Unit))
-        val (vecs, buckets, dupSrc) =
-          gateBatch(batch, batchId, idxDir, vecDir, threshold,
-            bands, bitsPerBand)
-        val decisions = batch.select(col("vec_id"))
-          .join(broadcast(dupSrc), Seq("vec_id"), "left")
-          .select(col("vec_id"), col("dup_src").isNull.as("admitted"),
-            col("dup_src"))
-        // three independent landing writes to disjoint stores — overlap
-        // their fixed per-job latency (decisions also materializes the
-        // probe/verify plan; concurrent first computation of the shared
-        // persisted vecs/buckets blocks is block-lock-safe)
-        GateStores.inParallel(Seq(
-          () => GateStores.land(decisions, s"$decDir/b$batchId"),
-          () => GateStores.land(GateStores.withBandGroup(buckets),
-            s"$idxDir/b$batchId", partitionCols = Seq("bgrp")),
-          () => GateStores.land(vecs, s"$vecDir/b$batchId")))
-        buckets.unpersist()
-        vecs.unpersist()
-        if (crashAtBatch.contains(batchId))
-          throw new RuntimeException(s"injected crash after batch $batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try query.awaitTermination()
-    finally if (crashAtBatch.isEmpty) GateStores.rmTree(ckpt)
-    s.read.parquet(GateStores.existing(decDir): _*)
-      .orderBy(col("vec_id"))
+    val dec = Store(Scratch.dir("emb_gate_dec", d))
+    val idx = Store(Scratch.dir("emb_gate_idx", d), Seq("bgrp"))
+    val vec = Store(Scratch.dir("emb_gate_vec", d))
+    GateStores.replay(s, "emb_gate", embs, "vec_id",
+        Scratch.dir("emb_gate_src", d), stores = Seq(dec, idx, vec),
+        folded = Seq(idx, vec), ckpt, wipeStores, crash) { b =>
+      val (vecs, buckets, dupSrc) =
+        gateBatch(b, idx.dir, vec.dir, threshold, bands, bitsPerBand)
+      Seq(dec -> GateStores.decide(b.rows, "vec_id", dupSrc),
+        idx -> GateStores.withBandGroup(buckets),
+        vec -> vecs)
+    }
+    GateStores.decisions(s, dec.dir, "vec_id")
   }
 }

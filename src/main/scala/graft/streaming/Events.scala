@@ -687,10 +687,6 @@ object Events {
         s.conf.set(noDataKey, prevNoData)
         s.conf.set(wscgKey, prevWscg)
       }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
     // Localize the (purchase-count-sized) result, then tear the
     // harness down: the memory-sink view and the UUID-named checkpoint
     // are per-invocation scratch, and a session that replays repeatedly
@@ -706,7 +702,9 @@ object Events {
         val sch = out.schema
         s.catalog.dropTempView(qname): Unit
         (r, sch)
-      } finally rm(new java.io.File(ckpt))
+      } finally {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt)): Unit
+      }
     import scala.jdk.CollectionConverters._
     s.createDataFrame(rows.toSeq.asJava, schema)
   }

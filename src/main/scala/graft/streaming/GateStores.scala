@@ -1,16 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import java.util.concurrent.CountDownLatch
+
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
-/** Shared plumbing of the streaming ingest gates ([[IngestGate]],
-  * [[EmbGate]], [[AnnIngest]]): the durable per-batch store layout, the
-  * replay fixture landing, and the candidate-pruning discipline. One
-  * statement of each rule — the three gates previously carried verbatim
-  * copies of this logic, so an edit to the store contract had to be
-  * repeated in three places (and the lexicographic batch-dir sort bug
-  * would have needed three fixes).
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.storage.StorageLevel
+
+/** The streaming ingest gates' ([[IngestGate]], [[EmbGate]],
+  * [[AnnIngest]]) one replay driver and the store contract it runs.
+  * [[replay]] is the single statement of a gate's micro-batch
+  * lifecycle; [[dupSources]] is the single probe/fetch/verify step. A
+  * gate states only what is its own: its signature, its verifier, its
+  * stores and whatever it lands besides the gate decision.
   *
   * Store contract: each micro-batch Overwrite-writes its own `b<id>`
   * subdirectory, and probes read only STRICTLY EARLIER batches — the
@@ -18,28 +24,225 @@ import scala.util.control.NonFatal
   * attempt's output (which would yield self-pairs and reversed
   * key_a > key_b candidates). An at-least-once replay therefore
   * rewrites identical files instead of double-appending, and a run
-  * killed mid-batch resumes to byte-identical stores (StreamingSpec
-  * pins this across a checkpoint restart).
+  * killed between batches or in the middle of a batch's landings
+  * resumes to identical stores (StreamingSpec pins both across a
+  * checkpoint restart).
   *
-  * Since r14 the settled prefix of the batch dirs folds into a
-  * versioned SNAPSHOT (`snap/f=<foldedThrough>`, see [[maybeCompact]])
-  * and reads go through [[readStoreOpt]] = snapshot + live tail — so a
-  * long-running gate's probe plan stays O(tail), not O(all batches
-  * ever), and the per-batch contract above is unchanged (folds stop at
-  * the last committed batch).
+  * The settled prefix of the batch dirs folds into a versioned SNAPSHOT
+  * (`snap/f=<foldedThrough>`, see [[maybeCompact]]) and reads go
+  * through [[readStoreOpt]] = snapshot + live tail — so a long-running
+  * gate's probe plan stays O(tail), not O(all batches ever), and the
+  * per-batch contract above is unchanged (folds stop at the last
+  * committed batch).
   */
 private[graft] object GateStores {
 
-  /** Batch subdirectories `b<id>` of a store with id < `before`, sorted
-    * NUMERICALLY by batch id — a lexicographic path sort would order
-    * "b10" before "b2", silently shuffling "earlier" once a replay
-    * passes ten batches.
+  /** Micro-batch count of every gate's replay fixture: the smallest
+    * count that still exercises a MULTI-batch accumulated index — batch
+    * 2 probes an index of two prior batches. The specs slice the id
+    * space by it, and the `q_stream_ann_*` oracles interpolate it, so a
+    * change re-states both sides at once.
     */
-  def existing(dir: String, before: Long = Long.MaxValue): Seq[String] =
-    existingIds(dir, before).map(_._2)
+  val Slices = 3
 
-  /** [[existing]] with the batch ids attached — the compaction logic
-    * needs them to exclude already-folded dirs from the live tail.
+  /** A store a gate lands once per batch, under `dir/b<id>`, Hive-
+    * partitioned inside by `partitionCols`. `eraseKey` names the key
+    * column on which the store's folds anti-join the gate's tombstones;
+    * None keeps every row.
+    */
+  final case class Store(dir: String, partitionCols: Seq[String] = Nil,
+                         eraseKey: Option[String] = None)
+
+  /** The replay's one test seam: fail batch `batch` after every store
+    * has landed, before its checkpoint commits (the worst at-least-once
+    * window) — or, with `store` naming one landing's dir, fail that
+    * landing once its sibling landings have written.
+    */
+  final case class Crash(batch: Long, store: Option[String] = None)
+
+  /** One micro-batch as [[replay]] hands it to a gate. */
+  final class Batch(val rows: DataFrame, val id: Long, ns: String) {
+    def ss: SparkSession = rows.sparkSession
+
+    /** Names the section's jobs `<ns> b<id>: <section>`. The description
+      * is an inheritable thread-local, so the landings' threads keep it.
+      */
+    def label(section: String): Unit =
+      ss.sparkContext.setJobDescription(s"$ns b$id: $section")
+
+    private val held = mutable.ArrayBuffer.empty[DataFrame]
+
+    /** Persists `df` until the batch's stores have landed. */
+    def persist(df: DataFrame): DataFrame = {
+      held += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    private[graft] def release(): Unit = held.reverseIterator.foreach(_.unpersist())
+  }
+
+  /** A gate's replay of the `src` fixture, one [[Slices]] slice per
+    * micro-batch. Per batch: fold the settled tails of `folded`
+    * concurrently; run `gate`, which returns each store's rows for this
+    * batch; land those concurrently; run `afterLanding` (a write that
+    * reads the batch's landed stores); release the batch's persisted
+    * frames; then the [[Crash]] seam. A fixed `ckpt` with
+    * `wipeStores = false` resumes a killed run against its surviving
+    * stores; the checkpoint is removed unless a crash was injected.
+    * `tombstones(before)` is the delete set the `eraseKey` folds apply.
+    */
+  def replay(s: SparkSession, ns: String, src: DataFrame, key: String,
+      srcDir: String, stores: Seq[Store], folded: Seq[Store], ckpt: String,
+      wipeStores: Boolean, crash: Option[Crash],
+      tombstones: Long => Option[DataFrame] = _ => None,
+      afterLanding: Batch => Unit = _ => ())(
+      gate: Batch => Seq[(Store, DataFrame)]): Unit = {
+    landSliceFixture(src, key, new java.io.File(srcDir))
+    if (wipeStores) wipe(stores.map(_.dir))
+    val query = s.readStream.schema(src.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(srcDir + "/gate_*.parquet")
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (rows: DataFrame, id: Long) =>
+        val b = new Batch(rows, id, ns)
+        b.label("fold")
+        inParallel(folded.map(st => () => maybeCompact(b.ss, st.dir,
+          upTo = id - 1, st.partitionCols,
+          tombstones = st.eraseKey.flatMap(_ => tombstones(id)),
+          tombstoneKey = st.eraseKey.getOrElse("n_id")): Unit))
+        b.label("gate")
+        val lands = gate(b)
+        b.label("land")
+        inParallel(landings(b, lands, crash))
+        afterLanding(b)
+        b.release()
+        if (crash.contains(Crash(id)))
+          throw new RuntimeException(s"injected crash after batch $id")
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try query.awaitTermination()
+    finally if (crash.isEmpty) wipe(Seq(ckpt))
+  }
+
+  /** A fresh checkpoint dir for one replay of gate `ns` over `d`. */
+  def freshCkpt(ns: String, d: String): String =
+    graft.model.Scratch.dir(s"${ns}_ckpt", d) + "/" +
+      java.util.UUID.randomUUID().toString.take(8)
+
+  /** The batch's store writes; when `crash` names one of them for this
+    * batch, that landing fails once every sibling has written.
+    */
+  private def landings(b: Batch, lands: Seq[(Store, DataFrame)],
+      crash: Option[Crash]): Seq[() => Unit] = {
+    val failing = crash.filter(_.batch == b.id).flatMap(_.store)
+    require(failing.forall(f => lands.exists(_._1.dir == f)),
+      s"batch ${b.id} lands no store at ${failing.mkString}")
+    val siblings = new CountDownLatch(lands.size - failing.size)
+    lands.map { case (st, df) =>
+      if (failing.contains(st.dir)) () => {
+        siblings.await()
+        throw new RuntimeException(
+          s"injected crash landing ${st.dir} of batch ${b.id}")
+      } else () =>
+        try land(df, s"${st.dir}/b${b.id}", st.partitionCols)
+        finally siblings.countDown()
+    }
+  }
+
+  /** The gates' one probe/fetch/verify step: for each of this batch's
+    * `rows` (key + payload, persisted) with a duplicate, the minimum
+    * earlier key it verifies against, as (`key`, `dup_src`).
+    *
+    * Candidates: the persistent band index of STRICTLY EARLIER batches,
+    * probed with this batch's `bands` (key + `bandCols`, persisted),
+    * plus the same-batch ordered self-join — every a < b pair sharing a
+    * band exactly once, whether or not the two co-arrive. The batch's
+    * band rows are bounded (one micro-batch × bands), so every join
+    * against them broadcasts that side: the index streams map-side
+    * through the probe instead of being exchanged, at any store size
+    * (guide §3.1). No candidate distinct: a pair colliding in several
+    * bands verifies once per collision and collapses in the final
+    * min-aggregate, which is cheaper than an exchange of the whole
+    * candidate set (the cosinePairsBlocked argument).
+    *
+    * The verify's STORE fetch (`storeDir`) obeys the [[PruneStoreBytes]]
+    * cutover: a small store reads straight into the verify join, a large
+    * one is pruned to the keys whose index rows collide with a batch
+    * band, so the fetch is ∝ candidates. `tombstones` (an `n_id` delete
+    * set) hides erased keys from the fetch, so an erased predecessor can
+    * no longer verify a candidate — the visibility rule matches the
+    * PHYSICAL state after the store's tombstone fold, and decisions stay
+    * a pure function of (corpus, takedown schedule), not of when folds
+    * fire.
+    *
+    * `verify(cands, aSide, bSide)` keeps the verified (key_a, key_b)
+    * pairs. Its b side is `rows` alone — key_b always names a THIS-batch
+    * row — so the b-side join builds on the micro-batch, not the store.
+    */
+  def dupSources(b: Batch, rows: DataFrame, bands: DataFrame, key: String,
+      bandCols: Seq[String], idxDir: String, storeDir: String,
+      verify: (DataFrame, DataFrame, DataFrame) => DataFrame,
+      tombstones: Option[DataFrame] = None): DataFrame = {
+    val index = readStoreOpt(b.ss, idxDir, b.id)
+      .map(_.select((key +: bandCols).map(col): _*))
+    def side(df: DataFrame, as: String) =
+      df.select(col(key).as(as) +: bandCols.map(col): _*)
+    val candPrev = index match {
+      case None => b.ss.emptyDataFrame
+        .select(lit(0L).as("key_a"), lit(0L).as("key_b")).limit(0)
+      case Some(idx) => side(idx, "key_a")
+        .join(broadcast(side(bands, "key_b")), bandCols)
+        .select(col("key_a"), col("key_b"))
+    }
+    val candSame = side(bands, "key_a")
+      .join(broadcast(side(bands, "key_b")), bandCols)
+      .filter(col("key_a") < col("key_b"))
+      .select(col("key_a"), col("key_b"))
+    val cands = candPrev.unionByName(candSame)
+    val aSide = readStoreOpt(b.ss, storeDir, b.id) match {
+      case None => rows
+      case Some(store0) =>
+        val store = tombstones match {
+          case Some(t) => store0.join(t.select(col("n_id").as(key)).distinct(),
+            Seq(key), "left_anti")
+          case None => store0
+        }
+        val fetched =
+          if (storeBytesBefore(storeDir, b.id) < PruneStoreBytes) store
+          else {
+            prunedFetches.incrementAndGet(): Unit
+            store.join(
+              index.get.join(
+                  broadcast(bands.select(bandCols.map(col): _*).distinct()),
+                  bandCols, "left_semi")
+                .select(col(key)).distinct(),
+              Seq(key), "left_semi")
+          }
+        fetched.unionByName(rows)
+    }
+    verify(cands, aSide, rows)
+      .groupBy(col("key_b").as(key))
+      .agg(min(col("key_a")).as("dup_src"))
+  }
+
+  /** Every row of the micro-batch with its decision: admitted iff it has
+    * no duplicate source.
+    */
+  def decide(batch: DataFrame, key: String, dupSrc: DataFrame): DataFrame =
+    batch.select(col(key))
+      .join(broadcast(dupSrc), Seq(key), "left")
+      .select(col(key), col("dup_src").isNull.as("admitted"), col("dup_src"))
+
+  /** The decisions every batch of a replay landed under `dir`. */
+  def decisions(s: SparkSession, dir: String, key: String): DataFrame =
+    s.read.parquet(existingIds(dir).map(_._2): _*).orderBy(col(key))
+
+  /** Batch subdirectories `b<id>` of a store with id < `before`, with
+    * their ids, sorted NUMERICALLY by batch id — a lexicographic path
+    * sort would order "b10" before "b2", silently shuffling "earlier"
+    * once a replay passes ten batches.
     */
   def existingIds(dir: String,
                   before: Long = Long.MaxValue): Seq[(Long, String)] = {
@@ -52,18 +255,11 @@ private[graft] object GateStores {
       .sortBy(_._1)
   }
 
-  def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
-
   /** A rerun in the same session gates the replay afresh, not against a
     * previous run's accumulated stores.
     */
-  def wipe(dirs: Seq[String]): Unit = dirs.foreach(rmTree)
+  def wipe(dirs: Seq[String]): Unit =
+    dirs.foreach(d => FileUtils.deleteQuietly(new java.io.File(d)): Unit)
 
   /** Run INDEPENDENT per-batch store jobs concurrently (guide §2.6:
     * overlap independent jobs). A gate batch ends with 2-3 landing
@@ -109,17 +305,14 @@ private[graft] object GateStores {
       }
     }
 
-  /** Per-batch store landing. `files = 1` is the fixture default (a
-    * micro-batch here is thousands of rows, where 32 shuffle partitions
-    * of task-commit overhead would dominate the measurement); a real
-    * deployment raises it to its natural write parallelism — the knob
-    * exists so the single-file funnel is a parameter, not a hardcoded
-    * shape. `partitionCols` lands a Hive layout inside the batch dir so
-    * later probes can prune at the FILE level (see [[bandIndexGroups]]).
+  /** Per-batch store landing, one file (a micro-batch here is thousands
+    * of rows, where 32 shuffle partitions of task-commit overhead would
+    * dominate). `partitionCols` lands a Hive layout inside the batch dir
+    * so later probes can prune at the FILE level (see [[readBandIndex]]).
     */
-  def land(df: DataFrame, path: String, partitionCols: Seq[String] = Nil,
-           files: Int = 1): Unit = {
-    val w = df.coalesce(files).write.mode("overwrite")
+  def land(df: DataFrame, path: String,
+           partitionCols: Seq[String] = Nil): Unit = {
+    val w = df.coalesce(1).write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path)
   }
@@ -140,14 +333,6 @@ private[graft] object GateStores {
   def withBandGroup(buckets: DataFrame): DataFrame =
     buckets.withColumn("bgrp", pmod(col("bucket"), lit(BandGroups)).cast("int"))
 
-  /** The distinct bucket groups a probe batch touches — BOUNDED by
-    * [[BandGroups]] (16 values), so the driver-side collect is
-    * metadata-sized by construction at any corpus scale.
-    */
-  def bandIndexGroups(buckets: DataFrame): Seq[Int] =
-    withBandGroup(buckets).select(col("bgrp")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-
   /** Read a set of per-batch store dirs, each possibly Hive-partitioned
     * inside: one read per batch dir (its own `basePath`) unioned by
     * name — a single multi-path read would reject the mixed
@@ -162,7 +347,7 @@ private[graft] object GateStores {
     * arrival is a fold near-dup of batch 0). Reading such a dir would
     * fail schema inference; semantically it contributes nothing.
     */
-  def readBatches(ss: org.apache.spark.sql.SparkSession,
+  def readBatches(ss: SparkSession,
                   dirs: Seq[String]): DataFrame =
     readBatchesOpt(ss, dirs).getOrElse(throw new IllegalArgumentException(
       s"no parquet files under any batch dir of: ${dirs.mkString(", ")}"))
@@ -175,7 +360,7 @@ private[graft] object GateStores {
     * of failing — the compaction fold and the snapshot-aware store read
     * both have legitimate nothing-here cases.
     */
-  def readBatchesOpt(ss: org.apache.spark.sql.SparkSession,
+  def readBatchesOpt(ss: SparkSession,
                      dirs: Seq[String]): Option[DataFrame] = {
     val nonEmpty = dirs.filter(d => hasParquet(new java.io.File(d)))
     if (nonEmpty.isEmpty) None
@@ -186,11 +371,13 @@ private[graft] object GateStores {
   /** Read the accumulated band index, pruned at the file level to the
     * probe's bucket groups when given (a narrow probe — a point lookup
     * or trickle batch — reads ~|groups|/16 of the index FILES;
-    * LayoutSpec counts the pruned files). The replay gates pass None:
-    * a corpus-slice batch always covers every group, so computing the
-    * group set per batch would pay a job to prune nothing.
+    * LayoutSpec counts the pruned files). The replay gates read the
+    * whole index ([[readStoreOpt]]): a corpus-slice batch always covers
+    * every group, so computing the group set per batch would pay a job
+    * to prune nothing. The bgrp layout survives compaction because the
+    * fold rewrites under the identical `partitionBy`.
     */
-  def readBandIndex(ss: org.apache.spark.sql.SparkSession,
+  def readBandIndex(ss: SparkSession,
                     idxDirs: Seq[String],
                     groups: Option[Seq[Int]] = None): DataFrame =
     pruneGroups(readBatches(ss, idxDirs), groups)
@@ -202,17 +389,6 @@ private[graft] object GateStores {
         idx.filter(col("bgrp").isin(g.map(Integer.valueOf): _*))
       case _ => idx
     }
-
-  /** Snapshot-aware [[readBandIndex]]: the accumulated band index
-    * visible to batch `before` (committed snapshot + live tail), with
-    * the same optional file-level group pruning — the bgrp Hive layout
-    * survives compaction because the fold rewrites under the identical
-    * `partitionBy`.
-    */
-  def readBandIndexStore(ss: org.apache.spark.sql.SparkSession,
-                         dir: String, before: Long,
-                         groups: Option[Seq[Int]] = None): Option[DataFrame] =
-    readStoreOpt(ss, dir, before).map(pruneGroups(_, groups))
 
   /** Total bytes under a store's batch directories — a driver-side
     * METADATA read (file lengths only), the cutover signal for
@@ -311,7 +487,7 @@ private[graft] object GateStores {
     * .AnnIndexLifecycle]]'s compaction discipline applied here).
     * Returns true iff a new snapshot version landed.
     *
-    * Retention is `keepVersions = 1` (r15, was 2): the superseded
+    * Retention is one version (r15, was 2): the superseded
     * snapshot is deleted as soon as the new version's `_SUCCESS`
     * commits. A longer retention would keep any snapshot folded
     * BEFORE a takedown readable — tombstoned rows surviving on disk
@@ -328,11 +504,10 @@ private[graft] object GateStores {
     * strictly-earlier contracts are layout-independent (spec-pinned
     * for the multi-file shape).
     */
-  def maybeCompact(ss: org.apache.spark.sql.SparkSession, dir: String,
+  def maybeCompact(ss: SparkSession, dir: String,
                    upTo: Long, partitionCols: Seq[String] = Nil,
                    tombstones: Option[DataFrame] = None,
                    tombstoneKey: String = "n_id",
-                   keepVersions: Int = 1,
                    maxRecordsPerFile: Long = 0L): Boolean = {
     val ft = foldedThrough(dir)
     val tail = existingIds(dir, before = upTo + 1).filter(_._1 > ft)
@@ -382,9 +557,8 @@ private[graft] object GateStores {
           new java.io.File(target, "_SUCCESS").toPath, ""): Unit
     }
     // cleanup AFTER the commit point; readers ignore these either way
-    tail.foreach { case (_, p) => rmTree(p) }
-    snapVersions(dir).dropRight(keepVersions)
-      .foreach { case (_, f) => rmTree(f.getPath) }
+    wipe(tail.map(_._2))
+    wipe(snapVersions(dir).dropRight(1).map(_._2.getPath))
     // per-fold attribution (SOAK/bench triage): the fold runs inside
     // the measured gate replay, so its seconds must be separable from
     // probe/verify cost without an interleaved A/B
@@ -400,7 +574,7 @@ private[graft] object GateStores {
     * batch itself (folds stop at the previous committed batch, so this
     * can only trip on external tampering).
     */
-  def readStoreOpt(ss: org.apache.spark.sql.SparkSession, dir: String,
+  def readStoreOpt(ss: SparkSession, dir: String,
                    before: Long = Long.MaxValue): Option[DataFrame] = {
     val ft = foldedThrough(dir)
     require(ft < before,
@@ -421,7 +595,9 @@ private[graft] object GateStores {
     storeBytes(snap ++ existingIds(dir, before).filter(_._1 > ft).map(_._2))
   }
 
-  /** Land a keyed table as `slices` contiguous-id-range single-file
+  private val fixtureLock = new Object
+
+  /** Land a keyed table as [[Slices]] contiguous-id-range single-file
     * parquet slices in ascending order, mtime-pinned (FileStreamSource
     * consumes in modification-time order) — so "earlier batch" always
     * means "smaller id" and a gate's decision rule is a pure function of
@@ -431,18 +607,18 @@ private[graft] object GateStores {
     * one scalar aggregate, never a corpus-sized column; a deployment
     * derives slice widths from table statistics / ingest metadata, and
     * this helper exists purely to construct the deterministic replay
-    * fixture. Slice width = max/slices + 1, the rule the committed
+    * fixture. Slice width = max/Slices + 1, the rule the committed
     * oracles restate (a pure function of the corpus).
     */
-  def landSliceFixture(df: DataFrame, keyCol: String, srcDir: java.io.File,
-                       slices: Int, lock: AnyRef): Unit = {
+  private def landSliceFixture(df: DataFrame, keyCol: String,
+                               srcDir: java.io.File): Unit = {
     srcDir.mkdirs()
     val ready = new java.io.File(srcDir, "_GATE_READY")
-    lock.synchronized { if (!ready.exists()) {
+    fixtureLock.synchronized { if (!ready.exists()) {
       val hi = df.agg(max(col(keyCol))).first().getLong(0)
-      val width = hi / slices + 1L
+      val width = hi / Slices + 1L
       val tmp = new java.io.File(srcDir, "_stage")
-      (0 until slices).foreach { i =>
+      (0 until Slices).foreach { i =>
         df.filter(col(keyCol) >= i * width && col(keyCol) < (i + 1) * width)
           .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
         val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get

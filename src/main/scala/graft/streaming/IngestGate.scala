@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.functions.shingleHashes
+import graft.model.Scratch
 import graft.ops.{Dedup, Par}
+import GateStores.Store
 
 /** Streaming near-duplicate INGESTION GATE — the continuous-corpus form
   * of the batch MinHash dedup: documents arrive in micro-batches, each
@@ -16,7 +17,8 @@ import graft.ops.{Dedup, Par}
   * store), not in-memory operator state, so it survives restarts, is
   * shared across jobs, and grows append-only — per batch the probe cost
   * is (batch bands) ⋈ index, proportional to the BATCH, never a corpus
-  * self-join.
+  * self-join. The lifecycle and the probe/verify step are
+  * [[GateStores.replay]] and [[GateStores.dupSources]].
   *
   * Contract (stated identically by the DuckDB oracle): doc `d` is a
   * duplicate iff some earlier document `e` (e.doc_id < d.doc_id — the
@@ -26,157 +28,48 @@ import graft.ops.{Dedup, Par}
   * admitted: near-dup chains collapse to their earliest member, exactly
   * the batch pipeline's min-id cluster canonicalization
   * (`q_dedup_clusters`). Documents under 3 tokens have no shingles and
-  * are always admitted — both engines state that rule.
+  * are always admitted — both engines state that rule. The decisions
+  * are a pure function of the corpus (the rule is doc_id order, not
+  * batch boundaries), so the hash gate holds at any slice count.
   *
   * The banding (32 hashes × 2 rows/band — `q_dedup_minhash`'s exact
   * parameters, measured recall 1.0 at J ≥ 0.5 on this corpus) makes the
   * LSH probe complete here, so the gate's output equals the oracle's
   * all-pairs statement; on a corpus where banding missed a pair this
   * key would hash-mismatch rather than silently under-dedup.
-  *
-  * Idempotence: each micro-batch Overwrite-writes its own `b<id>`
-  * subdirectory of the decision/index/shingle stores, so an
-  * at-least-once replay of a batch rewrites identical files instead of
-  * double-appending — and the probe reads only STRICTLY EARLIER batch
-  * subdirectories (`existing(dir, before = batchId)`), so a replayed
-  * batch cannot see its own first attempt's just-written index (which
-  * would yield self-pairs and reversed key_a > key_b pairs) and
-  * reproduces byte-identical decisions.
   */
 object IngestGate {
-  private val fixtureLock = new Object
-
-  /** Micro-batch count of the replay fixture (r12, was 4): the
-    * smallest count that still exercises a MULTI-batch accumulated
-    * index — batch 2 probes an index of two prior subdirectories —
-    * while trimming one full micro-batch of store landings off the
-    * replay. Exposed so the spec's cross-batch assertion slices the
-    * id space exactly as the fixture does.
-    */
-  val Slices = 3
-
   def replayNearDupGate(s: SparkSession, d: String): DataFrame =
-    replayInternal(s, d,
-      ckpt = graft.model.Scratch.dir("ingest_gate_ckpt", d) + "/" +
-        java.util.UUID.randomUUID().toString.take(8),
-      wipeStores = true, crashAtBatch = None)
+    replayInternal(s, d, ckpt = GateStores.freshCkpt("ingest_gate", d),
+      wipeStores = true, crash = None)
 
-  /** Lifecycle-exposed form — see [[EmbGate.replayInternal]] for the
-    * restart-spec contract of `ckpt` / `wipeStores` / `crashAtBatch`.
+  /** [[GateStores.replay]]'s `ckpt` / `wipeStores` / `crash` exposed for
+    * the restart specs.
     */
   private[graft] def replayInternal(s: SparkSession, d: String,
       ckpt: String, wipeStores: Boolean,
-      crashAtBatch: Option[Long]): DataFrame = {
+      crash: Option[GateStores.Crash]): DataFrame = {
     val docs = graft.model.Tables.documents(s, d).select(col("doc_id"), col("text"))
-    // decisions are a pure function of the corpus (the rule is doc_id
-    // order, not batch boundaries), so the hash gate is unchanged at
-    // any slice count — see [[Slices]]; fixture landing + the per-batch
-    // store contract are the shared [[GateStores]] statements
-    val srcDir = new java.io.File(graft.model.Scratch.dir("ingest_gate_src", d))
-    GateStores.landSliceFixture(docs, "doc_id", srcDir, Slices, fixtureLock)
-    val decDir = graft.model.Scratch.dir("ingest_gate_dec", d)
-    val idxDir = graft.model.Scratch.dir("ingest_gate_idx", d)
-    val shDir = graft.model.Scratch.dir("ingest_gate_sh", d)
-    if (wipeStores) GateStores.wipe(Seq(decDir, idxDir, shDir))
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.getPath + "/gate_*.parquet")
-    val query = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        // fold the settled tail before probing — see EmbGate; the two
-        // stores fold concurrently (disjoint dirs)
-        GateStores.inParallel(Seq(
-          () => GateStores.maybeCompact(ss, idxDir, upTo = batchId - 1,
-            partitionCols = Seq("bgrp")): Unit,
-          () => GateStores.maybeCompact(ss, shDir, upTo = batchId - 1): Unit))
-        val withSh = Par.fanOut(batch.select(col("doc_id"), col("text")))
-          .withColumn("toks", split(col("text"), " "))
-          .withColumn("sh", shingleHashes(col("toks"), 3))
-          .filter(size(col("sh")) > 0)
-          .select(col("doc_id"), col("sh"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sigs = Dedup.minhashSignatures(withSh, "doc_id", 32)
-        val batchBands = Dedup.bandBuckets(sigs, "doc_id", 32, 2)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val index = GateStores.readBandIndexStore(ss, idxDir, batchId)
-          .map(_.select(col("doc_id"), col("band"), col("bucket")))
-        // prior-batch candidates: probe the persistent band index with
-        // THIS batch's buckets (cost ∝ batch); same-batch candidates:
-        // the ordered self-join, exactly lshCandidates' shape
-        // batch-side band rows are bounded (micro-batch × bands): every
-        // join against them broadcasts that side, so the persistent
-        // index streams map-side through the probe instead of being
-        // exchanged by (band, bucket) — holds at any store size
-        // (guide §3.1); and no candidate distinct — duplicates collapse
-        // in dupSrc's min-aggregate, saving the pair-set exchange
-        // (the cosinePairsBlocked verify-per-collision argument)
-        val candPrev = index match {
-          case None => ss.emptyDataFrame
-            .select(lit(0L).as("key_a"), lit(0L).as("key_b")).limit(0)
-          case Some(idx) => idx
-            .select(col("doc_id").as("key_a"), col("band"), col("bucket"))
-            .join(broadcast(batchBands.select(col("doc_id").as("key_b"),
-              col("band"), col("bucket"))), Seq("band", "bucket"))
-            .select(col("key_a"), col("key_b"))
-        }
-        val candSame = batchBands.select(col("doc_id").as("key_a"),
-            col("band"), col("bucket"))
-          .join(broadcast(batchBands.select(col("doc_id").as("key_b"),
-            col("band"), col("bucket"))), Seq("band", "bucket"))
-          .filter(col("key_a") < col("key_b"))
-          .select(col("key_a"), col("key_b"))
-        val cands = candPrev.unionByName(candSame)
-        // verify-side store fetch under the PruneStoreBytes cutover —
-        // see EmbGate.gateBatch: direct read while the store is small,
-        // colliding-id semi-join (fetch ∝ candidates) once it is not
-        val allSh = GateStores.readStoreOpt(ss, shDir, batchId) match {
-          case None => withSh
-          case Some(store) =>
-            val fetched =
-              if (GateStores.storeBytesBefore(shDir, batchId)
-                  < GateStores.PruneStoreBytes)
-                store
-              else {
-                GateStores.prunedFetches.incrementAndGet(): Unit
-                store.join(
-                  index.get.join(broadcast(batchBands
-                      .select(col("band"), col("bucket")).distinct()),
-                      Seq("band", "bucket"), "left_semi")
-                    .select(col("doc_id")).distinct(),
-                  Seq("doc_id"), "left_semi")
-              }
-            fetched.unionByName(withSh)
-        }
-        // Sides form: key_b is always a THIS-batch document, so the
-        // b-side shingle join builds on the micro-batch alone
-        val dupSrc = Dedup.verifyJaccardSides(cands, allSh, withSh,
-            "doc_id", 0.5, broadcastB = true)
-          .groupBy(col("key_b").as("doc_id"))
-          .agg(min(col("key_a")).as("dup_src"))
-        val decisions = batch.select(col("doc_id"))
-          .join(broadcast(dupSrc), Seq("doc_id"), "left")
-          .select(col("doc_id"), col("dup_src").isNull.as("admitted"),
-            col("dup_src"))
-        // three independent landing writes to disjoint stores — overlap
-        // their fixed per-job latency (see EmbGate)
-        GateStores.inParallel(Seq(
-          () => GateStores.land(decisions, s"$decDir/b$batchId"),
-          () => GateStores.land(GateStores.withBandGroup(batchBands),
-            s"$idxDir/b$batchId", partitionCols = Seq("bgrp")),
-          () => GateStores.land(withSh, s"$shDir/b$batchId")))
-        batchBands.unpersist()
-        withSh.unpersist()
-        if (crashAtBatch.contains(batchId))
-          throw new RuntimeException(s"injected crash after batch $batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try query.awaitTermination()
-    finally if (crashAtBatch.isEmpty) GateStores.rmTree(ckpt)
-    s.read.parquet(GateStores.existing(decDir): _*)
-      .orderBy(col("doc_id"))
+    val dec = Store(Scratch.dir("ingest_gate_dec", d))
+    val idx = Store(Scratch.dir("ingest_gate_idx", d), Seq("bgrp"))
+    val sh = Store(Scratch.dir("ingest_gate_sh", d))
+    GateStores.replay(s, "ingest_gate", docs, "doc_id",
+        Scratch.dir("ingest_gate_src", d), stores = Seq(dec, idx, sh),
+        folded = Seq(idx, sh), ckpt, wipeStores, crash) { b =>
+      val withSh = b.persist(Par.fanOut(b.rows.select(col("doc_id"), col("text")))
+        .withColumn("toks", split(col("text"), " "))
+        .withColumn("sh", shingleHashes(col("toks"), 3))
+        .filter(size(col("sh")) > 0)
+        .select(col("doc_id"), col("sh")))
+      val sigs = Dedup.minhashSignatures(withSh, "doc_id", 32)
+      val bands = b.persist(Dedup.bandBuckets(sigs, "doc_id", 32, 2))
+      val dupSrc = GateStores.dupSources(b, withSh, bands, "doc_id",
+        Seq("band", "bucket"), idx.dir, sh.dir,
+        Dedup.verifyJaccardSides(_, _, _, "doc_id", 0.5, broadcastB = true))
+      Seq(dec -> GateStores.decide(b.rows, "doc_id", dupSrc),
+        idx -> GateStores.withBandGroup(bands),
+        sh -> withSh)
+    }
+    GateStores.decisions(s, dec.dir, "doc_id")
   }
 }

@@ -771,7 +771,7 @@ class LlmOpsSpec extends AnyFunSuite {
       .as[(Long, Long, Int, Long)].collect().toSeq
     val hi = graft.model.Tables.embeddings(spark, d)
       .agg(max($"vec_id")).as[Long].head()
-    val width = hi / graft.streaming.AnnIngest.Slices + 1L
+    val width = hi / graft.streaming.GateStores.Slices + 1L
     def dead(id: Long) = id % graft.streaming.AnnIngest.DeleteMod ==
       graft.streaming.AnnIngest.DeleteResidue &&
       id < (graft.streaming.AnnIngest.DeleteAfterBatch + 1L) * width

@@ -620,8 +620,8 @@ class PlanSpec extends AnyFunSuite {
     val before = org.apache.spark.sql.ListenerCounts(spark)
     val dir = java.nio.file.Files.createTempDirectory("profile").toFile
     try {
-      val Seq(filter, unknown, stream) =
-        Seq("q_filter_eq", "q_no_such_key", "q_stream_asof_wm")
+      val Seq(filter, unknown, stream, gate) =
+        Seq("q_filter_eq", "q_no_such_key", "q_stream_asof_wm", "q_stream_ingest_gate")
           .map(k => graft.tools.Profile.profile(spark, sf, k, dir))
       assert(org.apache.spark.sql.ListenerCounts(spark) == before)
       def num(r: collection.Map[String, Any], k: String): Double =
@@ -641,6 +641,14 @@ class PlanSpec extends AnyFunSuite {
       assert(unknown("error").toString.contains("q_no_such_key"), unknown)
       assert(!stream.contains("error"), stream)
       assert(stream("streaming.batches").asInstanceOf[Seq[_]].nonEmpty, stream)
+      // every gate job is labelled with its replay section, none with the
+      // stream's raw " id = … batch = N" description
+      assert(!gate.contains("error"), gate)
+      val gateJobs = gate("jobs").asInstanceOf[Seq[collection.Map[String, Any]]]
+        .map(_("desc").toString)
+      assert(!gateJobs.exists(_.startsWith(" id = ")), gateJobs)
+      Seq("fold", "land").foreach(sec =>
+        assert(gateJobs.exists(_.matches(s"ingest_gate b\\d: $sec")), gateJobs))
     } finally {
       dir.listFiles.foreach(_.delete)
       dir.delete()

@@ -692,11 +692,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.exists(!_._2), "the corpus plants near-dups — some must reject")
     // cross-batch state: at least one rejection whose dup_src landed in
     // an EARLIER micro-batch (slice = contiguous doc_id range, width
-    // exactly as the fixture computes it from IngestGate.Slices), so
+    // exactly as the fixture computes it from GateStores.Slices), so
     // the persistent index — not just the same-batch self-join — is
     // proven live
     val hi = out.map(_._1).max
-    val width = hi / graft.streaming.IngestGate.Slices + 1L
+    val width = hi / graft.streaming.GateStores.Slices + 1L
     assert(out.exists { case (id, adm, src) =>
       !adm && src.exists(_ / width < id / width)
     }, "no rejection crossed a batch boundary — the index went unused")
@@ -724,7 +724,7 @@ class StreamingSpec extends AnyFunSuite {
     // cross-batch state: a rejection whose dup_src landed in an EARLIER
     // micro-batch, proving the persistent band index is live
     val hi = out.map(_._1).max
-    val width = hi / graft.streaming.EmbGate.Slices + 1L
+    val width = hi / graft.streaming.GateStores.Slices + 1L
     assert(out.exists { case (id, adm, src) =>
       !adm && src.exists(_ / width < id / width)
     }, "no rejection crossed a batch boundary — the index went unused")
@@ -761,7 +761,8 @@ class StreamingSpec extends AnyFunSuite {
       graft.streaming.AnnIngest.replayInternal(spark, sf, threshold = 0.4,
         bands = 96, bitsPerBand = 8, dims = 64, cells = 16, m = 8, ks = 16,
         refineIters = 1, ns = "ann_ingest", ckpt = ckpt, wipeStores = wipe,
-        crashAtBatch = crashAt, delete = false)
+        crash = crashAt.map(graft.streaming.GateStores.Crash(_)),
+        delete = false)
     // reference: an uninterrupted replay
     val clean = graft.streaming.AnnIngest.replayAnnIngest(spark, sf,
         threshold = 0.4, bands = 96, bitsPerBand = 8, dims = 64, cells = 16,
@@ -788,7 +789,7 @@ class StreamingSpec extends AnyFunSuite {
     def run(ckpt: String, wipe: Boolean, crashAt: Option[Long]) =
       graft.streaming.EmbGate.replayInternal(spark, sf, threshold = 0.4,
         bands = 96, bitsPerBand = 8, ckpt = ckpt, wipeStores = wipe,
-        crashAtBatch = crashAt)
+        crash = crashAt.map(graft.streaming.GateStores.Crash(_)))
     val clean = graft.streaming.EmbGate.replayEmbNearDupGate(spark, sf,
         threshold = 0.4, bands = 96, bitsPerBand = 8)
       .as[(Long, Boolean, Option[Long])].collect().toSeq
@@ -806,7 +807,7 @@ class StreamingSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     def run(ckpt: String, wipe: Boolean, crashAt: Option[Long]) =
       graft.streaming.IngestGate.replayInternal(spark, sf, ckpt = ckpt,
-        wipeStores = wipe, crashAtBatch = crashAt)
+        wipeStores = wipe, crash = crashAt.map(graft.streaming.GateStores.Crash(_)))
     val clean = graft.streaming.IngestGate.replayNearDupGate(spark, sf)
       .as[(Long, Boolean, Option[Long])].collect().toSeq
     val ckpt = graft.model.Scratch.dir("ingest_restart_ckpt", sf)
@@ -817,6 +818,90 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Long, Boolean, Option[Long])].collect().toSeq
     assert(resumed == clean,
       "a killed-and-resumed doc gate must reproduce the uninterrupted decisions")
+  }
+
+  /** Runs `replay` with a [[graft.streaming.GateStores.Crash]] that
+    * fails `failing`'s landing of `batch`, checks the failure and the
+    * half-landed batch, then resumes from the same checkpoint without
+    * wiping and returns the resumed result. The resume must execute
+    * `batch` again, and first: a later batch's probe never reads the
+    * half-landed one. `unlanded` are further stores that must not hold
+    * `batch` after the failure.
+    */
+  private def midBatchFault(ckpt: String, batch: Long, failing: String,
+      siblings: Seq[String], unlanded: Seq[String] = Nil)(
+      replay: Option[graft.streaming.GateStores.Crash] => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      replay(Some(graft.streaming.GateStores.Crash(batch, Some(failing))))
+    }
+    val injected = s"injected crash landing $failing of batch $batch"
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => e.getMessage != null && e.getMessage.contains(injected)), ex)
+    siblings.foreach(d => assert(new java.io.File(s"$d/b$batch/_SUCCESS").exists,
+      s"sibling landing $d/b$batch must have written before the failure"))
+    (failing +: unlanded).foreach(d => assert(!new java.io.File(s"$d/b$batch").exists,
+      s"$d/b$batch must not exist after the failed landing"))
+    // the checkpoint keeps the query id across the restart
+    val queryId = spark.read.json(s"$ckpt/metadata").head().getAs[String]("id")
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.id.toString == queryId) executed.add(e.progress.batchId): Unit
+    }
+    spark.streams.addListener(listener)
+    val resumed = try {
+      val df = replay(None)
+      org.apache.spark.sql.GraftRelationalBridge.drainListenerBus(spark)
+      df
+    } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(executed.asScala.toSeq ==
+        (batch until graft.streaming.GateStores.Slices.toLong),
+      s"the resume must re-execute batch $batch, then go on: ${executed.asScala}")
+    resumed
+  }
+
+  test("IngestGate mid-batch fault: a shingle-store landing fails after its siblings land; the resume converges") {
+    val sf = "/root/testdata/sf0.001"
+    val clean = graft.streaming.IngestGate.replayNearDupGate(spark, sf)
+      .as[(Long, Boolean, Option[Long])].collect().toSeq
+    val Seq(dec, idx, sh) = Seq("dec", "idx", "sh")
+      .map(st => graft.model.Scratch.dir(s"ingest_gate_$st", sf))
+    val ckpt = graft.model.Scratch.dir("ingest_midbatch_ckpt", sf)
+    val resumed = midBatchFault(ckpt, batch = 1L, failing = sh,
+        siblings = Seq(dec, idx)) { crash =>
+      graft.streaming.IngestGate.replayInternal(spark, sf, ckpt = ckpt,
+        wipeStores = crash.nonEmpty, crash = crash)
+    }.as[(Long, Boolean, Option[Long])].collect().toSeq
+    assert(resumed == clean,
+      "a batch failed in the middle of its landings must resume to the uninterrupted decisions")
+  }
+
+  test("AnnIngest mid-batch fault: a vector-store landing fails before the takedown; the resume converges") {
+    val sf = "/root/testdata/sf0.001"
+    val clean = graft.streaming.AnnIngest.replayAnnIngestDelete(spark, sf,
+        threshold = 0.4, bands = 96, bitsPerBand = 8, dims = 64, cells = 16,
+        m = 8, ks = 16, refineIters = 1)
+      .as[(Long, Long, Int, Long)].collect().toSeq
+    val Seq(idx, vec, post, tomb) = Seq("idx", "vec", "post", "tomb")
+      .map(st => graft.model.Scratch.dir(s"ann_ingest_del_$st", sf))
+    val batch = graft.streaming.AnnIngest.DeleteAfterBatch
+    val ckpt = graft.model.Scratch.dir("ann_midbatch_ckpt", sf)
+    // the takedown reads the batch's vector store, so it must not run
+    val resumed = midBatchFault(ckpt, batch, failing = vec,
+        siblings = Seq(idx, post), unlanded = Seq(tomb)) { crash =>
+      graft.streaming.AnnIngest.replayInternal(spark, sf, threshold = 0.4,
+        bands = 96, bitsPerBand = 8, dims = 64, cells = 16, m = 8, ks = 16,
+        refineIters = 1, ns = "ann_ingest_del", ckpt = ckpt,
+        wipeStores = crash.nonEmpty, crash = crash, delete = true)
+    }.as[(Long, Long, Int, Long)].collect().toSeq
+    assert(resumed == clean,
+      "a batch failed in the middle of its landings must resume to the uninterrupted postings")
   }
 
   test("pruned store fetch (PruneStoreBytes=0): decisions identical to the scan branch, and the branch actually runs") {
@@ -879,13 +964,13 @@ class StreamingSpec extends AnyFunSuite {
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       graft.streaming.EmbGate.replayInternal(spark, sf, threshold = 0.4,
         bands = 96, bitsPerBand = 8, ckpt = ckpt, wipeStores = true,
-        crashAtBatch = Some(2L))
+        crash = Some(graft.streaming.GateStores.Crash(2L)))
     }
     assert(graft.streaming.GateStores.foldedThrough(idxDir) == 1L,
       "the crash landed after the fold — the snapshot must be committed")
     val resumed = graft.streaming.EmbGate.replayInternal(spark, sf,
         threshold = 0.4, bands = 96, bitsPerBand = 8, ckpt = ckpt,
-        wipeStores = false, crashAtBatch = None)
+        wipeStores = false, crash = None)
       .as[(Long, Boolean, Option[Long])].collect().toSeq
     assert(resumed == clean,
       "re-executing a batch over a compacted store must reproduce the decisions")
@@ -905,7 +990,7 @@ class StreamingSpec extends AnyFunSuite {
     // slices
     val hi = graft.model.Tables.embeddings(spark, sf)
       .agg(max($"vec_id")).as[Long].head()
-    val width = hi / graft.streaming.AnnIngest.Slices + 1L
+    val width = hi / graft.streaming.GateStores.Slices + 1L
     def dead(id: Long) = id % 7L == 3L && id < 2L * width
     // The r15 erasure contract, restated in three sentences: (1) no
     // tombstoned id survives; (2) every plain-run survivor posting is
@@ -984,13 +1069,14 @@ class StreamingSpec extends AnyFunSuite {
         bands = 96, bitsPerBand = 8, dims = 64, cells = 16, m = 8, ks = 16,
         refineIters = 1, ns = "ann_ingest_del",
         ckpt = ckpt, wipeStores = true,
-        crashAtBatch = Some(graft.streaming.AnnIngest.DeleteAfterBatch),
+        crash = Some(graft.streaming.GateStores.Crash(
+          graft.streaming.AnnIngest.DeleteAfterBatch)),
         delete = true)
     }
     val resumed = graft.streaming.AnnIngest.replayInternal(spark, sf,
         threshold = 0.4, bands = 96, bitsPerBand = 8, dims = 64, cells = 16,
         m = 8, ks = 16, refineIters = 1, ns = "ann_ingest_del",
-        ckpt = ckpt, wipeStores = false, crashAtBatch = None, delete = true)
+        ckpt = ckpt, wipeStores = false, crash = None, delete = true)
       .as[(Long, Long, Int, Long)].collect().toSeq
     assert(resumed == deleted,
       "a kill between the takedown and its commit must resume to identical survivors")
@@ -1008,28 +1094,31 @@ class StreamingSpec extends AnyFunSuite {
     val vecDir = graft.model.Scratch.dir("erase_sem_vec", sf)
     graft.streaming.GateStores.wipe(Seq(idxDir, vecDir))
     val v = Array.tabulate(64)(i => (i % 7 + 1).toFloat)
-    val b0 = Seq((1L, v)).toDF("vec_id", "embedding")
+    def batch(id: Long, vecId: Long) = new graft.streaming.GateStores.Batch(
+      Seq((vecId, v)).toDF("vec_id", "embedding"), id, "erase_sem")
+    val b0 = batch(0L, 1L)
     val (vecs0, buckets0, dup0) = graft.streaming.EmbGate.gateBatch(
-      b0, 0L, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8)
+      b0, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8)
     assert(dup0.count() == 0L, "first arrival has no predecessor")
     graft.streaming.GateStores.land(
       graft.streaming.GateStores.withBandGroup(buckets0),
       s"$idxDir/b0", partitionCols = Seq("bgrp"))
     graft.streaming.GateStores.land(vecs0, s"$vecDir/b0")
-    vecs0.unpersist(); buckets0.unpersist()
-    val b1 = Seq((2L, v)).toDF("vec_id", "embedding")
-    val (v1, k1, live) = graft.streaming.EmbGate.gateBatch(
-      b1, 1L, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8)
+    b0.release()
+    val b1 = batch(1L, 2L)
+    val (_, _, live) = graft.streaming.EmbGate.gateBatch(
+      b1, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8)
     assert(live.as[(Long, Long)].collect().toSeq == Seq((2L, 1L)),
       "a LIVE identical predecessor must reject the re-upload")
-    v1.unpersist(); k1.unpersist()
+    b1.release()
     val tombs = Seq(1L).toDF("n_id")
-    val (v2, k2, erased) = graft.streaming.EmbGate.gateBatch(
-      b1, 1L, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8,
+    val b1again = batch(1L, 2L)
+    val (_, _, erased) = graft.streaming.EmbGate.gateBatch(
+      b1again, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8,
       tombstones = Some(tombs))
     assert(erased.count() == 0L,
       "an ERASED predecessor cannot veto — the re-upload is admitted")
-    v2.unpersist(); k2.unpersist()
+    b1again.release()
   }
 
   test("snapshot retention: a tombstone fold leaves no superseded snapshot holding the dead rows") {
@@ -1038,7 +1127,7 @@ class StreamingSpec extends AnyFunSuite {
     // Schedule exactly that — fold, THEN takedown, then fold again —
     // and walk every parquet file under the store.
     val dir = graft.model.Scratch.dir("retention_walk", "/root/testdata/sf0.001")
-    graft.streaming.GateStores.rmTree(dir)
+    graft.streaming.GateStores.wipe(Seq(dir))
     def land(id: Long, ids: Seq[Long]): Unit =
       graft.streaming.GateStores.land(ids.toDF("n_id"), s"$dir/b$id")
     land(0, Seq(1L, 2L, 3L)); land(1, Seq(4L, 5L, 6L))
@@ -1072,7 +1161,7 @@ class StreamingSpec extends AnyFunSuite {
     // multi-file snapshot still satisfies fold-≡-unfolded and the
     // strictly-earlier guard.
     val dir = graft.model.Scratch.dir("fold_sizing", "/root/testdata/sf0.001")
-    graft.streaming.GateStores.rmTree(dir)
+    graft.streaming.GateStores.wipe(Seq(dir))
     graft.streaming.GateStores.land(
       (0L until 100L).toDF("n_id"), s"$dir/b0")
     graft.streaming.GateStores.land(
