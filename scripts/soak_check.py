@@ -1,28 +1,36 @@
 #!/usr/bin/env python3
-"""10x-soak verifier (driver-side tooling, like selfcheck.py).
+"""Soak checker: one pass over a `graft.tools.Soak` run.
 
-Two gates, both in DuckDB:
+Usage: python3 scripts/soak_check.py <out_dir> <artifact.json> [key ...]
 
-1. CORPUS: restate the ScaleFold amplification rule (ops/ScaleFold.scala
-   carries the same text) as SQL over the BASE dir and EXCEPT-compare
-   each amplified table against the parquet the Spark derivation wrote.
-   Zero diff rows = the two statements of the one rule agree.
+Reads <out_dir>/soak_run.json, the run record Soak writes (tier, folds,
+tables, keys, base and soak dirs, committed oracle texts, timings), and
+checks in DuckDB:
 
-2. QUERIES: run every soak key's oracle SQL over the soak corpus and
-   compare to the Spark result parquet, exactly the driver's pipeline
-   shape (pandas frames, columns sorted by name, rows sorted, values
-   compared exactly -- reusing selfcheck.py's normalization).
+1. CORPUS: the ScaleFold rule restated as SQL over the base dir
+   (ops/ScaleFold.scala carries the same text), EXCEPT-compared with
+   every amplified table the run wrote.
+2. EQUIVALENCE: every oracle that is not the committed text is
+   EXCEPT-proven equal to it on a corpus where both are fast.
+3. QUERIES: every key of the record (or only the listed ones) against
+   its oracle, compared as selfcheck.py compares (pandas frames,
+   columns by name, rows sorted, values exact).
+   Each key gets exactly one method from METHOD.
 
-Writes a CORRECTNESS-shaped artifact merging both gates plus the Spark
-timings from soak_timings.json.
-
-Usage: python3 scripts/soak_check.py <base_dir> <soak_dir> <out_dir> <artifact.json>
+Writes one CORRECTNESS-shaped artifact with the run's timings. Exit 0
+when clean, 1 on any engine failure (a mismatch, a corpus or
+equivalence diff, a broken oracle), 2 when the only failures are known
+environment faults on the oracle side (watchdog, OOM, spill cap).
 """
 import json
 import os
+import shutil
+import tempfile
 import sys
+import threading
 
 import duckdb
+import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from selfcheck import TABLES, sorted_vals  # noqa: E402
@@ -50,24 +58,25 @@ SHIFTED = {
 # compare below is a bit-level gate on the whole perturbation.
 EMB_EPS = "0.0078125"
 
-
+# The small corpus the equivalence proofs run on: the quadratic
+# committed forms are fast there.
+EQUIV_BASE = "/root/testdata/sf0.01"
 
 DUCK_TMP = "target/duck_tmp"
 
 
 def tuned(con):
-    """Bound DuckDB so a blown-up plan spills to disk instead of
-    ballooning resident memory (r11: the committed q_dedup_eval oracle
-    passed 90 GB RSS at ~SF1 before this guard existed). Spill itself is
-    capped too: r11's q_graph_bfs oracle wrote >79 GB of temp before
-    dying on a full disk, and the leaked files then starved its sibling
-    keys — a runaway recursive CTE must fail fast and per-key instead."""
-    con.execute("SET threads TO 16")
-    con.execute(f"SET memory_limit='{os.environ.get('SOAK_MEM', '48GB')}'")
+    """DuckDB keeps its own thread and memory defaults, which come from
+    the machine (memory: 80% of RAM, so a blown-up plan spills instead
+    of growing without bound). Spill is capped at half the free space
+    of the temp dir's filesystem: r11's q_graph_bfs oracle wrote >79 GB
+    of temp before dying on a full disk, and the leaked files then
+    starved its sibling keys -- a runaway recursive CTE must fail fast
+    and per key instead."""
     os.makedirs(DUCK_TMP, exist_ok=True)
     con.execute(f"SET temp_directory='{DUCK_TMP}'")
-    con.execute("SET max_temp_directory_size='"
-                f"{os.environ.get('SOAK_TMP_MAX', '24GB')}'")
+    con.execute("SET max_temp_directory_size="
+                f"'{shutil.disk_usage(DUCK_TMP).free // 2}B'")
     return con
 
 
@@ -75,8 +84,7 @@ def clean_duck_tmp():
     """Remove leaked spill files; DuckDB only reclaims temp on a clean
     connection close, so an interrupted/OOM-killed oracle leaves its
     duckdb_temp_storage-*.tmp behind (r11: 62 GB, disk at 80%). Called
-    from a finally block on every soak-script exit path."""
-    import shutil
+    from a finally block on every exit path."""
     shutil.rmtree(DUCK_TMP, ignore_errors=True)
 
 
@@ -104,20 +112,6 @@ def classify(entry):
     return "engine_fail"
 
 
-def preserve_original(doc, key, new_entry):
-    """Patch doc['queries'][key] without erasing the round's original
-    failure evidence (ADVICE r12: the r11 artifact was rewritten in
-    place, losing the original error strings): the superseded failing
-    entry rides along under `recovered_from`."""
-    old = doc.get("queries", {}).get(key)
-    if old is not None and not old.get("hash_match"):
-        new_entry = dict(new_entry)
-        new_entry["recovered_from"] = {
-            "err": old.get("err"), "status": old.get("status"),
-            "hash_match": old.get("hash_match")}
-    doc["queries"][key] = new_entry
-
-
 def fail_counts(doc):
     """(engine fail_count, env_fail_count) over all three gates."""
     eng = (sum(0 if v["match"] else 1 for v in doc["corpus"].values()) +
@@ -133,24 +127,28 @@ def fail_counts(doc):
     return eng, env
 
 
-def run_guarded(con, sql, seconds=3600):
-    """Execute with a wall-clock watchdog: interrupt the query after
-    `seconds` so one pathological oracle records a per-key failure
+def guarded(con, seconds, run):
+    """run(con) under a wall-clock watchdog that interrupts `con` after
+    `seconds`, so one pathological oracle records a per-key failure
     instead of hanging the whole artifact (the r10 soak never landed
-    because one key ground forever). An hour is deliberately generous:
-    the guard exists for unbounded hangs, not to shave minutes off a
-    legitimately heavy single-node oracle at ~SF1 (q_dedup_minhash's
-    prefix-join oracle needs >15 min there)."""
-    import threading
+    because one key ground forever)."""
     t = threading.Timer(seconds, con.interrupt)
     t.start()
     try:
-        return con.execute(sql).df()
+        return run(con)
     finally:
         t.cancel()
 
 
-def rule_sql(table, base_dir, cols, folds=10):
+def run_guarded(con, sql, seconds=3600):
+    """`sql`'s result frame, watchdog-guarded. An hour is deliberately
+    generous: the guard exists for unbounded hangs, not to shave minutes
+    off a legitimately heavy single-node oracle at ~SF1 (q_dedup_minhash's
+    prefix-join oracle needs >15 min there)."""
+    return guarded(con, seconds, lambda c: c.execute(sql).df())
+
+
+def rule_sql(table, base_dir, cols, folds):
     """DuckDB restatement of the amplified table (folds 0..folds-1)."""
     shifts = set(SHIFTED[table])
     if not shifts:
@@ -177,16 +175,17 @@ def rule_sql(table, base_dir, cols, folds=10):
             f"(SELECT unnest(range({folds})) AS k)")
 
 
-def check_corpus(con, base_dir, soak_dir):
+def check_corpus(con, run):
     out = {}
-    for t in TABLES:
+    for t in run["tables"]:
         cols = [r[0] for r in con.execute(
-            f"DESCRIBE SELECT * FROM '{base_dir}/{t}.parquet'").fetchall()]
+            f"DESCRIBE SELECT * FROM '{run['base_dir']}/{t}.parquet'")
+            .fetchall()]
         # embeddings included: DuckDB EXCEPT ALL compares LIST(FLOAT)
         # cells element-wise, so the perturbation rule is gated at the
         # bit level like every scalar column
-        rule = rule_sql(t, base_dir, cols)
-        written = f"SELECT * FROM '{soak_dir}/{t}.parquet/*.parquet'"
+        rule = rule_sql(t, run["base_dir"], cols, run["folds"])
+        written = f"SELECT * FROM '{run['soak_dir']}/{t}.parquet/*.parquet'"
         n_rule = con.execute(f"SELECT count(*) FROM ({rule})").fetchone()[0]
         n_soak = con.execute(f"SELECT count(*) FROM ({written})").fetchone()[0]
         diff = con.execute(
@@ -201,12 +200,14 @@ def check_corpus(con, base_dir, soak_dir):
 
 # --- Scalable-but-equivalent soak oracles -----------------------------
 #
-# Four committed oracles are written as O(n^2) all-pairs joins (fine at
-# the driver's sf0.01 gate, infeasible at 10x soak scale: the minhash
-# oracle alone ran >9 min at 5k docs). The soak gate swaps in EXACT
-# reformulations of the same semantics:
+# Some committed oracles are O(n^2) all-pairs joins (fine at the sf0.01
+# gate, infeasible at 10x soak scale: the minhash oracle alone ran
+# >9 min at 5k docs). The soak swaps in EXACT reformulations of the same
+# semantics:
 #
-#   - dedup trio `truth`: candidate pairs from a PREFIX-FILTERED
+#   - q_dedup_minhash / q_dedup_ngram: the exact J >= 0.5 pair set from
+#     a posting-list self-join (soak_pairs below).
+#   - q_dedup_eval `truth`: candidate pairs from a PREFIX-FILTERED
 #     inverted index (AllPairs/PPJoin bound: J(A,B) >= 0.5 forces the
 #     rarity-ordered prefixes of length |X| - ceil(|X|/2) + 1 to share
 #     a shingle), then exact Jaccard on candidates only.
@@ -215,6 +216,8 @@ def check_corpus(con, base_dir, soak_dir):
 #     candidates come from 4 banded equi-joins, verified exactly.
 #   - q_kcore: the IN-subquery peel rounds (which DuckDB planned
 #     catastrophically: >64 s at pilot) become explicit joins (0.4 s).
+#   - q_entity_clusters: the levenshtein pair CTE over the distinct
+#     name domain instead of every key pair.
 #
 # Equivalence is not assumed: check_equivalence() EXCEPT-compares every
 # override against the committed text at sf0.01, where both are fast.
@@ -225,31 +228,10 @@ _SHINGLE_S = """
   FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
   WHERE len(t) >= 3"""
 
-_PREFIX_PAIRS = f"""
-s AS ({_SHINGLE_S}),
-post AS (SELECT doc_id, unnest(sh) AS tok FROM s),
-dfreq AS (SELECT tok, count(*) AS df FROM post GROUP BY 1),
-ranked AS (SELECT p.doc_id, p.tok,
-             row_number() OVER (PARTITION BY p.doc_id
-                                ORDER BY d.df, p.tok) AS rn,
-             count(*) OVER (PARTITION BY p.doc_id) AS n
-           FROM post p JOIN dfreq d USING (tok)),
-pref AS (SELECT doc_id, tok FROM ranked
-         WHERE rn <= n - CAST(ceil(n * 0.5) AS BIGINT) + 1),
-cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM pref a JOIN pref b ON a.tok = b.tok AND a.doc_id < b.doc_id),
-p AS (SELECT doc_a, doc_b,
-        len(list_intersect(sa.sh, sb.sh)) * 1.0 /
-        len(list_distinct(list_concat(sa.sh, sb.sh))) AS jac
-      FROM cand JOIN s sa ON sa.doc_id = doc_a
-                JOIN s sb ON sb.doc_id = doc_b)"""
-
-
-# The expensive prefix-filtered pair set is shared by THREE overrides
-# (minhash pairs, ngram pairs, and the streaming ingest gate's
-# min-predecessor rule). Materialize it once per connection as a temp
+# The expensive exact pair set is shared by two overrides (minhash
+# pairs, ngram pairs). Materialize it once per connection as a temp
 # table; the overrides then read soak_pairs instead of each re-running
-# the prefix join (r11: one evaluation at ~SF1 costs tens of minutes).
+# the pair join (r11: one evaluation at ~SF1 costs tens of minutes).
 # Exact J >= 0.5 pairs WITHOUT per-pair list ops: |A intersect B| is a
 # posting-list self-join counted per pair (pure vectorized join+agg;
 # the per-pair list_intersect verify measured 40+ GB / >1 h at ~SF1,
@@ -270,24 +252,9 @@ _JACCARD_PAIRS_FROM_TABLE = """SELECT doc_a, doc_b,
   CAST(floor(jac * 1000000) AS BIGINT) AS jaccard_e6
 FROM soak_pairs ORDER BY doc_a, doc_b"""
 
-_GATE_FROM_TABLE = """SELECT d.doc_id, (p.dup_src IS NULL) AS admitted,
-  p.dup_src
-FROM documents d LEFT JOIN (
-  SELECT doc_b AS doc_id, CAST(min(doc_a) AS BIGINT) AS dup_src
-  FROM soak_pairs GROUP BY 1) p USING (doc_id)
-ORDER BY doc_id"""
-
-
 def prepare_shared(con, seconds=3600):
-    """Build the shared temp tables on `con` (guarded)."""
-    import threading
-    t = threading.Timer(seconds, con.interrupt)
-    t.start()
-    try:
-        con.execute(_PAIRS_TABLE_SQL)
-    finally:
-        t.cancel()
-
+    """Build the shared soak_pairs table on `con` (guarded)."""
+    guarded(con, seconds, lambda c: c.execute(_PAIRS_TABLE_SQL))
 
 
 # Every CTE MATERIALIZED: each e_n is referenced three times (by e_n+1
@@ -412,133 +379,362 @@ def _entity_clusters_sql(committed):
     return committed.replace(_EC_QUAD, _EC_FAST)
 
 
-def soak_oracles(committed):
-    """name -> scalable oracle; every other key uses its committed text."""
-    out = {
-        "q_dedup_minhash": _JACCARD_PAIRS_FROM_TABLE,
-        "q_dedup_ngram": _JACCARD_PAIRS_FROM_TABLE,
-        "q_kcore": _KCORE_SQL,
-    }
-    if "q_stream_ingest_gate" in committed:
-        out["q_stream_ingest_gate"] = _GATE_FROM_TABLE
-    if "q_dedup_eval" in committed:
-        out["q_dedup_eval"] = _dedup_eval_sql(committed["q_dedup_eval"])
-    if "q_entity_clusters" in committed:
-        out["q_entity_clusters"] = _entity_clusters_sql(
-            committed["q_entity_clusters"])
-    return out
+# ---------------------------------------------------------------------
+# Fold-structured oracle for q_stream_ingest_gate (r15, VERDICT r14 #6).
+#
+# The committed gate oracle is an all-pairs shingle-Jaccard statement;
+# verbatim at 500k documents the posting self-join costs sum(df^2) over
+# tokens, and fold amplification multiplies every df by FOLDS -- x10^4
+# the base join, infeasible. But the ScaleFold rule makes the TRUE pair
+# structure fold-class-decomposable: copy (b, j) has shingles
+# B(b) + {fs(b, j)} where B(b) is the base shingle set and fs the ONE
+# trailing shingle containing the fold token "f<j>". Under the checked
+# assumption that no BASE token looks like a fold suffix (^f[0-9]+$ --
+# fail-loud guard below), the Jaccard of any cross-copy pair depends
+# only on its CLASS, not the fold ids:
+#   J_diag(a,b): copies in the SAME fold (suffix tokens equal)
+#   J_off(a,b):  copies of different docs in DIFFERENT folds
+#   J_same(b):   two copies of the same doc (always different folds)
+# Each class is computable at BASE scale from two constructed variants
+# (suffixes ' f0' and ' f1'). The gate's min-predecessor rule then
+# reduces to: copy (b, j>=1) takes the smallest fold-0 predecessor
+# (J_off over any other doc, or J_same over its own fold-0 copy);
+# failing that, the smallest same-fold predecessor a<b with J_diag,
+# shifted to fold j; copy (b, 0) sees only fold-0 predecessors
+# (J_diag, a<b). Equivalence vs the committed verbatim text is
+# EXCEPT-proven at small scale (sf0.01 x 12 folds, two-digit fold
+# included) before the full-scale check runs.
+# ---------------------------------------------------------------------
+
+_SH_VARIANT = """SELECT doc_id,
+    list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
+                   for i in range(1, len(t) - 1)]) AS sh
+  FROM (SELECT doc_id, string_split(text || ' f{k}', ' ') AS t FROM base)
+  WHERE len(t) >= 3"""
 
 
-def check_equivalence(committed, overrides):
-    """Prove each override computes the committed semantics: run both over
-    the sf0.01 base (where the quadratic forms are fast) and require a
-    zero EXCEPT-diff. A fresh connection so the soak views don't leak in.
-    """
+def gate_fold_sql(base_docs_glob, folds, shift=SHIFT):
+    s0 = _SH_VARIANT.format(k=0)
+    s1 = _SH_VARIANT.format(k=1)
+    return f"""
+WITH base AS (SELECT doc_id, text FROM '{base_docs_glob}'),
+s0 AS MATERIALIZED ({s0}),
+s1 AS MATERIALIZED ({s1}),
+n0 AS (SELECT doc_id, len(sh) AS n FROM s0),
+n1 AS (SELECT doc_id, len(sh) AS n FROM s1),
+p0 AS (SELECT doc_id, unnest(sh) AS tok FROM s0),
+p1 AS (SELECT doc_id, unnest(sh) AS tok FROM s1),
+cdiag AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS c
+          FROM p0 a JOIN p0 b ON a.tok = b.tok AND a.doc_id < b.doc_id
+          GROUP BY 1, 2),
+jdiag AS (SELECT a, b FROM cdiag
+          JOIN n0 na ON na.doc_id = a JOIN n0 nb ON nb.doc_id = b
+          WHERE 2 * c >= na.n + nb.n - c),
+coff AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS c
+         FROM p0 a JOIN p1 b ON a.tok = b.tok AND a.doc_id < b.doc_id
+         GROUP BY 1, 2),
+joff AS (SELECT a, b FROM coff
+         JOIN n0 na ON na.doc_id = a JOIN n1 nb ON nb.doc_id = b
+         WHERE 2 * c >= na.n + nb.n - c),
+jsame AS (SELECT s0.doc_id AS b
+          FROM s0 JOIN s1 ON s0.doc_id = s1.doc_id
+          WHERE 2 * len(list_intersect(s0.sh, s1.sh))
+                >= len(s0.sh) + len(s1.sh)
+                   - len(list_intersect(s0.sh, s1.sh))),
+m0 AS (SELECT b, min(a) AS m FROM (
+         SELECT a, b FROM joff
+         UNION ALL SELECT b AS a, a AS b FROM joff
+         UNION ALL SELECT b AS a, b FROM jsame) GROUP BY b),
+md AS (SELECT b, min(a) AS m FROM jdiag GROUP BY b),
+f AS (SELECT unnest(range({folds})) AS j),
+amp AS (SELECT d.doc_id AS base_id, d.doc_id + j * {shift} AS doc_id, j
+        FROM base d CROSS JOIN f)
+SELECT amp.doc_id,
+  (CASE WHEN amp.j = 0 THEN md.m
+        ELSE coalesce(m0.m, md.m + amp.j * {shift}) END) IS NULL
+    AS admitted,
+  CAST(CASE WHEN amp.j = 0 THEN md.m
+            ELSE coalesce(m0.m, md.m + amp.j * {shift}) END AS BIGINT)
+    AS dup_src
+FROM amp
+LEFT JOIN m0 ON m0.b = amp.base_id
+LEFT JOIN md ON md.b = amp.base_id
+ORDER BY doc_id"""
+
+
+def check_gate_token_safety(con, base_dir):
+    """The fold-class reduction is exact only if no base token can
+    collide with a fold-suffix token; violated -> fail loud rather than
+    compare against an unsound restatement."""
+    n = con.execute(
+        f"SELECT count(*) FROM (SELECT unnest(string_split(text, ' ')) "
+        f"AS tok FROM '{base_dir}/documents.parquet') "
+        f"WHERE regexp_matches(tok, '^f[0-9]+$')").fetchone()[0]
+    if n:
+        raise RuntimeError(
+            f"{n} base tokens match ^f[0-9]+$ -- the fold-structured "
+            f"gate oracle is unsound on this corpus; use the verbatim "
+            f"committed text or change the fold suffix")
+
+
+def gate_equivalence(committed_text, folds_small=12):
+    """EXCEPT-prove the fold-structured form against the committed
+    verbatim text over a corpus small enough for the quadratic form:
+    every base doc involved in a true near-dup pair plus a 100-doc
+    prefix, amplified 12-fold (two-digit fold included, so the
+    suffix-width edge is in scope). The full sf0.01 base x 12 is
+    quadratic-infeasible per check run (~18M list-op pairs measured
+    >25 min); the subset keeps all cross-doc pair classes while
+    cutting the verbatim side ~100x -- an equivalence proof needs the
+    same corpus on both sides, not the whole corpus."""
     eq = tuned(duckdb.connect())
-    for t in TABLES:
-        eq.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                   f"'/root/testdata/sf0.01/{t}.parquet'")
+    tmpd = tempfile.mkdtemp(prefix="gate_eq_")
     try:
-        prepare_shared(eq)
-    except Exception as e:
-        print(f"shared-pairs build (sf0.01) FAILED: {e}", flush=True)
+        check_gate_token_safety(eq, EQUIV_BASE)
+        eq.execute(f"""COPY (
+  WITH s AS (
+    SELECT doc_id, list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
+                                  for i in range(1, len(t) - 1)]) AS sh
+    FROM (SELECT doc_id, string_split(text, ' ') AS t
+          FROM '{EQUIV_BASE}/documents.parquet')
+    WHERE len(t) >= 3),
+  n AS (SELECT doc_id, len(sh) AS n FROM s),
+  post AS (SELECT doc_id, unnest(sh) AS tok FROM s),
+  c AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS c
+        FROM post a JOIN post b ON a.tok = b.tok AND a.doc_id < b.doc_id
+        GROUP BY 1, 2),
+  -- slack band (ADVICE r15): the fold classes admit pairs one
+  -- intersection-count below the base threshold (the trailing fold
+  -- shingle adds +1 to both set sizes and, for same-fold pairs with
+  -- matching last-two tokens, +1 to the intersection), so the proof
+  -- corpus must include the threshold-BOUNDARY pairs too -- exactly
+  -- the class where the fold-structured restatement could diverge
+  pairs AS (SELECT a, b FROM c
+            JOIN n na ON na.doc_id = a JOIN n nb ON nb.doc_id = b
+            WHERE 2 * c >= na.n + nb.n - c - 2),
+  keep AS (SELECT a AS doc_id FROM pairs
+           UNION SELECT b FROM pairs)
+  SELECT d.* FROM '{EQUIV_BASE}/documents.parquet' d
+  WHERE d.doc_id < 100 OR d.doc_id IN (SELECT doc_id FROM keep)
+) TO '{tmpd}/documents.parquet' (FORMAT PARQUET)""")
+        cols = [r[0] for r in eq.execute(
+            f"DESCRIBE SELECT * FROM "
+            f"'{tmpd}/documents.parquet'").fetchall()]
+        eq.execute(f"CREATE VIEW documents AS "
+                   f"{rule_sql('documents', tmpd, cols, folds_small)}")
+        eq.execute(f"CREATE VIEW v_quad AS {committed_text}")
+        eq.execute(f"CREATE VIEW v_fold AS "
+                   f"{gate_fold_sql(tmpd + '/documents.parquet', folds_small)}")
+        return except_diff(eq, "SELECT * FROM v_fold", "SELECT * FROM v_quad")
+    finally:
+        eq.close()
+        shutil.rmtree(tmpd, ignore_errors=True)
+
+
+# --- Per-fold shard check for the recursive graph keys ------------------
+#
+# The ScaleFold rule shifts every join key by k*10M consistently, so the
+# amplified co-purchase graph is the DISJOINT union of one shard per
+# fold: edges come from the lineitem self-join on l_orderkey, every key
+# of an order shifts by the same fold, and no edge crosses folds. These
+# keys factorize over connected components, hence over folds, so the
+# committed text run on each fold's view and recombined checks every row
+# exactly, while each single-node oracle stays base-sized (the
+# whole-corpus recursive CTEs spilled past the disk: q_graph_bfs alone
+# wrote >79 GB of DuckDB temp at ~SF1).
+#
+# Per-node keys (bfs / pagerank) are the union of the fold results.
+# q_label_prop emits (round, n_labels, max_members): labels are
+# fold-local node ids, so the corpus row is the fold-wise SUM of
+# n_labels and MAX of max_members per round. q_ppr's committed text ends
+# in a GLOBAL `ORDER BY rank_e9 DESC, part LIMIT 25`, so the corpus
+# answer is the top 25 of the union (exact: a global top-25 row has < 25
+# rows above it globally, hence < 25 in its own fold). Seeds
+# (src % 97 = 0) exist in every fold since the 10^7 shift permutes
+# residues mod 97.
+#
+# Decomposability is VALIDATED by the comparison itself: an oracle that
+# were not component-local (a 1/N teleport over the whole corpus, a
+# global round count) would produce a spurious FAIL, never a false PASS;
+# such a FAIL means "fold assumption broken" -- check the oracle first.
+
+# fold-determining column per table (the graph oracles read lineitem /
+# part; the rest are filtered consistently for hygiene)
+FOLD_COL = {
+    "part": "p_partkey", "lineitem": "l_orderkey", "orders": "o_orderkey",
+    "customer": "c_custkey", "supplier": "s_suppkey",
+    "events": "event_id", "documents": "doc_id",
+    "embeddings": "vec_id",
+}
+
+
+def per_fold(key, sql, run):
+    """`key`'s oracle frame, recombined from one run of `sql` per fold."""
+    per = []
+    for k in range(run["folds"]):
+        con = tuned(duckdb.connect())
+        try:
+            for t in run["tables"]:
+                where = (f" WHERE {FOLD_COL[t]} // {SHIFT} = {k}"
+                         if t in FOLD_COL else "")
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                            f"'{run['soak_dir']}/{t}.parquet/*.parquet'{where}")
+            per.append(run_guarded(con, sql))
+        finally:
+            con.close()
+    union = pd.concat(per)
+    if key == "q_label_prop":
+        return union.groupby("round", as_index=False).agg(
+            n_labels=("n_labels", "sum"),
+            max_members=("max_members", "max"))[list(per[0].columns)]
+    if key == "q_ppr":
+        return union.sort_values(["rank_e9", "part"],
+                                 ascending=[False, True]).head(25)
+    return union
+
+
+# --- The method table ----------------------------------------------------
+#
+# Each key's oracle: (method, text from the committed text and the run
+# record). A key not listed runs its committed text over the whole soak
+# corpus. "override" and "fold_gate" texts are EXCEPT-proven against the
+# committed text before use; "per_fold" runs the committed text per fold.
+COMMITTED = ("committed", lambda c, run: c)
+METHOD = {
+    "q_dedup_minhash": ("override", lambda c, run: _JACCARD_PAIRS_FROM_TABLE),
+    "q_dedup_ngram": ("override", lambda c, run: _JACCARD_PAIRS_FROM_TABLE),
+    "q_dedup_eval": ("override", lambda c, run: _dedup_eval_sql(c)),
+    "q_entity_clusters": ("override",
+                          lambda c, run: _entity_clusters_sql(c)),
+    "q_kcore": ("override", lambda c, run: _KCORE_SQL),
+    "q_graph_bfs": ("per_fold", COMMITTED[1]),
+    "q_label_prop": ("per_fold", COMMITTED[1]),
+    "q_pagerank": ("per_fold", COMMITTED[1]),
+    "q_ppr": ("per_fold", COMMITTED[1]),
+    "q_stream_ingest_gate": ("fold_gate", lambda c, run: gate_fold_sql(
+        f"{run['base_dir']}/documents.parquet", run["folds"])),
+}
+
+
+def except_diff(con, a, b):
+    """Rows of one SELECT missing from the other, both ways, as bags."""
+    return int(run_guarded(
+        con, f"SELECT count(*) FROM ((SELECT * FROM ({a}) EXCEPT ALL "
+             f"SELECT * FROM ({b})) UNION ALL (SELECT * FROM ({b}) "
+             f"EXCEPT ALL SELECT * FROM ({a})))").iloc[0, 0])
+
+
+def pin(key, diff, where):
+    print(f"equiv {'PASS' if diff == 0 else 'FAIL'} {key}: "
+          f"oracle vs committed diff={diff} {where}")
+    return {"diff_rows": diff, "match": bool(diff == 0)}
+
+
+def check_equivalence(run, oracles):
+    """Prove each non-committed oracle computes the committed semantics
+    on a corpus where the committed form is fast: overrides over the
+    sf0.01 base, the fold-structured gate over its pair subset."""
+    committed = run["oracle_sql"]
+    overrides = {k: sql for k, (m, sql) in oracles.items()
+                 if m == "override"}
     out = {}
-    for k, fast in sorted(overrides.items()):
-        eq.execute(f"CREATE OR REPLACE VIEW v_fast AS {fast}")
-        eq.execute(f"CREATE OR REPLACE VIEW v_quad AS {committed[k]}")
-        diff = int(run_guarded(eq,
-            "SELECT count(*) FROM ((SELECT * FROM v_fast EXCEPT ALL "
-            "SELECT * FROM v_quad) UNION ALL (SELECT * FROM v_quad "
-            "EXCEPT ALL SELECT * FROM v_fast))").iloc[0, 0])
-        out[k] = {"diff_rows": diff, "match": bool(diff == 0)}
-        print(f"equiv {'PASS' if diff == 0 else 'FAIL'} {k}: "
-              f"override vs committed diff={diff} (sf0.01)")
-    eq.close()
+    if overrides:
+        eq = tuned(duckdb.connect())
+        for t in TABLES:
+            eq.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                       f"'{EQUIV_BASE}/{t}.parquet'")
+        if any("soak_pairs" in sql for sql in overrides.values()):
+            prepare_shared(eq)
+        for k in sorted(overrides):
+            out[k] = pin(k, except_diff(eq, overrides[k], committed[k]),
+                         "(sf0.01)")
+        eq.close()
+    for k in sorted(k for k, (m, _) in oracles.items() if m == "fold_gate"):
+        check_gate_token_safety(duckdb.connect(), run["base_dir"])
+        out[k] = pin(k, gate_equivalence(committed[k]),
+                     "(sf0.01 pair-subset x 12)")
     return out
 
 
-def check_queries(con, out_dir, only=None, overrides=None):
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    oracle.update(soak_oracles(oracle))
-    # caller-supplied scalable forms (soak100_check's fold-structured
-    # gate oracle) win over both the committed text and soak_oracles
-    oracle.update(overrides or {})
-    if only is not None:
-        # callers with a scoped key set (soak100_check) drop the
-        # unconditional overrides for keys they never ran
-        oracle = {k: v for k, v in oracle.items() if k in only}
-    res = {}
-    for name in sorted(oracle):
-        entry = {"rows_match": False, "schema_match": False,
-                 "hash_match": False, "spark_rows": None,
-                 "oracle_rows": None, "err": None}
-        res[name] = entry
+def check_key(con, key, method, sql, run, out_dir):
+    entry = {"method": method, "rows_match": False, "schema_match": False,
+             "hash_match": False, "spark_rows": None, "oracle_rows": None,
+             "err": None}
+    try:
+        s_cols, s_vals = sorted_vals(con.execute(
+            f"SELECT * FROM '{out_dir}/{key}/*.parquet'").df(), "spark", key)
+    except Exception as e:
+        entry["err"] = f"spark-side: {e}"
+    else:
+        entry["spark_rows"] = len(s_vals)
         try:
-            s_df = con.execute(
-                f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
-            s_cols, s_vals = sorted_vals(s_df, "spark", name)
-            entry["spark_rows"] = len(s_vals)
-        except Exception as e:
-            entry["err"] = f"spark-side: {e}"
-            print(f"query FAIL {name}: {entry['err']}")
-            continue
-        try:
-            d_df = run_guarded(con, oracle[name])
-            d_cols, d_vals = sorted_vals(d_df, "duckdb", name)
-            entry["oracle_rows"] = len(d_vals)
+            d_cols, d_vals = sorted_vals(
+                per_fold(key, sql, run) if method == "per_fold"
+                else run_guarded(con, sql), "duckdb", key)
         except Exception as e:
             entry["err"] = f"oracle-side: {e}"
-            print(f"query FAIL {name}: {entry['err']}")
-            continue
-        entry["rows_match"] = len(s_vals) == len(d_vals)
-        entry["schema_match"] = s_cols == d_cols
-        entry["hash_match"] = entry["schema_match"] and s_vals == d_vals
-        status = "PASS" if entry["hash_match"] else "FAIL"
-        print(f"query {status} {name}: spark={len(s_vals)} oracle={len(d_vals)}")
-        if not entry["hash_match"] and entry["rows_match"]:
-            for a, b in [(a, b) for a, b in zip(s_vals, d_vals) if a != b][:2]:
-                print(f"  spark: {a}\n  duck:  {b}")
-    return res
+        else:
+            entry["oracle_rows"] = len(d_vals)
+            entry["rows_match"] = len(s_vals) == len(d_vals)
+            entry["schema_match"] = s_cols == d_cols
+            entry["hash_match"] = entry["schema_match"] and s_vals == d_vals
+    print(f"query {'PASS' if entry['hash_match'] else 'FAIL'} {key} "
+          f"[{method}]: spark={entry['spark_rows']} "
+          f"oracle={entry['oracle_rows']}"
+          + (f" err={entry['err']}" if entry["err"] else ""), flush=True)
+    if entry["rows_match"] and not entry["hash_match"]:
+        for a, b in [(a, b) for a, b in zip(s_vals, d_vals) if a != b][:2]:
+            print(f"  spark: {a}\n  duck:  {b}")
+    return entry
 
 
 def main():
-    base_dir, soak_dir, out_dir, artifact = sys.argv[1:5]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, artifact, only = sys.argv[1], sys.argv[2], sys.argv[3:]
+    with open(f"{out_dir}/soak_run.json") as f:
+        run = json.load(f)
+    unknown = sorted(set(only) - set(run["keys"]))
+    if unknown:
+        sys.exit(f"keys not in this soak run: {' '.join(unknown)}")
+    oracles = {}
+    for k in only or run["keys"]:
+        method, text = METHOD.get(k, COMMITTED)
+        oracles[k] = (method, text(run["oracle_sql"][k], run))
     try:
         con = tuned(duckdb.connect())
-        corpus = check_corpus(con, base_dir, soak_dir)
-        committed = json.load(open(f"{out_dir}/oracle_sql.json"))
-        equiv = check_equivalence(committed, soak_oracles(committed))
-        # oracle views read the SOAK corpus -- both engines see the same
+        corpus = check_corpus(con, run)
+        equiv = check_equivalence(run, oracles)
+        # the oracles read the SOAK corpus -- both engines see the same
         # files
-        for t in TABLES:
+        for t in run["tables"]:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"'{soak_dir}/{t}.parquet/*.parquet'")
-        print("building shared soak_pairs table (posting-join count)...",
-              flush=True)
-        try:
-            prepare_shared(con)
-        except Exception as e:
-            print(f"shared-pairs build FAILED: {e} -- dependent keys will "
-                  f"record per-key failures", flush=True)
-        queries = check_queries(con, out_dir)
-        timings = {}
-        tpath = f"{out_dir}/soak_timings.json"
-        if os.path.exists(tpath):
-            timings = json.load(open(tpath))
-        doc = {"scale": "sf0.1 x 10 folds (~SF1)", "base_dir": base_dir,
-               "corpus": corpus, "oracle_equivalence": equiv,
-               "queries": queries, "timings": timings}
+                        f"'{run['soak_dir']}/{t}.parquet/*.parquet'")
+        if any("soak_pairs" in sql for _, sql in oracles.values()):
+            print("building the shared soak_pairs table...", flush=True)
+            try:
+                prepare_shared(con)
+            except Exception as e:
+                print(f"soak_pairs build FAILED: {e} -- its keys record "
+                      f"per-key failures", flush=True)
+        queries = {k: check_key(con, k, m, sql, run, out_dir)
+                   for k, (m, sql) in sorted(oracles.items())}
+        part = ("" if set(run["tables"]) == set(TABLES)
+                else " " + "+".join(run["tables"]))
+        doc = {"scale": f"{os.path.basename(run['base_dir'])}{part} x "
+                        f"{run['folds']} folds ({run['tier']})",
+               "base_dir": run["base_dir"], "corpus": corpus,
+               "oracle_equivalence": equiv, "queries": queries,
+               "timings": run["timings"],
+               "pruned_fetches": run["pruned_fetches"]}
         doc["fail_count"], doc["env_fail_count"] = fail_counts(doc)
         with open(artifact, "w") as f:
             json.dump(doc, f, indent=1, sort_keys=True)
-        print(f"== soak: {doc['fail_count']} engine failures, "
-              f"{doc['env_fail_count']} oracle-env failures -> {artifact}")
-        # An UNRECOVERED environment failure is loud (exit 2), not a
-        # clean run (VERDICT r13 #7): the artifact still lands so the
-        # recovery scripts (e.g. soak_graph_by_fold.py) can patch the
-        # env-failed keys — after which the patched artifact carries
-        # hash_match=True entries with the original failure preserved
-        # under `recovered_from`, and re-running this gate exits 0.
+        failed = [k for k, v in queries.items() if v["status"] != "pass"]
+        print(f"== soak {run['tier']}: {len(queries)} keys, "
+              f"{doc['fail_count']} engine failures, {doc['env_fail_count']} "
+              f"oracle-env failures -> {artifact}"
+              + (f"\n== failed keys: {' '.join(failed)}" if failed else ""))
         sys.exit(1 if doc["fail_count"]
                  else (2 if doc["env_fail_count"] else 0))
     finally:
@@ -547,5 +743,3 @@ def main():
 
 if __name__ == "__main__":
     main()
-
-

@@ -41,10 +41,11 @@ import org.apache.spark.sql.functions._
   *                 (pairwise cos ≥ 0.9), and any near-dup pass over
   *                 them is Θ((n·folds)²) by construction of the
   *                 corpus, not by any property of the engine (the
-  *                 same reason Soak100 excludes the pair-generating
-  *                 document keys). Bounding the alphabet keeps each
-  *                 base's copies near THAT base — constant near-dup
-  *                 density per vector at every fold count — and folds
+  *                 same reason the soak's sf10 tier leaves out the
+  *                 pair-generating document keys). Bounding the
+  *                 alphabet keeps each base's copies near THAT base —
+  *                 constant near-dup density per vector at every fold
+  *                 count — and folds
   *                 k, k+10 of one base are exact duplicates, the shape
   *                 a dedup gate must also survive. At folds ≤ 10 the
   *                 rule is bit-identical to the pre-r16 `k · 2⁻⁷`
@@ -60,8 +61,8 @@ import org.apache.spark.sql.functions._
   *     scale)
   *
   * The same rule is restated as DuckDB SQL in `scripts/soak_check.py`,
-  * which EXCEPT-compares every amplified table against the
-  * restatement — the `_derive_partsupp` two-statements-one-text
+  * which EXCEPT-compares every table a [[graft.tools.Soak]] run
+  * amplified against the restatement at the run's fold count — the `_derive_partsupp` two-statements-one-text
   * discipline applied to a whole corpus. Amplified keys stay well
   * under 2³¹ (max base key ~600k, max shift 9·10⁷), so downstream
   * integer arithmetic keeps its headroom arguments.
@@ -139,7 +140,7 @@ object ScaleFold {
       folds: Int = 10,
       tables: Seq[String] = shifted.keys.toSeq.sorted): Unit = {
     // The marker records WHAT was amplified (fold count + table set),
-    // not just that something was: a documents-only Soak100 run into a
+    // not just that something was: a documents-only sf10 soak run into a
     // dir later reused for a wider soak must re-amplify the missing
     // tables instead of silently skipping them (ADVICE r13). Tables
     // already covered at the same fold count are not rewritten; a

@@ -46,9 +46,9 @@ object Profile extends AdaptiveSparkPlanHelper {
     } finally { w.close(); spark.stop() }
   }
 
-  private val json = JsonMapper.builder().addModule(DefaultScalaModule).build()
+  private[tools] val json = JsonMapper.builder().addModule(DefaultScalaModule).build()
   private val ids = "#\\d+|plan_id=\\d+|id=\\d+".r
-  private def round(v: Double): Double = math.rint(v * 1e4) / 1e4
+  private[tools] def round(v: Double): Double = math.rint(v * 1e4) / 1e4
 
   /** `key`'s record; its plan goes to `planDir/<key>.plan.txt`. Never
     * throws: a failure is the record's `error`. The listeners live for
@@ -88,7 +88,7 @@ object Profile extends AdaptiveSparkPlanHelper {
     } finally { r.detach(); dropBlocks(spark) }
   }
 
-  private def dropBlocks(spark: SparkSession): Unit = {
+  private[tools] def dropBlocks(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     spark.catalog.clearCache()
   }

@@ -1,181 +1,187 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.io.File
 
-/** 10× scale soak: amplify sf0.1 to an ~SF1 corpus with the ONE stated
-  * [[graft.ops.ScaleFold]] rule, then run the most expensive registry
-  * keys over it — result parquet + oracle SQL for the DuckDB compare
-  * (`scripts/soak_check.py`), plus first/warm timings per key.
+import scala.collection.immutable.SeqMap
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
+
+import graft.SparkEntry
+import graft.streaming.GateStores
+
+/** The scale soak:
+  * `runMain graft.tools.Soak <tier> [baseDir] [soakDir] [outDir] [key…]`
+  * amplifies the tier's tables of `baseDir` into `soakDir` with the one
+  * [[graft.ops.ScaleFold]] rule, runs the tier's keys (or the listed
+  * ones) over it on [[graft.Graft.session]], writes each key's result
+  * parquet to `outDir/<key>` and one run record to
+  * `outDir/soak_run.json`: tier, folds, tables, keys, paths, the
+  * committed oracle texts, timings and the run's candidates-pruned
+  * store fetches. `scripts/soak_check.py <outDir> <artifact>` then
+  * checks every key of the record against DuckDB at the amplified
+  * scale, so a constant that only looks safe at the test scale (a
+  * bucket cap, a broadcast threshold, a salting fan-out) fails as a
+  * hash mismatch.
   *
-  * This is the first test that can catch a constant that only looks
-  * safe at sf0.1: every key here is hash-compared against the oracle
-  * AT THE AMPLIFIED SCALE, so a bucket cap, broadcast threshold, or
-  * salting fan-out that silently drops or duplicates rows at 10× is a
-  * hash mismatch, not a judge's suspicion.
+  * Timings: amplification, each durable derivation (so per-key readings
+  * are steady-state, as in Bench), each key's first run (`count()`) and
+  * warm run plus write, and a `q_filter_eq` calibration probe over the
+  * base dir at each phase boundary (quiet floor 0.09 s), so a slow
+  * reading on a loaded host is attributable without a re-run.
   *
-  * Usage: runMain graft.tools.Soak [baseDir] [soakDir] [outDir]
+  * `SPARK_GRAFT_PRUNE_BYTES` overrides the gates' store-fetch cutover
+  * ([[GateStores.PruneStoreBytes]]); 0 forces the candidates-pruned
+  * fetch on every batch. Gate decisions are branch-invariant
+  * (StreamingSpec), so the hashes do not move.
   */
 object Soak {
-  /** The soak set: the expensive tail of the registry (every key with a
-    * fresh-session reading ≳1.5 s at sf0.1) — graph analytics over the
-    * 10×-node co-purchase graph, the dedup/near-dup pipeline over 10×
-    * documents whose folds are deliberate near-duplicates, the
-    * partsupp-derived TPC-H shapes, the stateful streaming as-of, and
-    * the heavy stats keys.
+
+  /** One soak scale: its fold count, the tables it amplifies, the keys
+    * it runs, and whether the durable derivations are timed first.
     */
-  val keys: Seq[String] = Seq(
-    // graph: 10 disjoint copies of the part co-purchase graph
-    "q_triangles", "q_pagerank", "q_ppr", "q_hits", "q_label_prop",
-    "q_kcore", "q_graph_bfs", "q_clustering_coeff", "q_top_eigenvector",
-    "q_adamic_adar",
-    // dedup / similarity: folds are near-dups by construction.
-    // q_dedup_eval is deliberately NOT soaked: it is the one key whose
-    // CONTRACT is quadratic (blocking-quality eval scores candidates
-    // against exact all-pairs truth — its own scaladoc pins it to
-    // corpus samples, not production paths); at ~SF1 the fold-amplified
-    // prefix join ballooned past 90 GB in r11's first soak run. The
-    // production dedup paths it evaluates are all soaked below.
-    "q_dedup_exact", "q_dedup_minhash", "q_dedup_ngram",
-    "q_entity_clusters",
-    // similarity tier over the 10× embeddings corpus (r12: the fold
-    // rule now perturbs vectors, so fold copies are embedding
-    // near-dups — SRP blocking, ANN probe/re-rank, and top-k
-    // tie-breaks all soak against a 20,000-vector corpus with the
-    // candidate explosion a replicated corpus really produces)
-    "q_dedup_embedding", "q_cosine_topk", "q_ann_ivf", "q_ann_lsh",
-    "q_ann_pq", "q_ann_ivfpq", "q_ann_ivfpq_read", "q_ivfpq_cell_stats",
-    "q_ann_ivfpq_delete", "q_ann_ivfpq_delete_stats",
-    "q_ann_ivfpq_retrain",
-    "q_ann_ivfpq_append", "q_ann_ivfpq_shard_merge",
-    "q_stream_ann_ingest", "q_stream_ann_delete", "q_stream_ann_query",
-    "q_stream_ann_recall",
-    "q_ann_ivf_incremental", "q_ann_recall_eval", "q_stream_emb_gate",
-    // text / stats heavies
-    "q_tfidf", "q_cluster_topics", "q_ks_test", "q_weighted_median",
-    "q_theil_sen", "q_assoc_rules",
-    // SQL surface: the partsupp-derived and heavy-join TPC-H shapes
-    "q_sql_tpch_q9", "q_sql_tpch_q18", "q_sql_tpch_q21",
-    // multimodal near-dup banding at 10× images
-    "q_multimodal_phash_near",
-    // stateful streaming replay over 10× events
-    "q_stream_asof_wm",
-    // streaming ingestion gate over 10× documents: the persistent band
-    // index accumulates 10× state and every batch's probe join runs at
-    // 10× — the check's oracle reuses the shared soak_pairs table
-    "q_stream_ingest_gate")
+  final case class Tier(name: String, folds: Int, tables: Seq[String],
+      keys: Seq[String], derive: Boolean)
+
+  /** ~SF1: 10 folds of every table (over sf0.1, exactly TPC-H SF1
+    * proportions). The keys are the expensive tail of the registry.
+    * `q_dedup_eval` is left out: its contract is quadratic (it scores
+    * blocking against exact all-pairs truth, on corpus samples), and at
+    * ~SF1 its fold-amplified prefix join passed 90 GB. The production
+    * dedup paths it evaluates are all here.
+    */
+  val sf1: Tier = Tier("sf1", 10,
+    Seq("customer", "documents", "embeddings", "events", "lineitem",
+      "nation", "orders", "part", "region", "supplier"),
+    Seq(
+      // graph: 10 disjoint copies of the part co-purchase graph
+      "q_triangles", "q_pagerank", "q_ppr", "q_hits", "q_label_prop",
+      "q_kcore", "q_graph_bfs", "q_clustering_coeff", "q_top_eigenvector",
+      "q_adamic_adar",
+      // dedup: fold copies are near-duplicate documents
+      "q_dedup_exact", "q_dedup_minhash", "q_dedup_ngram",
+      "q_entity_clusters",
+      // similarity over 10x embeddings, whose fold copies are vector
+      // near-duplicates: blocking, probe/re-rank and top-k tie-breaks
+      // meet the candidate explosion a replicated corpus produces
+      "q_dedup_embedding", "q_cosine_topk", "q_ann_ivf", "q_ann_lsh",
+      "q_ann_pq", "q_ann_ivfpq", "q_ann_ivfpq_read", "q_ivfpq_cell_stats",
+      "q_ann_ivfpq_delete", "q_ann_ivfpq_delete_stats",
+      "q_ann_ivfpq_retrain",
+      "q_ann_ivfpq_append", "q_ann_ivfpq_shard_merge",
+      "q_stream_ann_ingest", "q_stream_ann_delete", "q_stream_ann_query",
+      "q_stream_ann_recall",
+      "q_ann_ivf_incremental", "q_ann_recall_eval", "q_stream_emb_gate",
+      // text / stats
+      "q_tfidf", "q_cluster_topics", "q_ks_test", "q_weighted_median",
+      "q_theil_sen", "q_assoc_rules",
+      // the partsupp-derived and heavy-join TPC-H shapes
+      "q_sql_tpch_q9", "q_sql_tpch_q18", "q_sql_tpch_q21",
+      "q_multimodal_phash_near",
+      // streaming: the as-of replay over 10x events, and the ingest
+      // gate whose band index accumulates 10x state
+      "q_stream_asof_wm", "q_stream_ingest_gate"),
+    derive = true)
+
+  /** ~SF10: 100 folds of documents, events and embeddings, and the keys
+    * whose cost and output are linear in them, so 100x flushes constants
+    * (hash widths, buffers, per-partition state) that 10x cannot.
+    * Events keys stay fold-local (the fold shifts `user_id`). The
+    * pair-generating document keys (minhash, ngram, embedding) are left
+    * out: every fold is a near-duplicate of fold 0, so their true pair
+    * set grows as folds², which measures the corpus, not the engine.
+    * The two gates are pair-generating on purpose: at 100 folds their
+    * stores cross the candidates-pruned fetch cutover; the ANN gate
+    * runs its wide-band parameterization (see its scaladoc).
+    */
+  val sf10: Tier = Tier("sf10", 100, Seq("documents", "events", "embeddings"),
+    Seq(
+      "q_dedup_exact", "q_dedup_prefix",
+      "q_text_stats", "q_token_count", "q_fingerprint",
+      "q_fingerprint_rolling", "q_lang_id", "q_quality_score", "q_lang_agg",
+      "q_sessionize", "q_interval_union", "q_markov_transitions",
+      "q_stream_ingest_gate", "q_stream_ann_ingest_wide"),
+    derive = false)
+
+  val tiers: SeqMap[String, Tier] = SeqMap(sf1.name -> sf1, sf10.name -> sf10)
 
   def main(args: Array[String]): Unit = {
-    val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val soakDir = if (args.length > 1) args(1) else "target/soak_sf1"
-    val outDir = if (args.length > 2) args(2) else "target/soak_out"
-    val only = args.drop(3).toSet
-    // SPARK_GRAFT_PRUNE_BYTES=0 forces the gates' candidates-pruned
-    // store fetch at soak scale (the 100 TB branch; decisions are
-    // branch-invariant, so the hash gates are unchanged — StreamingSpec
-    // pins that law at fixture scale)
-    sys.env.get("SPARK_GRAFT_PRUNE_BYTES").foreach { v =>
-      graft.streaming.GateStores.PruneStoreBytes = v.toLong
-      println(s"[soak] PruneStoreBytes forced to $v")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val tier = args.headOption.flatMap(tiers.get).getOrElse(throw new IllegalArgumentException(
+      s"usage: Soak <${tiers.keys.mkString("|")}> [baseDir] [soakDir] [outDir] [key…]"))
+    sys.env.get("SPARK_GRAFT_PRUNE_BYTES").foreach(v => GateStores.PruneStoreBytes = v.toLong)
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    try run(spark, tier, args.lift(1).getOrElse("/root/testdata/sf0.1"),
+      args.lift(2).getOrElse(s"target/soak_${tier.name}"),
+      args.lift(3).getOrElse(s"target/soak_${tier.name}_out"), args.drop(4).toSeq)
+    finally spark.stop()
+  }
 
-    def timed[A](body: => A): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok = try { body; true }
-        catch { case e: Throwable =>
-          System.err.println(s"[soak] FAILED: ${e.getMessage}"); false }
-      ((System.nanoTime() - t0) / 1e9, ok)
+  /** Runs `tier` (only `keys`, if given) and returns the run record it
+    * writes. Every tier key and every listed key must have a registry
+    * entry and an oracle; that is checked before anything is written.
+    */
+  def run(spark: SparkSession, tier: Tier, baseDir: String, soakDir: String,
+      outDir: String, keys: Seq[String] = Nil): SeqMap[String, Any] = {
+    val unknown = (tier.keys ++ keys).distinct.filterNot(k =>
+      SparkEntry.queries.contains(k) && SparkEntry.oracleSql.contains(k))
+    require(unknown.isEmpty,
+      s"soak keys without a registry entry and an oracle: ${unknown.mkString(" ")}")
+    val todo = if (keys.isEmpty) tier.keys else keys
+    new File(outDir).mkdirs()
+    def clock(body: => Unit): Double = {
+      val t0 = System.nanoTime(); body; Profile.round((System.nanoTime() - t0) / 1e9)
     }
-    def dropBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-    }
-
-    val (ampSec, _) = timed {
-      graft.ops.ScaleFold.amplify(spark, baseDir, soakDir, folds = 10)
-    }
-    println(f"[soak] amplify: $ampSec%.1f s")
-
-    // Load calibration probes (r16, VERDICT r15 #7): q_filter_eq over
-    // the BASE dir (the bench calib keys' 0.09 s quiet floor) at each
-    // phase boundary, so a soak-target miss on this host's documented
-    // ~2x slow windows is attributable to load without a re-run.
-    val calibProbes =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    // a failed step reads -1 s and the run goes on; a key whose write
+    // failed has no output, which the checker counts as an engine failure
+    def timed(what: String)(body: => Unit): Double =
+      try clock(body) catch { case NonFatal(e) =>
+        System.err.println(s"[soak] $what FAILED: $e"); -1.0
+      } finally Profile.dropBlocks(spark)
+    val probes = Seq.newBuilder[SeqMap[String, Any]]
     def probe(tag: String): Unit = {
-      val fn = graft.SparkEntry.queries("q_filter_eq")
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, baseDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      calibProbes += ((tag, ts(1)))
-      println(f"[soak] calib probe $tag: ${ts(1)}%.3f s (quiet floor 0.09)")
+      val fn = SparkEntry.queries("q_filter_eq")
+      val sec = Seq.fill(3)(clock(fn(spark, baseDir).count())).sorted.apply(1)
+      println(f"[soak] calib probe $tag: $sec%.3f s")
+      probes += SeqMap("tag" -> tag, "sec" -> sec)
     }
+
+    val amplify = clock(graft.ops.ScaleFold.amplify(spark, baseDir, soakDir,
+      tier.folds, tier.tables))
+    println(f"[soak] amplify ${tier.tables.mkString("+")} x${tier.folds}: $amplify%.1f s")
+    val pruneBefore = GateStores.prunedFetches.get()
     probe("start")
-
-    // shared durable tables first, timed, so per-key readings report
-    // steady-state cost (the Bench discipline)
-    val derives = graft.SparkEntry.derives.toSeq.map { case (name, fn) =>
-      val (sec, ok) = timed(fn(spark, soakDir))
-      dropBlocks()
-      println(f"[soak] $name%-28s ${if (ok) f"$sec%8.1f s" else "FAILED"}")
-      (name, if (ok) sec else -1.0)
-    }
-
-    probe("post-derive")
-    val results = keys.filter(k => only.isEmpty || only(k)).map { name =>
-      val fn = graft.SparkEntry.queries(name)
-      val (t1, ok1) = timed(fn(spark, soakDir).count())
-      dropBlocks()
-      val (t2, ok2) = timed {
-        fn(spark, soakDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+    val derives = if (!tier.derive) Nil else {
+      val ts = SparkEntry.derives.toSeq.map { case (name, fn) =>
+        name -> timed(name)(fn(spark, soakDir))
       }
-      dropBlocks()
-      val ok = ok1 && ok2
-      println(f"[soak] $name%-28s ${if (ok) f"$t1%8.1f s  warm+write $t2%8.1f s" else "FAILED"}")
-      (name, if (ok1) t1 else -1.0, if (ok2) t2 else -1.0)
+      probe("post-derive")
+      ts
     }
-
-    def f(d: Double): String =
-      BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    } + "\""
-    val oracle = graft.SparkEntry.oracleSql
-      .filter { case (k, _) => keys.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracle)
+    val queries = todo.map { k =>
+      val fn = SparkEntry.queries(k)
+      // no earlier run's output may stand in for a failed write
+      org.apache.commons.io.FileUtils.deleteQuietly(new File(outDir, k))
+      val first = timed(k)(fn(spark, soakDir).count())
+      val warm = timed(k)(fn(spark, soakDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$k"))
+      println(f"[soak] $k%-28s first $first%8.1f s  warm+write $warm%8.1f s")
+      k -> SeqMap("first" -> first, "warm_write" -> warm)
+    }
     probe("end")
-    val calibJson = calibProbes.map { case (tag, sec) =>
-      s"""{"tag":${q(tag)},"sec":${f(sec)}}"""
-    }.mkString("[", ",", "]")
-    val timings =
-      s"""{"amplify_sec":${f(ampSec)},"calib_probes":$calibJson,"calib_floor":0.09,"derive":${
-        derives.map { case (k, t) => s"${q(k)}:${f(t)}" }.mkString("{", ",", "}")
-      },"queries":${
-        results.map { case (k, t1, t2) =>
-          s"${q(k)}:{" + "\"first\":" + f(t1) + ",\"warm_write\":" + f(t2) + "}"
-        }.mkString("{", ",", "}")
-      }}"""
-    Files.writeString(Paths.get(s"$outDir/soak_timings.json"), timings)
-    println(s"[soak] timings -> $outDir/soak_timings.json")
-    spark.stop()
+    val record = SeqMap(
+      "tier" -> tier.name, "folds" -> tier.folds, "tables" -> tier.tables,
+      "keys" -> todo,
+      "base_dir" -> new File(baseDir).getAbsolutePath,
+      "soak_dir" -> new File(soakDir).getAbsolutePath,
+      "oracle_sql" -> SeqMap.from(todo.map(k => k -> SparkEntry.oracleSql(k))),
+      "timings" -> SeqMap("amplify_sec" -> amplify, "calib_floor" -> 0.09,
+        "calib_probes" -> probes.result(), "derive" -> SeqMap.from(derives),
+        "queries" -> SeqMap.from(queries)),
+      "pruned_fetches" -> (GateStores.prunedFetches.get() - pruneBefore))
+    java.nio.file.Files.writeString(new File(outDir, "soak_run.json").toPath,
+      Profile.json.writerWithDefaultPrettyPrinter().writeValueAsString(record))
+    println(s"[soak] record -> $outDir/soak_run.json")
+    record
   }
 }

@@ -150,6 +150,59 @@ class PropertySpec extends AnyFunSuite {
       "fold 10 must be the exact duplicate of fold 0 (wrapped alphabet)")
   }
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  test("Soak tiers keep the r16 soak key sets; an unknown key fails before anything is written") {
+    import scala.jdk.CollectionConverters._
+    import graft.tools.Soak
+    def soaked(artifact: String): Set[String] =
+      json.readTree(new java.io.File(artifact)).get("queries").fieldNames().asScala.toSet
+    assert(Soak.sf1.keys.size == 46 && Soak.sf1.keys.toSet == soaked("SOAK_r16.json"))
+    assert(Soak.sf10.keys.size == 14 && Soak.sf10.keys.toSet == soaked("SOAK_SF10_r16.json"))
+    assert(Soak.tiers.values.map(t => t.name -> t.folds).toSeq == Seq("sf1" -> 10, "sf10" -> 100))
+    val tmp = java.nio.file.Files.createTempDirectory("soak_unknown").toFile
+    try {
+      // a requested key, or a tier key renamed away from the registry
+      Seq(Soak.sf1 -> Seq("q_dedup_exact", "q_no_such_key"),
+        Soak.sf10.copy(keys = Soak.sf10.keys :+ "q_no_such_key") -> Nil).foreach {
+        case (tier, keys) =>
+          val e = intercept[IllegalArgumentException](
+            Soak.run(spark, tier, sf, s"$tmp/corpus", s"$tmp/out", keys))
+          assert(e.getMessage.contains("q_no_such_key"), e.getMessage)
+          assert(tmp.list().isEmpty, "nothing may be written before the key check")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
+  test("Soak sf1 on two keys writes their outputs and one run record") {
+    import scala.jdk.CollectionConverters._
+    import graft.tools.Soak
+    val keys = Seq("q_dedup_exact", "q_tfidf")
+    val tmp = java.nio.file.Files.createTempDirectory("soak_smoke").toFile
+    try {
+      Soak.run(spark, Soak.sf1, sf, s"$tmp/corpus", s"$tmp/out", keys)
+      keys.foreach(k => assert(new java.io.File(s"$tmp/out/$k/_SUCCESS").exists, k))
+      val rec = json.readTree(new java.io.File(s"$tmp/out/soak_run.json"))
+      def strings(f: String) = rec.get(f).elements().asScala.map(_.asText).toSeq
+      assert(rec.get("tier").asText == "sf1" && rec.get("folds").asInt == 10)
+      assert(strings("tables") == Soak.sf1.tables && strings("keys") == keys)
+      assert(rec.get("base_dir").asText == new java.io.File(sf).getAbsolutePath)
+      val oracles = rec.get("oracle_sql")
+      assert(oracles.fieldNames().asScala.toSeq == keys)
+      keys.foreach { k =>
+        assert(oracles.get(k).asText == SparkEntry.oracleSql(k), k)
+        val t = rec.get("timings").get("queries").get(k)
+        assert(t.get("first").asDouble >= 0 && t.get("warm_write").asDouble >= 0, k)
+      }
+      assert(rec.get("timings").get("derive").size == SparkEntry.derives.size)
+      assert(rec.get("timings").get("calib_probes").size == 3)
+      assert(rec.get("pruned_fetches").asLong == 0)
+      // the amplified corpus is the tier's: 10 folds of every table
+      assert(spark.read.parquet(s"$tmp/corpus/documents.parquet").count() ==
+        10 * graft.model.Tables.documents(spark, sf).count())
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
   test("every Bench headline/extended key exists in the registry") {
     // Bench silently filters unknown keys (queries.contains), so a
     // typo'd entry would vanish from the artifact instead of failing —
