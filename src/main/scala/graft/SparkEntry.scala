@@ -5,9 +5,10 @@ import scala.collection.immutable.ListMap
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` is the union of per-family registries (graft.queries.*); each
-  * key pairs with DuckDB-runnable ANSI SQL in `oracleSql` (keys without SQL
-  * get the driver's weaker rows-only check).
+  * `queries` is the disjoint union of per-family registries
+  * (graft.queries.*), built once; each key pairs with DuckDB-runnable
+  * ANSI SQL in `oracleSql` (keys without SQL get the driver's weaker
+  * rows-only check).
   */
 object SparkEntry {
 
@@ -30,20 +31,15 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.RefOps.registry ++
-      graft.queries.Relational.registry ++
-      graft.queries.LlmOps.registry ++
-      graft.queries.StreamShapes.registry ++
-      graft.queries.ExtOps.registry ++
-      graft.queries.CurateOps.registry ++
-      graft.queries.InsightOps.registry ++
-      graft.queries.StatOps.registry ++
-      graft.queries.SeriesOps.registry ++
-      graft.queries.FeatureOps.registry ++
-      graft.queries.EngageOps.registry ++
-      graft.queries.GraphOps.registry ++
-      graft.queries.SqlSurface.registry
+  val queries: Map[String, (SparkSession, String) => DataFrame] = {
+    import graft.queries._
+    disjointUnion("query", Seq(RefOps.registry, Relational.registry,
+      LlmDedupOps.registry, LlmSimOps.registry, LlmModelOps.registry,
+      LlmTextOps.registry, LlmCurationOps.registry, StreamShapes.registry,
+      ExtOps.registry, CurateOps.registry, InsightOps.registry,
+      StatOps.registry, SeriesOps.registry, FeatureOps.registry,
+      EngageOps.registry, GraphOps.registry, SqlSurface.registry))
+  }
 
   /** The durable-table materializers by `_derive_*` name, in dependency
     * order. Each derives its table once per JVM
@@ -54,25 +50,32 @@ object SparkEntry {
   val derives: ListMap[String, (SparkSession, String) => Long] = ListMap(
     "_derive_copurchase" -> graft.queries.GraphOps.materializeEdges _,
     "_derive_oriented_edges" -> graft.queries.GraphOps.materializeOriented _,
-    "_derive_dedup_clusters" -> graft.queries.LlmOps.materializeClusters _,
-    "_derive_match_pairs" -> graft.queries.LlmOps.materializeMatchPairs _,
-    "_derive_ann_index" -> graft.queries.LlmOps.materializeAnnIndex _,
+    "_derive_dedup_clusters" -> graft.queries.LlmDedupOps.materializeClusters _,
+    "_derive_match_pairs" -> graft.queries.LlmSimOps.materializeMatchPairs _,
+    "_derive_ann_index" -> graft.queries.LlmSimOps.materializeAnnIndex _,
     "_derive_partsupp" -> graft.queries.SqlSurface.materializePartsupp _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.RefOps.oracle ++
-      graft.queries.Relational.oracle ++
-      graft.queries.LlmOps.oracle ++
-      graft.queries.StreamShapes.oracle ++
-      graft.queries.ExtOps.oracle ++
-      graft.queries.CurateOps.oracle ++
-      graft.queries.InsightOps.oracle ++
-      graft.queries.StatOps.oracle ++
-      graft.queries.SeriesOps.oracle ++
-      graft.queries.FeatureOps.oracle ++
-      graft.queries.EngageOps.oracle ++
-      graft.queries.GraphOps.oracle ++
-      graft.queries.SqlSurface.oracle
+  val oracleSql: Map[String, String] = {
+    import graft.queries._
+    disjointUnion("oracle", Seq(RefOps.oracle, Relational.oracle,
+      LlmDedupOps.oracle, LlmSimOps.oracle, LlmModelOps.oracle,
+      LlmTextOps.oracle, LlmCurationOps.oracle, StreamShapes.oracle,
+      ExtOps.oracle, CurateOps.oracle, InsightOps.oracle, StatOps.oracle,
+      SeriesOps.oracle, FeatureOps.oracle, EngageOps.oracle,
+      GraphOps.oracle, SqlSurface.oracle))
+  }
+
+  /** The union of per-family maps; a key defined by two families fails
+    * here instead of one silently shadowing the other. */
+  private[graft] def disjointUnion[V](what: String,
+      families: Seq[Map[String, V]]): Map[String, V] = {
+    val dup = families.flatMap(_.keys).groupBy(identity).collect {
+      case (k, ks) if ks.size > 1 => k
+    }
+    require(dup.isEmpty,
+      s"$what keys defined by two families: ${dup.toSeq.sorted.mkString(", ")}")
+    families.reduce(_ ++ _)
+  }
 }

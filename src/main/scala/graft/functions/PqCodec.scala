@@ -27,42 +27,45 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * wins: ids iterate ascending with a strict `<`, mirroring
   * `min_by(struct(term, id))`), and long addition is associative and
   * commutative even on overflow — so results are bit-identical under
-  * the driver's hash gates; the dot accumulates only positions present
-  * in BOTH the vector and the centroid, mirroring the equi-join on
-  * `pos`.
+  * the driver's hash gates. Fixed dims: every centroid has the length
+  * its constructor names (the coarse dims, or `dsub`), and every kernel
+  * rejects a vector of any other length, so each position pairs with
+  * exactly one centroid coordinate, like the equi-join on `pos`.
   *
   * Operator code builds these as Columns through the typed builders
-  * of [[graft.functions]] (`cellAsg`, `cellResidual`, `pqCodes`,
-  * `pqDist2`); the geometry stays typed `Array[Long]` inside the node
-  * (cells·dims + m·ks·dsub longs for the standard dims=64/cells=16/
-  * m=8/ks=16 geometry) and has no SQL name.
+  * of [[graft.functions]] (`cellAsg`, `cellRanks`, `cellResidual`,
+  * `pqCodes`, `pqDist2`); the geometry stays typed `Array[Long]` inside
+  * the node (cells·dims + m·ks·dsub longs for the standard
+  * dims=64/cells=16/m=8/ks=16 geometry) and has no SQL name.
   */
 object PqCodec {
 
   /** Shared exact-integer argmin: index into `cents`/`cn2` (iterated
     * ascending, strict `<` — ties keep the earliest = lowest id) of
-    * `cn2(i) − 2·dot(xs[off..], cents(i))`, dots over positions present
-    * in both sides.
+    * `cn2(i) − 2·dot(xs[off..], cents(i))`; the callers' length checks
+    * keep `off + cents(i).length` within `xs`.
     */
   private[functions] def argmin(xs: ArrayData, off: Int,
                                 cents: Array[Array[Long]],
                                 cn2: Array[Long]): Int = {
-    val avail = xs.numElements() - off
     var best = 0
     var bestTerm = 0L
-    var found = false
     var i = 0
     while (i < cents.length) {
-      val c = cents(i)
-      val n = if (c.length < avail) c.length else if (avail > 0) avail else 0
-      var dot = 0L
-      var p = 0
-      while (p < n) { dot += xs.getLong(off + p) * c(p); p += 1 }
-      val term = cn2(i) - 2L * dot
-      if (!found || term < bestTerm) { found = true; bestTerm = term; best = i }
+      val t = term(xs, off, cents(i), cn2(i))
+      if (i == 0 || t < bestTerm) { bestTerm = t; best = i }
       i += 1
     }
     best
+  }
+
+  /** The exact lattice term `cn2 − 2·dot(xs[off..], c)`. */
+  private[functions] def term(xs: ArrayData, off: Int, c: Array[Long],
+                              cn2: Long): Long = {
+    var dot = 0L
+    var p = 0
+    while (p < c.length) { dot += xs.getLong(off + p) * c(p); p += 1 }
+    cn2 - 2L * dot
   }
 
   private[functions] def norms2(cents: Array[Array[Long]]): Array[Long] =
@@ -123,17 +126,65 @@ case class CellArgmin(child: Expression, ids: Array[Long],
   override def prettyName: String = "pq_cell_asg"
 }
 
+/** Probe order of the coarse cells: every id of `ids` ordered by the
+  * exact lattice term `|c|² − 2·x·c`, ties → lowest id — [[CellArgmin]]'s
+  * rule extended to a full ranking, so element 0 is the assigned cell
+  * and the first `nprobe` elements are the cells a query probes.
+  */
+case class CellRanks(child: Expression, ids: Array[Long],
+                     cents: Array[Array[Long]])
+    extends UnaryExpression {
+  require(ids.length == cents.length && ids.nonEmpty,
+    s"ids (${ids.length}) and centroids (${cents.length}) must align")
+  require(cents.forall(_.length == cents(0).length),
+    "coarse centroids must share one length (the fixed-dims convention)")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"pq_cell_ranks expects ARRAY<BIGINT>, got ${t.sql}")
+  }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  @transient private lazy val cn2 = PqCodec.norms2(cents)
+
+  def ranks(xs: ArrayData): ArrayData = {
+    // fixed-dims contract (ADVICE r16) — see CellArgmin.assign
+    if (xs.numElements() != cents(0).length)
+      throw new IllegalArgumentException(
+        s"pq_cell_ranks: vector length ${xs.numElements()} != geometry " +
+          s"dims ${cents(0).length}")
+    val terms = cents.indices.map(i => PqCodec.term(xs, 0, cents(i), cn2(i)))
+    new GenericArrayData(
+      ids.indices.sortBy(i => (terms(i), ids(i))).map(ids(_)).toArray)
+  }
+
+  override def nullSafeEval(x: Any): Any = ranks(x.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("cellRanks", this)
+    defineCodeGen(ctx, ev, x => s"$ref.ranks($x)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): CellRanks =
+    copy(child = c)
+
+  override def prettyName: String = "pq_cell_ranks"
+}
+
 /** Residual against an assigned centroid: `xs − cents[cell]` per
   * position — the array-native form of the `(cell_id, pos)` equi-join
-  * with `xe − ce`. Positions past the centroid's length pass through
-  * unchanged (the join form never produces them; vectors and centroids
-  * share dims by construction).
+  * with `xe − ce`.
   */
 case class CellResidual(left: Expression, right: Expression,
                         ids: Array[Long], cents: Array[Array[Long]])
     extends BinaryExpression {
   require(ids.length == cents.length && ids.nonEmpty,
     s"ids (${ids.length}) and centroids (${cents.length}) must align")
+  require(cents.forall(_.length == cents(0).length),
+    "coarse centroids must share one length (the fixed-dims convention)")
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -146,6 +197,11 @@ case class CellResidual(left: Expression, right: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   def residual(xs: ArrayData, cell: Long): ArrayData = {
+    // fixed-dims contract (ADVICE r16) — see CellArgmin.assign
+    if (xs.numElements() != cents(0).length)
+      throw new IllegalArgumentException(
+        s"pq_residual: vector length ${xs.numElements()} != geometry " +
+          s"dims ${cents(0).length}")
     var idx = -1
     var i = 0
     while (idx < 0 && i < ids.length) {
@@ -159,7 +215,7 @@ case class CellResidual(left: Expression, right: Expression,
     val out = new Array[Long](n)
     var p = 0
     while (p < n) {
-      out(p) = xs.getLong(p) - (if (p < c.length) c(p) else 0L)
+      out(p) = xs.getLong(p) - c(p)
       p += 1
     }
     new GenericArrayData(out)
@@ -196,6 +252,8 @@ case class PqCodes(child: Expression, dsub: Int,
   require(subCids.indices.forall(s =>
     subCids(s).length == subCents(s).length && subCids(s).nonEmpty),
     "every subspace needs at least one surviving centroid")
+  require(subCents.forall(_.forall(_.length == dsub)),
+    s"every codebook centroid must have length dsub=$dsub")
   require(subCids.forall(cids =>
     (1 until cids.length).forall(i => cids(i - 1) < cids(i))),
     "per-sub cids must be strictly ascending (the tie rule)")
@@ -255,6 +313,8 @@ case class PqDist2(child: Expression, dsub: Int,
   require(subCids.indices.forall(s =>
     subCids(s).length == subCents(s).length && subCids(s).nonEmpty),
     "every subspace needs at least one surviving centroid")
+  require(subCents.forall(_.forall(_.length == dsub)),
+    s"every codebook centroid must have length dsub=$dsub")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -277,11 +337,9 @@ case class PqDist2(child: Expression, dsub: Int,
     while (s < m) {
       val off = s * dsub
       val c = subCents(s)(PqCodec.argmin(xs, off, subCents(s), cn2(s)))
-      val avail = xs.numElements() - off
-      val n = if (c.length < avail) c.length else if (avail > 0) avail else 0
       var d2 = 0L
       var p = 0
-      while (p < n) {
+      while (p < dsub) {
         val d = xs.getLong(off + p) - c(p)
         d2 += d * d
         p += 1

@@ -78,6 +78,10 @@ package object functions {
   def cellAsg(xs: Column, ids: Array[Long], cents: Array[Array[Long]]): Column =
     column(CellArgmin(expression(xs), ids, cents))
 
+  /** Coarse cell ids of each lattice vector in probe order ([[CellRanks]]). */
+  def cellRanks(xs: Column, ids: Array[Long], cents: Array[Array[Long]]): Column =
+    column(CellRanks(expression(xs), ids, cents))
+
   /** Residual of each vector against its assigned cell ([[CellResidual]]). */
   def cellResidual(xs: Column, cell: Column, ids: Array[Long],
                    cents: Array[Array[Long]]): Column =

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{cellAsg, cellResidual, dot, pqCodes, pqDist2, srpBands}
+import graft.functions.{cellAsg, cellRanks, cellResidual, dot, pqCodes, pqDist2,
+  srpBands}
 
 /** Embedding similarity search over `array<float>` columns.
   *
@@ -371,7 +372,7 @@ object Similarity {
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
     val dsub = dims / m
     // frozen geometry from the base build (a deployment reads these
-    // from its index file; recomputing is the ivfPqQuery discipline)
+    // from its index file; recomputing is the ivfPqSearch discipline)
     val (_, cb) = ivfPqBuild(base, key, vec, dims, cells, m, ks, refineIters)
     ivfPqEncode(newBatch, coarseFromBase(base, key, vec, dsub, cells), cb,
       key, vec, dsub)
@@ -503,26 +504,15 @@ object Similarity {
     */
   private def latticeVecs(df: DataFrame, keyAs: String,
                           vec: String): DataFrame =
-    df.select(col(keyAs), transform(asDouble(col(vec)),
-      x => round(x * MeanScale).cast("long")).as("xs"))
+    df.select(col(keyAs), lattice(col(vec)).as("xs"))
 
-  /** Exploded `(keyAs, sub, pos, xe)` lattice rows re-derived from
-    * [[latticeVecs]] output — identical content to [[pqLattice]] (the
-    * quantization commutes with the explode), generated map-side from
-    * the checkpointed vectors for the paths that stay row-form (norms,
-    * exact re-rank).
-    */
-  private def explodeLattice(vecs: DataFrame, keyAs: String,
-                             dsub: Int): DataFrame =
-    vecs.select(col(keyAs), posexplode(col("xs")).as(Seq("pos", "xe")))
-      .select(col(keyAs), expr(s"pos DIV $dsub").cast("int").as("sub"),
-        col("pos"), col("xe"))
+  private def lattice(vec: Column): Column =
+    transform(asDouble(vec), x => round(x * MeanScale).cast("long"))
 
   /** Collect a coarse codebook `(pos, cell_id, ce)` to driver arrays
     * (ids ascending, centroid per id indexed by pos) — `cells`·dims
     * longs, index METADATA by construction (the bounded-collect rule:
-    * parameter-sized like [[ivfPqProbeCells]]'s nprobe cells, never
-    * data-sized).
+    * parameter-sized, never data-sized).
     */
   private[graft] def collectCoarseGeo(cc: DataFrame, dims: Int)
       : (Array[Long], Array[Array[Long]]) = {
@@ -574,26 +564,6 @@ object Similarity {
       }
     }
     (subCids, subCents)
-  }
-
-  /** A coarse codebook `(pos, cell_id, ce)` DataFrame rebuilt locally
-    * from collected geometry arrays: a LocalTableScan, so every
-    * downstream broadcast build is metadata-cheap instead of
-    * re-running the corpus-scan + quantize subtree per consumer.
-    */
-  private def ccFromGeo(spark: org.apache.spark.sql.SparkSession,
-                        ids: Array[Long],
-                        cents: Array[Array[Long]]): DataFrame = {
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    for (i <- ids.indices; p <- cents(i).indices)
-      rows.add(org.apache.spark.sql.Row(p, ids(i), cents(i)(p)))
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pos",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("cell_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("ce",
-        org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
   /** The PQ codebook as the `(sub, cid, pos, ce)` DataFrame the query
@@ -679,16 +649,16 @@ object Similarity {
     (subCids, subCents)
   }
 
-  /** Shared PQ fit: lattice rows, trained per-subspace codebook, and
-    * the encoded corpus — see [[pqTopK]] for the full design argument.
-    * Returns (rows, cb, codes).
+  /** Shared PQ fit: trained per-subspace codebook and the encoded
+    * corpus — see [[pqTopK]] for the full design argument. Returns
+    * (cb, codes).
     *
     * Array-native (r16): the corpus checkpoints ONCE as `(n_id, xs)`
     * vectors (one row per vector, not dims); training runs through
     * [[pqTrainVec]] (seed collect + one tiny partial-aggregated update
     * per Lloyd round — the codebook is index metadata, the corpus is
-    * never exchanged); codes and the exploded rows the re-rank path
-    * reads are map-side generates off the checkpoint. Seeding note
+    * never exchanged); codes are a map-side generate off the
+    * checkpoint. Seeding note
     * (unchanged law): raw-vector fits seed from id 0; RESIDUAL fits
     * (IVFADC) must seed PAST the coarse centroids — ids < cells ARE
     * the centroids, their residuals are identically zero, and 16 zero
@@ -701,7 +671,7 @@ object Similarity {
     */
   private[graft] def pqFit(corpus: DataFrame, key: String, vec: String,
                            dims: Int, m: Int, ks: Int, refineIters: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = {
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
     val dsub = dims / m
     val vecs = latticeVecs(Par.fanOut(corpus.select(
@@ -711,8 +681,7 @@ object Similarity {
     val codes = vecs.select(col("n_id"),
       posexplode(pqCodes(col("xs"), dsub, subCids, subCents))
         .as(Seq("sub", "cid")))
-    (explodeLattice(vecs, "n_id", dsub),
-      cbFromGeo(corpus.sparkSession, dsub, subCids, subCents), codes)
+    (cbFromGeo(corpus.sparkSession, dsub, subCids, subCents), codes)
   }
 
   /** Per-cell quantization distortion of the trained PQ index: for each
@@ -750,121 +719,99 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, key: String, vec: String,
              k: Int, dims: Int, m: Int = 8, ks: Int = 16,
              refineIters: Int = 1, shortlist: Int = 50): DataFrame = {
-    val dsub = dims / m
-    val (rows, cb, codes) = pqFit(corpus, key, vec, dims, m, ks, refineIters)
-    val qrows = pqLattice(queries.select(col(key).cast("long").as("q_id"),
-      col(vec)), "q_id", vec, dsub)
-    val qn2 = qrows.groupBy("q_id").agg(sum(col("xe") * col("xe")).as("qn2"))
-    // the LUT is every (query, sub, cell) distance term — ks·m rows per
-    // query, the table an ADC scan reads instead of raw vectors
-    val lut = {
-      val cn = cb.groupBy("sub", "cid").agg(sum(col("ce") * col("ce")).as("cn2"))
-      qrows.join(broadcast(cb), Seq("sub", "pos"))
-        .groupBy(col("q_id"), col("sub"), col("cid"))
-        .agg(sum(col("xe") * col("ce")).as("dot"))
-        .join(broadcast(cn), Seq("sub", "cid"))
-        .select(col("q_id"), col("sub"), col("cid"),
-          (col("cn2") - col("dot") * 2L).as("term"))
-    }
-    // ADC: Σ_sub term + |q|² = the exact lattice distance to the
-    // RECONSTRUCTED (quantized) vector; headroom |xe| ≤ 2²⁵ ⇒ the sum
-    // stays under 2⁵⁷ for dims ≤ 512
-    val wAdc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adist").asc, col("n_id").asc)
-    val shortl = codes.join(broadcast(lut), Seq("sub", "cid"))
-      .filter(col("q_id") =!= col("n_id"))
-      .groupBy(col("q_id"), col("n_id"))
-      .agg(sum(col("term")).as("t"))
-      .join(broadcast(qn2), Seq("q_id"))
-      .select(col("q_id"), col("n_id"), (col("t") + col("qn2")).as("adist"))
-      .withColumn("srnk", row_number().over(wAdc))
-      .filter(col("srnk") <= shortlist)
-      .select(col("q_id"), col("n_id"))
-    // Exact re-rank of the ADC shortlist (the FAISS refine stage):
-    // quantized distances order a SHORTLIST reliably but not the final
-    // k on near-equidistant corpora, so the last step pays the exact
-    // lattice L2 on `shortlist` candidates per query only — the raw
-    // vectors are fetched for ~shortlist·q rows, never the corpus
-    exactRerankL2(shortl, rows, qrows, qn2, k)
-  }
-
-  /** Exact lattice-L2 re-rank of a (q_id, n_id) shortlist against the
-    * ORIGINAL lattice rows — the FAISS refine stage shared by [[pqTopK]]
-    * and [[ivfPqTopK]]. Raw vectors are fetched for shortlist·q rows
-    * only, never the corpus.
-    */
-  private def exactRerankL2(shortl: DataFrame, rows: DataFrame,
-                            qrows: DataFrame, qn2: DataFrame,
-                            k: Int): DataFrame = {
-    // prune to the shortlist's vectors FIRST: norms and dots are only
-    // ever joined for shortlisted n_ids, so at 100 TB this is a
-    // shortlist·q-row fetch, never a full-corpus pass per query batch
-    val pruned = rows.join(
-      shortl.select(col("n_id")).distinct(), Seq("n_id"))
-    val nn2 = pruned.groupBy("n_id").agg(sum(col("xe") * col("xe")).as("nn2"))
-    val pairDots = shortl
-      .join(pruned, Seq("n_id"))
-      .join(broadcast(qrows.select(col("q_id"), col("pos"),
-        col("xe").as("qxe"))), Seq("q_id", "pos"))
-      .groupBy(col("q_id"), col("n_id"))
-      .agg(sum(col("xe") * col("qxe")).as("dot"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("d2").asc, col("n_id").asc)
-    pairDots
-      .join(broadcast(qn2), Seq("q_id"))
-      .join(nn2, Seq("n_id"))
-      .select(col("q_id"), col("n_id"),
-        (col("qn2") - col("dot") * 2L + col("nn2")).as("d2"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    val (cb, codes) = pqFit(corpus, key, vec, dims, m, ks, refineIters)
+    val qvecs = latticeVecs(queries.select(col(key).cast("long").as("q_id"),
+      col(vec)), "q_id", vec)
+    // the single-cell, no-residual case of the IVFADC search: every code
+    // sits in cell 0, which each query probes at rank 1 with its raw
+    // vector as the residual
+    adcSearch(codes.withColumn("cell_id", lit(0L)), cb,
+        qvecs.select(col("q_id"), lit(0L).as("cell_id"), lit(1).as("crnk"),
+          col("xs").as("rs")),
+        qvecs, corpus.select(col(key).cast("long").as("n_id"), col(vec)), vec,
+        dims / m, k, Seq(1), shortlist)
       .select(col("q_id"), col("n_id"), col("rnk"), col("d2"))
   }
 
-  /** IVFADC — the composed 100 TB ANN form (Jégou et al., §IV):
-    * [[ivfTopK]]'s coarse cell pruning fused with [[pqTopK]]'s
-    * quantized-code scan, so a query touches only the codes of its
-    * `nprobe` probed cells instead of the full code table, and the
-    * corpus is stored as PQ codes of RESIDUALS (x − coarse centroid),
-    * which quantize markedly tighter than raw vectors because each
-    * cell's residual cloud is centered at the origin.
+  /** The LUT/ADC/shortlist/refine step of [[pqTopK]] and [[ivfPqSearch]].
+    * `probe` `(q_id, cell_id, crnk, rs)` holds one row per (query,
+    * probed cell): the cell's probe rank and the query's lattice
+    * residual against the cell's centroid. `postings` are
+    * `(cell_id, n_id, sub, cid)`, `qvecs` the query lattice vectors
+    * `(q_id, xs)`, `corpus` the raw `(n_id, vec)` the refine reads.
+    * Returns `(nprobe, q_id, n_id, rnk, d2)`: the exact-L2 top-k per
+    * (width, query) for every width in `nprobes`.
     *
-    * Pipeline, all on the 2²⁴ integer lattice (the [[pqFit]]
-    * determinism discipline — every stage is exact BIGINT arithmetic,
-    * order-independent under any partitioning, so the committed oracle
-    * restates the whole algorithm and the driver hash-gates it):
-    *
-    *  1. COARSE: centroids are the first `cells` corpus vectors'
-    *     full-dim lattice rows; every corpus vector assigns to its
-    *     exact-L2 argmin cell (`|c|² − 2·x·c`, ties → lowest cell id)
-    *     via one broadcast join + partial-aggregate argmin.
-    *  2. RESIDUALS: `x − c(cell)` per coordinate — exact integer
-    *     differences on the lattice.
-    *  3. PQ on residuals: [[pqTrainVec]] (first-`ks` seeding,
-    *     `refineIters` Lloyd rounds, encode) over the residual rows.
-    *  4. PROBE: each query ranks cells by the same exact term and takes
-    *     `nprobe`; per probed cell the query forms its OWN residual and
-    *     a ks·m lookup table of `|c|² − 2·r·c` terms.
-    *  5. ADC: codes ⋈ probed-cell LUT (an equi-join on (cell, sub,
-    *     cid) — the scan never touches un-probed cells), cross-subspace
-    *     BIGINT sum + |r|² = the exact lattice L2 to the reconstructed
-    *     residual; shortlist by (adist, n_id).
-    *  6. REFINE: exact lattice L2 re-rank of the shortlist against raw
-    *     vectors ([[exactRerankL2]]).
-    *
-    * At 100 TB: the code table is ~50× smaller than raw vectors, the
-    * per-query scan cost drops by ~cells/nprobe versus [[pqTopK]], and
-    * raw vectors are fetched for shortlist·q rows only. Recall vs
-    * [[bruteForceTopKL2]] is spec-pinned in LlmOpsSpec like the other
-    * ANN tiers.
+    * Probe sets nest (the cells of width w are the `crnk ≤ w` prefix of
+    * any wider width), so one LUT, one postings join and one ADC sum
+    * serve every width: a candidate's shortlist rank at width w is the
+    * running count of `crnk ≤ w` candidates in (adist, n_id) order, one
+    * window for all widths. The exact refine then runs once per
+    * distinct (q, n) and ranks per (width, query).
     */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, key: String,
-                vec: String, k: Int, dims: Int, cells: Int = 16,
-                nprobe: Int = 4, m: Int = 8, ks: Int = 16,
-                refineIters: Int = 1, shortlist: Int = 50): DataFrame = {
-    val (postings, cb) = ivfPqBuild(corpus, key, vec, dims, cells, m, ks,
-      refineIters)
-    ivfPqQuery(postings, cb, corpus, queries, key, vec, k, dims, cells,
-      nprobe, m, shortlist)
+  private def adcSearch(postings: DataFrame, cb: DataFrame, probe: DataFrame,
+                        qvecs: DataFrame, corpus: DataFrame, vec: String,
+                        dsub: Int, k: Int, nprobes: Seq[Int],
+                        shortlist: Int): DataFrame = {
+    // the LUT is every (query, cell, sub, cid) distance term — ks·m rows
+    // per probed cell, the table an ADC scan reads instead of vectors
+    val cn = cb.groupBy("sub", "cid").agg(sum(col("ce") * col("ce")).as("cn2"))
+    val lut = probe
+      .select(col("q_id"), col("cell_id"),
+        posexplode(col("rs")).as(Seq("pos", "xe")))
+      .withColumn("sub", expr(s"pos DIV $dsub").cast("int"))
+      .join(broadcast(cb), Seq("sub", "pos"))
+      .groupBy(col("q_id"), col("cell_id"), col("sub"), col("cid"))
+      .agg(sum(col("xe") * col("ce")).as("dot"))
+      .join(broadcast(cn), Seq("sub", "cid"))
+      .select(col("q_id"), col("cell_id"), col("sub"), col("cid"),
+        (col("cn2") - col("dot") * 2L).as("term"))
+    // ADC: Σ_sub term + |r|² = the exact lattice distance to the
+    // reconstructed residual; headroom |xe| ≤ 2²⁵ ⇒ the sum stays under
+    // 2⁵⁷ for dims ≤ 512. The (cell_id, sub, cid) equi-join is the cell
+    // pruning — un-probed cells never join — and over a cell_id-
+    // partitioned postings scan the probe join is Spark's dynamic
+    // partition pruning filter, so only the probed cells' files open
+    val adc = postings.join(broadcast(lut), Seq("cell_id", "sub", "cid"))
+      .filter(col("q_id") =!= col("n_id"))
+      .groupBy(col("q_id"), col("n_id"), col("cell_id"))
+      .agg(sum(col("term")).as("t"))
+      .join(broadcast(probe.select(col("q_id"), col("cell_id"), col("crnk"),
+        aggregate(col("rs"), lit(0L), (acc, x) => acc + x * x).as("rn2"))),
+        Seq("q_id", "cell_id"))
+      .select(col("q_id"), col("n_id"), col("crnk"),
+        (col("t") + col("rn2")).as("adist"))
+    import org.apache.spark.sql.expressions.Window
+    val wAdc = Window.partitionBy(col("q_id"))
+      .orderBy(col("adist").asc, col("n_id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val widths = nprobes.distinct.sorted.map { np =>
+      val probed = col("crnk") <= np
+      val srnk = sum(when(probed, 1L).otherwise(0L)).over(wAdc)
+      when(probed && srnk <= shortlist, lit(np))
+    }
+    val shortl = adc
+      .select(col("q_id"), col("n_id"),
+        filter(array(widths: _*), _.isNotNull).as("nps"))
+      .filter(size(col("nps")) > 0)
+    // Exact re-rank of the ADC shortlist (the FAISS refine stage):
+    // quantized distances order a SHORTLIST reliably but not the final
+    // k on near-equidistant corpora, so the last step pays the exact
+    // lattice L2 once per shortlisted (q, n) — raw vectors are quantized
+    // for those rows only, never the corpus
+    val w = Window.partitionBy(col("nprobe"), col("q_id"))
+      .orderBy(col("d2").asc, col("n_id").asc)
+    corpus.join(broadcast(shortl), Seq("n_id"))
+      .join(broadcast(qvecs.select(col("q_id"), col("xs").as("qxs"))),
+        Seq("q_id"))
+      .select(col("q_id"), col("n_id"), col("nps"),
+        aggregate(zip_with(col("qxs"), lattice(col(vec)),
+          (a, b) => (a - b) * (a - b)), lit(0L), _ + _).as("d2"))
+      .select(explode(col("nps")).as("nprobe"), col("q_id"), col("n_id"),
+        col("d2"))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("nprobe"), col("q_id"), col("n_id"), col("rnk"), col("d2"))
   }
 
   /** Full-dim coarse lattice codebook: the first `cells` corpus
@@ -876,28 +823,16 @@ object Similarity {
     rows.filter(col("n_id") < cells)
       .select(col("pos"), col("n_id").as("cell_id"), col("xe").as("ce"))
 
-  /** Exact-integer cell distance terms `|c|² − 2·x·c` per (row, cell):
-    * the argmin/probe ordering key shared by assign and probe. */
-  private def ivfPqCellTerms(xs: DataFrame, keyAs: String,
-                             cc: DataFrame): DataFrame = {
-    val ccn = cc.groupBy("cell_id").agg(sum(col("ce") * col("ce")).as("cn2"))
-    xs.join(broadcast(cc), Seq("pos"))
-      .groupBy(col(keyAs), col("cell_id"))
-      .agg(sum(col("xe") * col("ce")).as("dot"))
-      .join(broadcast(ccn), Seq("cell_id"))
-      .select(col(keyAs), col("cell_id"),
-        (col("cn2") - col("dot") * 2L).as("term"))
-  }
-
-  /** One-time IVFADC index BUILD — steps 1-3 of the pipeline (coarse
-    * assign, residuals, PQ train + encode), returning
+  /** One-time IVFADC index BUILD — coarse assign to the first `cells`
+    * corpus vectors (exact-L2 argmin, ties → lowest cell id), residuals
+    * `x − c(cell)`, residual PQ train + encode — returning
     * `(postings, codebook)`: postings are `(cell_id, n_id, sub, cid)`
     * — the inverted lists, codes already grouped by their cell, the
     * durable ~50×-compressed representation of the corpus — and the
     * codebook is `(sub, cid, pos, ce)` (ks·m·dsub rows, broadcast
     * size). Together they are what an ANN index FILE contains; at
     * 100 TB this runs once per corpus snapshot and lands as a table
-    * ([[graft.queries.LlmOps]]'s durable `_derive_ann_index`), not per
+    * ([[graft.queries.LlmSimOps]]'s durable `_derive_ann_index`), not per
     * query.
     *
     * Degenerate-corpus behavior (ADVICE r16, intentional hardening):
@@ -948,140 +883,62 @@ object Similarity {
     (postings, cbFromGeo(corpus.sparkSession, dsub, subCids, subCents))
   }
 
-  /** The distinct coarse cells a query batch probes — at most `cells`
-    * values regardless of query count, i.e. index-METADATA scale, so
-    * the driver-side collect is bounded by construction. This is the
-    * file-pruning driver for cell-partitioned postings reads: the
-    * returned ids become a static `isin` partition filter, and the
-    * postings scan opens ~|probed|/cells of the index files
-    * ([[graft.queries.LlmSimOps]]'s `q_ann_ivfpq_read`; LayoutSpec pins
-    * the pruned file count). Recomputes the probe-selection stage of
-    * [[ivfPqQuery]] — lattice rows for the query batch and the
-    * `cells`-vector coarse codebook, both broadcast-trivial.
+  /** IVFADC SEARCH — the one query entry point over a built index
+    * (Jégou et al., §IV): [[ivfTopK]]'s coarse cell pruning fused with
+    * [[pqTopK]]'s quantized-code scan, so a query touches only the codes
+    * of its probed cells, and codes quantize RESIDUALS (x − coarse
+    * centroid), which compress tighter than raw vectors. `postings`
+    * `(cell_id, n_id, sub, cid)` and `cb` `(sub, cid, pos, ce)` come from
+    * [[ivfPqBuild]] or the durable index; the raw corpus is read only
+    * for the `cells` coarse centroids and the shortlist refine.
+    *
+    * Answers every probe width in `nprobes` from one plan, returning
+    * `(nprobe, q_id, n_id, rnk, d2)` — all exact BIGINT arithmetic on
+    * the 2²⁴ lattice (the [[pqFit]] discipline), so the committed oracle
+    * restates each width and the driver hash-gates it:
+    *  1. each query ranks every cell once by the exact term
+    *     `|c|² − 2·x·c` (ties → lowest cell id), giving `crnk`, in one
+    *     map-side pass ([[graft.functions.CellRanks]]) that checkpoints
+    *     with the query vectors;
+    *  2. per cell with `crnk ≤ max(nprobes)` the query forms its own
+    *     residual, and [[adcSearch]] builds one LUT, joins the postings
+    *     once, shortlists per (width, query) by (adist, n_id) and
+    *     refines by exact lattice L2.
+    *
+    * Over the `cell_id`-partitioned durable index the postings scan
+    * opens only the probed cells' files: the join with the probed cells
+    * is a dynamic partition pruning filter whose build side is the
+    * checkpointed ranking (LayoutSpec pins the file count). Recall vs
+    * [[bruteForceTopKL2]] is spec-pinned in LlmOpsSpec.
     */
-  private[graft] def ivfPqProbeCells(corpus: DataFrame, queries: DataFrame,
-                                     key: String, vec: String, dims: Int,
-                                     cells: Int, nprobe: Int,
-                                     m: Int): Seq[Long] = {
-    val (_, _, terms) = ivfPqProbeTerms(corpus, queries, key, vec, dims,
-      cells, m)
-    probedCellIds(probeOf(terms, nprobe))
-  }
-
-  /** The distinct cell ids of a probe assignment — bounded by `cells`
-    * (index metadata), the static partition filter for cell-partitioned
-    * postings reads.
-    */
-  private[graft] def probedCellIds(qprobe: DataFrame): Seq[Long] =
-    qprobe.select(col("cell_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-
-  /** Probe-selection internals shared across consumers (r17): the query
-    * batch's lattice rows (eagerly checkpointed), the localized coarse
-    * geometry as a LocalTableScan, and the exact per-(query, cell)
-    * distance terms. Splitting this out lets a caller that needs BOTH
-    * the probed-cell partition filter AND the query plan (the durable-
-    * index read keys previously ran the whole pipeline twice — once in
-    * [[ivfPqProbeCells]], again inside [[ivfPqQuery]]), or several
-    * probe widths over one index (`q_ann_param_sweep`, which re-ran it
-    * per swept nprobe), pay the qrows checkpoint + coarse-geometry
-    * collect + terms subtree ONCE.
-    */
-  private[graft] def ivfPqProbeTerms(corpus: DataFrame, queries: DataFrame,
-                                     key: String, vec: String, dims: Int,
-                                     cells: Int, m: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+  def ivfPqSearch(postings: DataFrame, cb: DataFrame, corpus: DataFrame,
+                  queries: DataFrame, key: String, vec: String, k: Int,
+                  dims: Int, cells: Int, m: Int, nprobes: Seq[Int],
+                  shortlist: Int = 50): DataFrame = {
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
+    require(nprobes.nonEmpty && nprobes.forall(_ > 0),
+      s"nprobes ${nprobes.mkString(",")} must be positive widths")
     val dsub = dims / m
-    val qrows = pqLattice(queries.select(col(key).cast("long").as("q_id"),
-      col(vec)), "q_id", vec, dsub)
-      .localCheckpoint(true)
-    // coarse geometry localized once (cells·dims longs — the same
-    // bounded collect the encode path pays), so the probe's broadcast
-    // builds read a LocalTableScan instead of re-running the
-    // corpus-scan + quantize subtree per consumer (r16)
+    // the coarse geometry collects once (cells·dims longs — the same
+    // bounded collect the encode path pays) into the codec kernels
     val (ccIds, ccCents) = collectCoarseGeo(
-      coarseLattice(pqLattice(corpus.select(
-        col(key).cast("long").as("n_id"), col(vec))
-        .filter(col(key) < cells), "n_id", vec, dsub), cells), dims)
-    val cc = ccFromGeo(corpus.sparkSession, ccIds, ccCents)
-    (qrows, cc, ivfPqCellTerms(qrows, "q_id", cc))
-  }
-
-  /** Step 4a — probe selection at one width from shared terms: rank
-    * cells per query by the exact term and keep `nprobe` (ties → lowest
-    * cell id, the committed tie rule).
-    */
-  private[graft] def probeOf(terms: DataFrame, nprobe: Int): DataFrame = {
-    val probeW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("term").asc, col("cell_id").asc)
-    terms.withColumn("crnk", row_number().over(probeW))
-      .filter(col("crnk") <= nprobe)
-      .select(col("q_id"), col("cell_id"))
-  }
-
-  /** IVFADC query READ PATH — steps 4-6 over a pre-built index (probe
-    * selection, per-(query, probed-cell) residual LUTs, cell-pruned
-    * ADC over the postings, exact refine): everything a query costs
-    * once the index exists. Raw corpus vectors are touched only to
-    * (a) recompute the `cells` coarse centroids (broadcast-trivial)
-    * and (b) fetch shortlist·q rows for the exact re-rank.
-    */
-  private[graft] def ivfPqQuery(postings: DataFrame, cb: DataFrame,
-                                corpus: DataFrame, queries: DataFrame,
-                                key: String, vec: String, k: Int, dims: Int,
-                                cells: Int, nprobe: Int, m: Int,
-                                shortlist: Int): DataFrame = {
-    val (qrows, cc, terms) = ivfPqProbeTerms(corpus, queries, key, vec,
-      dims, cells, m)
-    ivfPqQueryFrom(postings, cb, corpus, key, vec, k, dims / m,
-      qrows, cc, probeOf(terms, nprobe), shortlist)
-  }
-
-  /** Steps 4b-6 over a PREPARED probe — `qrows` the checkpointed query
-    * lattice rows, `cc` the localized coarse codebook, `qprobe` the
-    * (q_id, cell_id) probe assignment — so callers that already paid
-    * the probe pipeline ([[ivfPqProbeTerms]]) don't re-run it here.
-    */
-  private[graft] def ivfPqQueryFrom(postings: DataFrame, cb: DataFrame,
-                                    corpus: DataFrame, key: String,
-                                    vec: String, k: Int, dsub: Int,
-                                    qrows: DataFrame, cc: DataFrame,
-                                    qprobe: DataFrame,
-                                    shortlist: Int): DataFrame = {
-    // 4b. per-(query, probed cell) residual LUT
-    val qr = qrows.join(broadcast(qprobe), Seq("q_id"))
-      .join(broadcast(cc), Seq("cell_id", "pos"))
-      .select(col("q_id"), col("cell_id"), col("sub"), col("pos"),
-        (col("xe") - col("ce")).as("xe"))
-    val qrn2 = qr.groupBy("q_id", "cell_id")
-      .agg(sum(col("xe") * col("xe")).as("rn2"))
-    val cn = cb.groupBy("sub", "cid").agg(sum(col("ce") * col("ce")).as("cn2"))
-    val lut = qr.join(broadcast(cb), Seq("sub", "pos"))
-      .groupBy(col("q_id"), col("cell_id"), col("sub"), col("cid"))
-      .agg(sum(col("xe") * col("ce")).as("dot"))
-      .join(broadcast(cn), Seq("sub", "cid"))
-      .select(col("q_id"), col("cell_id"), col("sub"), col("cid"),
-        (col("cn2") - col("dot") * 2L).as("term"))
-    // 5. ADC over probed cells only: the (cell_id, sub, cid) equi-join
-    // is the pruning — un-probed cells never join
-    val wAdc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adist").asc, col("n_id").asc)
-    val shortl = postings
-      .join(broadcast(lut), Seq("cell_id", "sub", "cid"))
-      .filter(col("q_id") =!= col("n_id"))
-      .groupBy(col("q_id"), col("n_id"), col("cell_id"))
-      .agg(sum(col("term")).as("t"))
-      .join(broadcast(qrn2), Seq("q_id", "cell_id"))
-      .select(col("q_id"), col("n_id"), (col("t") + col("rn2")).as("adist"))
-      .withColumn("srnk", row_number().over(wAdc))
-      .filter(col("srnk") <= shortlist)
-      .select(col("q_id"), col("n_id"))
-    // 6. exact refine: raw lattice rows for shortlist vectors only
-    val rows = pqLattice(Par.fanOut(corpus.select(
-      col(key).cast("long").as("n_id"), col(vec))), "n_id", vec, dsub)
-    val qn2 = qrows.groupBy("q_id").agg(sum(col("xe") * col("xe")).as("qn2"))
-    exactRerankL2(shortl, rows, qrows, qn2, k)
+      coarseFromBase(corpus, key, vec, dsub, cells), dims)
+    // every cell ranked once per query in one map-side pass; the
+    // checkpoint holds one row per query and, filtered by the widest
+    // width, is the dynamic pruning filter's broadcast build side
+    val ranked = latticeVecs(queries.select(col(key).cast("long").as("q_id"),
+        col(vec)), "q_id", vec)
+      .withColumn("cells", cellRanks(col("xs"), ccIds, ccCents))
+      .localCheckpoint(true)
+    val probe = ranked
+      .select(col("q_id"), col("xs"),
+        posexplode(col("cells")).as(Seq("r", "cell_id")))
+      .select(col("q_id"), col("cell_id"), (col("r") + 1).as("crnk"),
+        cellResidual(col("xs"), col("cell_id"), ccIds, ccCents).as("rs"))
+      .filter(col("crnk") <= nprobes.max)
+    adcSearch(postings, cb, probe, ranked.select(col("q_id"), col("xs")),
+      corpus.select(col(key).cast("long").as("n_id"), col(vec)), vec, dsub,
+      k, nprobes, shortlist)
   }
 
   /** Exact brute-force top-k by L2 distance — the ground truth

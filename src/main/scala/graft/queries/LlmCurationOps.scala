@@ -10,12 +10,11 @@ import graft.ops.{Dedup, Similarity, TextStats}
   * deterministic sampling/splits, sequence packing/chunking, domain
   * mixes, and corpus profiling.
   *
-  * Section registry of [[LlmOps]] (split in round 8 purely for file
-  * modularity — no behavior change; LlmOps concatenates the fragments
-  * and remains the single public surface).
+  * One of the five LLM-pipeline registry sections;
+  * [[graft.SparkEntry]] lists each directly.
   */
-private[queries] object LlmCurationOps {
-  private[queries] type Q = (SparkSession, String) => DataFrame
+private[graft] object LlmCurationOps {
+  private[graft] type Q = (SparkSession, String) => DataFrame
 
   /** Deterministic token-dropout augmentation: each document re-emitted
     * with ~10% of tokens dropped by an md5 draw on (doc, position) —
@@ -219,7 +218,7 @@ private[queries] object LlmCurationOps {
     TextStats.stratifiedSample(Tables.documents(s, d), "doc_id", "lang", 40)
       .orderBy(col("lang"), col("rn"))
 
-  private[queries] val registry: Map[String, Q] = Map(
+  private[graft] val registry: Map[String, Q] = Map(
     "q_domain_mix" -> qDomainMix,
     "q_approx_percentile" -> qApproxPercentile,
     "q_sample_split" -> qSampleSplit,
@@ -233,7 +232,7 @@ private[queries] object LlmCurationOps {
     "q_chunk_tokens" -> qChunkTokens,
   )
 
-  private[queries] val oracle: Map[String, String] = Map(
+  private[graft] val oracle: Map[String, String] = Map(
     "q_domain_mix" ->
       """WITH r AS (SELECT lang, doc_id,
         |    row_number() OVER (PARTITION BY lang

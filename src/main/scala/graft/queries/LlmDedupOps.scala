@@ -10,12 +10,11 @@ import graft.ops.{Dedup, Similarity, TextStats}
   * dedup, durable cluster tables + representatives, cross-source overlap,
   * decontamination, and the dedup-detector evaluation keys.
   *
-  * Section registry of [[LlmOps]] (split in round 8 purely for file
-  * modularity — no behavior change; LlmOps concatenates the fragments
-  * and remains the single public surface).
+  * One of the five LLM-pipeline registry sections;
+  * [[graft.SparkEntry]] lists each directly.
   */
-private[queries] object LlmDedupOps {
-  private[queries] type Q = (SparkSession, String) => DataFrame
+private[graft] object LlmDedupOps {
+  private[graft] type Q = (SparkSession, String) => DataFrame
 
   private[queries] val qDedupExact: Q = (s, d) =>
     Dedup.exactDedup(Tables.documents(s, d), "doc_id", "text")
@@ -403,7 +402,7 @@ private[queries] object LlmDedupOps {
        |FROM cnt WHERE tp + fp > 0 AND tp + fn > 0 ORDER BY tp""".stripMargin
   }
 
-  private[queries] val registry: Map[String, Q] = Map(
+  private[graft] val registry: Map[String, Q] = Map(
     "q_decontaminate" -> qDecontaminate,
     "q_dedup_incremental" -> qDedupIncremental,
     "q_dedup_containment" -> qDedupContainment,
@@ -421,7 +420,7 @@ private[queries] object LlmDedupOps {
     "q_dedup_ngram" -> qDedupNgram,
   )
 
-  private[queries] val oracle: Map[String, String] = Map(
+  private[graft] val oracle: Map[String, String] = Map(
     "q_decontaminate" ->
       s"""$shingleCte,
          |ev AS (SELECT doc_id AS eval_id, unnest(sh) AS g FROM s WHERE doc_id % 10 = 7),

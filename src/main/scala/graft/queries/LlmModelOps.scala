@@ -11,12 +11,11 @@ import graft.ops.{Dedup, Similarity, TextStats}
   * Bayes, silhouette, dimension correlations, covariance matrix, top
   * eigenvector, and class weights.
   *
-  * Section registry of [[LlmOps]] (split in round 8 purely for file
-  * modularity — no behavior change; LlmOps concatenates the fragments
-  * and remains the single public surface).
+  * One of the five LLM-pipeline registry sections;
+  * [[graft.SparkEntry]] lists each directly.
   */
-private[queries] object LlmModelOps {
-  private[queries] type Q = (SparkSession, String) => DataFrame
+private[graft] object LlmModelOps {
+  private[graft] type Q = (SparkSession, String) => DataFrame
 
   /** k-means (k=8, 2 fixed Lloyd rounds) over the embedding corpus in
     * EXACT integer arithmetic: centroids are integer mean vectors
@@ -564,7 +563,7 @@ private[queries] object LlmModelOps {
       |     FROM d3 JOIN cn2_ ON d3.k = cn2_.k)
       |  WHERE rn = 1)""".stripMargin
 
-  private[queries] val registry: Map[String, Q] = Map(
+  private[graft] val registry: Map[String, Q] = Map(
     "q_silhouette" -> qSilhouette,
     "q_covariance_matrix" -> qCovarianceMatrix,
     "q_top_eigenvector" -> qTopEigenvector,
@@ -576,7 +575,7 @@ private[queries] object LlmModelOps {
     "q_cluster_topics" -> qClusterTopics,
   )
 
-  private[queries] val oracle: Map[String, String] = Map(
+  private[graft] val oracle: Map[String, String] = Map(
     "q_class_weights" ->
       """WITH per AS (SELECT lang, count(*) AS n_docs
         |             FROM documents GROUP BY 1),

@@ -10,12 +10,11 @@ import graft.ops.{Dedup, Similarity, TextStats}
   * top-k, hard negatives, quantization, kNN labeling, ANN (IVF + LSH),
   * and the durable fuzzy-match pair table + entity clusters.
   *
-  * Section registry of [[LlmOps]] (split in round 8 purely for file
-  * modularity — no behavior change; LlmOps concatenates the fragments
-  * and remains the single public surface).
+  * One of the five LLM-pipeline registry sections;
+  * [[graft.SparkEntry]] lists each directly.
   */
-private[queries] object LlmSimOps {
-  private[queries] type Q = (SparkSession, String) => DataFrame
+private[graft] object LlmSimOps {
+  private[graft] type Q = (SparkSession, String) => DataFrame
 
   /** Embedding near-dup via LSH blocking + exact cosine verify — the
     * corpus×corpus scale shape (banded equi join, never a theta join).
@@ -281,14 +280,39 @@ private[queries] object LlmSimOps {
     * committed SQL restates every stage (coarse assign, residuals,
     * codebook train, probe, per-cell LUT, pruned ADC, exact refine) and
     * the driver hash-gates it; recall vs exact L2 is spec-pinned in
-    * LlmOpsSpec. See [[graft.ops.Similarity.ivfPqTopK]].
+    * LlmOpsSpec. See [[graft.ops.Similarity.ivfPqBuild]] and
+    * [[graft.ops.Similarity.ivfPqSearch]].
     */
   private[queries] val qAnnIvfPq: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 20),
-        "vec_id", "embedding", k = 5, dims = 64, cells = 16, nprobe = 4,
-        m = 8, ks = 16)
+    val (postings, cb) = Similarity.ivfPqBuild(emb, "vec_id", "embedding",
+      dims = 64, cells = 16, m = 8, ks = 16, refineIters = 1)
+    served(postings, cb, emb)
+  }
+
+  /** The registry's IVFADC search: the first 20 vectors query the
+    * standard geometry (dims 64, 16 cells, m=8, shortlist 50) for their
+    * top 5 at each width in `nprobes` (the served width is 4). */
+  private def search(postings: DataFrame, cb: DataFrame, emb: DataFrame,
+                     nprobes: Seq[Int] = Seq(4)): DataFrame =
+    Similarity.ivfPqSearch(postings, cb, emb, emb.filter(col("vec_id") < 20),
+      "vec_id", "embedding", k = 5, dims = 64, cells = 16, m = 8, nprobes)
+
+  /** [[search]] at the served width as `(q_id, n_id, rnk, d2)`. */
+  private def served(postings: DataFrame, cb: DataFrame,
+                     emb: DataFrame): DataFrame =
+    search(postings, cb, emb)
+      .select(col("q_id"), col("n_id"), col("rnk"), col("d2"))
       .orderBy(col("q_id"), col("rnk"))
+
+  /** The durable index's postings `(cell_id, n_id, sub, cid)` and
+    * codebook `(sub, cid, pos, ce)`. */
+  private def annIndexParts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val idx = annIndex(s, d)
+    (idx.filter(col("kind") === "p")
+      .select(col("cell_id"), col("n_id"), col("sub"), col("cid")),
+      idx.filter(col("kind") === "c")
+        .select(col("sub"), col("cid"), col("pos"), col("ce")))
   }
 
   /** The durable IVFADC index — what an ANN index FILE contains, as a
@@ -341,34 +365,13 @@ private[queries] object LlmSimOps {
     * Same algorithm, same parameters, so the committed oracle is the
     * identical full restatement — the build/read split cannot change a
     * row without a hash mismatch — and LlmOpsSpec additionally pins
-    * read ≡ rebuild row-for-row and the derivation run-once.
+    * read ≡ rebuild row-for-row and the derivation run-once. The
+    * postings scan opens only the probed cells' files (the search's
+    * dynamic partition pruning; LayoutSpec counts them).
     */
   private[queries] val qAnnIvfPqRead: Q = (s, d) => {
-    val idx = annIndex(s, d)
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 20)
-    // Probe-cell selection FIRST (bounded by `cells` — index-metadata
-    // scale), so the postings read carries a static partition filter:
-    // the cell_id-partitioned store opens only the probed cells' files
-    // instead of scanning every posting into the ADC join. Harmless to
-    // results — the (cell, sub, cid) equi-join already ignores
-    // un-probed cells — this is purely the I/O half of that pruning.
-    // ONE probe pipeline (r17): the checkpointed probe feeds both the
-    // bounded distinct-cells collect and the query plan, where the key
-    // previously ran qrows/coarse-collect/terms twice (ivfPqProbeCells
-    // + again inside ivfPqQuery).
-    val (qrows, cc, terms) = Similarity.ivfPqProbeTerms(emb, queries,
-      "vec_id", "embedding", dims = 64, cells = 16, m = 8)
-    val qprobe = Similarity.probeOf(terms, nprobe = 4).localCheckpoint(true)
-    val probed = Similarity.probedCellIds(qprobe)
-    val postings = idx.filter(col("kind") === "p" &&
-        col("cell_id").isin(probed.map(java.lang.Long.valueOf): _*))
-      .select(col("cell_id"), col("n_id"), col("sub"), col("cid"))
-    val cb = idx.filter(col("kind") === "c")
-      .select(col("sub"), col("cid"), col("pos"), col("ce"))
-    Similarity.ivfPqQueryFrom(postings, cb, emb, "vec_id", "embedding",
-        k = 5, dsub = 8, qrows, cc, qprobe, shortlist = 50)
-      .orderBy(col("q_id"), col("rnk"))
+    val (postings, cb) = annIndexParts(s, d)
+    served(postings, cb, Tables.embeddings(s, d))
   }
 
   /** Per-cell membership of the durable IVFADC index — the BALANCE
@@ -411,25 +414,10 @@ private[queries] object LlmSimOps {
     * time-travels).
     */
   private[queries] val qAnnIvfPqDelete: Q = (s, d) => {
-    val idx = annIndex(s, d)
-    val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 20)
-    // one probe pipeline for the partition filter AND the query plan —
-    // see qAnnIvfPqRead (r17)
-    val (qrows, cc, terms) = Similarity.ivfPqProbeTerms(emb, queries,
-      "vec_id", "embedding", dims = 64, cells = 16, m = 8)
-    val qprobe = Similarity.probeOf(terms, nprobe = 4).localCheckpoint(true)
-    val probed = Similarity.probedCellIds(qprobe)
-    val postings = idx.filter(col("kind") === "p" &&
-        col("cell_id").isin(probed.map(java.lang.Long.valueOf): _*))
-      .select(col("cell_id"), col("n_id"), col("sub"), col("cid"))
+    val (postings, cb) = annIndexParts(s, d)
     val visible = graft.ops.AnnIndexLifecycle.applyTombstones(postings,
       deleteTombstones(s, d))
-    val cb = idx.filter(col("kind") === "c")
-      .select(col("sub"), col("cid"), col("pos"), col("ce"))
-    Similarity.ivfPqQueryFrom(visible, cb, emb, "vec_id", "embedding",
-        k = 5, dsub = 8, qrows, cc, qprobe, shortlist = 50)
-      .orderBy(col("q_id"), col("rnk"))
+    served(visible, cb, Tables.embeddings(s, d))
   }
 
   /** Per-cell membership AFTER the delete — `q_ivfpq_cell_stats` over
@@ -652,12 +640,8 @@ private[queries] object LlmSimOps {
       threshold = 0.4, bands = EmbBands, bitsPerBand = EmbBits, dims = 64,
       cells = 16, m = 8, ks = 16, refineIters = 1)
       .localCheckpoint(true)
-    val cb = graft.streaming.AnnIngest.deleteGeometry(s, d)
-    val emb = Tables.embeddings(s, d)
-    Similarity.ivfPqQuery(post, cb, emb, emb.filter(col("vec_id") < 20),
-        "vec_id", "embedding", k = 5, dims = 64, cells = 16, nprobe = 4,
-        m = 8, shortlist = 50)
-      .orderBy(col("q_id"), col("rnk"))
+    served(post, graft.streaming.AnnIngest.deleteGeometry(s, d),
+      Tables.embeddings(s, d))
   }
 
   /** SERVING-STORE RECALL (r16, VERDICT r15 #1): recall@5 of the
@@ -679,25 +663,12 @@ private[queries] object LlmSimOps {
       threshold = 0.4, bands = EmbBands, bitsPerBand = EmbBits, dims = 64,
       cells = 16, m = 8, ks = 16, refineIters = 1)
       .localCheckpoint(true)
-    val cb = graft.streaming.AnnIngest.deleteGeometry(s, d)
     val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 20)
     // admitted-and-surviving = exactly the ids with live postings
     val survivors = emb.join(
       post.select(col("n_id").as("vec_id")).distinct(), Seq("vec_id"))
-    val exact = Similarity.bruteForceTopKL2(survivors, queries,
-        "vec_id", "embedding", k = 5)
-      .select(col("q_id"), col("n_id"))
-    val approx = Similarity.ivfPqQuery(post, cb, emb, queries,
-        "vec_id", "embedding", k = 5, dims = 64, cells = 16, nprobe = 4,
-        m = 8, shortlist = 50)
-      .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-        count(lit(1)).as("k"))
-      .select(col("q_id"), col("hits"),
-        expr("hits * 1000000 DIV k").as("recall_ppm"))
+    recallPpm(survivors, emb.filter(col("vec_id") < 20),
+        search(post, graft.streaming.AnnIngest.deleteGeometry(s, d), emb))
       .orderBy(col("q_id"))
   }
 
@@ -734,22 +705,34 @@ private[queries] object LlmSimOps {
     */
   private[queries] val qAnnRecallEval: Q = (s, d) => {
     val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 20)
-    val exact = Similarity.bruteForceTopKL2(emb, queries,
+    val (postings, cb) = Similarity.ivfPqBuild(emb, "vec_id", "embedding",
+      dims = 64, cells = 16, m = 8, ks = 16, refineIters = 1)
+    recallPpm(emb, emb.filter(col("vec_id") < 20), search(postings, cb, emb))
+      .orderBy(col("q_id"))
+  }
+
+  /** Per-query recall@5 of an [[graft.ops.Similarity.ivfPqSearch]]
+    * result against the exact-L2 top 5 of `truth` — per (nprobe, query)
+    * when `sweep` names the widths: `([nprobe,] q_id, hits,
+    * recall_ppm)`. Exact ppm on the k=5 grid: integer DIV, no float
+    * crosses the engines (hits·10⁶ is an exact multiple of k=5).
+    */
+  private def recallPpm(truth: DataFrame, queries: DataFrame,
+                        approx: DataFrame,
+                        sweep: Option[Seq[Int]] = None): DataFrame = {
+    val by = sweep.map(_ => "nprobe").toSeq :+ "q_id"
+    val exact = Similarity.bruteForceTopKL2(truth, queries,
         "vec_id", "embedding", k = 5)
-      .select(col("q_id"), col("n_id"))
-    val approx = Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, dims = 64, cells = 16, nprobe = 4, m = 8, ks = 16)
-      .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy(col("q_id"))
+    sweep.fold(exact)(nps => exact.withColumn("nprobe",
+        explode(array(nps.map(lit): _*))))
+      .select((by :+ "n_id").map(col): _*)
+      .join(approx.select((by :+ "n_id").map(col) :+ lit(1L).as("hit"): _*),
+        by :+ "n_id", "left")
+      .groupBy(by.map(col): _*)
       .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
         count(lit(1)).as("k"))
-      // exact ppm on the k=5 grid: integer DIV, no float crosses the
-      // engines (hits·10⁶ is an exact multiple of k=5)
-      .select(col("q_id"), col("hits"),
-        expr("hits * 1000000 DIV k").as("recall_ppm"))
-      .orderBy(col("q_id"))
+      .select(by.map(col) ++ Seq(col("hits"),
+        expr("hits * 1000000 DIV k").as("recall_ppm")): _*)
   }
 
   /** The nprobe sweep grid for `q_ann_param_sweep` — shared with its
@@ -760,49 +743,18 @@ private[queries] object LlmSimOps {
   /** nprobe/recall trade-off readout — the tuning table every IVFADC
     * deployment derives before fixing nprobe: per nprobe in
     * [[NprobeSweep]] and per query, recall@5 of the durable-index read
-    * path against the exact-L2 brute force. ONE brute-force pass and
-    * ONE index read are shared across the whole sweep (the index is
-    * never rebuilt; only the probe width varies — exactly how a real
-    * parameter sweep amortizes), and every number is exact integer ppm,
-    * so the committed oracle (five [[annRecallEvalSql]] restatements
-    * UNION ALL'd) hash-gates the entire trade-off curve.
+    * path against the exact-L2 brute force. Probe sets nest, so ONE
+    * search answers every width — one postings scan, one LUT, one ADC,
+    * one refine — next to ONE brute-force pass (the index is never
+    * rebuilt; only the probe width varies). Every number is exact
+    * integer ppm, so the committed oracle (five [[annRecallEvalSql]]
+    * restatements UNION ALL'd) hash-gates the entire trade-off curve.
     */
   private[queries] val qAnnParamSweep: Q = (s, d) => {
-    val idx = annIndex(s, d)
+    val (postings, cb) = annIndexParts(s, d)
     val emb = Tables.embeddings(s, d)
-    val queries = emb.filter(col("vec_id") < 20)
-    val postings = idx.filter(col("kind") === "p")
-      .select(col("cell_id"), col("n_id"), col("sub"), col("cid"))
-    val cb = idx.filter(col("kind") === "c")
-      .select(col("sub"), col("cid"), col("pos"), col("ce"))
-    // the ground truth is nprobe-independent: materialize once
-    val exact = Similarity.bruteForceTopKL2(emb, queries,
-        "vec_id", "embedding", k = 5)
-      .select(col("q_id"), col("n_id"))
-      .localCheckpoint(true)
-    // the probe pipeline (query lattice checkpoint, coarse-geometry
-    // collect, distance terms) is nprobe-INDEPENDENT: pay it once for
-    // the whole sweep instead of once per width (r17) — only the
-    // rank-filter differs per nprobe. The terms table (queries×cells
-    // rows) checkpoints eagerly so the five branches' plans embed a
-    // truncated scan instead of five copies of the terms subtree per
-    // broadcast consumer (the plan was ~1 MB of text — planning time
-    // itself was a cost).
-    val (qrows, cc, terms0) = Similarity.ivfPqProbeTerms(emb, queries,
-      "vec_id", "embedding", dims = 64, cells = 16, m = 8)
-    val terms = terms0.localCheckpoint(true)
-    NprobeSweep.map { np =>
-      val approx = Similarity.ivfPqQueryFrom(postings, cb, emb,
-          "vec_id", "embedding", k = 5, dsub = 8, qrows, cc,
-          Similarity.probeOf(terms, np), shortlist = 50)
-        .select(col("q_id"), col("n_id"), lit(1L).as("hit"))
-      exact.join(approx, Seq("q_id", "n_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-          count(lit(1)).as("k"))
-        .select(lit(np).as("nprobe"), col("q_id"), col("hits"),
-          expr("hits * 1000000 DIV k").as("recall_ppm"))
-    }.reduce(_.unionByName(_))
+    recallPpm(emb, emb.filter(col("vec_id") < 20),
+        search(postings, cb, emb, NprobeSweep), Some(NprobeSweep))
       .orderBy(col("nprobe"), col("q_id"))
   }
 
@@ -1251,7 +1203,8 @@ private[queries] object LlmSimOps {
        |FROM dist GROUP BY 1, 2 ORDER BY sub, cid""".stripMargin
 
   /** Full-algorithm oracle for `q_ann_ivfpq` (IVFADC): every stage of
-    * [[graft.ops.Similarity.ivfPqTopK]] restated on the same 2²⁴
+    * [[graft.ops.Similarity.ivfPqBuild]] and
+    * [[graft.ops.Similarity.ivfPqSearch]] restated on the same 2²⁴
     * integer lattice — coarse first-`cells` centroids and exact-L2
     * argmin assignment, residual rows, the residual PQ fit (seed + one
     * Lloyd round + encode, the [[pqFitCtes]] chain reading residuals),
@@ -1875,7 +1828,7 @@ private[queries] object LlmSimOps {
        |SELECT q_id, n_id, rnk, CAST(floor(cos * 1000000) AS BIGINT) AS cos_e6
        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin
 
-  private[queries] val registry: Map[String, Q] = Map(
+  private[graft] val registry: Map[String, Q] = Map(
     "q_dedup_embedding" -> qDedupEmbedding,
     "q_emb_dedup_eval" -> qEmbDedupEval,
     "q_cosine_topk" -> qCosineTopk,
@@ -1911,7 +1864,7 @@ private[queries] object LlmSimOps {
     "q_entity_clusters" -> qEntityClusters,
   )
 
-  private[queries] val oracle: Map[String, String] = Map(
+  private[graft] val oracle: Map[String, String] = Map(
     "q_entity_clusters" ->
       """WITH RECURSIVE p AS MATERIALIZED (
         |  SELECT a.p_partkey AS pa, b.p_partkey AS pb

@@ -11,12 +11,11 @@ import graft.ops.{Dedup, Similarity, TextStats}
   * token counts, fingerprints, n-grams, BPE, PMI, vocabulary laws
   * (Heaps/Zipf), LM scoring (bigram/perplexity), divergence measures.
   *
-  * Section registry of [[LlmOps]] (split in round 8 purely for file
-  * modularity — no behavior change; LlmOps concatenates the fragments
-  * and remains the single public surface).
+  * One of the five LLM-pipeline registry sections;
+  * [[graft.SparkEntry]] lists each directly.
   */
-private[queries] object LlmTextOps {
-  private[queries] type Q = (SparkSession, String) => DataFrame
+private[graft] object LlmTextOps {
+  private[graft] type Q = (SparkSession, String) => DataFrame
 
   /** Tokenizer fertility by language: whitespace tokens per UTF-8 byte
     * (ppm) and mean bytes per token — the compression-rate table that
@@ -635,7 +634,7 @@ private[queries] object LlmTextOps {
        |FROM b ORDER BY doc_id""".stripMargin
   }
 
-  private[queries] val registry: Map[String, Q] = Map(
+  private[graft] val registry: Map[String, Q] = Map(
     "q_simpson_diversity" -> qSimpsonDiversity,
     "q_js_divergence" -> qJsDivergence,
     "q_heaps_law" -> qHeapsLaw,
@@ -665,7 +664,7 @@ private[queries] object LlmTextOps {
     "q_fingerprint_rolling" -> qFingerprintRolling,
   )
 
-  private[queries] val oracle: Map[String, String] = Map(
+  private[graft] val oracle: Map[String, String] = Map(
     "q_simpson_diversity" ->
       """WITH toks AS (SELECT source, unnest(string_split(text, ' ')) AS tok
         |  FROM documents),

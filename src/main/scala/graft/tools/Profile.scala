@@ -23,15 +23,17 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * [[graft.Graft.session]], writes one JSON line per key to
   * `outDir/profile.jsonl` and the key's formatted plan to
   * `outDir/<key>.plan.txt`. Per key: a cold run (construct, land in the
-  * noop sink) pays one-time derivations and codegen; a warm run does
-  * the same, recorded by Spark's own listeners; a warm `count()` is
-  * timed only. Fields are named after perfbench's per-layer metrics, so
-  * a record diffs against a traced bench run; `exec.task_busy_s` over
-  * `cores` is the key's compute floor, and `jobs` groups the jobs by
-  * description, else by their query's action, else by their own. A
-  * `_derive_*` key ([[graft.SparkEntry.derives]]) derives once per JVM,
-  * so it has no cold run: its recorded run is the derivation (list it
-  * before any key that reads its table); its `count_s` reads through.
+  * noop sink) pays one-time derivations and codegen; three warm runs do
+  * the same, the first recorded by Spark's own listeners, and
+  * `construct_s`/`full_s` are their medians (one warm run still reads
+  * JIT warm-up); a warm `count()` is timed only. Fields are named after
+  * perfbench's per-layer metrics, so a record diffs against a traced
+  * bench run; `exec.task_busy_s` over `cores` is the key's compute
+  * floor, and `jobs` groups the jobs by description, else by their
+  * query's action, else by their own. A `_derive_*` key
+  * ([[graft.SparkEntry.derives]]) derives once per JVM, so it has no
+  * cold run: its one recorded run is the derivation (list it before
+  * any key that reads its table); its `count_s` reads through.
   */
 object Profile extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
@@ -70,14 +72,20 @@ object Profile extends AdaptiveSparkPlanHelper {
     val r = new Recorder(spark)
     try {
       if (derive.isEmpty) rec += "cold_s" -> seconds(land(build()))
-      dropBlocks(spark)
+      def warm(): (Double, Double) = {
+        dropBlocks(spark)
+        var df: Option[DataFrame] = None
+        val c = seconds { df = build() }
+        r.constructEnd = System.currentTimeMillis()
+        (c, round(c + seconds(land(df))))
+      }
       r.start()
-      var df: Option[DataFrame] = None
-      val c = seconds { df = build() }
-      r.constructEnd = System.currentTimeMillis()
-      val l = seconds(land(df))
-      rec ++= Seq("construct_s" -> c, "full_s" -> round(c + l))
+      val first = warm()
       val layers = r.stop()
+      val runs = first +: (if (derive.isEmpty) Seq.fill(2)(warm()) else Nil)
+      def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+      rec ++= Seq("construct_s" -> median(runs.map(_._1)),
+        "full_s" -> median(runs.map(_._2)))
       r.lastPlan.foreach(qe => java.nio.file.Files.writeString(
         new File(planDir, s"$key.plan.txt").toPath,
         qe.explainString(ExplainMode.fromString("formatted"))))

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ops.Similarity
 
 /** Data-layout disciplines for scan efficiency at scale: Hive-style
   * partitioned writes (directory pruning), dynamic partition overwrite
@@ -197,7 +198,7 @@ class LayoutSpec extends AnyFunSuite {
       else if (f.getName.endsWith(".parquet")) 1L else 0L
 
     // the probe-shaped read: static cell filter on the partition column
-    val idx = graft.queries.LlmOps.annIndexRead(spark, sf)
+    val idx = graft.queries.LlmSimOps.annIndex(spark, sf)
     val probedCells = cellDirs.take(2)
       .map(_.getName.stripPrefix("cell_id=").toLong).toSeq
     val pruned = idx.filter(col("kind") === "p" &&
@@ -220,6 +221,48 @@ class LayoutSpec extends AnyFunSuite {
     val allFiles = parquetFiles(root)
     assert(readFiles == probedFiles && readFiles < allFiles,
       s"probe read $readFiles files; probed cells hold $probedFiles of $allFiles total")
+  }
+
+  test("q_ann_ivfpq_read: the executed postings scan opens only the probed cells' files") {
+    // the search's own pruning rule (the probed-cells join is a dynamic
+    // partition pruning filter), pinned on the registry key rather than
+    // on a hand-written filter
+    graft.queries.LlmOps.materializeAnnIndex(spark, sf)
+    val root = new java.io.File(graft.model.Scratch.dir("ann_index", sf), "v=0")
+    def parquetFiles(f: java.io.File): Long =
+      if (f.isDirectory) f.listFiles().map(parquetFiles).sum
+      else if (f.getName.endsWith(".parquet")) 1L else 0L
+    val postingFiles = parquetFiles(new java.io.File(root, "kind=p"))
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def postingsRead(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      val scans = helper.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.partitionFilters.exists(_.sql.contains("kind = 'p'")) => s
+      }
+      assert(scans.size == 1, s"expected one postings scan, got ${scans.size}")
+      assert(scans.head.partitionFilters.exists(_.sql.contains("dynamicpruning")),
+        s"no dynamic cell filter on the postings scan: ${scans.head.partitionFilters}")
+      scans.head.metrics("numFiles").value
+    }
+    // the key's 20 queries × 4 probes reach most cells of this small
+    // index; its scan reads the postings only, never the whole index
+    val keyRead = postingsRead(SparkEntry.queries("q_ann_ivfpq_read")(spark, sf))
+    assert(keyRead > 0 && keyRead <= postingFiles && keyRead < parquetFiles(root),
+      s"key read $keyRead files; postings hold $postingFiles of ${parquetFiles(root)}")
+    // one query probing 4 of 16 cells opens only those cells' files
+    val idx = graft.queries.LlmSimOps.annIndex(spark, sf)
+    val emb = graft.model.Tables.embeddings(spark, sf)
+    val oneRead = postingsRead(Similarity.ivfPqSearch(
+      idx.filter(col("kind") === "p")
+        .select(col("cell_id"), col("n_id"), col("sub"), col("cid")),
+      idx.filter(col("kind") === "c")
+        .select(col("sub"), col("cid"), col("pos"), col("ce")),
+      emb, emb.filter(col("vec_id") === 0), "vec_id", "embedding", k = 5,
+      dims = 64, cells = 16, m = 8, nprobes = Seq(4)))
+    info(s"postings read: key $keyRead, one query $oneRead, of $postingFiles")
+    assert(oneRead > 0 && oneRead < postingFiles,
+      s"one 4-cell probe read $oneRead of the index's $postingFiles posting files")
   }
 
   test("gate band index: bucket-group layout prunes a narrow probe's files") {

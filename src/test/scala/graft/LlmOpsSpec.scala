@@ -8,6 +8,19 @@ class LlmOpsSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
+  /** IVFADC build + search at one probe width — the whole algorithm,
+    * `(q_id, n_id, rnk, d2)`. */
+  private def ivfPqTopK(corpus: org.apache.spark.sql.DataFrame,
+                        queries: org.apache.spark.sql.DataFrame,
+                        nprobe: Int, shortlist: Int = 50) = {
+    val (postings, cb) = Similarity.ivfPqBuild(corpus, "vec_id", "embedding",
+      dims = 64, cells = 16, m = 8, ks = 16, refineIters = 1)
+    Similarity.ivfPqSearch(postings, cb, corpus, queries, "vec_id",
+        "embedding", k = 5, dims = 64, cells = 16, m = 8, Seq(nprobe),
+        shortlist)
+      .select($"q_id", $"n_id", $"rnk", $"d2")
+  }
+
   private val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog"),
     (1L, "the quick brown fox jumps over the lazy cat"),   // near-dup of 0
@@ -81,7 +94,7 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("ivfTopK returns k rows per query with plausible neighbors") {
     val emb = graft.model.Tables.embeddings(spark, sf)
-    val got = graft.queries.LlmOps.registry("q_ann_ivf")(spark, sf)
+    val got = SparkEntry.queries("q_ann_ivf")(spark, sf)
     val counts = got.groupBy($"q_id").count().as[(Long, Long)].collect().toMap
     assert(counts.values.forall(_ == 5L))
     assert(counts.size == 20)
@@ -133,8 +146,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val queries = emb.filter($"vec_id" < 10)
     val exact = Similarity.bruteForceTopKL2(emb, queries, "vec_id", "embedding", k = 5)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, dims = 64, cells = 16, nprobe = 4, m = 8, ks = 16)
+    val approx = ivfPqTopK(emb, queries, nprobe = 4)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
     // nprobe=4 of 16 cells prunes ~3/4 of the corpus before the ADC
     // scan, so recall is bounded by the coarse stage's cell hit rate on
@@ -146,8 +158,7 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(approx.groupBy(_._1).forall(_._2.size == 5))
     // exhaustive probe (nprobe = cells) removes the coarse pruning, so
     // the only loss left is the PQ shortlist — must meet pqTopK's bound
-    val exhaustive = Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-        k = 5, dims = 64, cells = 16, nprobe = 16, m = 8, ks = 16)
+    val exhaustive = ivfPqTopK(emb, queries, nprobe = 16)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
     val exRecall = (exact & exhaustive).size.toDouble / exact.size
     info(s"IVFADC exhaustive-probe recall@5: $exRecall")
@@ -157,12 +168,12 @@ class LlmOpsSpec extends AnyFunSuite {
   test("q_ann_ivfpq_read (durable index) equals q_ann_ivfpq (rebuild), derivation runs once") {
     val rebuild = SparkEntry.queries("q_ann_ivfpq")(spark, sf)
       .as[(Long, Long, Int, Long)].collect().toSet
-    val before = graft.queries.LlmOps.annIndexDerivations.get()
+    val before = graft.queries.LlmSimOps.annIndexDerivations.get()
     val read1 = SparkEntry.queries("q_ann_ivfpq_read")(spark, sf)
       .as[(Long, Long, Int, Long)].collect().toSet
     val read2 = SparkEntry.queries("q_ann_ivfpq_read")(spark, sf)
       .as[(Long, Long, Int, Long)].collect().toSet
-    val after = graft.queries.LlmOps.annIndexDerivations.get()
+    val after = graft.queries.LlmSimOps.annIndexDerivations.get()
     assert(read1 == rebuild,
       s"index read path diverged from rebuild: ${(read1 diff rebuild).take(3)}")
     assert(read2 == read1, "second read not reproducible")
@@ -180,9 +191,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val emb = graft.model.Tables.embeddings(spark, sf)
     val queries = emb.filter($"vec_id" < 10)
     def run(c: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfPqTopK(c, queries, "vec_id", "embedding",
-          k = 5, dims = 64, cells = 16, nprobe = 4, m = 8, ks = 16)
-        .select($"q_id", $"n_id", $"rnk", $"d2")
+      ivfPqTopK(c, queries, nprobe = 4)
         .as[(Long, Long, Int, Long)].collect().toSet
     val base = run(emb)
     val shuffled = run(emb.repartition(7, $"label"))
@@ -349,20 +358,20 @@ class LlmOpsSpec extends AnyFunSuite {
     // only the FIRST over a (dir) may pay the minhash-LSH + connected
     // components pipeline. (≤ 1, not == 1: an earlier suite in this JVM
     // may already have landed the table.)
-    val before = graft.queries.LlmOps.clusterDerivations.get()
+    val before = graft.queries.LlmDedupOps.clusterDerivations.get()
     SparkEntry.queries("q_dedup_clusters")(spark, sf).count()
     SparkEntry.queries("q_dedup_representatives")(spark, sf).count()
-    val after = graft.queries.LlmOps.clusterDerivations.get()
+    val after = graft.queries.LlmDedupOps.clusterDerivations.get()
     assert(after - before <= 1, s"cluster derivations ran ${after - before}×")
   }
 
   test("match-pair derivation runs at most once across fuzzy/entity keys") {
     // Both match consumers read the durable match-pair table; only the
     // FIRST over a (dir) may pay the blocked levenshtein verify join.
-    val before = graft.queries.LlmOps.matchPairDerivations.get()
+    val before = graft.queries.LlmSimOps.matchPairDerivations.get()
     SparkEntry.queries("q_fuzzy_match")(spark, sf).count()
     SparkEntry.queries("q_entity_clusters")(spark, sf).count()
-    val after = graft.queries.LlmOps.matchPairDerivations.get()
+    val after = graft.queries.LlmSimOps.matchPairDerivations.get()
     assert(after - before <= 1, s"match-pair derivations ran ${after - before}×")
   }
 
@@ -624,7 +633,7 @@ class LlmOpsSpec extends AnyFunSuite {
   test("q_ann_param_sweep: full grid; recall monotone in nprobe once the shortlist stops binding") {
     val sweep = SparkEntry.queries("q_ann_param_sweep")(spark, sf)
       .as[(Int, Long, Long, Long)].collect().toSeq
-    val grid = graft.queries.LlmOps.nprobeSweep
+    val grid = graft.queries.LlmSimOps.NprobeSweep
     val qs = sweep.map(_._2).distinct
     assert(sweep.map(_._1).distinct.sorted == grid.sorted, "sweep must cover the declared grid")
     assert(sweep.size == grid.size * qs.size, "one row per (nprobe, query)")
@@ -643,9 +652,7 @@ class LlmOpsSpec extends AnyFunSuite {
         "vec_id", "embedding", k = 5)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
     val recalls = grid.map { np =>
-      val approx = Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-          k = 5, dims = 64, cells = 16, nprobe = np, m = 8, ks = 16,
-          shortlist = 1000000)
+      val approx = ivfPqTopK(emb, queries, nprobe = np, shortlist = 1000000)
         .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
       (exact & approx).size.toDouble / exact.size
     }
@@ -658,6 +665,29 @@ class LlmOpsSpec extends AnyFunSuite {
     // exhaustive probe + unbound shortlist degenerates to exact search
     assert(recalls.last == 1.0,
       s"nprobe=cells with unbound shortlist must recover the exact top-k, got ${recalls.last}")
+  }
+
+  test("ivfPqSearch sweep law: one search over NprobeSweep equals the union of the single-width searches") {
+    // probe sets nest, so one plan that tags each candidate with its
+    // cell's probe rank must answer every width exactly as a search at
+    // that width alone — ties, shortlist cuts and refine ranks included
+    val d = sf.replace("sf0.001", "sf0.01")
+    val emb = graft.model.Tables.embeddings(spark, d)
+    val queries = emb.filter($"vec_id" < 20)
+    val (postings, cb) = Similarity.ivfPqBuild(emb, "vec_id", "embedding",
+      dims = 64, cells = 16, m = 8, ks = 16, refineIters = 1)
+    def search(nprobes: Seq[Int]) =
+      Similarity.ivfPqSearch(postings, cb, emb, queries, "vec_id",
+          "embedding", k = 5, dims = 64, cells = 16, m = 8, nprobes)
+        .as[(Int, Long, Long, Int, Long)].collect().toSeq
+    val grid = graft.queries.LlmSimOps.NprobeSweep
+    val swept = search(grid)
+    val singles = grid.flatMap(np => search(Seq(np)))
+    assert(swept.sorted == singles.sorted,
+      s"sweep diverged from single widths: ${swept.diff(singles).take(3)} / " +
+        s"${singles.diff(swept).take(3)}")
+    assert(swept.map(_._1).distinct.sorted == grid.sorted &&
+      swept.size == grid.size * 20 * 5, s"${swept.size} rows")
   }
 
   test("sharded IVFADC build: union of independent shard encodes equals the single-pass encode") {
@@ -823,9 +853,9 @@ class LlmOpsSpec extends AnyFunSuite {
     val exact = Similarity.bruteForceTopKL2(survivors, queries,
         "vec_id", "embedding", k = 5)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-    val exhaustive = Similarity.ivfPqQuery(post, cb, emb, queries,
-        "vec_id", "embedding", k = 5, dims = 64, cells = 16, nprobe = 16,
-        m = 8, shortlist = 1000000)
+    val exhaustive = Similarity.ivfPqSearch(post, cb, emb, queries,
+        "vec_id", "embedding", k = 5, dims = 64, cells = 16, m = 8,
+        Seq(16), shortlist = 1000000)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
     assert((exact & exhaustive).size == exact.size,
       "exhaustive probe over the surviving store must recover the exact top-k")

@@ -123,6 +123,18 @@ class PlanSpec extends AnyFunSuite {
       "q_sql_tpch_q11 must read the durable partsupp, not re-derive from lineitem")
   }
 
+  test("q_ann_param_sweep answers every nprobe from one postings scan") {
+    val df = SparkEntry.queries("q_ann_param_sweep")(spark, sf)
+    df.collect()
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val postingScans = helper.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.partitionFilters.exists(_.sql.contains("kind = 'p'")) => s
+    }
+    assert(postingScans.size == 1,
+      s"expected one postings scan, got ${postingScans.size}")
+  }
+
   test("q_topk plans TakeOrderedAndProject, not a global sort") {
     val p = planOf("q_topk")
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))

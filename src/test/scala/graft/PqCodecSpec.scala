@@ -14,7 +14,7 @@ class PqCodecSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  import graft.functions.{cellAsg, cellResidual, pqCodes, pqDist2}
+  import graft.functions.{cellAsg, cellRanks, cellResidual, pqCodes, pqDist2}
 
   // deterministic 12-vector, dims=8 lattice fixture; values chosen so
   // several vectors are equidistant between centroids (tie exercise)
@@ -52,6 +52,24 @@ class PqCodecSpec extends AnyFunSuite {
     }
     // membership sanity: each seed vector assigns to itself (d = 0)
     assert(got(0L) == 0L && got(3L) == 3L && got(7L) == 7L)
+  }
+
+  test("pq_cell_ranks orders every cell by exact term, ties → lowest id; rank 0 is pq_cell_asg") {
+    // centroid 5 duplicates centroid 3: the pair ties on every vector
+    val ids = Array(0L, 3L, 5L, 7L)
+    val cents = Array(vecOf(0L), vecOf(3L), vecOf(3L), vecOf(7L))
+    val got = vecs.select($"n_id", cellRanks($"xs", ids, cents).as("r"),
+        cellAsg($"xs", ids, cents).as("a"))
+      .as[(Long, Seq[Long], Long)].collect()
+    got.foreach { case (i, r, a) =>
+      val xs = vecOf(i)
+      val want = ids.indices.map { j =>
+        (cents(j).map(v => v * v).sum -
+          2L * cents(j).indices.map(p => xs(p) * cents(j)(p)).sum, ids(j))
+      }.sorted.map(_._2)
+      assert(r == want, s"vector $i ranked $r")
+      assert(r.head == a && r.indexOf(3L) < r.indexOf(5L))
+    }
   }
 
   test("pq_cell_asg ties resolve to the lowest id (min_by struct order)") {
@@ -156,6 +174,16 @@ class PqCodecSpec extends AnyFunSuite {
       short.select(cellAsg($"xs", ids, cents)).collect()
     }
     assert(rootChain(e1).exists(_.contains("pq_cell_asg")))
+    // the residual kernel checks the same length: a short vector must not
+    // pass its missing positions through unsubtracted
+    val e0 = intercept[Exception] {
+      short.select(cellResidual($"xs", org.apache.spark.sql.functions.lit(3L), ids, cents)).collect()
+    }
+    assert(rootChain(e0).exists(_.contains("pq_residual: vector length 3")))
+    val eR = intercept[Exception] {
+      short.select(cellRanks($"xs", ids, cents)).collect()
+    }
+    assert(rootChain(eR).exists(_.contains("pq_cell_ranks: vector length 3")))
     val dsub = 4
     val subs = Array(vecOf(2L).take(dsub), vecOf(5L).take(dsub))
     val e2 = intercept[Exception] {

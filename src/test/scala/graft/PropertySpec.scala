@@ -221,6 +221,17 @@ class PropertySpec extends AnyFunSuite {
     assert(dups.isEmpty, s"keys benched twice: $dups")
   }
 
+  test("registry families must be disjoint: a key in two family maps fails") {
+    val a = Map("q_a" -> 1, "q_shared" -> 2)
+    val b = Map("q_b" -> 3, "q_shared" -> 4)
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.disjointUnion("query", Seq(a, b))
+    }
+    assert(e.getMessage.contains("q_shared"))
+    assert(SparkEntry.disjointUnion("query", Seq(a, Map("q_b" -> 3))) ==
+      Map("q_a" -> 1, "q_shared" -> 2, "q_b" -> 3))
+  }
+
   test("COVERAGE.md header key count matches the actual registry") {
     // Round-6 advice flagged silent drift between the documented count
     // and SparkEntry.queries.size — pin them together so the doc can't
