@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.Scratch
 import graft.ops.Similarity
 import GateStores.Store
@@ -149,14 +150,15 @@ object AnnIngest {
     // deliberately folds WITHOUT tombstones: band codes are
     // non-invertible and are retained as the audit trail of ingest
     // history.
-    val idx = Store(Scratch.dir(s"${ns}_idx", d), Seq("bgrp"))
-    val vec = Store(Scratch.dir(s"${ns}_vec", d), eraseKey = Some("vec_id"))
-    val post = Store(Scratch.dir(s"${ns}_post", d), Seq("cell_id"),
-      eraseKey = Some("n_id"))
+    val idx = EmbGate.idxStore(Scratch.dir(s"${ns}_idx", d))
+    val vec = EmbGate.vecStore(Scratch.dir(s"${ns}_vec", d), eraseKey = Some("vec_id"))
+    val post = Store(Scratch.dir(s"${ns}_post", d),
+      StructType.fromDDL("n_id BIGINT, sub INT, cid BIGINT, cell_id BIGINT"),
+      Seq("cell_id"), eraseKey = Some("n_id"))
     val geoDir = Scratch.dir(s"${ns}_geo", d)
-    val tombDir = Scratch.dir(s"${ns}_tomb", d)
+    val tomb = Store(Scratch.dir(s"${ns}_tomb", d), StructType.fromDDL("n_id BIGINT"))
     def tombstones(before: Long): Option[DataFrame] =
-      GateStores.readStoreOpt(s, tombDir, before)
+      GateStores.readStoreOpt(s, tomb, before)
     // the geometry froze at batch 0 and never changes, so batch-1+
     // encodes share ONE read plan per store instead of re-running
     // parquet footer inference twice per batch (r16); plain memo —
@@ -167,23 +169,26 @@ object AnnIngest {
     // id rule
     def takedown(b: GateStores.Batch): Unit =
       if (delete && b.id == DeleteAfterBatch) {
-        val tombs = GateStores.readStoreOpt(b.ss, vec.dir, b.id + 1)
+        val tombs = GateStores.readStoreOpt(b.ss, vec, b.id + 1)
           .getOrElse(throw new IllegalStateException(
             s"takedown at batch ${b.id} found an empty vector store at ${vec.dir}"))
           .filter(col("vec_id") % DeleteMod === DeleteResidue)
           .select(col("vec_id").as("n_id"))
-        GateStores.land(tombs, s"$tombDir/b${b.id}")
+        tomb.land(tombs, b.id)
       }
     // the arrival fixture is shared between the variants (read-only
     // after creation); the mutable stores are namespaced by `ns`
+    // the geometry is no batch store (its two tables land once, at
+    // batch 0), so the replay does not wipe it
+    if (wipeStores) GateStores.wipe(Seq(geoDir))
     GateStores.replay(s, ns, embs, "vec_id", Scratch.dir("ann_ingest_src", d),
-        stores = Seq(idx, vec, post, Store(geoDir), Store(tombDir)),
+        stores = Seq(idx, vec, post, tomb),
         folded = Seq(idx, vec, post), ckpt, wipeStores, crash,
         tombstones = tombstones, afterLanding = takedown) { b =>
       // ---- 1. the gate: EmbGate's exact rule, shared code; erased
       // predecessors are invisible to verification ----
       val (vecs, buckets, dupSrc) =
-        EmbGate.gateBatch(b, idx.dir, vec.dir, threshold,
+        EmbGate.gateBatch(b, idx, vec, threshold,
           bands, bitsPerBand, tombstones = tombstones(b.id))
       // rejected ids are batch-bounded — broadcast the anti-join side
       val rejected = dupSrc.select(col("vec_id"))
@@ -227,10 +232,10 @@ object AnnIngest {
         idx -> GateStores.withBandGroup(buckets),
         vec -> vecs)
     }
-    val landed = GateStores.readStoreOpt(s, post.dir)
+    val landed = GateStores.readStoreOpt(s, post)
       .getOrElse(throw new IllegalStateException(
         s"replay landed no postings: empty store at ${post.dir}"))
-      .select(col("cell_id").cast("long").as("cell_id"), col("n_id"),
+      .select(col("cell_id"), col("n_id"),
         col("sub"), col("cid"))
     // tombstoned postings are hidden even where compaction has not yet
     // physically dropped them (e.g. a run killed right after the

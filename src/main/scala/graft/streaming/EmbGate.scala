@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.Scratch
 import graft.ops.Similarity
 import GateStores.Store
@@ -34,6 +35,17 @@ import GateStores.Store
   * against the oracle's one-sentence restatement.
   */
 object EmbGate {
+  /** The band-index store [[gateBatch]] probes: SRP band codes by
+    * `vec_id`, Hive-partitioned by bucket group.
+    */
+  private[graft] def idxStore(dir: String): Store = Store(dir,
+    StructType.fromDDL("vec_id BIGINT, bucket BIGINT, bgrp INT"), Seq("bgrp"))
+
+  /** The raw-vector store [[gateBatch]] verifies against. */
+  private[graft] def vecStore(dir: String, eraseKey: Option[String] = None): Store =
+    Store(dir, StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>"),
+      eraseKey = eraseKey)
+
   /** One micro-batch of the SRP embedding gate, shared by this gate and
     * [[AnnIngest]]'s composed pipeline: band the batch, then
     * [[GateStores.dupSources]] with exact cosine. Returns (vecs,
@@ -45,15 +57,15 @@ object EmbGate {
     * (the retained band codes are non-invertible and cannot veto
     * without the vector).
     */
-  private[graft] def gateBatch(b: GateStores.Batch, idxDir: String,
-      vecDir: String, threshold: Double, bands: Int, bitsPerBand: Int,
+  private[graft] def gateBatch(b: GateStores.Batch, idx: Store,
+      vec: Store, threshold: Double, bands: Int, bitsPerBand: Int,
       tombstones: Option[DataFrame] = None)
       : (DataFrame, DataFrame, DataFrame) = {
     val vecs = b.persist(b.rows.select(col("vec_id"), col("embedding")))
     val buckets = b.persist(Similarity.srpBuckets(vecs, "vec_id", "embedding",
       bands, bitsPerBand))
     val dupSrc = GateStores.dupSources(b, vecs, buckets, "vec_id",
-      Seq("bucket"), idxDir, vecDir,
+      Seq("bucket"), idx, vec,
       Similarity.verifyCosineSides(_, _, _, "vec_id", "embedding",
         threshold, broadcastB = true),
       tombstones)
@@ -74,18 +86,18 @@ object EmbGate {
       wipeStores: Boolean, crash: Option[GateStores.Crash]): DataFrame = {
     val embs = graft.model.Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"))
-    val dec = Store(Scratch.dir("emb_gate_dec", d))
-    val idx = Store(Scratch.dir("emb_gate_idx", d), Seq("bgrp"))
-    val vec = Store(Scratch.dir("emb_gate_vec", d))
+    val dec = GateStores.decisionStore(Scratch.dir("emb_gate_dec", d), "vec_id")
+    val idx = idxStore(Scratch.dir("emb_gate_idx", d))
+    val vec = vecStore(Scratch.dir("emb_gate_vec", d))
     GateStores.replay(s, "emb_gate", embs, "vec_id",
         Scratch.dir("emb_gate_src", d), stores = Seq(dec, idx, vec),
         folded = Seq(idx, vec), ckpt, wipeStores, crash) { b =>
       val (vecs, buckets, dupSrc) =
-        gateBatch(b, idx.dir, vec.dir, threshold, bands, bitsPerBand)
+        gateBatch(b, idx, vec, threshold, bands, bitsPerBand)
       Seq(dec -> GateStores.decide(b.rows, "vec_id", dupSrc),
         idx -> GateStores.withBandGroup(buckets),
         vec -> vecs)
     }
-    GateStores.decisions(s, dec.dir, "vec_id")
+    GateStores.decisions(s, dec, "vec_id")
   }
 }

@@ -9,6 +9,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** The streaming ingest gates' ([[IngestGate]], [[EmbGate]],
@@ -46,12 +47,23 @@ private[graft] object GateStores {
   val Slices = 3
 
   /** A store a gate lands once per batch, under `dir/b<id>`, Hive-
-    * partitioned inside by `partitionCols`. `eraseKey` names the key
-    * column on which the store's folds anti-join the gate's tombstones;
-    * None keeps every row.
+    * partitioned inside by `partitionCols`. `schema` is the rows it
+    * lands, partition columns last: every read of the store uses it, so
+    * none runs Spark's footer-reading schema-inference job. `eraseKey`
+    * names the key column on which the store's folds anti-join the
+    * gate's tombstones; None keeps every row.
     */
-  final case class Store(dir: String, partitionCols: Seq[String] = Nil,
-                         eraseKey: Option[String] = None)
+  final case class Store(dir: String, schema: StructType,
+                         partitionCols: Seq[String] = Nil,
+                         eraseKey: Option[String] = None) {
+    /** Lands `df` as batch `id`; its fields must be the declared ones. */
+    def land(df: DataFrame, id: Long): Unit = {
+      def fields(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toSet
+      require(fields(df.schema) == fields(schema),
+        s"store $dir declares ${schema.toDDL}, not ${df.schema.toDDL}")
+      GateStores.land(df, s"$dir/b$id", partitionCols)
+    }
+  }
 
   /** The replay's one test seam: fail batch `batch` after every store
     * has landed, before its checkpoint commits (the worst at-least-once
@@ -107,10 +119,8 @@ private[graft] object GateStores {
       .foreachBatch { (rows: DataFrame, id: Long) =>
         val b = new Batch(rows, id, ns)
         b.label("fold")
-        inParallel(folded.map(st => () => maybeCompact(b.ss, st.dir,
-          upTo = id - 1, st.partitionCols,
-          tombstones = st.eraseKey.flatMap(_ => tombstones(id)),
-          tombstoneKey = st.eraseKey.getOrElse("n_id")): Unit))
+        inParallel(folded.map(st => () => maybeCompact(b.ss, st, upTo = id - 1,
+          tombstones = st.eraseKey.flatMap(_ => tombstones(id))): Unit))
         b.label("gate")
         val lands = gate(b)
         b.label("land")
@@ -146,7 +156,7 @@ private[graft] object GateStores {
         throw new RuntimeException(
           s"injected crash landing ${st.dir} of batch ${b.id}")
       } else () =>
-        try land(df, s"${st.dir}/b${b.id}", st.partitionCols)
+        try st.land(df, b.id)
         finally siblings.countDown()
     }
   }
@@ -182,10 +192,10 @@ private[graft] object GateStores {
     * row — so the b-side join builds on the micro-batch, not the store.
     */
   def dupSources(b: Batch, rows: DataFrame, bands: DataFrame, key: String,
-      bandCols: Seq[String], idxDir: String, storeDir: String,
+      bandCols: Seq[String], idx: Store, store: Store,
       verify: (DataFrame, DataFrame, DataFrame) => DataFrame,
       tombstones: Option[DataFrame] = None): DataFrame = {
-    val index = readStoreOpt(b.ss, idxDir, b.id)
+    val index = readStoreOpt(b.ss, idx, b.id)
       .map(_.select((key +: bandCols).map(col): _*))
     def side(df: DataFrame, as: String) =
       df.select(col(key).as(as) +: bandCols.map(col): _*)
@@ -201,19 +211,19 @@ private[graft] object GateStores {
       .filter(col("key_a") < col("key_b"))
       .select(col("key_a"), col("key_b"))
     val cands = candPrev.unionByName(candSame)
-    val aSide = readStoreOpt(b.ss, storeDir, b.id) match {
+    val aSide = readStoreOpt(b.ss, store, b.id) match {
       case None => rows
-      case Some(store0) =>
-        val store = tombstones match {
-          case Some(t) => store0.join(t.select(col("n_id").as(key)).distinct(),
+      case Some(stored) =>
+        val live = tombstones match {
+          case Some(t) => stored.join(t.select(col("n_id").as(key)).distinct(),
             Seq(key), "left_anti")
-          case None => store0
+          case None => stored
         }
         val fetched =
-          if (storeBytesBefore(storeDir, b.id) < PruneStoreBytes) store
+          if (storeBytesBefore(store.dir, b.id) < PruneStoreBytes) live
           else {
             prunedFetches.incrementAndGet(): Unit
-            store.join(
+            live.join(
               index.get.join(
                   broadcast(bands.select(bandCols.map(col): _*).distinct()),
                   bandCols, "left_semi")
@@ -235,9 +245,14 @@ private[graft] object GateStores {
       .join(broadcast(dupSrc), Seq(key), "left")
       .select(col(key), col("dup_src").isNull.as("admitted"), col("dup_src"))
 
-  /** The decisions every batch of a replay landed under `dir`. */
-  def decisions(s: SparkSession, dir: String, key: String): DataFrame =
-    s.read.parquet(existingIds(dir).map(_._2): _*).orderBy(col(key))
+  /** The store of [[decide]]'s rows, keyed by `key`. */
+  def decisionStore(dir: String, key: String): Store =
+    Store(dir, StructType.fromDDL(s"$key BIGINT, admitted BOOLEAN, dup_src BIGINT"))
+
+  /** The decisions every batch of a replay landed in `dec`. */
+  def decisions(s: SparkSession, dec: Store, key: String): DataFrame =
+    s.read.schema(dec.schema).parquet(existingIds(dec.dir).map(_._2): _*)
+      .orderBy(col(key))
 
   /** Batch subdirectories `b<id>` of a store with id < `before`, with
     * their ids, sorted NUMERICALLY by batch id — a lexicographic path
@@ -344,12 +359,12 @@ private[graft] object GateStores {
     * partition dirs, no schema-bearing file), and that is a legitimate
     * store state — a micro-batch whose gate rejects every vector
     * appends zero postings (the ~SF1 soak's batches 1-2, where every
-    * arrival is a fold near-dup of batch 0). Reading such a dir would
-    * fail schema inference; semantically it contributes nothing.
+    * arrival is a fold near-dup of batch 0); semantically it
+    * contributes nothing. Every dir is read with `schema`.
     */
-  def readBatches(ss: SparkSession,
-                  dirs: Seq[String]): DataFrame =
-    readBatchesOpt(ss, dirs).getOrElse(throw new IllegalArgumentException(
+  def readBatches(ss: SparkSession, dirs: Seq[String],
+                  schema: StructType): DataFrame =
+    readBatchesOpt(ss, dirs, schema).getOrElse(throw new IllegalArgumentException(
       s"no parquet files under any batch dir of: ${dirs.mkString(", ")}"))
 
   private def hasParquet(f: java.io.File): Boolean =
@@ -360,11 +375,11 @@ private[graft] object GateStores {
     * of failing — the compaction fold and the snapshot-aware store read
     * both have legitimate nothing-here cases.
     */
-  def readBatchesOpt(ss: SparkSession,
-                     dirs: Seq[String]): Option[DataFrame] = {
+  def readBatchesOpt(ss: SparkSession, dirs: Seq[String],
+                     schema: StructType): Option[DataFrame] = {
     val nonEmpty = dirs.filter(d => hasParquet(new java.io.File(d)))
     if (nonEmpty.isEmpty) None
-    else Some(nonEmpty.map(p => ss.read.option("basePath", p).parquet(p))
+    else Some(nonEmpty.map(p => ss.read.schema(schema).option("basePath", p).parquet(p))
       .reduce(_.unionByName(_)))
   }
 
@@ -378,9 +393,9 @@ private[graft] object GateStores {
     * fold rewrites under the identical `partitionBy`.
     */
   def readBandIndex(ss: SparkSession,
-                    idxDirs: Seq[String],
+                    idxDirs: Seq[String], schema: StructType,
                     groups: Option[Seq[Int]] = None): DataFrame =
-    pruneGroups(readBatches(ss, idxDirs), groups)
+    pruneGroups(readBatches(ss, idxDirs, schema), groups)
 
   private def pruneGroups(idx: DataFrame,
                           groups: Option[Seq[Int]]): DataFrame =
@@ -480,9 +495,9 @@ private[graft] object GateStores {
     * geometric trigger fires: tail bytes ≥ half the snapshot bytes.
     * Rewriting on a FRACTION of the snapshot keeps total compaction
     * work O(n log n) over the store's life — a fixed every-K-batches
-    * fold would be O(n²/K). `tombstones` (an `n_id`-keyed delete set;
-    * `tombstoneKey` names the STORE's key column it matches) is
-    * anti-joined out of the folded rows — physical erasure rides the
+    * fold would be O(n²/K). `tombstones` (an `n_id`-keyed delete set,
+    * matched on the store's `eraseKey`) is anti-joined out of the
+    * folded rows — physical erasure rides the
     * rewrite the store was paying anyway ([[graft.ops
     * .AnnIndexLifecycle]]'s compaction discipline applied here).
     * Returns true iff a new snapshot version landed.
@@ -504,27 +519,27 @@ private[graft] object GateStores {
     * strictly-earlier contracts are layout-independent (spec-pinned
     * for the multi-file shape).
     */
-  def maybeCompact(ss: SparkSession, dir: String,
-                   upTo: Long, partitionCols: Seq[String] = Nil,
+  def maybeCompact(ss: SparkSession, st: Store, upTo: Long,
                    tombstones: Option[DataFrame] = None,
-                   tombstoneKey: String = "n_id",
                    maxRecordsPerFile: Long = 0L): Boolean = {
+    require(tombstones.isEmpty || st.eraseKey.isDefined,
+      s"store ${st.dir} has no erase key to apply tombstones on")
+    val dir = st.dir
     val ft = foldedThrough(dir)
     val tail = existingIds(dir, before = upTo + 1).filter(_._1 > ft)
     if (tail.size < CompactMinTail) return false
     val snapBytes = snapVersions(dir).lastOption
       .map(v => storeBytes(Seq(v._2.getPath))).getOrElse(0L)
     if (2 * storeBytes(tail.map(_._2)) < snapBytes) return false
-    val t0 = System.nanoTime()
     val snap = snapVersions(dir).lastOption
-      .flatMap(v => readBatchesOpt(ss, Seq(v._2.getPath)))
-    val cur = (snap.toSeq ++ readBatchesOpt(ss, tail.map(_._2)).toSeq)
+      .flatMap(v => readBatchesOpt(ss, Seq(v._2.getPath), st.schema))
+    val cur = (snap.toSeq ++ readBatchesOpt(ss, tail.map(_._2), st.schema).toSeq)
       .reduceOption(_.unionByName(_))
     val folded = cur.map { df =>
       tombstones match {
         case Some(t) => df.join(
-          t.select(col("n_id").as(tombstoneKey)).distinct(),
-          Seq(tombstoneKey), "left_anti")
+          t.select(col("n_id").as(st.eraseKey.get)).distinct(),
+          st.eraseKey.toSeq, "left_anti")
           .select(df.columns.map(col).toIndexedSeq: _*)
         case None => df
       }
@@ -539,7 +554,7 @@ private[graft] object GateStores {
         // then pays to re-open (measured: the naive fold made the gate
         // replays ~1.5× slower end to end). `maxRecordsPerFile` then
         // re-splits oversized outputs at the writer.
-        val shaped = partitionCols match {
+        val shaped = st.partitionCols match {
           case Nil => df.coalesce(1)
           case cols => df.repartition(cols.map(col): _*)
         }
@@ -547,7 +562,7 @@ private[graft] object GateStores {
         val w0 = shaped.write.mode("overwrite")
         val w = if (maxRecordsPerFile > 0L)
           w0.option("maxRecordsPerFile", maxRecordsPerFile) else w0
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        (if (st.partitionCols.nonEmpty) w.partitionBy(st.partitionCols: _*) else w)
           .parquet(target.getPath)
       case None =>
         // every foldable dir was empty — still commit the fold so the
@@ -559,11 +574,6 @@ private[graft] object GateStores {
     // cleanup AFTER the commit point; readers ignore these either way
     wipe(tail.map(_._2))
     wipe(snapVersions(dir).dropRight(1).map(_._2.getPath))
-    // per-fold attribution (SOAK/bench triage): the fold runs inside
-    // the measured gate replay, so its seconds must be separable from
-    // probe/verify cost without an interleaved A/B
-    System.err.println(f"[gate-fold] $dir f=${tail.last._1} " +
-      f"batches=${tail.size} ${(System.nanoTime() - t0) / 1e9}%.1fs")
     true
   }
 
@@ -574,15 +584,15 @@ private[graft] object GateStores {
     * batch itself (folds stop at the previous committed batch, so this
     * can only trip on external tampering).
     */
-  def readStoreOpt(ss: SparkSession, dir: String,
+  def readStoreOpt(ss: SparkSession, st: Store,
                    before: Long = Long.MaxValue): Option[DataFrame] = {
-    val ft = foldedThrough(dir)
+    val ft = foldedThrough(st.dir)
     require(ft < before,
-      s"store at $dir folded through batch $ft, not strictly earlier than $before")
-    val snap = snapVersions(dir).lastOption
-      .flatMap(v => readBatchesOpt(ss, Seq(v._2.getPath)))
+      s"store at ${st.dir} folded through batch $ft, not strictly earlier than $before")
+    val snap = snapVersions(st.dir).lastOption
+      .flatMap(v => readBatchesOpt(ss, Seq(v._2.getPath), st.schema))
     val tail = readBatchesOpt(ss,
-      existingIds(dir, before).filter(_._1 > ft).map(_._2))
+      existingIds(st.dir, before).filter(_._1 > ft).map(_._2), st.schema)
     (snap.toSeq ++ tail.toSeq).reduceOption(_.unionByName(_))
   }
 

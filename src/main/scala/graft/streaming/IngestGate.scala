@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.shingleHashes
 import graft.model.Scratch
 import graft.ops.{Dedup, Par}
@@ -50,9 +51,11 @@ object IngestGate {
       ckpt: String, wipeStores: Boolean,
       crash: Option[GateStores.Crash]): DataFrame = {
     val docs = graft.model.Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val dec = Store(Scratch.dir("ingest_gate_dec", d))
-    val idx = Store(Scratch.dir("ingest_gate_idx", d), Seq("bgrp"))
-    val sh = Store(Scratch.dir("ingest_gate_sh", d))
+    val dec = GateStores.decisionStore(Scratch.dir("ingest_gate_dec", d), "doc_id")
+    val idx = Store(Scratch.dir("ingest_gate_idx", d),
+      StructType.fromDDL("doc_id BIGINT, band INT, bucket BIGINT, bgrp INT"), Seq("bgrp"))
+    val sh = Store(Scratch.dir("ingest_gate_sh", d),
+      StructType.fromDDL("doc_id BIGINT, sh ARRAY<BIGINT>"))
     GateStores.replay(s, "ingest_gate", docs, "doc_id",
         Scratch.dir("ingest_gate_src", d), stores = Seq(dec, idx, sh),
         folded = Seq(idx, sh), ckpt, wipeStores, crash) { b =>
@@ -64,12 +67,12 @@ object IngestGate {
       val sigs = Dedup.minhashSignatures(withSh, "doc_id", 32)
       val bands = b.persist(Dedup.bandBuckets(sigs, "doc_id", 32, 2))
       val dupSrc = GateStores.dupSources(b, withSh, bands, "doc_id",
-        Seq("band", "bucket"), idx.dir, sh.dir,
+        Seq("band", "bucket"), idx, sh,
         Dedup.verifyJaccardSides(_, _, _, "doc_id", 0.5, broadcastB = true))
       Seq(dec -> GateStores.decide(b.rows, "doc_id", dupSrc),
         idx -> GateStores.withBandGroup(bands),
         sh -> withSh)
     }
-    GateStores.decisions(s, dec.dir, "doc_id")
+    GateStores.decisions(s, dec, "doc_id")
   }
 }

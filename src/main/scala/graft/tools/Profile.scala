@@ -9,6 +9,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, GraftRelationalBridge, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SortExec}
@@ -26,14 +27,20 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * noop sink) pays one-time derivations and codegen; three warm runs do
   * the same, the first recorded by Spark's own listeners, and
   * `construct_s`/`full_s` are their medians (one warm run still reads
-  * JIT warm-up); a warm `count()` is timed only. Fields are named after
+  * JIT warm-up); a warm `count()` is timed only. `codegen.classes`
+  * counts the classes Spark compiles in the cold run (the key's working
+  * set beyond what earlier keys left in the JVM's codegen cache), and
+  * `codegen.recompiles` those compiled again in the three warm runs,
+  * 0 while the cache holds the set (a streaming query's task-side
+  * classes compile again on each query start). Fields are named after
   * perfbench's per-layer metrics, so a record diffs against a traced
   * bench run; `exec.task_busy_s` over `cores` is the key's compute
   * floor, and `jobs` groups the jobs by description, else by their
   * query's action, else by their own. A `_derive_*` key
   * ([[graft.SparkEntry.derives]]) derives once per JVM, so it has no
   * cold run: its one recorded run is the derivation (list it before
-  * any key that reads its table); its `count_s` reads through.
+  * any key that reads its table), whose classes are its
+  * `codegen.classes`; its `count_s` reads through.
   */
 object Profile extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
@@ -70,8 +77,11 @@ object Profile extends AdaptiveSparkPlanHelper {
     var rec = SeqMap[String, Any]("key" -> key,
       "cores" -> spark.sparkContext.defaultParallelism)
     val r = new Recorder(spark)
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
+      val c0 = compiled()
       if (derive.isEmpty) rec += "cold_s" -> seconds(land(build()))
+      val c1 = compiled()
       def warm(): (Double, Double) = {
         dropBlocks(spark)
         var df: Option[DataFrame] = None
@@ -84,8 +94,11 @@ object Profile extends AdaptiveSparkPlanHelper {
       val layers = r.stop()
       val runs = first +: (if (derive.isEmpty) Seq.fill(2)(warm()) else Nil)
       def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+      val c2 = compiled()
       rec ++= Seq("construct_s" -> median(runs.map(_._1)),
-        "full_s" -> median(runs.map(_._2)))
+        "full_s" -> median(runs.map(_._2)),
+        "codegen.classes" -> (if (derive.isEmpty) c1 - c0 else c2 - c1),
+        "codegen.recompiles" -> (if (derive.isEmpty) c2 - c1 else 0L))
       r.lastPlan.foreach(qe => java.nio.file.Files.writeString(
         new File(planDir, s"$key.plan.txt").toPath,
         qe.explainString(ExplainMode.fromString("formatted"))))

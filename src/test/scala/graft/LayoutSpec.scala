@@ -278,7 +278,8 @@ class LayoutSpec extends AnyFunSuite {
     assert(grpDirs.length == GateStores.BandGroups,
       s"expected ${GateStores.BandGroups} group directories, got ${grpDirs.length}")
     // a narrow probe (two groups) reads 2/16 of the index files
-    val narrow = GateStores.readBandIndex(spark, Seq(dir), Some(Seq(3, 7)))
+    val schema = graft.streaming.EmbGate.idxStore(dir).schema
+    val narrow = GateStores.readBandIndex(spark, Seq(dir), schema, Some(Seq(3, 7)))
     assert(narrow.select($"vec_id").as[Long].collect().toSet ==
       (0L until 160L).filter(i => i % 16 == 3 || i % 16 == 7).toSet)
     val plan = narrow.queryExecution.executedPlan.toString
@@ -286,19 +287,19 @@ class LayoutSpec extends AnyFunSuite {
       "PartitionFilters: \\[[^\\]]*bgrp".r.findFirstIn(plan).isDefined,
       s"expected a bgrp partition filter:\n${plan.take(2500)}")
     // a full-coverage probe (None) applies no filter — the gates' case
-    assert(GateStores.readBandIndex(spark, Seq(dir), None).count() == 160L)
+    assert(GateStores.readBandIndex(spark, Seq(dir), schema, None).count() == 160L)
 
     // an ALL-REJECTED batch lands an EMPTY partitioned store (just a
     // _SUCCESS marker, no schema-bearing file — the ~SF1 soak's
-    // batches 1-2); readBatches must skip it instead of failing schema
-    // inference, and the union still carries the non-empty batches
+    // batches 1-2); readBatches must skip it, and the union still
+    // carries the non-empty batches
     val emptyDir = tmp("band_idx_empty") + "/b1"
     GateStores.land(
       GateStores.withBandGroup(buckets).filter($"vec_id" < 0),
       emptyDir, partitionCols = Seq("bgrp"))
     assert(!new java.io.File(emptyDir).listFiles()
       .exists(_.getName.endsWith(".parquet")))
-    assert(GateStores.readBatches(spark, Seq(dir, emptyDir)).count() == 160L)
+    assert(GateStores.readBatches(spark, Seq(dir, emptyDir), schema).count() == 160L)
   }
 
   test("z-ordered layout bounds per-file ranges in BOTH dimensions") {

@@ -642,6 +642,7 @@ class PlanSpec extends AnyFunSuite {
       assert(num(filter, "exec.jobs") >= 1, filter)
       assert(num(filter, "exec.tasks") >= num(filter, "exec.jobs"), filter)
       assert(num(filter, "plans.queries") >= 1, filter)
+      assert(num(filter, "codegen.recompiles") == 0, filter)
       Seq("analysis", "optimization", "planning").foreach(p =>
         assert(num(filter, s"plans.${p}_ms") >= 0, filter))
       val df = SparkEntry.queries("q_filter_eq")(spark, sf)
@@ -665,6 +666,43 @@ class PlanSpec extends AnyFunSuite {
       dir.listFiles.foreach(_.delete)
       dir.delete()
     }
+  }
+
+  test("the codegen cache holds a working set past Spark's default of 100 classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    // the session comes first: the cache takes its size from the session
+    // active when it is first touched
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Graft.CodegenCacheEntries.toString)
+    // empty the JVM-wide cache, so the cold round compiles the set's
+    // whole working set whatever earlier suites left in it
+    val cacheOf = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cacheOf.setAccessible(true)
+    val cache = cacheOf.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    // the perfbench `analytics` keys plus the ingest gate
+    val gate = "q_stream_ingest_gate"
+    val keys = Seq("q_filter_eq", "q_project", "q_groupby_agg", "q_count_distinct",
+      "q_rollup", "q_broadcast_join", "q_join_inner", "q_join_asof", "q_join_salted",
+      "q_window_rank", "q_window_running", "q_topk", "q_union", "q_collect_struct",
+      "q_json_funcs", "q_upsert_merge", "q_sql_tpch_q3", "q_expr_laptime", gate)
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def round(): Map[String, Long] = keys.map { k =>
+      val c0 = compiled()
+      SparkEntry.queries(k)(spark, sf).write.format("noop").mode("overwrite").save()
+      k -> (compiled() - c0)
+    }.toMap
+    val cold = round()
+    assert(cold.values.sum > 100, s"the set compiles only $cold: not past the default cache")
+    val warm = round()
+    assert(warm.removed(gate).values.forall(_ == 0),
+      s"a warm round compiled classes again: $warm")
+    // each replay starts a streaming query on a cloned session, and Spark
+    // gives every session its own executor class loader, which is part of
+    // the cache key: the gate's task-side classes (~40 here) compile again
+    // on every replay at any cache size; its driver-side ones do not
+    assert(warm(gate) <= 50 && warm(gate) < cold(gate), s"gate: $warm vs $cold")
   }
 
   test("join strategy hints steer the physical join as documented") {

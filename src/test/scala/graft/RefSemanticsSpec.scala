@@ -5,7 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Expressions, Sinks}
 
-/** Shared local session for all suites (one JVM per `sbt test` fork). */
+/** Shared local session for all suites (one JVM per `sbt test` fork).
+  * The codegen cache is one object per JVM, sized by the first session
+  * that compiles, so this session sets the engine's size too.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -13,6 +16,7 @@ object TestSpark {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", Graft.CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

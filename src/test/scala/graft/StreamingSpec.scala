@@ -1044,7 +1044,8 @@ class StreamingSpec extends AnyFunSuite {
     // non-invertible audit trail of ingest history (the documented
     // erasure boundary); pin it so a future edit can't silently flip it
     val idxDir = graft.model.Scratch.dir("ann_ingest_del_idx", sf)
-    val idxStore = graft.streaming.GateStores.readStoreOpt(spark, idxDir).get
+    val idxStore = graft.streaming.GateStores.readStoreOpt(spark,
+      graft.streaming.EmbGate.idxStore(idxDir)).get
     assert(idxStore.select($"vec_id").as[Long].collect().exists(dead),
       "band codes of deleted ids are the retained (non-invertible) audit trail")
     // the quantified retention boundary (r16, VERDICT r15 #8): what the
@@ -1097,24 +1098,24 @@ class StreamingSpec extends AnyFunSuite {
     def batch(id: Long, vecId: Long) = new graft.streaming.GateStores.Batch(
       Seq((vecId, v)).toDF("vec_id", "embedding"), id, "erase_sem")
     val b0 = batch(0L, 1L)
+    val idx = graft.streaming.EmbGate.idxStore(idxDir)
+    val vec = graft.streaming.EmbGate.vecStore(vecDir)
     val (vecs0, buckets0, dup0) = graft.streaming.EmbGate.gateBatch(
-      b0, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8)
+      b0, idx, vec, threshold = 0.9, bands = 96, bitsPerBand = 8)
     assert(dup0.count() == 0L, "first arrival has no predecessor")
-    graft.streaming.GateStores.land(
-      graft.streaming.GateStores.withBandGroup(buckets0),
-      s"$idxDir/b0", partitionCols = Seq("bgrp"))
-    graft.streaming.GateStores.land(vecs0, s"$vecDir/b0")
+    idx.land(graft.streaming.GateStores.withBandGroup(buckets0), 0L)
+    vec.land(vecs0, 0L)
     b0.release()
     val b1 = batch(1L, 2L)
     val (_, _, live) = graft.streaming.EmbGate.gateBatch(
-      b1, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8)
+      b1, idx, vec, threshold = 0.9, bands = 96, bitsPerBand = 8)
     assert(live.as[(Long, Long)].collect().toSeq == Seq((2L, 1L)),
       "a LIVE identical predecessor must reject the re-upload")
     b1.release()
     val tombs = Seq(1L).toDF("n_id")
     val b1again = batch(1L, 2L)
     val (_, _, erased) = graft.streaming.EmbGate.gateBatch(
-      b1again, idxDir, vecDir, threshold = 0.9, bands = 96, bitsPerBand = 8,
+      b1again, idx, vec, threshold = 0.9, bands = 96, bitsPerBand = 8,
       tombstones = Some(tombs))
     assert(erased.count() == 0L,
       "an ERASED predecessor cannot veto — the re-upload is admitted")
@@ -1127,15 +1128,16 @@ class StreamingSpec extends AnyFunSuite {
     // Schedule exactly that — fold, THEN takedown, then fold again —
     // and walk every parquet file under the store.
     val dir = graft.model.Scratch.dir("retention_walk", "/root/testdata/sf0.001")
+    val st = graft.streaming.GateStores.Store(dir,
+      org.apache.spark.sql.types.StructType.fromDDL("n_id BIGINT"), eraseKey = Some("n_id"))
     graft.streaming.GateStores.wipe(Seq(dir))
-    def land(id: Long, ids: Seq[Long]): Unit =
-      graft.streaming.GateStores.land(ids.toDF("n_id"), s"$dir/b$id")
+    def land(id: Long, ids: Seq[Long]): Unit = st.land(ids.toDF("n_id"), id)
     land(0, Seq(1L, 2L, 3L)); land(1, Seq(4L, 5L, 6L))
-    assert(graft.streaming.GateStores.maybeCompact(spark, dir, upTo = 1),
+    assert(graft.streaming.GateStores.maybeCompact(spark, st, upTo = 1),
       "the pre-takedown fold must fire (snap/f=1 holds ids 1..6)")
     land(2, Seq(7L, 8L)); land(3, Seq(9L, 10L))
     val tombs = Seq(3L, 9L).toDF("n_id")
-    assert(graft.streaming.GateStores.maybeCompact(spark, dir, upTo = 3,
+    assert(graft.streaming.GateStores.maybeCompact(spark, st, upTo = 3,
       tombstones = Some(tombs)), "the tombstone fold must fire")
     assert(!new java.io.File(s"$dir/snap/f=1").exists(),
       "keepVersions=1: the pre-takedown snapshot (which held id 3) must be deleted")
@@ -1150,7 +1152,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(leaked.isEmpty,
         s"file ${pf.getPath} still holds tombstoned rows: $leaked")
     }
-    assert(graft.streaming.GateStores.readStoreOpt(spark, dir).get
+    assert(graft.streaming.GateStores.readStoreOpt(spark, st).get
         .as[Long].collect().toSet == Set(1L, 2L, 4L, 5L, 6L, 7L, 8L, 10L),
       "the folded store must serve exactly the survivors")
   }
@@ -1161,25 +1163,25 @@ class StreamingSpec extends AnyFunSuite {
     // multi-file snapshot still satisfies fold-≡-unfolded and the
     // strictly-earlier guard.
     val dir = graft.model.Scratch.dir("fold_sizing", "/root/testdata/sf0.001")
+    val st = graft.streaming.GateStores.Store(dir,
+      org.apache.spark.sql.types.StructType.fromDDL("n_id BIGINT"))
     graft.streaming.GateStores.wipe(Seq(dir))
-    graft.streaming.GateStores.land(
-      (0L until 100L).toDF("n_id"), s"$dir/b0")
-    graft.streaming.GateStores.land(
-      (100L until 200L).toDF("n_id"), s"$dir/b1")
-    val unfolded = graft.streaming.GateStores.readStoreOpt(spark, dir).get
+    st.land((0L until 100L).toDF("n_id"), 0L)
+    st.land((100L until 200L).toDF("n_id"), 1L)
+    val unfolded = graft.streaming.GateStores.readStoreOpt(spark, st).get
       .as[Long].collect().toSet
-    assert(graft.streaming.GateStores.maybeCompact(spark, dir, upTo = 1,
+    assert(graft.streaming.GateStores.maybeCompact(spark, st, upTo = 1,
       maxRecordsPerFile = 50L))
     val snapFiles = new java.io.File(s"$dir/snap/f=1").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(snapFiles.length >= 4,
       s"200 rows at maxRecordsPerFile=50 must land >=4 files, got ${snapFiles.length}")
-    assert(graft.streaming.GateStores.readStoreOpt(spark, dir).get
+    assert(graft.streaming.GateStores.readStoreOpt(spark, st).get
         .as[Long].collect().toSet == unfolded,
       "a multi-file fold must serve exactly the unfolded rows")
     // strictly-earlier: a probe at/below the folded-through id refuses
     intercept[IllegalArgumentException] {
-      graft.streaming.GateStores.readStoreOpt(spark, dir, before = 1L)
+      graft.streaming.GateStores.readStoreOpt(spark, st, before = 1L)
     }
   }
 
