@@ -33,8 +33,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param name scratch-path key, unique per derived table
   * @param partitionCols optional Hive partition columns for the
   *   snapshot layout — readers filtering on them prune whole files
-  *   (the ANN index partitions postings by cell so a probe opens
-  *   ~nprobe/cells of the files)
+  *   (the ANN index partitions postings by cell: a small query batch
+  *   opens ~nprobe/cells of the files, while a batch whose probes
+  *   cover every cell, like the registry's 20 queries × nprobe 4 over
+  *   16 cells, opens them all)
   */
 final class DurableTable(name: String, partitionCols: Seq[String] = Nil) {
   private val cache =

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -141,11 +143,10 @@ object Sinks {
       // columns prune whole files at planning time (the writePartitioned
       // rationale applied to versioned tables)
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(s"$path/v=$version")
+        .parquet(versionDir(path, version))
       val qualified = fs.makeQualified(hPath)
       val tmp = new org.apache.hadoop.fs.Path(qualified, "_LATEST.tmp")
-      val out = fs.create(tmp, true)
-      out.write(version.toString.getBytes("UTF-8")); out.close()
+      Using.resource(fs.create(tmp, true))(_.write(version.toString.getBytes("UTF-8")))
       // One ATOMIC overwriting rename (FileContext + Rename.OVERWRITE),
       // not delete-then-rename: a crash or concurrent reader between a
       // delete and a rename would observe NO pointer — under which a
@@ -172,11 +173,8 @@ object Sinks {
     val p = new org.apache.hadoop.fs.Path(path, "_LATEST")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
-      val in = fs.open(p)
-      val s = new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-      in.close()
-      Some(s.toLong)
+      Some(Using.resource(fs.open(p))(in => new String(
+        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong))
     } else {
       val dir = new org.apache.hadoop.fs.Path(path)
       if (!fs.exists(dir)) None
@@ -195,8 +193,11 @@ object Sinks {
                     version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, path)).getOrElse(
       throw new IllegalStateException(s"no committed version at $path"))
-    spark.read.parquet(s"$path/v=$v")
+    spark.read.parquet(versionDir(path, v))
   }
+
+  /** The dir of snapshot `version` of the versioned table at `path`. */
+  def versionDir(path: String, version: Long): String = s"$path/v=$version"
 
   /** Drop all snapshots older than `keep` versions behind latest. */
   def vacuumVersions(spark: org.apache.spark.sql.SparkSession, path: String,

@@ -56,8 +56,8 @@ import GateStores.Store
   * in bits: a vector's band rows carry bands × bitsPerBand sign bits
   * (the registry's gate: 96 × 8 = 768 bits) versus the dims × 32-bit
   * floats erased (64 × 32 = 2048 bits) — and the band-index SCHEMA
-  * has no vector-valued column at all (`(vec_id, bucket)` + the
-  * `bgrp` partition; spec-pinned in StreamingSpec), so no residual or
+  * has no vector-valued column at all (`(vec_id, bucket)`, spec-pinned
+  * in StreamingSpec), so no residual or
   * coordinate of the erased vector exists anywhere in the surviving
   * store. Each retained bit is the SIGN of the dot product against a
   * fixed public hyperplane ([[graft.functions.SrpBands]]): the exact
@@ -229,7 +229,7 @@ object AnnIngest {
       // postings partitioned by cell: the inverted-list layout — a
       // reader probing nprobe cells opens nprobe/cells of the files
       Seq(post -> postings,
-        idx -> GateStores.withBandGroup(buckets),
+        idx -> buckets,
         vec -> vecs)
     }
     val landed = GateStores.readStoreOpt(s, post)

@@ -36,10 +36,11 @@ import GateStores.Store
   */
 object EmbGate {
   /** The band-index store [[gateBatch]] probes: SRP band codes by
-    * `vec_id`, Hive-partitioned by bucket group.
+    * `vec_id`, one unpartitioned file per landing and per fold — every
+    * probe reads the whole index.
     */
   private[graft] def idxStore(dir: String): Store = Store(dir,
-    StructType.fromDDL("vec_id BIGINT, bucket BIGINT, bgrp INT"), Seq("bgrp"))
+    StructType.fromDDL("vec_id BIGINT, bucket BIGINT"))
 
   /** The raw-vector store [[gateBatch]] verifies against. */
   private[graft] def vecStore(dir: String, eraseKey: Option[String] = None): Store =
@@ -95,7 +96,7 @@ object EmbGate {
       val (vecs, buckets, dupSrc) =
         gateBatch(b, idx, vec, threshold, bands, bitsPerBand)
       Seq(dec -> GateStores.decide(b.rows, "vec_id", dupSrc),
-        idx -> GateStores.withBandGroup(buckets),
+        idx -> buckets,
         vec -> vecs)
     }
     GateStores.decisions(s, dec, "vec_id")

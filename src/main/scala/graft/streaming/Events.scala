@@ -535,8 +535,6 @@ object Events {
     * harness choice (results are purchase-count-sized); a production
     * replay lands in a real sink via [[foreachBatchUpsert]].
     */
-  private val replayLock = new Object
-
   def replayAsOfWatermarked(s: SparkSession, d: String): DataFrame = {
     val ev = graft.model.Tables.events(s, d)
       .filter(col("event_type").isin("view", "purchase"))
@@ -565,37 +563,19 @@ object Events {
     // equal the batch as-of verdict for ANY arrival plan inside the
     // delay.
     val slices = 6
-    val replayDir = new java.io.File(graft.model.Scratch.dir("stream_replay", d))
-    replayDir.mkdirs()
-    // The slice files are a pure function of the (immutable) events
-    // table, so land them once per dir and let repeated replays pay
-    // only the stream itself — the marker commits AFTER the last move
-    // (so a half-written set is never trusted) and carries the time
-    // bounds, so re-runs skip the full-table min/max scan too.
-    val ready = new java.io.File(replayDir, "_REPLAY_READY")
-    val (lo, hi) = replayLock.synchronized {
-      if (ready.exists()) {
-        val Array(l, h) = java.nio.file.Files
-          .readString(ready.toPath).trim.split(" ")
-        (l.toLong, h.toLong)
-      } else {
-        val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-          max(unix_micros(col("ts"))).as("hi")).first()
-        (b.getLong(0), b.getLong(1))
-      }
-    }
-    val width = (hi - lo) / slices + 1L
-    val delaySec = (5L * width) / 1000000L + 1L
-    replayLock.synchronized { if (!ready.exists()) {
+    def width(lo: Long, hi: Long) = (hi - lo) / slices + 1L
+    def delaySec(lo: Long, hi: Long) = (5L * width(lo, hi)) / 1000000L + 1L
+    def files(lo: Long, hi: Long): Seq[DataFrame] = {
       def slice(i: Int): DataFrame = ev.filter(
-        ((unix_micros(col("ts")) - lo) / width).cast("int") === i)
+        ((unix_micros(col("ts")) - lo) / width(lo, hi)).cast("int") === i)
       def sentinel(us: Long, id: Long) = ev.limit(0).unionByName(
         s.range(1).select(lit(id).as("event_id"),
           expr(s"timestamp_micros(${us}L)").as("ts"),
           lit(-1L).as("user_id"), lit("view").as("event_type"),
           lit(0.0).as("value"), lit("{}").as("props")))
-      val sentinelA = sentinel(hi + delaySec * 1000000L + 1000000L, -1L)
-      val sentinelB = sentinel(hi + 2L * delaySec * 1000000L + 2000000L, -2L)
+      val delay = delaySec(lo, hi)
+      val sentinelA = sentinel(hi + delay * 1000000L + 1000000L, -1L)
+      val sentinelB = sentinel(hi + 2L * delay * 1000000L + 2000000L, -2L)
       // One file per micro-batch; the logical arrival order 1,0,3,2,5,4
       // packed so every swapped pair crosses a batch boundary. Sentinel
       // A rides with the last data file (it advances the watermark past
@@ -603,27 +583,25 @@ object Events {
       // following data batch in which the now-flushable purchases emit
       // — so the flush still never depends on no-data-batch/timer
       // scheduling semantics.
-      val batches: Seq[DataFrame] = Seq(
+      Seq(
         slice(1).unionByName(slice(3)),
         slice(0).unionByName(slice(2)).unionByName(slice(5)),
         slice(4).unionByName(sentinelA),
         sentinelB)
-      val tmp = new java.io.File(replayDir, "_stage")
-      batches.zipWithIndex.foreach { case (df, pos) =>
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(replayDir, f"evt_$pos%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // FileStreamSource consumes in modification-time order — pin it
-        dst.setLastModified((pos + 1) * 60000L): Unit
-      }
-      java.nio.file.Files.writeString(ready.toPath, s"$lo $hi"): Unit
-    } }
+    }
+    // The slice files are a pure function of the (immutable) events
+    // table, so land them once per dir and let repeated replays pay
+    // only the stream itself — the marker carries the time bounds, so
+    // re-runs skip the full-table min/max scan too.
+    val replayDir = graft.model.Scratch.dir("stream_replay", d)
+    val Array(lo, hi) = GateStores.landFixture(replayDir, "_REPLAY_READY", "evt") {
+      val b = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).first()
+      (s"${b.getLong(0)} ${b.getLong(1)}", files(b.getLong(0), b.getLong(1)))
+    }.trim.split(" ").map(_.toLong)
     import s.implicits._
     val stream = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(replayDir.getPath + "/evt_*.parquet")
+      .parquet(replayDir + "/evt_*.parquet")
       .as[EventRow]
     val qname = "asof_wm_replay_" + java.util.UUID.randomUUID().toString.take(8)
     // The checkpoint is per-invocation scratch (rm'd below, never read
@@ -676,7 +654,7 @@ object Events {
         s.conf.set("spark.sql.shuffle.partitions", "4")
         s.conf.set(noDataKey, "false")
         s.conf.set(wscgKey, "false")
-        asofEnrichWatermarked(stream, delay = s"$delaySec seconds")
+        asofEnrichWatermarked(stream, delay = s"${delaySec(lo, hi)} seconds")
           .writeStream.format("memory").queryName(qname)
           .outputMode("append")
           .option("checkpointLocation", ckpt)

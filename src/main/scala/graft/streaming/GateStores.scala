@@ -6,11 +6,12 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import graft.ops.Sinks
 
 /** The streaming ingest gates' ([[IngestGate]], [[EmbGate]],
   * [[AnnIngest]]) one replay driver and the store contract it runs.
@@ -29,12 +30,14 @@ import org.apache.spark.storage.StorageLevel
   * resumes to identical stores (StreamingSpec pins both across a
   * checkpoint restart).
   *
-  * The settled prefix of the batch dirs folds into a versioned SNAPSHOT
-  * (`snap/f=<foldedThrough>`, see [[maybeCompact]]) and reads go
+  * The settled prefix of the batch dirs folds into a SNAPSHOT, a
+  * [[graft.ops.Sinks]] versioned table under `snap/` whose version is
+  * the folded-through batch id (see [[maybeCompact]]), and reads go
   * through [[readStoreOpt]] = snapshot + live tail — so a long-running
   * gate's probe plan stays O(tail), not O(all batches ever), and the
   * per-batch contract above is unchanged (folds stop at the last
-  * committed batch).
+  * committed batch). Every store but the `cell_id`-partitioned ANN
+  * postings lands and folds as one unpartitioned file.
   */
 private[graft] object GateStores {
 
@@ -109,7 +112,7 @@ private[graft] object GateStores {
       tombstones: Long => Option[DataFrame] = _ => None,
       afterLanding: Batch => Unit = _ => ())(
       gate: Batch => Seq[(Store, DataFrame)]): Unit = {
-    landSliceFixture(src, key, new java.io.File(srcDir))
+    landSliceFixture(src, key, srcDir)
     if (wipeStores) wipe(stores.map(_.dir))
     val query = s.readStream.schema(src.schema)
       .option("maxFilesPerTrigger", "1")
@@ -220,7 +223,7 @@ private[graft] object GateStores {
           case None => stored
         }
         val fetched =
-          if (storeBytesBefore(store.dir, b.id) < PruneStoreBytes) live
+          if (storeBytes(visibleDirs(b.ss, store.dir, b.id)) < PruneStoreBytes) live
           else {
             prunedFetches.incrementAndGet(): Unit
             live.join(
@@ -322,8 +325,8 @@ private[graft] object GateStores {
 
   /** Per-batch store landing, one file (a micro-batch here is thousands
     * of rows, where 32 shuffle partitions of task-commit overhead would
-    * dominate). `partitionCols` lands a Hive layout inside the batch dir
-    * so later probes can prune at the FILE level (see [[readBandIndex]]).
+    * dominate); `partitionCols` lands a Hive layout inside the batch dir
+    * (the ANN postings' `cell_id`, which index reads prune by).
     */
   def land(df: DataFrame, path: String,
            partitionCols: Seq[String] = Nil): Unit = {
@@ -332,48 +335,23 @@ private[graft] object GateStores {
       .parquet(path)
   }
 
-  /** Bucket-group count for the partitioned band-index layout: each
-    * batch's index dir is Hive-partitioned by `bgrp = bucket mod 16`, so
-    * a probe that touches few groups (a point lookup, a skewed trickle
-    * batch) reads ~groups/16 of the index FILES instead of scanning and
-    * join-pruning everything — the file-level half of the pruning the
-    * bucket equi-join already does logically. 16 groups keeps the
-    * per-batch landing at 16 files (modest) while giving 16× best-case
-    * scan pruning; a 100 TB deployment would size it to its file-size
-    * targets.
-    */
-  val BandGroups = 16
-
-  /** The band-index rows with their partition group attached. */
-  def withBandGroup(buckets: DataFrame): DataFrame =
-    buckets.withColumn("bgrp", pmod(col("bucket"), lit(BandGroups)).cast("int"))
-
-  /** Read a set of per-batch store dirs, each possibly Hive-partitioned
-    * inside: one read per batch dir (its own `basePath`) unioned by
-    * name — a single multi-path read would reject the mixed
-    * `b<id>/bgrp=…` directory depths as conflicting partition
-    * structures.
-    *
-    * Batch dirs holding NO parquet files are skipped: a partitioned
-    * write of an EMPTY frame lands only a `_SUCCESS` marker (no
-    * partition dirs, no schema-bearing file), and that is a legitimate
-    * store state — a micro-batch whose gate rejects every vector
-    * appends zero postings (the ~SF1 soak's batches 1-2, where every
-    * arrival is a fold near-dup of batch 0); semantically it
-    * contributes nothing. Every dir is read with `schema`.
-    */
-  def readBatches(ss: SparkSession, dirs: Seq[String],
-                  schema: StructType): DataFrame =
-    readBatchesOpt(ss, dirs, schema).getOrElse(throw new IllegalArgumentException(
-      s"no parquet files under any batch dir of: ${dirs.mkString(", ")}"))
-
   private def hasParquet(f: java.io.File): Boolean =
     (f.isFile && f.getName.endsWith(".parquet")) ||
       (f.isDirectory && f.listFiles().exists(hasParquet))
 
-  /** [[readBatches]] that reports an all-empty dir set as None instead
-    * of failing — the compaction fold and the snapshot-aware store read
-    * both have legitimate nothing-here cases.
+  /** Read a set of store dirs (batch dirs, a snapshot version), each
+    * possibly Hive-partitioned inside: one read per dir (its own
+    * `basePath`) unioned by name — a single multi-path read would
+    * reject the mixed `b<id>/cell_id=…` directory depths as conflicting
+    * partition structures. Every dir is read with `schema`.
+    *
+    * Dirs holding NO parquet files are skipped, and an all-empty set
+    * is None: a partitioned write of an EMPTY frame lands only a
+    * `_SUCCESS` marker (no partition dirs, no schema-bearing file), and
+    * that is a legitimate store state — a micro-batch whose gate
+    * rejects every vector appends zero postings (the ~SF1 soak's
+    * batches 1-2, where every arrival is a fold near-dup of batch 0);
+    * semantically it contributes nothing.
     */
   def readBatchesOpt(ss: SparkSession, dirs: Seq[String],
                      schema: StructType): Option[DataFrame] = {
@@ -382,28 +360,6 @@ private[graft] object GateStores {
     else Some(nonEmpty.map(p => ss.read.schema(schema).option("basePath", p).parquet(p))
       .reduce(_.unionByName(_)))
   }
-
-  /** Read the accumulated band index, pruned at the file level to the
-    * probe's bucket groups when given (a narrow probe — a point lookup
-    * or trickle batch — reads ~|groups|/16 of the index FILES;
-    * LayoutSpec counts the pruned files). The replay gates read the
-    * whole index ([[readStoreOpt]]): a corpus-slice batch always covers
-    * every group, so computing the group set per batch would pay a job
-    * to prune nothing. The bgrp layout survives compaction because the
-    * fold rewrites under the identical `partitionBy`.
-    */
-  def readBandIndex(ss: SparkSession,
-                    idxDirs: Seq[String], schema: StructType,
-                    groups: Option[Seq[Int]] = None): DataFrame =
-    pruneGroups(readBatches(ss, idxDirs, schema), groups)
-
-  private def pruneGroups(idx: DataFrame,
-                          groups: Option[Seq[Int]]): DataFrame =
-    groups match {
-      case Some(g) if g.size < BandGroups =>
-        idx.filter(col("bgrp").isin(g.map(Integer.valueOf): _*))
-      case _ => idx
-    }
 
   /** Total bytes under a store's batch directories — a driver-side
     * METADATA read (file lengths only), the cutover signal for
@@ -445,47 +401,42 @@ private[graft] object GateStores {
   val prunedFetches = new java.util.concurrent.atomic.AtomicLong(0L)
 
   // ------------------------------------------------------------------
-  // Snapshot compaction (r14, VERDICT r13 #2): unbounded micro-batches
-  // previously meant one `b<id>` dir per batch FOREVER — a driver-side
-  // listing plus an N-way union plan per probe. Settled batches now
-  // fold into a SNAPSHOT while recent batches stay as a tail:
+  // Snapshot compaction: unbounded micro-batches would otherwise mean
+  // one `b<id>` dir per batch FOREVER — a driver-side listing plus an
+  // N-way union plan per probe. Settled batches fold into a SNAPSHOT
+  // while recent batches stay as a tail:
   //
-  //   dir/snap/f=<id>/   all rows of batches 0..<id>, one table,
+  //   dir/snap/v=<id>/   all rows of batches 0..<id>, one table, the
   //                      same partition layout as the batch dirs
+  //   dir/snap/_LATEST   the committed version ([[graft.ops.Sinks]])
   //   dir/b<j>/          the live tail, j > <id>
   //
-  // The snapshot's version key IS the folded-through batch id, so the
-  // write is self-describing: a reader derives "what the snapshot
-  // covers" from the completed (_SUCCESS-marked) f= dir alone, never
-  // from a separate pointer that could be a crash-window behind the
-  // data. Crash between the snapshot write and the folded-dir cleanup
-  // therefore cannot double-count — the reader ignores b<j> with
-  // j <= foldedThrough whether or not the dirs still exist. Probes
-  // keep the strictly-earlier contract because folding stops at the
-  // last COMMITTED batch (the fold runs at the START of processing
-  // batch B over ids <= B-1; a replayed batch's own first-attempt
-  // files are never folded). Single writer per store by construction
-  // (one streaming query owns a gate's scratch namespace).
+  // The snapshot's version IS the folded-through batch id, so what a
+  // snapshot covers is read off its committed version; the reader
+  // ignores b<j> with j <= foldedThrough whether or not the dirs still
+  // exist. Crash safety: the folded b<j> dirs are wiped only after
+  // the `_LATEST` flip, so a crash before it leaves the old pointer
+  // with the tail intact, and with no pointer yet Sinks falls back to
+  // the highest complete v=N — either way each batch is read exactly
+  // once. Probes keep the strictly-earlier contract because folding
+  // stops at the last COMMITTED batch (the fold runs at the START of
+  // processing batch B over ids <= B-1; a replayed batch's own
+  // first-attempt files are never folded). Single writer per store by
+  // construction (one streaming query owns a gate's scratch namespace).
   // ------------------------------------------------------------------
 
-  private def snapRoot(dir: String) = new java.io.File(dir, "snap")
+  /** The versioned table the store at `dir` folds into. */
+  private def snapTable(dir: String) = s"$dir/snap"
 
-  /** Complete snapshot versions under `dir`, ascending by
-    * folded-through id. Incomplete writes (no `_SUCCESS`) are invisible.
+  /** The committed snapshot of the store at `dir`: (folded-through
+    * batch id, its dir).
     */
-  private def snapVersions(dir: String): Seq[(Long, java.io.File)] = {
-    val root = snapRoot(dir)
-    if (!root.isDirectory) Nil
-    else root.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("f=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(f => (f.getName.drop(2).toLong, f))
-      .sortBy(_._1)
-  }
+  private def snapshot(ss: SparkSession, dir: String): Option[(Long, String)] =
+    Sinks.latestVersion(ss, snapTable(dir)).map(v => (v, Sinks.versionDir(snapTable(dir), v)))
 
   /** Highest batch id folded into a committed snapshot; -1 if none. */
-  def foldedThrough(dir: String): Long =
-    snapVersions(dir).lastOption.map(_._1).getOrElse(-1L)
+  def foldedThrough(ss: SparkSession, dir: String): Long =
+    snapshot(ss, dir).fold(-1L)(_._1)
 
   /** Minimum live tail size before a fold is considered at all. */
   val CompactMinTail = 2
@@ -502,142 +453,123 @@ private[graft] object GateStores {
     * .AnnIndexLifecycle]]'s compaction discipline applied here).
     * Returns true iff a new snapshot version landed.
     *
-    * Retention is one version (r15, was 2): the superseded
-    * snapshot is deleted as soon as the new version's `_SUCCESS`
-    * commits. A longer retention would keep any snapshot folded
-    * BEFORE a takedown readable — tombstoned rows surviving on disk
-    * indefinitely, contradicting the file-level erasure the tombstone
-    * fold just performed (ADVICE r14). Crash-safety is unchanged:
-    * removal happens strictly AFTER the commit point, so a crash
-    * mid-fold leaves the previous version intact and readable.
-    *
-    * `maxRecordsPerFile > 0` bounds fold output file size (the
-    * standard Spark writer split): the fixture default keeps one file
-    * per partition value, a deployment-size fold sets a row target so
-    * a snapshot that outgrows one task's output splits into bounded
-    * files instead of one giant one — the fold-≡-unfolded and
-    * strictly-earlier contracts are layout-independent (spec-pinned
-    * for the multi-file shape).
+    * Retention is one version: the superseded snapshot is deleted as
+    * soon as the new version commits. A longer retention would keep any
+    * snapshot folded BEFORE a takedown readable — tombstoned rows
+    * surviving on disk indefinitely, contradicting the file-level
+    * erasure the tombstone fold just performed. Removal happens
+    * strictly AFTER the commit point, so a crash mid-fold leaves the
+    * previous version intact and readable. A fold's file size follows
+    * the session's records-per-file writer limit.
     */
   def maybeCompact(ss: SparkSession, st: Store, upTo: Long,
-                   tombstones: Option[DataFrame] = None,
-                   maxRecordsPerFile: Long = 0L): Boolean = {
+                   tombstones: Option[DataFrame] = None): Boolean = {
     require(tombstones.isEmpty || st.eraseKey.isDefined,
       s"store ${st.dir} has no erase key to apply tombstones on")
-    val dir = st.dir
-    val ft = foldedThrough(dir)
-    val tail = existingIds(dir, before = upTo + 1).filter(_._1 > ft)
+    val snap = snapshot(ss, st.dir)
+    val ft = snap.fold(-1L)(_._1)
+    val tail = existingIds(st.dir, before = upTo + 1).filter(_._1 > ft)
     if (tail.size < CompactMinTail) return false
-    val snapBytes = snapVersions(dir).lastOption
-      .map(v => storeBytes(Seq(v._2.getPath))).getOrElse(0L)
-    if (2 * storeBytes(tail.map(_._2)) < snapBytes) return false
-    val snap = snapVersions(dir).lastOption
-      .flatMap(v => readBatchesOpt(ss, Seq(v._2.getPath), st.schema))
-    val cur = (snap.toSeq ++ readBatchesOpt(ss, tail.map(_._2), st.schema).toSeq)
-      .reduceOption(_.unionByName(_))
-    val folded = cur.map { df =>
-      tombstones match {
-        case Some(t) => df.join(
-          t.select(col("n_id").as(st.eraseKey.get)).distinct(),
-          st.eraseKey.toSeq, "left_anti")
-          .select(df.columns.map(col).toIndexedSeq: _*)
-        case None => df
-      }
+    if (2 * storeBytes(tail.map(_._2)) < storeBytes(snap.map(_._2).toSeq)) return false
+    // every foldable dir may be empty — the fold still commits, so the
+    // empty b-dirs stop being listed
+    val cur = readBatchesOpt(ss, snap.map(_._2).toSeq ++ tail.map(_._2), st.schema)
+      .getOrElse(ss.createDataFrame(ss.sparkContext.emptyRDD[Row], st.schema))
+    val folded = tombstones match {
+      case Some(t) => cur.join(
+        t.select(col("n_id").as(st.eraseKey.get)).distinct(),
+        st.eraseKey.toSeq, "left_anti")
+        .select(cur.columns.map(col).toIndexedSeq: _*)
+      case None => cur
     }
-    val target = new java.io.File(snapRoot(dir), s"f=${tail.last._1}")
-    folded match {
-      case Some(df) =>
-        // ONE file per partition value (repartition by the partition
-        // cols), or a single file unpartitioned — without this, every
-        // input task writes into every Hive partition and the snapshot
-        // lands as tasks×partitions tiny files, which each later probe
-        // then pays to re-open (measured: the naive fold made the gate
-        // replays ~1.5× slower end to end). `maxRecordsPerFile` then
-        // re-splits oversized outputs at the writer.
-        val shaped = st.partitionCols match {
-          case Nil => df.coalesce(1)
-          case cols => df.repartition(cols.map(col): _*)
-        }
-        // Overwrite absorbs a crash-orphaned partial dir of the same id
-        val w0 = shaped.write.mode("overwrite")
-        val w = if (maxRecordsPerFile > 0L)
-          w0.option("maxRecordsPerFile", maxRecordsPerFile) else w0
-        (if (st.partitionCols.nonEmpty) w.partitionBy(st.partitionCols: _*) else w)
-          .parquet(target.getPath)
-      case None =>
-        // every foldable dir was empty — still commit the fold so the
-        // empty b-dirs stop being listed; _SUCCESS alone marks it
-        target.mkdirs()
-        java.nio.file.Files.writeString(
-          new java.io.File(target, "_SUCCESS").toPath, ""): Unit
+    // ONE file per partition value (repartition by the partition cols),
+    // or a single file unpartitioned — without this, every input task
+    // writes into every Hive partition and the snapshot lands as
+    // tasks×partitions tiny files, which each later probe then pays to
+    // re-open (measured: the naive fold made the gate replays ~1.5×
+    // slower end to end)
+    val shaped = st.partitionCols match {
+      case Nil => folded.coalesce(1)
+      case cols => folded.repartition(cols.map(col): _*)
     }
+    Sinks.writeVersionAt(shaped, snapTable(st.dir), tail.last._1, st.partitionCols): Unit
     // cleanup AFTER the commit point; readers ignore these either way
     wipe(tail.map(_._2))
-    wipe(snapVersions(dir).dropRight(1).map(_._2.getPath))
+    Sinks.vacuumVersions(ss, snapTable(st.dir), keep = 1)
     true
   }
 
-  /** The accumulated store visible to batch `before`: the committed
-    * snapshot plus the live tail strictly between foldedThrough and
-    * `before`. None iff the store holds no rows yet. The guard is the
-    * strictly-earlier contract: a snapshot may never cover the probing
-    * batch itself (folds stop at the previous committed batch, so this
-    * can only trip on external tampering).
+  /** The dirs of the store at `dir` visible to batch `before`: the
+    * committed snapshot, then the live tail strictly between
+    * foldedThrough and `before`. The guard is the strictly-earlier
+    * contract: a snapshot may never cover the probing batch itself
+    * (folds stop at the previous committed batch, so this can only trip
+    * on external tampering).
     */
-  def readStoreOpt(ss: SparkSession, st: Store,
-                   before: Long = Long.MaxValue): Option[DataFrame] = {
-    val ft = foldedThrough(st.dir)
+  private def visibleDirs(ss: SparkSession, dir: String, before: Long): Seq[String] = {
+    val snap = snapshot(ss, dir)
+    val ft = snap.fold(-1L)(_._1)
     require(ft < before,
-      s"store at ${st.dir} folded through batch $ft, not strictly earlier than $before")
-    val snap = snapVersions(st.dir).lastOption
-      .flatMap(v => readBatchesOpt(ss, Seq(v._2.getPath), st.schema))
-    val tail = readBatchesOpt(ss,
-      existingIds(st.dir, before).filter(_._1 > ft).map(_._2), st.schema)
-    (snap.toSeq ++ tail.toSeq).reduceOption(_.unionByName(_))
+      s"store at $dir folded through batch $ft, not strictly earlier than $before")
+    snap.map(_._2).toSeq ++ existingIds(dir, before).filter(_._1 > ft).map(_._2)
   }
 
-  /** Bytes the [[readStoreOpt]] read would touch — snapshot latest
-    * version plus the live tail; the [[PruneStoreBytes]] cutover input.
+  /** The accumulated store visible to batch `before` ([[visibleDirs]]).
+    * None iff the store holds no rows yet.
     */
-  def storeBytesBefore(dir: String, before: Long = Long.MaxValue): Long = {
-    val ft = foldedThrough(dir)
-    val snap = snapVersions(dir).lastOption.map(_._2.getPath).toSeq
-    storeBytes(snap ++ existingIds(dir, before).filter(_._1 > ft).map(_._2))
-  }
+  def readStoreOpt(ss: SparkSession, st: Store,
+                   before: Long = Long.MaxValue): Option[DataFrame] =
+    readBatchesOpt(ss, visibleDirs(ss, st.dir, before), st.schema)
 
   private val fixtureLock = new Object
 
-  /** Land a keyed table as [[Slices]] contiguous-id-range single-file
-    * parquet slices in ascending order, mtime-pinned (FileStreamSource
-    * consumes in modification-time order) — so "earlier batch" always
-    * means "smaller id" and a gate's decision rule is a pure function of
-    * the corpus, not of the arrival plan.
-    *
-    * Fixture-lock contract: the ONLY driver-side read is `max(key)` —
-    * one scalar aggregate, never a corpus-sized column; a deployment
-    * derives slice widths from table statistics / ingest metadata, and
-    * this helper exists purely to construct the deterministic replay
-    * fixture. Slice width = max/Slices + 1, the rule the committed
-    * oracles restate (a pure function of the corpus).
+  /** A replay fixture, landed once per `dir`: `build` gives a stamp and
+    * the files, which land as single-file parquet `<prefix>_NN.parquet`
+    * (NN = position), each mtime-pinned to NN + 1 minutes —
+    * FileStreamSource consumes in modification-time order, so the list
+    * order IS the arrival order. The `marker` file commits the stamp
+    * AFTER the last move (a half-written set is never trusted); a later
+    * call reads the stamp back and lands nothing. Returns the stamp.
+    * One lock serialises every replay fixture in the JVM.
     */
-  private def landSliceFixture(df: DataFrame, keyCol: String,
-                               srcDir: java.io.File): Unit = {
-    srcDir.mkdirs()
-    val ready = new java.io.File(srcDir, "_GATE_READY")
-    fixtureLock.synchronized { if (!ready.exists()) {
-      val hi = df.agg(max(col(keyCol))).first().getLong(0)
-      val width = hi / Slices + 1L
-      val tmp = new java.io.File(srcDir, "_stage")
-      (0 until Slices).foreach { i =>
-        df.filter(col(keyCol) >= i * width && col(keyCol) < (i + 1) * width)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+  def landFixture(dir: String, marker: String, prefix: String)(
+      build: => (String, Seq[DataFrame])): String = fixtureLock.synchronized {
+    val root = new java.io.File(dir)
+    root.mkdirs()
+    val ready = new java.io.File(root, marker)
+    if (ready.exists()) java.nio.file.Files.readString(ready.toPath)
+    else {
+      val (stamp, files) = build
+      val tmp = new java.io.File(root, "_stage")
+      files.zipWithIndex.foreach { case (df, i) =>
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
         val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(srcDir, f"gate_$i%02d.parquet")
+        val dst = new java.io.File(root, f"${prefix}_$i%02d.parquet")
         java.nio.file.Files.move(part.toPath, dst.toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         dst.setLastModified((i + 1) * 60000L): Unit
       }
-      java.nio.file.Files.writeString(ready.toPath, "ok"): Unit
-    } }
+      java.nio.file.Files.writeString(ready.toPath, stamp): Unit
+      stamp
+    }
   }
+
+  /** Land a keyed table as [[Slices]] contiguous-id-range slices in
+    * ascending order ([[landFixture]]) — so "earlier batch" always
+    * means "smaller id" and a gate's decision rule is a pure function of
+    * the corpus, not of the arrival plan.
+    *
+    * The ONLY driver-side read is `max(key)` — one scalar aggregate,
+    * never a corpus-sized column; a deployment derives slice widths
+    * from table statistics / ingest metadata, and this helper exists
+    * purely to construct the deterministic replay fixture. Slice width
+    * = max/Slices + 1, the rule the committed oracles restate (a pure
+    * function of the corpus).
+    */
+  private def landSliceFixture(df: DataFrame, keyCol: String, srcDir: String): Unit =
+    landFixture(srcDir, "_GATE_READY", "gate") {
+      val width = df.agg(max(col(keyCol))).first().getLong(0) / Slices + 1L
+      ("ok", (0 until Slices).map(i =>
+        df.filter(col(keyCol) >= i * width && col(keyCol) < (i + 1) * width)))
+    }: Unit
 }

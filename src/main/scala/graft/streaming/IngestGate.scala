@@ -53,7 +53,7 @@ object IngestGate {
     val docs = graft.model.Tables.documents(s, d).select(col("doc_id"), col("text"))
     val dec = GateStores.decisionStore(Scratch.dir("ingest_gate_dec", d), "doc_id")
     val idx = Store(Scratch.dir("ingest_gate_idx", d),
-      StructType.fromDDL("doc_id BIGINT, band INT, bucket BIGINT, bgrp INT"), Seq("bgrp"))
+      StructType.fromDDL("doc_id BIGINT, band INT, bucket BIGINT"))
     val sh = Store(Scratch.dir("ingest_gate_sh", d),
       StructType.fromDDL("doc_id BIGINT, sh ARRAY<BIGINT>"))
     GateStores.replay(s, "ingest_gate", docs, "doc_id",
@@ -70,7 +70,7 @@ object IngestGate {
         Seq("band", "bucket"), idx, sh,
         Dedup.verifyJaccardSides(_, _, _, "doc_id", 0.5, broadcastB = true))
       Seq(dec -> GateStores.decide(b.rows, "doc_id", dupSrc),
-        idx -> GateStores.withBandGroup(bands),
+        idx -> bands,
         sh -> withSh)
     }
     GateStores.decisions(s, dec, "doc_id")

@@ -265,41 +265,41 @@ class LayoutSpec extends AnyFunSuite {
       s"one 4-cell probe read $oneRead of the index's $postingFiles posting files")
   }
 
-  test("gate band index: bucket-group layout prunes a narrow probe's files") {
+  test("gate postings store: an empty cell-partitioned batch reads as nothing, and the fold keeps the cell layout") {
     import spark.implicits._
     import graft.streaming.GateStores
-    // a synthetic band-index batch covering every bucket group
-    val dir = tmp("band_idx") + "/b0"
-    val buckets = (0L until 160L).map(i => (i, i)).toDF("vec_id", "bucket")
-    GateStores.land(GateStores.withBandGroup(buckets), dir,
-      partitionCols = Seq("bgrp"))
-    val grpDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bgrp="))
-    assert(grpDirs.length == GateStores.BandGroups,
-      s"expected ${GateStores.BandGroups} group directories, got ${grpDirs.length}")
-    // a narrow probe (two groups) reads 2/16 of the index files
-    val schema = graft.streaming.EmbGate.idxStore(dir).schema
-    val narrow = GateStores.readBandIndex(spark, Seq(dir), schema, Some(Seq(3, 7)))
-    assert(narrow.select($"vec_id").as[Long].collect().toSet ==
-      (0L until 160L).filter(i => i % 16 == 3 || i % 16 == 7).toSet)
-    val plan = narrow.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") &&
-      "PartitionFilters: \\[[^\\]]*bgrp".r.findFirstIn(plan).isDefined,
-      s"expected a bgrp partition filter:\n${plan.take(2500)}")
-    // a full-coverage probe (None) applies no filter — the gates' case
-    assert(GateStores.readBandIndex(spark, Seq(dir), schema, None).count() == 160L)
-
-    // an ALL-REJECTED batch lands an EMPTY partitioned store (just a
+    // AnnIngest's postings shape: a batch over every cell, then an
+    // ALL-REJECTED batch, which lands an EMPTY partitioned dir (just a
     // _SUCCESS marker, no schema-bearing file — the ~SF1 soak's
-    // batches 1-2); readBatches must skip it, and the union still
-    // carries the non-empty batches
-    val emptyDir = tmp("band_idx_empty") + "/b1"
-    GateStores.land(
-      GateStores.withBandGroup(buckets).filter($"vec_id" < 0),
-      emptyDir, partitionCols = Seq("bgrp"))
-    assert(!new java.io.File(emptyDir).listFiles()
-      .exists(_.getName.endsWith(".parquet")))
-    assert(GateStores.readBatches(spark, Seq(dir, emptyDir), schema).count() == 160L)
+    // batches 1-2)
+    val st = GateStores.Store(tmp("postings"), org.apache.spark.sql.types.StructType
+      .fromDDL("n_id BIGINT, sub INT, cid BIGINT, cell_id BIGINT"), Seq("cell_id"))
+    val rows = (0L until 160L).map(i => (i, (i % 8).toInt, i % 5, i % 16))
+      .toDF("n_id", "sub", "cid", "cell_id")
+    st.land(rows, 0L)
+    st.land(rows.filter($"n_id" < 0), 1L)
+    assert(!new java.io.File(s"${st.dir}/b1").listFiles()
+      .exists(f => f.getName.endsWith(".parquet") || f.getName.startsWith("cell_id=")))
+    // readers skip the empty batch; the union still carries batch 0
+    assert(GateStores.readBatchesOpt(spark, Seq(s"${st.dir}/b1"), st.schema).isEmpty)
+    assert(GateStores.readStoreOpt(spark, st).get.count() == 160L)
+    // the fold keeps the layout: one file per cell under snap/v=1
+    assert(GateStores.maybeCompact(spark, st, upTo = 1))
+    val cells = new java.io.File(s"${st.dir}/snap/v=1").listFiles()
+      .filter(_.getName.startsWith("cell_id="))
+    assert(cells.length == 16 &&
+      cells.forall(_.listFiles().count(_.getName.endsWith(".parquet")) == 1),
+      s"expected one file in each of 16 cell dirs: ${cells.map(_.getName).toSeq}")
+    assert(GateStores.readStoreOpt(spark, st).get.as[(Long, Int, Long, Long)]
+      .collect().toSet == rows.as[(Long, Int, Long, Long)].collect().toSet)
+    // a fold of empty batches only still commits, so the empty b-dirs
+    // stop being listed, and the store still reads as nothing
+    val empty = st.copy(dir = tmp("postings_empty"))
+    empty.land(rows.limit(0), 0L); empty.land(rows.limit(0), 1L)
+    assert(GateStores.maybeCompact(spark, empty, upTo = 1))
+    assert(GateStores.foldedThrough(spark, empty.dir) == 1L &&
+      GateStores.existingIds(empty.dir).isEmpty)
+    assert(GateStores.readStoreOpt(spark, empty).isEmpty)
   }
 
   test("z-ordered layout bounds per-file ranges in BOTH dimensions") {

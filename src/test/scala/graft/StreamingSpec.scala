@@ -942,21 +942,22 @@ class StreamingSpec extends AnyFunSuite {
         threshold = 0.4, bands = 96, bitsPerBand = 8)
       .as[(Long, Boolean, Option[Long])].collect().toSeq
     // the replay itself compacts: at batch 2's start the settled tail
-    // {b0, b1} folds into snap/f=1, so batch 2's probe read the
+    // {b0, b1} folds into snap/v=1, so batch 2's probe read the
     // snapshot + nothing — the decisions above already hash-gate that.
     // Here pin the LAYOUT: snapshot committed through batch 1, folded
-    // b-dirs gone, and the band-group partitioning survived the fold.
+    // b-dirs gone, and the band index folded into one unpartitioned file.
     val idxDir = graft.model.Scratch.dir("emb_gate_idx", sf)
     val vecDir = graft.model.Scratch.dir("emb_gate_vec", sf)
     for (d <- Seq(idxDir, vecDir)) {
-      assert(graft.streaming.GateStores.foldedThrough(d) == 1L,
+      assert(graft.streaming.GateStores.foldedThrough(spark, d) == 1L,
         s"$d must have folded batches 0..1 into a snapshot")
       assert(graft.streaming.GateStores.existingIds(d).forall(_._1 > 1L),
         s"$d must not keep folded batch dirs around")
     }
-    assert(new java.io.File(s"$idxDir/snap/f=1").listFiles()
-        .exists(_.getName.startsWith("bgrp=")),
-      "the snapshot must keep the bgrp Hive layout (file-level probe pruning)")
+    val snapEntries = new java.io.File(s"$idxDir/snap/v=1").listFiles().toSeq
+    assert(snapEntries.count(_.getName.endsWith(".parquet")) == 1 &&
+        !snapEntries.exists(_.getName.startsWith("bgrp=")),
+      s"the index snapshot must be one unpartitioned file: ${snapEntries.map(_.getName)}")
     // crash exactly between the fold+landing of batch 2 and its
     // checkpoint commit — the resumed run re-executes batch 2 against
     // an ALREADY-compacted store (the window VERDICT r13 #2 asks for)
@@ -966,7 +967,7 @@ class StreamingSpec extends AnyFunSuite {
         bands = 96, bitsPerBand = 8, ckpt = ckpt, wipeStores = true,
         crash = Some(graft.streaming.GateStores.Crash(2L)))
     }
-    assert(graft.streaming.GateStores.foldedThrough(idxDir) == 1L,
+    assert(graft.streaming.GateStores.foldedThrough(spark, idxDir) == 1L,
       "the crash landed after the fold — the snapshot must be committed")
     val resumed = graft.streaming.EmbGate.replayInternal(spark, sf,
         threshold = 0.4, bands = 96, bitsPerBand = 8, ckpt = ckpt,
@@ -1013,7 +1014,7 @@ class StreamingSpec extends AnyFunSuite {
     // tombstones) NO parquet file under the postings store still holds
     // a dead id — bytes on disk, not query results
     val postDir = graft.model.Scratch.dir("ann_ingest_del_post", sf)
-    assert(graft.streaming.GateStores.foldedThrough(postDir) == 1L,
+    assert(graft.streaming.GateStores.foldedThrough(spark, postDir) == 1L,
       "the delete replay must have compacted the postings store")
     def parquetFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
@@ -1030,7 +1031,7 @@ class StreamingSpec extends AnyFunSuite {
     // store folds with the same tombstones, so the most sensitive
     // artifact — the deleted vector's bytes — is gone from every file
     val vecDir = graft.model.Scratch.dir("ann_ingest_del_vec", sf)
-    assert(graft.streaming.GateStores.foldedThrough(vecDir) == 1L,
+    assert(graft.streaming.GateStores.foldedThrough(spark, vecDir) == 1L,
       "the delete replay must have compacted the vector store")
     val vecFiles = parquetFiles(new java.io.File(vecDir))
     assert(vecFiles.nonEmpty)
@@ -1060,7 +1061,7 @@ class StreamingSpec extends AnyFunSuite {
         s"band-index column '${f.name}' is vector-valued (${f.dataType}) — " +
           "the retained audit trail must hold scalar sign-hash codes only")
     }
-    assert(idxStore.columns.toSet == Set("vec_id", "bucket", "bgrp"),
+    assert(idxStore.columns.toSet == Set("vec_id", "bucket"),
       s"band-index schema drifted: ${idxStore.columns.mkString(",")}")
     // restart in the worst window: killed right after the TOMBSTONES
     // land (batch 1's stores + takedown written, checkpoint uncommitted)
@@ -1103,7 +1104,7 @@ class StreamingSpec extends AnyFunSuite {
     val (vecs0, buckets0, dup0) = graft.streaming.EmbGate.gateBatch(
       b0, idx, vec, threshold = 0.9, bands = 96, bitsPerBand = 8)
     assert(dup0.count() == 0L, "first arrival has no predecessor")
-    idx.land(graft.streaming.GateStores.withBandGroup(buckets0), 0L)
+    idx.land(buckets0, 0L)
     vec.land(vecs0, 0L)
     b0.release()
     val b1 = batch(1L, 2L)
@@ -1134,12 +1135,12 @@ class StreamingSpec extends AnyFunSuite {
     def land(id: Long, ids: Seq[Long]): Unit = st.land(ids.toDF("n_id"), id)
     land(0, Seq(1L, 2L, 3L)); land(1, Seq(4L, 5L, 6L))
     assert(graft.streaming.GateStores.maybeCompact(spark, st, upTo = 1),
-      "the pre-takedown fold must fire (snap/f=1 holds ids 1..6)")
+      "the pre-takedown fold must fire (snap/v=1 holds ids 1..6)")
     land(2, Seq(7L, 8L)); land(3, Seq(9L, 10L))
     val tombs = Seq(3L, 9L).toDF("n_id")
     assert(graft.streaming.GateStores.maybeCompact(spark, st, upTo = 3,
       tombstones = Some(tombs)), "the tombstone fold must fire")
-    assert(!new java.io.File(s"$dir/snap/f=1").exists(),
+    assert(!new java.io.File(s"$dir/snap/v=1").exists(),
       "keepVersions=1: the pre-takedown snapshot (which held id 3) must be deleted")
     def parquetFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
@@ -1159,7 +1160,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("snapshot fold sizing: maxRecordsPerFile splits the fold into bounded files, fold ≡ unfolded") {
     // VERDICT r14 #5: the fixture fold funnels to one file; a
-    // deployment-size fold bounds FILE SIZE instead. Pin that a
+    // deployment-size fold bounds FILE SIZE instead, through the
+    // session's spark.sql.files.maxRecordsPerFile. Pin that a
     // multi-file snapshot still satisfies fold-≡-unfolded and the
     // strictly-earlier guard.
     val dir = graft.model.Scratch.dir("fold_sizing", "/root/testdata/sf0.001")
@@ -1170,9 +1172,15 @@ class StreamingSpec extends AnyFunSuite {
     st.land((100L until 200L).toDF("n_id"), 1L)
     val unfolded = graft.streaming.GateStores.readStoreOpt(spark, st).get
       .as[Long].collect().toSet
-    assert(graft.streaming.GateStores.maybeCompact(spark, st, upTo = 1,
-      maxRecordsPerFile = 50L))
-    val snapFiles = new java.io.File(s"$dir/snap/f=1").listFiles()
+    val conf = "spark.sql.files.maxRecordsPerFile"
+    val prev = spark.conf.getOption(conf)
+    spark.conf.set(conf, 50L)
+    try assert(graft.streaming.GateStores.maybeCompact(spark, st, upTo = 1))
+    finally prev match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
+    val snapFiles = new java.io.File(s"$dir/snap/v=1").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(snapFiles.length >= 4,
       s"200 rows at maxRecordsPerFile=50 must land >=4 files, got ${snapFiles.length}")
