@@ -54,4 +54,19 @@ object Graft {
     graft.functions.Catalog.register(s)
     s
   }
+
+  /** Runs `body` with the session confs `kvs` set, then puts each key
+    * back: to its previous value, or unset if it had none — also when
+    * `body` throws. Session confs are mutable state shared by every
+    * caller of the session.
+    */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

@@ -59,20 +59,12 @@ package object functions {
   def kllSketch(v: Column, k: Int = KllSketch.DefaultK): Column =
     agg(KllSketchAgg(expression(v), k))
 
-  /** Aggregate: union of stored KLL sketches ([[KllMergeAgg]]). */
-  def kllMerge(sk: Column, k: Int = KllSketch.DefaultK): Column =
-    agg(KllMergeAgg(expression(sk), k))
-
   /** Inclusive rank-`q` quantile of a KLL sketch ([[KllSketchQuantile]]). */
   def kllQuantile(sk: Column, q: Double): Column =
     column(KllSketchQuantile(expression(sk), Literal(q)))
 
   /** Aggregate: Count-Min counter plane of a token column ([[CountMinAgg]]). */
   def countMin(tok: Column): Column = agg(CountMinAgg(expression(tok)))
-
-  /** Aggregate: union of stored Count-Min planes ([[CountMinMergeAgg]]). */
-  def countMinMerge(cells: Column): Column =
-    agg(CountMinMergeAgg(expression(cells)))
 
   /** Coarse cell id of each lattice vector ([[CellArgmin]]). */
   def cellAsg(xs: Column, ids: Array[Long], cents: Array[Array[Long]]): Column =

@@ -76,19 +76,18 @@ object AnnIndexLifecycle {
       .count()
 
   /** Physical compaction: land the survivor postings as the NEXT
-    * version of the versioned index table at `path` (same partition
-    * layout), leaving prior versions readable by number. Returns the
-    * new version id. The caller owns resetting its tombstone set —
-    * tombstones at or below the compacted version are absorbed.
+    * version of the versioned index table at `path`, leaving prior
+    * versions readable by number. Returns the new version id. The
+    * caller owns resetting its tombstone set — tombstones at or below
+    * the compacted version are absorbed.
     */
   def compactVersioned(spark: SparkSession, path: String,
-                       postings: DataFrame, tombstones: DataFrame,
-                       partitionCols: Seq[String] = Seq("cell_id")): Long = {
+                       postings: DataFrame, tombstones: DataFrame): Long = {
     // materialize the survivor set before writing over shared scratch:
     // the input plan may read the same table's current version
     val survivors = applyTombstones(postings, tombstones)
       .localCheckpoint(true)
-    Sinks.writeVersioned(survivors, path, partitionCols)
+    Sinks.writeVersioned(survivors, path)
   }
 
   /** The retrain trigger (r16, VERDICT r15 #2): the frozen geometry
@@ -116,7 +115,7 @@ object AnnIndexLifecycle {
     * retrained, corpus re-encoded) over the SURVIVING corpus, landed
     * atomically as the next version of the packed index table at
     * `path` (postings kind='p' + codebook kind='c', the
-    * `_derive_ann_index` layout, Hive-partitioned `(kind, cell_id)`).
+    * `_derive_ann_index` layout).
     * [[graft.ops.Sinks.writeVersioned]]'s write-then-flip is the
     * atomic cutover — readers see the old geometry until the pointer
     * moves, then only the new — and the trailing vacuum removes
@@ -146,7 +145,7 @@ object AnnIndexLifecycle {
         lit(null).cast("long").as("cell_id"),
         lit(null).cast("long").as("n_id"),
         col("sub"), col("cid"), col("pos"), col("ce")))
-    val v = Sinks.writeVersioned(packed, path, Seq("kind", "cell_id"))
+    val v = Sinks.writeVersioned(packed, path)
     Sinks.vacuumVersions(spark, path, keep = keepVersions)
     v
   }

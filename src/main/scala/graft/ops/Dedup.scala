@@ -33,6 +33,18 @@ object Dedup {
       .withColumn("shingle", explode(shingles(col("toks"), n)))
       .select(col(key), col("shingle"))
 
+  /** `(key, sh)`: each doc's hashed `shingleSize`-token shingle set
+    * ([[graft.functions.shingleHashes]]), over a corpus fanned out to
+    * every core; docs too short to shingle are dropped.
+    */
+  def shingleSets(docs: DataFrame, key: String, text: String,
+                  shingleSize: Int): DataFrame =
+    Par.fanOut(docs.select(col(key), col(text)))
+      .withColumn("toks", split(col(text), " "))
+      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
+      .filter(size(col("sh")) > 0)
+      .select(col(key), col("sh"))
+
   /** Exact dedup: keep the lowest key per content digest. One shuffle on
     * the digest; at 100 TB the digest groupBy is the only viable exact
     * dedup (never groupBy the raw text — digest first, the shuffle then
@@ -141,11 +153,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, key: String, text: String,
                       numHashes: Int = 32, rowsPerBand: Int = 2,
                       shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(docs.select(col(key), col(text)))
-      .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
-      .filter(size(col("sh")) > 0)
-      .select(col(key), col("sh"))
+    val withSh = shingleSets(docs, key, text, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = minhashSignatures(withSh, key, numHashes)
     val cands = lshCandidates(sigs, key, numHashes, rowsPerBand)
@@ -163,11 +171,8 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, key: String, text: String,
                         shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(docs.select(col(key), col(text)))
-      .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
-      .filter(size(col("sh")) > 0)
-      .select(col(key), col("sh"), size(col("sh")).as("sz"))
+    val withSh = shingleSets(docs, key, text, shingleSize)
+      .withColumn("sz", size(col("sh")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val inv = withSh.select(col(key), col("sz"), explode(col("sh")).as("shingle"))
     // Global rarest-first order; ties broken by shingle hash so the
@@ -210,11 +215,8 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, key: String, text: String,
                        shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val withSh = Par.fanOut(docs.select(col(key), col(text)))
-      .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
-      .filter(size(col("sh")) > 0)
-      .select(col(key), col("sh"), size(col("sh")).cast("long").as("sz"))
+    val withSh = shingleSets(docs, key, text, shingleSize)
+      .withColumn("sz", size(col("sh")).cast("long"))
     val inv = withSh.select(col(key), explode(col("sh")).as("shingle"))
     val a = inv.select(col(key).as("doc_a"), col("shingle"))
     val b = inv.select(col(key).as("doc_b"), col("shingle"))
@@ -238,24 +240,13 @@ object Dedup {
   def incrementalNearDups(corpus: DataFrame, fresh: DataFrame, key: String,
                           text: String, numHashes: Int = 32, rowsPerBand: Int = 2,
                           shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
-    def prep(df: DataFrame) = Par.fanOut(df.select(col(key), col(text)))
-      .withColumn("toks", split(col(text), " "))
-      .withColumn("sh", shingleHashes(col("toks"), shingleSize))
-      .filter(size(col("sh")) > 0)
-      .select(col(key), col("sh"))
-    val corpusSh = prep(corpus)
-    val freshSh = prep(fresh)
-    def banded(sigs: DataFrame) = {
-      val numBands = numHashes / rowsPerBand
-      val bandCols = (0 until numBands).map { b =>
-        val slice = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-        xxhash64(lit(1000 + b) +: slice: _*)
-      }
-      sigs.select(col(key), posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
-    }
-    val corpusBands = banded(minhashSignatures(corpusSh, key, numHashes))
+    val corpusSh = shingleSets(corpus, key, text, shingleSize)
+    val freshSh = shingleSets(fresh, key, text, shingleSize)
+    def banded(sh: DataFrame) =
+      bandBuckets(minhashSignatures(sh, key, numHashes), key, numHashes, rowsPerBand)
+    val corpusBands = banded(corpusSh)
       .select(col(key).as("key_a"), col("band"), col("bucket"))
-    val freshBands = banded(minhashSignatures(freshSh, key, numHashes))
+    val freshBands = banded(freshSh)
       .select(col(key).as("key_b"), col("band"), col("bucket"))
     val cands = corpusBands.join(freshBands, Seq("band", "bucket"))
       .select(col("key_a"), col("key_b")).distinct()

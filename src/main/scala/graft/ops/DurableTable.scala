@@ -31,14 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the _LATEST pointer).
   *
   * @param name scratch-path key, unique per derived table
-  * @param partitionCols optional Hive partition columns for the
-  *   snapshot layout — readers filtering on them prune whole files
-  *   (the ANN index partitions postings by cell: a small query batch
-  *   opens ~nprobe/cells of the files, while a batch whose probes
-  *   cover every cell, like the registry's 20 queries × nprobe 4 over
-  *   16 cells, opens them all)
   */
-final class DurableTable(name: String, partitionCols: Seq[String] = Nil) {
+final class DurableTable(name: String) {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
 
@@ -64,7 +58,7 @@ final class DurableTable(name: String, partitionCols: Seq[String] = Nil) {
       locks.computeIfAbsent(path, _ => new Object).synchronized {
         if (Sinks.latestVersion(s, path).isEmpty) {
           derivations.incrementAndGet()
-          Sinks.writeVersioned(derive, path, partitionCols)
+          Sinks.writeVersioned(derive, path)
         }
       }
       val built = Sinks.readVersioned(s, path)

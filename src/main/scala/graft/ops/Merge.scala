@@ -52,7 +52,6 @@ object Merge {
 
     // presence flags from the join keys (keys are non-null by contract)
     val matched = col(s"t.${keys.head}").isNotNull && col(s"s.${keys.head}").isNotNull
-    val targetOnly = col(s"s.${keys.head}").isNull
     val sourceOnly = col(s"t.${keys.head}").isNull
 
     // SQL MERGE applies a clause only when its condition is TRUE — a

@@ -136,17 +136,8 @@ object Ranks {
     * cumulative partition subtotals.
     */
   def globalRunningSum(df: DataFrame, order: Seq[Column], value: Column,
-                       as: String, partitions: Int = 0): DataFrame = {
-    val sorted = sortedWithPid(df, order, partitions)
-    val totals = sorted.groupBy(col("_pid"))
-      .agg(coalesce(sum(value), lit(0L)).as("_t"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    val w = Window.partitionBy(col("_pid")).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sorted
-      .withColumn(as, offsetCol(cumOffsets(totals)) + sum(value).over(w))
-      .drop("_pid")
-  }
+                       as: String, partitions: Int = 0): DataFrame =
+    globalRunningSums(df, order, Seq(value -> as), partitions)
 
   /** Global inclusive running sums of SEVERAL LONG measures by `order`
     * (must be a total order) off ONE range-sort — the multi-measure

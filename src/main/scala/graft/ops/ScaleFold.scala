@@ -168,10 +168,7 @@ object ScaleFold {
     // physical flavor (unadjusted micros) — the DuckDB rule restatement
     // then EXCEPT-compares naive timestamps on both sides, and
     // model.Tables normalizes the NTZ read-back like any harness file
-    val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    val prevNtz = s.conf.getOption(ntzKey)
-    try {
-      s.conf.set(ntzKey, "true")
+    graft.Graft.withConf(s, "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true") {
       todo.sorted.foreach { t =>
         val in = s.read.parquet(s"$inDir/$t.parquet")
         // 8 output files for the fact tables keeps downstream scans
@@ -181,9 +178,6 @@ object ScaleFold {
         amplifyTable(in, t, folds)
           .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
       }
-    } finally prevNtz match {
-      case Some(v) => s.conf.set(ntzKey, v)
-      case None => s.conf.unset(ntzKey)
     }
     java.nio.file.Files.writeString(marker.toPath,
       s"$folds:${(covered ++ todo).toSeq.sorted.mkString(",")}"): Unit

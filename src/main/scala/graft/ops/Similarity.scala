@@ -769,9 +769,7 @@ object Similarity {
     // ADC: Σ_sub term + |r|² = the exact lattice distance to the
     // reconstructed residual; headroom |xe| ≤ 2²⁵ ⇒ the sum stays under
     // 2⁵⁷ for dims ≤ 512. The (cell_id, sub, cid) equi-join is the cell
-    // pruning — un-probed cells never join — and over a cell_id-
-    // partitioned postings scan the probe join is Spark's dynamic
-    // partition pruning filter, so only the probed cells' files open
+    // pruning — un-probed cells never join
     val adc = postings.join(broadcast(lut), Seq("cell_id", "sub", "cid"))
       .filter(col("q_id") =!= col("n_id"))
       .groupBy(col("q_id"), col("n_id"), col("cell_id"))
@@ -905,11 +903,7 @@ object Similarity {
     *     once, shortlists per (width, query) by (adist, n_id) and
     *     refines by exact lattice L2.
     *
-    * Over the `cell_id`-partitioned durable index the postings scan
-    * opens only the probed cells' files: the join with the probed cells
-    * is a dynamic partition pruning filter whose build side is the
-    * checkpointed ranking (LayoutSpec pins the file count). Recall vs
-    * [[bruteForceTopKL2]] is spec-pinned in LlmOpsSpec.
+    * Recall vs [[bruteForceTopKL2]] is spec-pinned in LlmOpsSpec.
     */
   def ivfPqSearch(postings: DataFrame, cb: DataFrame, corpus: DataFrame,
                   queries: DataFrame, key: String, vec: String, k: Int,
@@ -924,8 +918,7 @@ object Similarity {
     val (ccIds, ccCents) = collectCoarseGeo(
       coarseFromBase(corpus, key, vec, dsub, cells), dims)
     // every cell ranked once per query in one map-side pass; the
-    // checkpoint holds one row per query and, filtered by the widest
-    // width, is the dynamic pruning filter's broadcast build side
+    // checkpoint holds one row per query
     val ranked = latticeVecs(queries.select(col(key).cast("long").as("q_id"),
         col(vec)), "q_id", vec)
       .withColumn("cells", cellRanks(col("xs"), ccIds, ccCents))

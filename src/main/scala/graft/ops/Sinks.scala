@@ -82,16 +82,11 @@ object Sinks {
     * overwrite — the idempotent daily-reload pattern; a static overwrite
     * would drop the whole table).
     */
-  def overwritePartitions(df: DataFrame, path: String, partCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.partitionBy(partCols: _*).mode(SaveMode.Overwrite).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+  def overwritePartitions(df: DataFrame, path: String, partCols: Seq[String]): Unit =
+    graft.Graft.withConf(df.sparkSession,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      df.write.partitionBy(partCols: _*).mode(SaveMode.Overwrite).parquet(path)
     }
-  }
 
   /** Range-clustered layout: globally range-partition by `sortCols` into
     * `files` output files, sorted within each. Every file then covers a
@@ -114,12 +109,11 @@ object Sinks {
     * (write-then-flip is the atomicity discipline). Old versions remain
     * readable by number until [[vacuumVersions]] trims them.
     */
-  def writeVersioned(df: DataFrame, path: String,
-                     partitionCols: Seq[String] = Nil): Long = {
+  def writeVersioned(df: DataFrame, path: String): Long = {
     // rename is the atomic flip on HDFS-like stores; object stores need
     // their conditional-put equivalent
     val next = latestVersion(df.sparkSession, path).map(_ + 1).getOrElse(0L)
-    writeVersionAt(df, path, next, partitionCols)
+    writeVersionAt(df, path, next)
     next
   }
 
@@ -129,8 +123,7 @@ object Sinks {
     * version is a no-op, so retries cannot double-write or move the
     * pointer backwards.
     */
-  def writeVersionAt(df: DataFrame, path: String, version: Long,
-                     partitionCols: Seq[String] = Nil): Boolean = {
+  def writeVersionAt(df: DataFrame, path: String, version: Long): Boolean = {
     val spark = df.sparkSession
     val committed = latestVersion(spark, path)
     if (committed.exists(_ >= version)) false
@@ -138,12 +131,7 @@ object Sinks {
       val conf = spark.sparkContext.hadoopConfiguration
       val hPath = new org.apache.hadoop.fs.Path(path)
       val fs = hPath.getFileSystem(conf)
-      val w = df.write.mode(SaveMode.Overwrite)
-      // Hive layout inside the snapshot: filters on the partition
-      // columns prune whole files at planning time (the writePartitioned
-      // rationale applied to versioned tables)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(versionDir(path, version))
+      df.write.mode(SaveMode.Overwrite).parquet(versionDir(path, version))
       val qualified = fs.makeQualified(hPath)
       val tmp = new org.apache.hadoop.fs.Path(qualified, "_LATEST.tmp")
       Using.resource(fs.create(tmp, true))(_.write(version.toString.getBytes("UTF-8")))

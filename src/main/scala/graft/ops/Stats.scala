@@ -67,14 +67,7 @@ object Stats {
     * confs are mutable global state — callers on shared sessions get
     * the restore discipline for free.
     */
-  def withCbo[T](s: SparkSession, on: Boolean)(body: => T): T = {
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prev = keys.map(k => k -> s.conf.getOption(k))
-    keys.foreach(k => s.conf.set(k, on.toString))
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  def withCbo[T](s: SparkSession, on: Boolean)(body: => T): T =
+    graft.Graft.withConf(s, "spark.sql.cbo.enabled" -> on.toString,
+      "spark.sql.cbo.joinReorder.enabled" -> on.toString)(body)
 }

@@ -320,23 +320,14 @@ private[graft] object LlmSimOps {
     * cell_id, n_id, sub, cid — the ~50×-compressed corpus, codes
     * grouped by cell) and the trained residual codebook (kind='c':
     * sub, cid, pos, ce — ks·m·dsub rows, broadcast size), packed in
-    * one table the way FAISS packs lists + codebooks in one file —
-    * Hive-partitioned by (kind, cell_id), so the codebook read opens
-    * only the kind=c files and a probe's postings read opens
-    * ~nprobe/cells of the kind=p files (file-level pruning, the r12
-    * layout note closed; LayoutSpec counts the files). At 100 TB the
-    * build runs once per corpus snapshot (Bench's `_derive_ann_index`);
-    * every query after reads the postings. Parameters are the
-    * registry's standard ANN geometry (dims=64, cells=16, m=8, ks=16,
-    * one Lloyd round) — a deployment would key the table by its
-    * geometry.
-    *
-    * Read-back note: Hive partition values come from directory names,
-    * so `cell_id` reads as INT and rides last in column order —
-    * consumers select explicitly and cast where the column is output.
+    * one unpartitioned table the way FAISS packs lists + codebooks in
+    * one file. At 100 TB the build runs once per corpus snapshot
+    * (Bench's `_derive_ann_index`); every query after reads the
+    * postings. Parameters are the registry's standard ANN geometry
+    * (dims=64, cells=16, m=8, ks=16, one Lloyd round) — a deployment
+    * would key the table by its geometry.
     */
-  private[queries] val annIndexTable =
-    new graft.ops.DurableTable("ann_index", Seq("kind", "cell_id"))
+  private[queries] val annIndexTable = new graft.ops.DurableTable("ann_index")
 
   private[graft] val annIndexDerivations = annIndexTable.derivations
 
@@ -365,9 +356,7 @@ private[graft] object LlmSimOps {
     * Same algorithm, same parameters, so the committed oracle is the
     * identical full restatement — the build/read split cannot change a
     * row without a hash mismatch — and LlmOpsSpec additionally pins
-    * read ≡ rebuild row-for-row and the derivation run-once. The
-    * postings scan opens only the probed cells' files (the search's
-    * dynamic partition pruning; LayoutSpec counts them).
+    * read ≡ rebuild row-for-row and the derivation run-once.
     */
   private[queries] val qAnnIvfPqRead: Q = (s, d) => {
     val (postings, cb) = annIndexParts(s, d)
@@ -386,7 +375,7 @@ private[graft] object LlmSimOps {
     */
   private[queries] val qIvfPqCellStats: Q = (s, d) =>
     annIndex(s, d).filter(col("kind") === "p")
-      .select(col("cell_id").cast("long").as("cell_id"), col("n_id"))
+      .select(col("cell_id"), col("n_id"))
       .distinct()
       .groupBy(col("cell_id"))
       .agg(count(lit(1)).as("n_members"))
@@ -428,8 +417,7 @@ private[graft] object LlmSimOps {
   private[queries] val qAnnIvfPqDeleteStats: Q = (s, d) =>
     graft.ops.AnnIndexLifecycle.applyTombstones(
         annIndex(s, d).filter(col("kind") === "p")
-          .select(col("cell_id").cast("long").as("cell_id"), col("n_id"),
-            col("sub"), col("cid")),
+          .select(col("cell_id"), col("n_id"), col("sub"), col("cid")),
         deleteTombstones(s, d))
       .select(col("cell_id"), col("n_id")).distinct()
       .groupBy(col("cell_id"))
@@ -477,7 +465,7 @@ private[graft] object LlmSimOps {
       refineIters = 1)
     graft.ops.Sinks.readVersioned(s, path, Some(v))
       .filter(col("kind") === "p")
-      .select(col("cell_id").cast("long").as("cell_id"), col("n_id"),
+      .select(col("cell_id"), col("n_id"),
         col("sub").cast("int").as("sub"), col("cid"))
       .orderBy(col("n_id"), col("sub"))
   }
@@ -927,16 +915,7 @@ private[graft] object LlmSimOps {
     */
   private[queries] def embeddingBlockedSql(threshold: Double, bands: Int, bits: Int,
                                   dims: Int): String = {
-    def planeLit(p: Int): String =
-      (0 until dims).map(j =>
-        if (graft.functions.SrpBands.positive(p, j)) "1" else "-1")
-        .mkString("CAST([", ",", "] AS DOUBLE[])")
-    val ct = (0 until bands).map { b =>
-      val terms = (0 until bits).map { i =>
-        s"(CASE WHEN list_dot_product(v, ${planeLit(b * bits + i)}) > 0 THEN ${1L << i} ELSE 0 END)"
-      }.mkString(" + ")
-      s"${b * (1L << bits)} + $terms"
-    }.mkString("[", ",\n", "]")
+    val ct = srpCodeListSql(bands, bits, dims)
     s"""$cosineCte,
        |c AS (SELECT vec_id, v, $ct AS ct FROM e),
        |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -948,21 +927,12 @@ private[graft] object LlmSimOps {
 
   /** Merged truth⋈candidate oracle for `q_emb_dedup_eval`: the exact
     * all-pairs cosine truth and the bit-mirrored SRP band candidates
-    * (same planeLit loops as [[embeddingBlockedSql]]) scored with
+    * (the same [[srpCodeListSql]] codes) scored with
     * INTERSECT/EXCEPT counts.
     */
   private[queries] def embDedupEvalSql(threshold: Double, bands: Int, bits: Int,
                               dims: Int): String = {
-    def planeLit(p: Int): String =
-      (0 until dims).map(j =>
-        if (graft.functions.SrpBands.positive(p, j)) "1" else "-1")
-        .mkString("CAST([", ",", "] AS DOUBLE[])")
-    val ct = (0 until bands).map { b =>
-      val terms = (0 until bits).map { i =>
-        s"(CASE WHEN list_dot_product(v, ${planeLit(b * bits + i)}) > 0 THEN ${1L << i} ELSE 0 END)"
-      }.mkString(" + ")
-      s"${b * (1L << bits)} + $terms"
-    }.mkString("[", ",\n", "]")
+    val ct = srpCodeListSql(bands, bits, dims)
     s"""$cosineCte,
        |truth AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
        |      FROM e a JOIN e b ON a.vec_id < b.vec_id
@@ -985,11 +955,8 @@ private[graft] object LlmSimOps {
        |FROM cnt WHERE tp + fp > 0 AND tp + fn > 0 ORDER BY tp""".stripMargin
   }
 
-  /** Exact top-5 cosine neighbors of the query subset — the oracle for
-    * both the brute-force baseline and the exhaustive IVF gate.
-    */
-  /** The SRP band-code list as DuckDB SQL — the [[embeddingBlockedSql]]
-    * planeLit construction factored for reuse: band b's tagged code is
+  /** The SRP band-code list as DuckDB SQL, shared by every SRP oracle:
+    * band b's tagged code is
     * `b·2^bits + Σ bit_i·2^i` with bit_i the sign of the dot against
     * hyperplane `b·bits + i`, exactly [[graft.functions.SrpBands]].
     */

@@ -506,17 +506,14 @@ object SqlSurface {
       |ORDER BY s_suppkey""".stripMargin
 
   /** TPC-H Q3 shape through the SQL surface (same engine, SQL text in). */
-  private val qSqlTpchQ3: Q = (s, d) => {
-    registerViews(s, d)
-    s.sql(
-      """SELECT o_orderkey, o_orderdate,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT))
-        |    AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderstatus = 'O'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue_cents DESC, o_orderkey LIMIT 20""".stripMargin)
-  }
+  private val tpchQ3Sql: String =
+    """SELECT o_orderkey, o_orderdate,
+      |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT))
+      |    AS BIGINT) AS revenue_cents
+      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      |WHERE o_orderstatus = 'O'
+      |GROUP BY o_orderkey, o_orderdate
+      |ORDER BY revenue_cents DESC, o_orderkey LIMIT 20""".stripMargin
 
   /** TPC-H Q5 shape: six-table join (lineitem-orders-customer-supplier-
     * nation-region) with the local-supplier condition and a region
@@ -525,22 +522,19 @@ object SqlSurface {
     * per-row-rounded integer hundredths of a cent (exact under any
     * aggregation order, mirrored by the oracle).
     */
-  private val qSqlTpchQ5: Q = (s, d) => {
-    registerViews(s, d)
-    s.sql(
-      """SELECT n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000.0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_e4
-        |FROM customer
-        |JOIN orders   ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation   ON s_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name IN ('ASIA', 'EUROPE') AND o_orderstatus <> 'F'
-        |GROUP BY n_name
-        |ORDER BY revenue_e4 DESC, n_name""".stripMargin)
-  }
+  private val tpchQ5Sql: String =
+    """SELECT n_name,
+      |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000.0)
+      |    AS BIGINT)) AS BIGINT) AS revenue_e4
+      |FROM customer
+      |JOIN orders   ON c_custkey = o_custkey
+      |JOIN lineitem ON l_orderkey = o_orderkey
+      |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+      |JOIN nation   ON s_nationkey = n_nationkey
+      |JOIN region   ON n_regionkey = r_regionkey
+      |WHERE r_name IN ('ASIA', 'EUROPE') AND o_orderstatus <> 'F'
+      |GROUP BY n_name
+      |ORDER BY revenue_e4 DESC, n_name""".stripMargin
 
   /** TPC-H Q18 shape (large-volume orders): IN over an aggregated
     * subquery — Catalyst plans the HAVING filter as a pre-aggregation
@@ -548,20 +542,17 @@ object SqlSurface {
     * but never joined to itself row-wise. Quantities are integer-valued,
     * so the sums are exact under any order.
     */
-  private val qSqlTpchQ18: Q = (s, d) => {
-    registerViews(s, d)
-    s.sql(
-      """SELECT c_custkey, o_orderkey,
-        |  CAST(sum(l_quantity) AS BIGINT) AS total_qty
-        |FROM customer
-        |JOIN orders   ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE o_orderkey IN (
-        |  SELECT l_orderkey FROM lineitem
-        |  GROUP BY l_orderkey HAVING sum(l_quantity) > 120)
-        |GROUP BY c_custkey, o_orderkey
-        |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin)
-  }
+  private val tpchQ18Sql: String =
+    """SELECT c_custkey, o_orderkey,
+      |  CAST(sum(l_quantity) AS BIGINT) AS total_qty
+      |FROM customer
+      |JOIN orders   ON c_custkey = o_custkey
+      |JOIN lineitem ON o_orderkey = l_orderkey
+      |WHERE o_orderkey IN (
+      |  SELECT l_orderkey FROM lineitem
+      |  GROUP BY l_orderkey HAVING sum(l_quantity) > 120)
+      |GROUP BY c_custkey, o_orderkey
+      |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin
 
   /** Spark 4 VARIANT path for semi-structured data: `parse_json` once
     * into the binary variant encoding, typed `variant_get` extraction,
@@ -588,37 +579,28 @@ object SqlSurface {
   }
 
   /** Scalar subquery: orders above the average order value. */
-  private val qSqlScalarSubquery: Q = (s, d) => {
-    registerViews(s, d)
-    s.sql(
-      """SELECT o_orderkey, CAST(round(o_totalprice * 100.0) AS BIGINT) AS price_cents
-        |FROM orders
-        |WHERE CAST(round(o_totalprice * 100.0) AS BIGINT) >
-        |  (SELECT avg(CAST(round(o_totalprice * 100.0) AS BIGINT)) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin)
-  }
+  private val sqlScalarSubquerySql: String =
+    """SELECT o_orderkey, CAST(round(o_totalprice * 100.0) AS BIGINT) AS price_cents
+      |FROM orders
+      |WHERE CAST(round(o_totalprice * 100.0) AS BIGINT) >
+      |  (SELECT avg(CAST(round(o_totalprice * 100.0) AS BIGINT)) FROM orders)
+      |ORDER BY o_orderkey""".stripMargin
 
   /** Correlated EXISTS with an inner aggregate threshold. */
-  private val qSqlCorrelated: Q = (s, d) => {
-    registerViews(s, d)
-    s.sql(
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE (SELECT count(*) FROM orders WHERE o_custkey = c_custkey) >= 15
-        |ORDER BY c_custkey""".stripMargin)
-  }
+  private val sqlCorrelatedSql: String =
+    """SELECT c_custkey, c_name FROM customer
+      |WHERE (SELECT count(*) FROM orders WHERE o_custkey = c_custkey) >= 15
+      |ORDER BY c_custkey""".stripMargin
 
   /** CTE chain through the SQL surface. */
-  private val qSqlCte: Q = (s, d) => {
-    registerViews(s, d)
-    s.sql(
-      """WITH big_orders AS (
-        |  SELECT o_orderkey, o_custkey FROM orders WHERE o_totalprice > 200000.0),
-        |per_customer AS (
-        |  SELECT o_custkey, count(*) AS n_big FROM big_orders GROUP BY o_custkey)
-        |SELECT c.c_custkey, p.n_big
-        |FROM customer c JOIN per_customer p ON c.c_custkey = p.o_custkey
-        |ORDER BY c.c_custkey""".stripMargin)
-  }
+  private val sqlCteSql: String =
+    """WITH big_orders AS (
+      |  SELECT o_orderkey, o_custkey FROM orders WHERE o_totalprice > 200000.0),
+      |per_customer AS (
+      |  SELECT o_custkey, count(*) AS n_big FROM big_orders GROUP BY o_custkey)
+      |SELECT c.c_custkey, p.n_big
+      |FROM customer c JOIN per_customer p ON c.c_custkey = p.o_custkey
+      |ORDER BY c.c_custkey""".stripMargin
 
   /** Recursive CTE (Spark 4 WITH RECURSIVE): a month spine from min to
     * max order month, left-joined to per-month order counts — the gap-
@@ -629,37 +611,31 @@ object SqlSurface {
     * WHERE re-scans the fact table once per iteration (measured 9.3 s
     * at sf0.1 — ~80 full-orders scans — vs one bounds scan).
     */
-  private val qSqlRecursive: Q = (s, d) => {
-    registerViews(s, d)
-    s.sql(
-      """WITH RECURSIVE bounds AS (
-        |  SELECT date_trunc('month', min(o_orderdate)) AS lo,
-        |         date_trunc('month', max(o_orderdate)) AS hi FROM orders),
-        |spine(m, hi) AS (
-        |  SELECT lo, hi FROM bounds
-        |  UNION ALL
-        |  SELECT m + INTERVAL 1 MONTH, hi FROM spine WHERE m < hi
-        |)
-        |SELECT m AS month_start, count(o_orderkey) AS n_orders
-        |FROM spine LEFT JOIN orders ON date_trunc('month', o_orderdate) = m
-        |GROUP BY m ORDER BY m""".stripMargin)
-  }
+  private val sqlRecursiveSql: String =
+    """WITH RECURSIVE bounds AS (
+      |  SELECT date_trunc('month', min(o_orderdate)) AS lo,
+      |         date_trunc('month', max(o_orderdate)) AS hi FROM orders),
+      |spine(m, hi) AS (
+      |  SELECT lo, hi FROM bounds
+      |  UNION ALL
+      |  SELECT m + INTERVAL 1 MONTH, hi FROM spine WHERE m < hi
+      |)
+      |SELECT m AS month_start, count(o_orderkey) AS n_orders
+      |FROM spine LEFT JOIN orders ON date_trunc('month', o_orderdate) = m
+      |GROUP BY m ORDER BY m""".stripMargin
 
   /** Correlated LATERAL subquery: per-customer argmax-row (top order by
     * price) — Catalyst rewrites DomainJoin-decorrelatable laterals; the
     * per-group-LIMIT shape is the one windowed rank also covers, here in
     * its SQL-native form.
     */
-  private val qSqlLateral: Q = (s, d) => {
-    registerViews(s, d)
-    s.sql(
-      """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        |FROM customer c, LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-        |ORDER BY c.c_custkey""".stripMargin)
-  }
+  private val sqlLateralSql: String =
+    """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
+      |FROM customer c, LATERAL (
+      |  SELECT o_orderkey, o_totalprice FROM orders
+      |  WHERE o_custkey = c.c_custkey
+      |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
+      |ORDER BY c.c_custkey""".stripMargin
 
   /** Ordered string aggregation (Spark 4 listagg ≡ DuckDB string_agg):
     * the per-key event-type trail, deterministic via the WITHIN GROUP
@@ -899,16 +875,16 @@ object SqlSurface {
     "q_sql_tpch_q19" -> sqlKey(tpchQ19Sql),
     "q_sql_tpch_q21" -> sqlKey(tpchQ21Sql),
     "q_sql_tpch_q22" -> sqlKey(tpchQ22Sql),
-    "q_sql_tpch_q3" -> qSqlTpchQ3,
-    "q_sql_tpch_q5" -> qSqlTpchQ5,
-    "q_sql_tpch_q18" -> qSqlTpchQ18,
+    "q_sql_tpch_q3" -> sqlKey(tpchQ3Sql),
+    "q_sql_tpch_q5" -> sqlKey(tpchQ5Sql),
+    "q_sql_tpch_q18" -> sqlKey(tpchQ18Sql),
     "q_variant" -> qVariant,
-    "q_sql_scalar_subquery" -> qSqlScalarSubquery,
-    "q_sql_correlated" -> qSqlCorrelated,
-    "q_sql_cte" -> qSqlCte,
-    "q_sql_recursive" -> qSqlRecursive,
+    "q_sql_scalar_subquery" -> sqlKey(sqlScalarSubquerySql),
+    "q_sql_correlated" -> sqlKey(sqlCorrelatedSql),
+    "q_sql_cte" -> sqlKey(sqlCteSql),
+    "q_sql_recursive" -> sqlKey(sqlRecursiveSql),
     "q_string_agg" -> qStringAgg,
-    "q_sql_lateral" -> qSqlLateral,
+    "q_sql_lateral" -> sqlKey(sqlLateralSql),
     "q_pivot" -> qPivot,
     "q_percentile" -> qPercentile,
     "q_histogram" -> qHistogram,
@@ -1010,75 +986,14 @@ object SqlSurface {
         |  CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k
         |FROM events
         |GROUP BY k_band ORDER BY k_band""".stripMargin,
-    "q_sql_tpch_q18" ->
-      """SELECT c_custkey, o_orderkey,
-        |  CAST(sum(l_quantity) AS BIGINT) AS total_qty
-        |FROM customer
-        |JOIN orders   ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE o_orderkey IN (
-        |  SELECT l_orderkey FROM lineitem
-        |  GROUP BY l_orderkey HAVING sum(l_quantity) > 120)
-        |GROUP BY c_custkey, o_orderkey
-        |ORDER BY total_qty DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q_sql_tpch_q5" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000.0)
-        |    AS BIGINT)) AS BIGINT) AS revenue_e4
-        |FROM customer
-        |JOIN orders   ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation   ON s_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name IN ('ASIA', 'EUROPE') AND o_orderstatus <> 'F'
-        |GROUP BY n_name
-        |ORDER BY revenue_e4 DESC, n_name""".stripMargin,
-    "q_sql_tpch_q3" ->
-      """SELECT o_orderkey, o_orderdate,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT))
-        |    AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderstatus = 'O'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue_cents DESC, o_orderkey LIMIT 20""".stripMargin,
-    "q_sql_scalar_subquery" ->
-      """SELECT o_orderkey, CAST(round(o_totalprice * 100.0) AS BIGINT) AS price_cents
-        |FROM orders
-        |WHERE CAST(round(o_totalprice * 100.0) AS BIGINT) >
-        |  (SELECT avg(CAST(round(o_totalprice * 100.0) AS BIGINT)) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_sql_correlated" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE (SELECT count(*) FROM orders WHERE o_custkey = c_custkey) >= 15
-        |ORDER BY c_custkey""".stripMargin,
-    "q_sql_cte" ->
-      """WITH big_orders AS (
-        |  SELECT o_orderkey, o_custkey FROM orders WHERE o_totalprice > 200000.0),
-        |per_customer AS (
-        |  SELECT o_custkey, count(*) AS n_big FROM big_orders GROUP BY o_custkey)
-        |SELECT c.c_custkey, p.n_big
-        |FROM customer c JOIN per_customer p ON c.c_custkey = p.o_custkey
-        |ORDER BY c.c_custkey""".stripMargin,
-    "q_sql_recursive" ->
-      """WITH RECURSIVE bounds AS (
-        |  SELECT date_trunc('month', min(o_orderdate)) AS lo,
-        |         date_trunc('month', max(o_orderdate)) AS hi FROM orders),
-        |spine(m, hi) AS (
-        |  SELECT lo, hi FROM bounds
-        |  UNION ALL
-        |  SELECT m + INTERVAL 1 MONTH, hi FROM spine WHERE m < hi
-        |)
-        |SELECT m AS month_start, count(o_orderkey) AS n_orders
-        |FROM spine LEFT JOIN orders ON date_trunc('month', o_orderdate) = m
-        |GROUP BY m ORDER BY m""".stripMargin,
-    "q_sql_lateral" ->
-      """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        |FROM customer c, LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) t
-        |ORDER BY c.c_custkey""".stripMargin,
+    "q_sql_tpch_q18" -> tpchQ18Sql,
+    "q_sql_tpch_q5" -> tpchQ5Sql,
+    "q_sql_tpch_q3" -> tpchQ3Sql,
+    "q_sql_scalar_subquery" -> sqlScalarSubquerySql,
+    "q_sql_correlated" -> sqlCorrelatedSql,
+    "q_sql_cte" -> sqlCteSql,
+    "q_sql_recursive" -> sqlRecursiveSql,
+    "q_sql_lateral" -> sqlLateralSql,
     "q_string_agg" ->
       """SELECT user_id,
         |  string_agg(event_type, ',' ORDER BY ts, event_id) AS type_trail

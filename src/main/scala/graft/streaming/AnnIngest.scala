@@ -15,12 +15,11 @@ import GateStores.Store
   * (2) PQ-encodes its ADMITTED vectors against the index geometry
   * FROZEN after the first batch (coarse cells from the first `cells`
   * vectors, residual codebooks trained on batch 0's residuals),
-  * appending the postings rows to a durable inverted-list store,
-  * Hive-partitioned by `cell_id` so index reads prune whole files per
-  * probed cell. This is the write side of a production vector
-  * database: dedup at the door, then frozen-geometry encode at cost
-  * ∝ batch — no retrain, no re-read of the accumulated index;
-  * staleness is what `q_pq_distortion` / `q_ivfpq_cell_stats` watch.
+  * appending the postings rows to a durable inverted-list store. This
+  * is the write side of a production vector database: dedup at the
+  * door, then frozen-geometry encode at cost ∝ batch — no retrain, no
+  * re-read of the accumulated index; staleness is what
+  * `q_pq_distortion` / `q_ivfpq_cell_stats` watch.
   *
   * Contract (stated identically by the committed DuckDB oracle):
   * every vector encodes against the geometry trained on the FIRST
@@ -153,8 +152,8 @@ object AnnIngest {
     val idx = EmbGate.idxStore(Scratch.dir(s"${ns}_idx", d))
     val vec = EmbGate.vecStore(Scratch.dir(s"${ns}_vec", d), eraseKey = Some("vec_id"))
     val post = Store(Scratch.dir(s"${ns}_post", d),
-      StructType.fromDDL("n_id BIGINT, sub INT, cid BIGINT, cell_id BIGINT"),
-      Seq("cell_id"), eraseKey = Some("n_id"))
+      StructType.fromDDL("cell_id BIGINT, n_id BIGINT, sub INT, cid BIGINT"),
+      eraseKey = Some("n_id"))
     val geoDir = Scratch.dir(s"${ns}_geo", d)
     val tomb = Store(Scratch.dir(s"${ns}_tomb", d), StructType.fromDDL("n_id BIGINT"))
     def tombstones(before: Long): Option[DataFrame] =
@@ -226,8 +225,6 @@ object AnnIngest {
           Similarity.ivfPqEncode(admitted, cc, cb,
             "vec_id", "embedding", dsub)
         }
-      // postings partitioned by cell: the inverted-list layout — a
-      // reader probing nprobe cells opens nprobe/cells of the files
       Seq(post -> postings,
         idx -> buckets,
         vec -> vecs)

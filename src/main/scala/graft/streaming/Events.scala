@@ -627,44 +627,33 @@ object Events {
     // sized); the stream pins its own value at START (state
     // partitioning is fixed by the checkpoint), so the session's
     // setting is restored immediately after.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     // Sentinel B exists precisely so the final flush is DATA-driven:
     // after its batch emits, the engine's trailing no-data micro-batch
     // (run by default for watermark-driven state cleanup) contributes
     // zero rows and costs a full trigger (~450 ms of log/plan/commit
     // machinery). Disable it for the replay — the query terminates
     // right after, so the skipped cleanup batch has nothing to clean.
-    // Both confs are pinned into the query at START (cloned session +
-    // checkpointed state partitioning), so the session's settings are
-    // restored immediately after.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = s.conf.get(noDataKey)
     // Whole-stage codegen is OFF for the replay only: each micro-batch
     // embeds that batch's watermark as a literal in the generated
     // stages, so every one of the 4 batches is a fresh Janino compile
     // — at replay volume (≤20k rows/batch) the compile cost strictly
     // exceeds the execution gain (measured: warm 3.28s → 2.66s). A
     // production stream with sustained per-batch volume keeps codegen
-    // on; this is a replay-harness economics call, pinned at START
-    // like the other two confs and restored immediately after.
-    val wscgKey = "spark.sql.codegen.wholeStage"
-    val prevWscg = s.conf.get(wscgKey)
-    val query =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        s.conf.set(noDataKey, "false")
-        s.conf.set(wscgKey, "false")
-        asofEnrichWatermarked(stream, delay = s"${delaySec(lo, hi)} seconds")
-          .writeStream.format("memory").queryName(qname)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set(noDataKey, prevNoData)
-        s.conf.set(wscgKey, prevWscg)
-      }
+    // on; this is a replay-harness economics call. All three confs are
+    // pinned into the query at START (cloned session + checkpointed
+    // state partitioning), so the session's settings are restored as
+    // soon as it has started.
+    val query = graft.Graft.withConf(s,
+        "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+        "spark.sql.codegen.wholeStage" -> "false") {
+      asofEnrichWatermarked(stream, delay = s"${delaySec(lo, hi)} seconds")
+        .writeStream.format("memory").queryName(qname)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
     // Localize the (purchase-count-sized) result, then tear the
     // harness down: the memory-sink view and the UUID-named checkpoint
     // are per-invocation scratch, and a session that replays repeatedly

@@ -36,8 +36,8 @@ import graft.ops.Sinks
   * through [[readStoreOpt]] = snapshot + live tail — so a long-running
   * gate's probe plan stays O(tail), not O(all batches ever), and the
   * per-batch contract above is unchanged (folds stop at the last
-  * committed batch). Every store but the `cell_id`-partitioned ANN
-  * postings lands and folds as one unpartitioned file.
+  * committed batch). Every store lands and folds as one unpartitioned
+  * file.
   */
 private[graft] object GateStores {
 
@@ -49,22 +49,20 @@ private[graft] object GateStores {
     */
   val Slices = 3
 
-  /** A store a gate lands once per batch, under `dir/b<id>`, Hive-
-    * partitioned inside by `partitionCols`. `schema` is the rows it
-    * lands, partition columns last: every read of the store uses it, so
-    * none runs Spark's footer-reading schema-inference job. `eraseKey`
-    * names the key column on which the store's folds anti-join the
-    * gate's tombstones; None keeps every row.
+  /** A store a gate lands once per batch, under `dir/b<id>`. `schema`
+    * is the rows it lands: every read of the store uses it, so none
+    * runs Spark's footer-reading schema-inference job. `eraseKey` names
+    * the key column on which the store's folds anti-join the gate's
+    * tombstones; None keeps every row.
     */
   final case class Store(dir: String, schema: StructType,
-                         partitionCols: Seq[String] = Nil,
                          eraseKey: Option[String] = None) {
     /** Lands `df` as batch `id`; its fields must be the declared ones. */
     def land(df: DataFrame, id: Long): Unit = {
       def fields(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toSet
       require(fields(df.schema) == fields(schema),
         s"store $dir declares ${schema.toDDL}, not ${df.schema.toDDL}")
-      GateStores.land(df, s"$dir/b$id", partitionCols)
+      GateStores.land(df, s"$dir/b$id")
     }
   }
 
@@ -325,40 +323,23 @@ private[graft] object GateStores {
 
   /** Per-batch store landing, one file (a micro-batch here is thousands
     * of rows, where 32 shuffle partitions of task-commit overhead would
-    * dominate); `partitionCols` lands a Hive layout inside the batch dir
-    * (the ANN postings' `cell_id`, which index reads prune by).
+    * dominate). An empty frame lands one schema-bearing file of no rows.
     */
-  def land(df: DataFrame, path: String,
-           partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.coalesce(1).write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(path)
-  }
+  def land(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
 
-  private def hasParquet(f: java.io.File): Boolean =
-    (f.isFile && f.getName.endsWith(".parquet")) ||
-      (f.isDirectory && f.listFiles().exists(hasParquet))
+  private def hasParquet(dir: String): Boolean =
+    Option(new java.io.File(dir).listFiles()).exists(_.exists(_.getName.endsWith(".parquet")))
 
-  /** Read a set of store dirs (batch dirs, a snapshot version), each
-    * possibly Hive-partitioned inside: one read per dir (its own
-    * `basePath`) unioned by name — a single multi-path read would
-    * reject the mixed `b<id>/cell_id=…` directory depths as conflicting
-    * partition structures. Every dir is read with `schema`.
-    *
-    * Dirs holding NO parquet files are skipped, and an all-empty set
-    * is None: a partitioned write of an EMPTY frame lands only a
-    * `_SUCCESS` marker (no partition dirs, no schema-bearing file), and
-    * that is a legitimate store state — a micro-batch whose gate
-    * rejects every vector appends zero postings (the ~SF1 soak's
-    * batches 1-2, where every arrival is a fold near-dup of batch 0);
-    * semantically it contributes nothing.
+  /** Read a set of store dirs (batch dirs, a snapshot version) as one
+    * scan with `schema`. Dirs holding no parquet file are skipped, and
+    * an all-empty set is None.
     */
   def readBatchesOpt(ss: SparkSession, dirs: Seq[String],
                      schema: StructType): Option[DataFrame] = {
-    val nonEmpty = dirs.filter(d => hasParquet(new java.io.File(d)))
+    val nonEmpty = dirs.filter(hasParquet)
     if (nonEmpty.isEmpty) None
-    else Some(nonEmpty.map(p => ss.read.schema(schema).option("basePath", p).parquet(p))
-      .reduce(_.unionByName(_)))
+    else Some(ss.read.schema(schema).parquet(nonEmpty: _*))
   }
 
   /** Total bytes under a store's batch directories — a driver-side
@@ -406,8 +387,7 @@ private[graft] object GateStores {
   // N-way union plan per probe. Settled batches fold into a SNAPSHOT
   // while recent batches stay as a tail:
   //
-  //   dir/snap/v=<id>/   all rows of batches 0..<id>, one table, the
-  //                      same partition layout as the batch dirs
+  //   dir/snap/v=<id>/   all rows of batches 0..<id>, one file
   //   dir/snap/_LATEST   the committed version ([[graft.ops.Sinks]])
   //   dir/b<j>/          the live tail, j > <id>
   //
@@ -482,17 +462,10 @@ private[graft] object GateStores {
         .select(cur.columns.map(col).toIndexedSeq: _*)
       case None => cur
     }
-    // ONE file per partition value (repartition by the partition cols),
-    // or a single file unpartitioned — without this, every input task
-    // writes into every Hive partition and the snapshot lands as
-    // tasks×partitions tiny files, which each later probe then pays to
-    // re-open (measured: the naive fold made the gate replays ~1.5×
-    // slower end to end)
-    val shaped = st.partitionCols match {
-      case Nil => folded.coalesce(1)
-      case cols => folded.repartition(cols.map(col): _*)
-    }
-    Sinks.writeVersionAt(shaped, snapTable(st.dir), tail.last._1, st.partitionCols): Unit
+    // ONE file: a snapshot of one file per input task makes each later
+    // probe pay to re-open them all (measured: the naive fold made the
+    // gate replays ~1.5× slower end to end)
+    Sinks.writeVersionAt(folded.coalesce(1), snapTable(st.dir), tail.last._1): Unit
     // cleanup AFTER the commit point; readers ignore these either way
     wipe(tail.map(_._2))
     Sinks.vacuumVersions(ss, snapTable(st.dir), keep = 1)
@@ -515,7 +488,7 @@ private[graft] object GateStores {
   }
 
   /** The accumulated store visible to batch `before` ([[visibleDirs]]).
-    * None iff the store holds no rows yet.
+    * None iff no batch of the store has landed yet.
     */
   def readStoreOpt(ss: SparkSession, st: Store,
                    before: Long = Long.MaxValue): Option[DataFrame] =

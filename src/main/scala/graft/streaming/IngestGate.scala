@@ -3,9 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.functions.shingleHashes
 import graft.model.Scratch
-import graft.ops.{Dedup, Par}
+import graft.ops.Dedup
 import GateStores.Store
 
 /** Streaming near-duplicate INGESTION GATE — the continuous-corpus form
@@ -59,11 +58,7 @@ object IngestGate {
     GateStores.replay(s, "ingest_gate", docs, "doc_id",
         Scratch.dir("ingest_gate_src", d), stores = Seq(dec, idx, sh),
         folded = Seq(idx, sh), ckpt, wipeStores, crash) { b =>
-      val withSh = b.persist(Par.fanOut(b.rows.select(col("doc_id"), col("text")))
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("sh", shingleHashes(col("toks"), 3))
-        .filter(size(col("sh")) > 0)
-        .select(col("doc_id"), col("sh")))
+      val withSh = b.persist(Dedup.shingleSets(b.rows, "doc_id", "text", 3))
       val sigs = Dedup.minhashSignatures(withSh, "doc_id", 32)
       val bands = b.persist(Dedup.bandBuckets(sigs, "doc_id", 32, 2))
       val dupSrc = GateStores.dupSources(b, withSh, bands, "doc_id",

@@ -556,8 +556,8 @@ class LlmOpsSpec extends AnyFunSuite {
     val tombs = emb.filter($"vec_id" % 7 === 3).select($"vec_id".as("n_id"))
     val dir = java.nio.file.Files.createTempDirectory("ann_del").toString
 
-    // v0: the live index (cell-partitioned, like _derive_ann_index)
-    assert(graft.ops.Sinks.writeVersioned(postings, dir, Seq("cell_id")) == 0L)
+    // v0: the live index (unpartitioned, like _derive_ann_index)
+    assert(graft.ops.Sinks.writeVersioned(postings, dir) == 0L)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int, Long)] =
       df.select($"cell_id".cast("long"), $"n_id", $"sub", $"cid")
         .as[(Long, Long, Int, Long)].collect().toSet

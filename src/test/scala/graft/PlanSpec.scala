@@ -129,7 +129,7 @@ class PlanSpec extends AnyFunSuite {
     val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
     val postingScans = helper.collectWithSubqueries(df.queryExecution.executedPlan) {
       case s: org.apache.spark.sql.execution.FileSourceScanExec
-          if s.partitionFilters.exists(_.sql.contains("kind = 'p'")) => s
+          if s.dataFilters.exists(_.sql.contains("kind = 'p'")) => s
     }
     assert(postingScans.size == 1,
       s"expected one postings scan, got ${postingScans.size}")
@@ -624,6 +624,30 @@ class PlanSpec extends AnyFunSuite {
       org.apache.spark.sql.SparkSession.setActiveSession(shared)
       org.apache.spark.sql.SparkSession.setDefaultSession(shared)
     }
+  }
+
+  test("Graft.withConf restores a set key and unsets an unset one, on return and on throw") {
+    val setKey = "spark.sql.shuffle.partitions"
+    val unsetKey = "graft.spec.withConf.probe"
+    val before = spark.conf.get(setKey)
+    assert(spark.conf.getOption(unsetKey).isEmpty)
+    def check(): Unit = {
+      assert(spark.conf.get(setKey) == before)
+      assert(spark.conf.getOption(unsetKey).isEmpty)
+    }
+    val got = Graft.withConf(spark, setKey -> "7", unsetKey -> "on") {
+      (spark.conf.get(setKey), spark.conf.get(unsetKey))
+    }
+    assert(got == ("7", "on"))
+    check()
+    val e = intercept[IllegalStateException] {
+      Graft.withConf(spark, setKey -> "7", unsetKey -> "on") {
+        assert(spark.conf.get(setKey) == "7")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    check()
   }
 
   test("Profile records a key's layers, goes on past a failed key, and leaves no listener") {
