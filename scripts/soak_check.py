@@ -725,8 +725,7 @@ def main():
                         f"{run['folds']} folds ({run['tier']})",
                "base_dir": run["base_dir"], "corpus": corpus,
                "oracle_equivalence": equiv, "queries": queries,
-               "timings": run["timings"],
-               "pruned_fetches": run["pruned_fetches"]}
+               "timings": run["timings"]}
         doc["fail_count"], doc["env_fail_count"] = fail_counts(doc)
         with open(artifact, "w") as f:
             json.dump(doc, f, indent=1, sort_keys=True)

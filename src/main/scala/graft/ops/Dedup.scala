@@ -124,8 +124,9 @@ object Dedup {
   /** [[verifyJaccard]] with separate shingle tables per pair side — the
     * streaming-gate shape (see
     * [[graft.ops.Similarity.verifyCosineSides]]): `key_b` rows come from
-    * the in-memory micro-batch, `key_a` rows from a candidate-pruned
-    * slice of the durable shingle store.
+    * the in-memory micro-batch, `key_a` rows from the whole durable
+    * shingle store, which streams map-side through the broadcast
+    * candidate join (`broadcastB`).
     */
   def verifyJaccardSides(candidates: DataFrame, shA: DataFrame,
                          shB: DataFrame, key: String, threshold: Double,

@@ -79,9 +79,10 @@ object Similarity {
 
   /** [[verifyCosine]] with separate vector tables per pair side — the
     * streaming-gate shape: `key_b` rows always come from the in-memory
-    * micro-batch while `key_a` rows may come from a (candidate-pruned)
-    * slice of the durable vector store, so the store fetch is
-    * ∝ candidates and the same-batch path never touches the store.
+    * micro-batch while `key_a` rows come from the whole durable vector
+    * store, which streams map-side through the broadcast candidate join
+    * (`broadcastB`), so only candidate rows survive it and no exchange
+    * carries the store.
     */
   def verifyCosineSides(cands: DataFrame, vecsA: DataFrame, vecsB: DataFrame,
                         key: String, vec: String, threshold: Double,
@@ -94,12 +95,9 @@ object Similarity {
     // pass over the (big) a-side store: zero exchanges carry vectors,
     // at any corpus scale (guide §3.1: broadcast the side that is
     // small by construction; candidate pairs are 16 bytes/row)
-    if (broadcastB)
-      broadcast(cands).join(a, Seq("key_a")).join(broadcast(b0), Seq("key_b"))
-        .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-        .filter(col("cos") >= threshold)
-        .select(col("key_a"), col("key_b"))
-    else cands.join(a, Seq("key_a")).join(b0, Seq("key_b"))
+    val cand = if (broadcastB) broadcast(cands) else cands
+    val b = if (broadcastB) broadcast(b0) else b0
+    cand.join(a, Seq("key_a")).join(b, Seq("key_b"))
       .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("key_a"), col("key_b"))
@@ -755,15 +753,16 @@ object Similarity {
                         shortlist: Int): DataFrame = {
     // the LUT is every (query, cell, sub, cid) distance term — ks·m rows
     // per probed cell, the table an ADC scan reads instead of vectors
-    val cn = cb.groupBy("sub", "cid").agg(sum(col("ce") * col("ce")).as("cn2"))
+    // (codebook norms ride the same aggregate: each group holds exactly
+    // one centroid's dsub (sub, pos) rows, so the codebook is read once)
     val lut = probe
       .select(col("q_id"), col("cell_id"),
         posexplode(col("rs")).as(Seq("pos", "xe")))
       .withColumn("sub", expr(s"pos DIV $dsub").cast("int"))
       .join(broadcast(cb), Seq("sub", "pos"))
       .groupBy(col("q_id"), col("cell_id"), col("sub"), col("cid"))
-      .agg(sum(col("xe") * col("ce")).as("dot"))
-      .join(broadcast(cn), Seq("sub", "cid"))
+      .agg(sum(col("xe") * col("ce")).as("dot"),
+        sum(col("ce") * col("ce")).as("cn2"))
       .select(col("q_id"), col("cell_id"), col("sub"), col("cid"),
         (col("cn2") - col("dot") * 2L).as("term"))
     // ADC: Σ_sub term + |r|² = the exact lattice distance to the

@@ -17,8 +17,9 @@ import GateStores.Store
   * its ANN index: dedup state is durable TABLES (band index + vector
   * store), not operator memory, so it survives restarts and grows
   * append-only; per batch the probe cost is (batch buckets) ⋈ index —
-  * proportional to the BATCH — and raw vectors are fetched for
-  * verification candidates only, never joined corpus×corpus. The
+  * proportional to the BATCH — and the vector store streams through the
+  * broadcast candidate join, so only candidates verify, never
+  * corpus×corpus. The
   * lifecycle and the probe/verify step are [[GateStores.replay]] and
   * [[GateStores.dupSources]].
   *

@@ -16,9 +16,11 @@ import graft.ops.Sinks
 /** The streaming ingest gates' ([[IngestGate]], [[EmbGate]],
   * [[AnnIngest]]) one replay driver and the store contract it runs.
   * [[replay]] is the single statement of a gate's micro-batch
-  * lifecycle; [[dupSources]] is the single probe/fetch/verify step. A
-  * gate states only what is its own: its signature, its verifier, its
-  * stores and whatever it lands besides the gate decision.
+  * lifecycle; [[dupSources]] is the single probe/fetch/verify step, whose
+  * one store fetch reads the visible store whole and streams it through
+  * the verify's broadcast candidate join. A gate states only what is its
+  * own: its signature, its verifier, its stores and whatever it lands
+  * besides the gate decision.
   *
   * Store contract: each micro-batch Overwrite-writes its own `b<id>`
   * subdirectory, and probes read only STRICTLY EARLIER batches — the
@@ -178,32 +180,28 @@ private[graft] object GateStores {
     * min-aggregate, which is cheaper than an exchange of the whole
     * candidate set (the cosinePairsBlocked argument).
     *
-    * The verify's STORE fetch (`storeDir`) obeys the [[PruneStoreBytes]]
-    * cutover: a small store reads straight into the verify join, a large
-    * one is pruned to the keys whose index rows collide with a batch
-    * band, so the fetch is ∝ candidates. `tombstones` (an `n_id` delete
-    * set) hides erased keys from the fetch, so an erased predecessor can
-    * no longer verify a candidate — the visibility rule matches the
-    * PHYSICAL state after the store's tombstone fold, and decisions stay
-    * a pure function of (corpus, takedown schedule), not of when folds
-    * fire.
-    *
-    * `verify(cands, aSide, bSide)` keeps the verified (key_a, key_b)
-    * pairs. Its b side is `rows` alone — key_b always names a THIS-batch
-    * row — so the b-side join builds on the micro-batch, not the store.
+    * The verify's a side is the visible `store` ([[readStoreOpt]]) plus
+    * `rows`, read whole: `verify(cands, aSide, bSide)` broadcasts the
+    * candidates and the b side (`rows` alone — key_b always names a
+    * THIS-batch row), so the store streams map-side through the
+    * candidate join, which drops every non-candidate row, and no
+    * exchange carries store rows (StreamingSpec pins this). `tombstones`
+    * (an `n_id` delete set) hides erased keys from the store, so an
+    * erased predecessor can no longer verify a candidate — the
+    * visibility rule matches the PHYSICAL state after the store's
+    * tombstone fold, and decisions stay a pure function of (corpus,
+    * takedown schedule), not of when folds fire.
     */
   def dupSources(b: Batch, rows: DataFrame, bands: DataFrame, key: String,
       bandCols: Seq[String], idx: Store, store: Store,
       verify: (DataFrame, DataFrame, DataFrame) => DataFrame,
       tombstones: Option[DataFrame] = None): DataFrame = {
-    val index = readStoreOpt(b.ss, idx, b.id)
-      .map(_.select((key +: bandCols).map(col): _*))
     def side(df: DataFrame, as: String) =
       df.select(col(key).as(as) +: bandCols.map(col): _*)
-    val candPrev = index match {
+    val candPrev = readStoreOpt(b.ss, idx, b.id) match {
       case None => b.ss.emptyDataFrame
         .select(lit(0L).as("key_a"), lit(0L).as("key_b")).limit(0)
-      case Some(idx) => side(idx, "key_a")
+      case Some(index) => side(index, "key_a")
         .join(broadcast(side(bands, "key_b")), bandCols)
         .select(col("key_a"), col("key_b"))
     }
@@ -220,18 +218,7 @@ private[graft] object GateStores {
             Seq(key), "left_anti")
           case None => stored
         }
-        val fetched =
-          if (storeBytes(visibleDirs(b.ss, store.dir, b.id)) < PruneStoreBytes) live
-          else {
-            prunedFetches.incrementAndGet(): Unit
-            live.join(
-              index.get.join(
-                  broadcast(bands.select(bandCols.map(col): _*).distinct()),
-                  bandCols, "left_semi")
-                .select(col(key)).distinct(),
-              Seq(key), "left_semi")
-          }
-        fetched.unionByName(rows)
+        live.unionByName(rows)
     }
     verify(cands, aSide, rows)
       .groupBy(col("key_b").as(key))
@@ -342,44 +329,15 @@ private[graft] object GateStores {
     else Some(ss.read.schema(schema).parquet(nonEmpty: _*))
   }
 
-  /** Total bytes under a store's batch directories — a driver-side
-    * METADATA read (file lengths only), the cutover signal for
-    * [[PruneStoreBytes]].
+  /** Total bytes under a set of store dirs — a driver-side METADATA
+    * read (file lengths only), the measure [[maybeCompact]]'s geometric
+    * trigger compares.
     */
-  def storeBytes(dirs: Seq[String]): Long = {
+  private def storeBytes(dirs: Seq[String]): Long = {
     def size(f: java.io.File): Long =
       if (f.isDirectory) f.listFiles().map(size).sum else f.length()
     dirs.map(d => size(new java.io.File(d))).sum
   }
-
-  /** Scan-vs-prune cutover for the gates' verify-side store fetch:
-    * below this, the accumulated store is read straight into the
-    * verify join (the candidate-id semi-join would ADD a shuffle
-    * larger than the store itself — at the replay fixture and the
-    * ~SF1 soak the candidate set is 10-100× the store); at or above
-    * it, the store fetch is pruned to the ids colliding with a batch
-    * bucket, making the read ∝ candidates — the only shape that
-    * survives a corpus whose store dwarfs any batch's candidate set
-    * (the 100 TB regime). The decision input is file-size metadata,
-    * so it costs no job — the same class of size-based cutover AQE
-    * applies to join strategies.
-    *
-    * A `var` (r14, VERDICT r13 #1): every fixture store sits far under
-    * the production default, so the ONLY way to execute the pruned
-    * branch — the branch a 100 TB deployment runs permanently — under
-    * the hash gates is to force the cutover down. StreamingSpec sets
-    * it to 0, re-runs the replay gates, asserts [[prunedFetches]]
-    * advanced AND the decisions are identical to the scan branch.
-    * Production code never writes it.
-    */
-  val DefaultPruneStoreBytes: Long = 64L << 20
-  @volatile private[graft] var PruneStoreBytes: Long = DefaultPruneStoreBytes
-
-  /** Count of store fetches that took the candidates-pruned branch —
-    * observability for the cutover spec (a plan assertion would be
-    * brittle across the three gates; a counter is exact).
-    */
-  val prunedFetches = new java.util.concurrent.atomic.AtomicLong(0L)
 
   // ------------------------------------------------------------------
   // Snapshot compaction: unbounded micro-batches would otherwise mean
@@ -472,27 +430,23 @@ private[graft] object GateStores {
     true
   }
 
-  /** The dirs of the store at `dir` visible to batch `before`: the
-    * committed snapshot, then the live tail strictly between
-    * foldedThrough and `before`. The guard is the strictly-earlier
-    * contract: a snapshot may never cover the probing batch itself
-    * (folds stop at the previous committed batch, so this can only trip
-    * on external tampering).
-    */
-  private def visibleDirs(ss: SparkSession, dir: String, before: Long): Seq[String] = {
-    val snap = snapshot(ss, dir)
-    val ft = snap.fold(-1L)(_._1)
-    require(ft < before,
-      s"store at $dir folded through batch $ft, not strictly earlier than $before")
-    snap.map(_._2).toSeq ++ existingIds(dir, before).filter(_._1 > ft).map(_._2)
-  }
-
-  /** The accumulated store visible to batch `before` ([[visibleDirs]]).
-    * None iff no batch of the store has landed yet.
+  /** The accumulated store visible to batch `before`: the committed
+    * snapshot, then the live tail strictly between foldedThrough and
+    * `before`. None iff no batch of the store has landed yet. The guard
+    * is the strictly-earlier contract: a snapshot may never cover the
+    * probing batch itself (folds stop at the previous committed batch,
+    * so this can only trip on external tampering).
     */
   def readStoreOpt(ss: SparkSession, st: Store,
-                   before: Long = Long.MaxValue): Option[DataFrame] =
-    readBatchesOpt(ss, visibleDirs(ss, st.dir, before), st.schema)
+                   before: Long = Long.MaxValue): Option[DataFrame] = {
+    val snap = snapshot(ss, st.dir)
+    val ft = snap.fold(-1L)(_._1)
+    require(ft < before,
+      s"store at ${st.dir} folded through batch $ft, not strictly earlier than $before")
+    readBatchesOpt(ss,
+      snap.map(_._2).toSeq ++ existingIds(st.dir, before).filter(_._1 > ft).map(_._2),
+      st.schema)
+  }
 
   private val fixtureLock = new Object
 

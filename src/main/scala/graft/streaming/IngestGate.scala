@@ -39,6 +39,21 @@ import GateStores.Store
   * key would hash-mismatch rather than silently under-dedup.
   */
 object IngestGate {
+  /** One micro-batch of the MinHash gate: shingle and band the batch,
+    * then [[GateStores.dupSources]] with exact Jaccard. Returns (withSh,
+    * bands, dupSrc); withSh and bands are persisted on `b`.
+    */
+  private[graft] def gateBatch(b: GateStores.Batch, idx: Store, sh: Store)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val withSh = b.persist(Dedup.shingleSets(b.rows, "doc_id", "text", 3))
+    val sigs = Dedup.minhashSignatures(withSh, "doc_id", 32)
+    val bands = b.persist(Dedup.bandBuckets(sigs, "doc_id", 32, 2))
+    val dupSrc = GateStores.dupSources(b, withSh, bands, "doc_id",
+      Seq("band", "bucket"), idx, sh,
+      Dedup.verifyJaccardSides(_, _, _, "doc_id", 0.5, broadcastB = true))
+    (withSh, bands, dupSrc)
+  }
+
   def replayNearDupGate(s: SparkSession, d: String): DataFrame =
     replayInternal(s, d, ckpt = GateStores.freshCkpt("ingest_gate", d),
       wipeStores = true, crash = None)
@@ -58,12 +73,7 @@ object IngestGate {
     GateStores.replay(s, "ingest_gate", docs, "doc_id",
         Scratch.dir("ingest_gate_src", d), stores = Seq(dec, idx, sh),
         folded = Seq(idx, sh), ckpt, wipeStores, crash) { b =>
-      val withSh = b.persist(Dedup.shingleSets(b.rows, "doc_id", "text", 3))
-      val sigs = Dedup.minhashSignatures(withSh, "doc_id", 32)
-      val bands = b.persist(Dedup.bandBuckets(sigs, "doc_id", 32, 2))
-      val dupSrc = GateStores.dupSources(b, withSh, bands, "doc_id",
-        Seq("band", "bucket"), idx, sh,
-        Dedup.verifyJaccardSides(_, _, _, "doc_id", 0.5, broadcastB = true))
+      val (withSh, bands, dupSrc) = gateBatch(b, idx, sh)
       Seq(dec -> GateStores.decide(b.rows, "doc_id", dupSrc),
         idx -> bands,
         sh -> withSh)

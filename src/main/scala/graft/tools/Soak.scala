@@ -8,7 +8,6 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
-import graft.streaming.GateStores
 
 /** The scale soak:
   * `runMain graft.tools.Soak <tier> [baseDir] [soakDir] [outDir] [key…]`
@@ -17,23 +16,17 @@ import graft.streaming.GateStores
   * ones) over it on [[graft.Graft.session]], writes each key's result
   * parquet to `outDir/<key>` and one run record to
   * `outDir/soak_run.json`: tier, folds, tables, keys, paths, the
-  * committed oracle texts, timings and the run's candidates-pruned
-  * store fetches. `scripts/soak_check.py <outDir> <artifact>` then
-  * checks every key of the record against DuckDB at the amplified
-  * scale, so a constant that only looks safe at the test scale (a
-  * bucket cap, a broadcast threshold, a salting fan-out) fails as a
-  * hash mismatch.
+  * committed oracle texts and timings. `scripts/soak_check.py <outDir>
+  * <artifact>` then checks every key of the record against DuckDB at
+  * the amplified scale, so a constant that only looks safe at the test
+  * scale (a bucket cap, a broadcast threshold, a salting fan-out) fails
+  * as a hash mismatch.
   *
   * Timings: amplification, each durable derivation (so per-key readings
   * are steady-state, as in Bench), each key's first run (`count()`) and
   * warm run plus write, and a `q_filter_eq` calibration probe over the
   * base dir at each phase boundary (quiet floor 0.09 s), so a slow
   * reading on a loaded host is attributable without a re-run.
-  *
-  * `SPARK_GRAFT_PRUNE_BYTES` overrides the gates' store-fetch cutover
-  * ([[GateStores.PruneStoreBytes]]); 0 forces the candidates-pruned
-  * fetch on every batch. Gate decisions are branch-invariant
-  * (StreamingSpec), so the hashes do not move.
   */
 object Soak {
 
@@ -90,8 +83,8 @@ object Soak {
     * pair-generating document keys (minhash, ngram, embedding) are left
     * out: every fold is a near-duplicate of fold 0, so their true pair
     * set grows as folds², which measures the corpus, not the engine.
-    * The two gates are pair-generating on purpose: at 100 folds their
-    * stores cross the candidates-pruned fetch cutover; the ANN gate
+    * The two gates are pair-generating on purpose: at 100 folds every
+    * batch verifies against a store of near-duplicates; the ANN gate
     * runs its wide-band parameterization (see its scaladoc).
     */
   val sf10: Tier = Tier("sf10", 100, Seq("documents", "events", "embeddings"),
@@ -108,7 +101,6 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val tier = args.headOption.flatMap(tiers.get).getOrElse(throw new IllegalArgumentException(
       s"usage: Soak <${tiers.keys.mkString("|")}> [baseDir] [soakDir] [outDir] [key…]"))
-    sys.env.get("SPARK_GRAFT_PRUNE_BYTES").foreach(v => GateStores.PruneStoreBytes = v.toLong)
     val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, tier, args.lift(1).getOrElse("/root/testdata/sf0.1"),
@@ -149,7 +141,6 @@ object Soak {
     val amplify = clock(graft.ops.ScaleFold.amplify(spark, baseDir, soakDir,
       tier.folds, tier.tables))
     println(f"[soak] amplify ${tier.tables.mkString("+")} x${tier.folds}: $amplify%.1f s")
-    val pruneBefore = GateStores.prunedFetches.get()
     probe("start")
     val derives = if (!tier.derive) Nil else {
       val ts = SparkEntry.derives.toSeq.map { case (name, fn) =>
@@ -177,8 +168,7 @@ object Soak {
       "oracle_sql" -> SeqMap.from(todo.map(k => k -> SparkEntry.oracleSql(k))),
       "timings" -> SeqMap("amplify_sec" -> amplify, "calib_floor" -> 0.09,
         "calib_probes" -> probes.result(), "derive" -> SeqMap.from(derives),
-        "queries" -> SeqMap.from(queries)),
-      "pruned_fetches" -> (GateStores.prunedFetches.get() - pruneBefore))
+        "queries" -> SeqMap.from(queries)))
     java.nio.file.Files.writeString(new File(outDir, "soak_run.json").toPath,
       Profile.json.writerWithDefaultPrettyPrinter().writeValueAsString(record))
     println(s"[soak] record -> $outDir/soak_run.json")

@@ -196,7 +196,6 @@ class PropertySpec extends AnyFunSuite {
       }
       assert(rec.get("timings").get("derive").size == SparkEntry.derives.size)
       assert(rec.get("timings").get("calib_probes").size == 3)
-      assert(rec.get("pruned_fetches").asLong == 0)
       // the amplified corpus is the tier's: 10 folds of every table
       assert(spark.read.parquet(s"$tmp/corpus/documents.parquet").count() ==
         10 * graft.model.Tables.documents(spark, sf).count())

@@ -904,36 +904,80 @@ class StreamingSpec extends AnyFunSuite {
       "a batch failed in the middle of its landings must resume to the uninterrupted postings")
   }
 
-  test("pruned store fetch (PruneStoreBytes=0): decisions identical to the scan branch, and the branch actually runs") {
-    // The candidates-pruned fetch is the ONLY store-fetch shape that
-    // survives 100 TB, and every fixture store sits far under the
-    // production cutover — so force the cutover to zero and prove the
-    // pruned branch (a) executes (the counter advances) and (b) gates
-    // identically to the scan branch (VERDICT r13 #1 / ADVICE r13).
-    val sf = "/root/testdata/sf0.001"
-    val scanEmb = graft.streaming.EmbGate.replayEmbNearDupGate(spark, sf,
-        threshold = 0.4, bands = 96, bitsPerBand = 8)
-      .as[(Long, Boolean, Option[Long])].collect().toSeq
-    val scanDoc = graft.streaming.IngestGate.replayNearDupGate(spark, sf)
-      .as[(Long, Boolean, Option[Long])].collect().toSeq
-    val before = graft.streaming.GateStores.prunedFetches.get()
-    graft.streaming.GateStores.PruneStoreBytes = 0L
-    try {
-      val prunedEmb = graft.streaming.EmbGate.replayEmbNearDupGate(spark, sf,
-          threshold = 0.4, bands = 96, bitsPerBand = 8)
-        .as[(Long, Boolean, Option[Long])].collect().toSeq
-      val prunedDoc = graft.streaming.IngestGate.replayNearDupGate(spark, sf)
-        .as[(Long, Boolean, Option[Long])].collect().toSeq
-      assert(graft.streaming.GateStores.prunedFetches.get() >= before + 4,
-        "the pruned branch must actually execute (2 gates × batches 1,2)")
-      assert(prunedEmb == scanEmb,
-        "pruned-fetch decisions must equal scan-fetch decisions (EmbGate)")
-      assert(prunedDoc == scanDoc,
-        "pruned-fetch decisions must equal scan-fetch decisions (IngestGate)")
-    } finally {
-      graft.streaming.GateStores.PruneStoreBytes =
-        graft.streaming.GateStores.DefaultPruneStoreBytes
+  test("gate verify: the store streams map-side through the candidate join, no exchange carries its rows") {
+    // dupSources reads the whole visible store into the verify, which
+    // stays cheap only because the verify broadcasts the candidates and
+    // the batch: store rows must reach no exchange (shuffle or
+    // broadcast) before an aggregate has collapsed them to per-batch-key
+    // results. Pinned for both verifiers on batch 1 over batch 0's stores.
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.types.StructType
+    import graft.streaming.{EmbGate, GateStores, IngestGate}
+    val tmp = java.nio.file.Files.createTempDirectory("gate_verify").toFile
+    val helper = new AdaptiveSparkPlanHelper {}
+    def isScanOf(p: SparkPlan, dir: String) = p match {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(dir))
+      case _ => false
     }
+    // does `p` carry rows of a scan of `dir` that no aggregate has collapsed
+    def rawRowsOf(p: SparkPlan, dir: String): Boolean = p match {
+      case _: BaseAggregateExec => false
+      case q: QueryStageExec => rawRowsOf(q.plan, dir)
+      case o => isScanOf(o, dir) || o.children.exists(rawRowsOf(_, dir))
+    }
+    // batch 0 lands the stores, batch 1 runs the gate against them
+    def gateBatch1(src: DataFrame, key: String, stores: Seq[GateStores.Store])(
+        gate: GateStores.Batch => Seq[DataFrame]): (Seq[Row], Long) = {
+      val width = src.agg(max(col(key))).first().getLong(0) / GateStores.Slices + 1
+      def batch(i: Long) = new GateStores.Batch(
+        src.filter(col(key) >= i * width && col(key) < (i + 1) * width), i, "verify_spec")
+      val b0 = batch(0L)
+      stores.zip(gate(b0).tail).foreach { case (st, df) => st.land(df, 0L) }
+      b0.release()
+      val b1 = batch(1L)
+      val dupSrc = gate(b1).head
+      val got = dupSrc.collect().toSeq
+      b1.release()
+      val plan = dupSrc.queryExecution.executedPlan
+      val store = stores.last.dir
+      assert(helper.collectWithSubqueries(plan) { case p if isScanOf(p, store) => p }.nonEmpty,
+        s"$key: the verify must read the store at $store:\n$plan")
+      val carrying = helper.collectWithSubqueries(plan) {
+        case e: Exchange if rawRowsOf(e.child, store) => e.nodeName
+      }
+      assert(carrying.isEmpty, s"$key: $carrying carry store rows:\n$plan")
+      (got, width)
+    }
+    try {
+      val docIdx = GateStores.Store(s"$tmp/doc_idx",
+        StructType.fromDDL("doc_id BIGINT, band INT, bucket BIGINT"))
+      val docSh = GateStores.Store(s"$tmp/doc_sh",
+        StructType.fromDDL("doc_id BIGINT, sh ARRAY<BIGINT>"))
+      val docs = graft.model.Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+      val (docDups, docWidth) = gateBatch1(docs, "doc_id", Seq(docIdx, docSh)) { b =>
+        val (withSh, bands, dupSrc) = IngestGate.gateBatch(b, docIdx, docSh)
+        Seq(dupSrc, bands, withSh)
+      }
+      val vecIdx = EmbGate.idxStore(s"$tmp/vec_idx")
+      val vecStore = EmbGate.vecStore(s"$tmp/vec_store")
+      val embs = graft.model.Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+      val (vecDups, vecWidth) = gateBatch1(embs, "vec_id", Seq(vecIdx, vecStore)) { b =>
+        val (vecs, buckets, dupSrc) = EmbGate.gateBatch(b, vecIdx, vecStore,
+          threshold = 0.4, bands = 96, bitsPerBand = 8)
+        Seq(dupSrc, buckets, vecs)
+      }
+      // each verify found duplicates, some of them in the batch-0 store
+      for ((name, dups, width) <- Seq(("IngestGate", docDups, docWidth),
+          ("EmbGate", vecDups, vecWidth))) {
+        assert(dups.nonEmpty, s"$name: batch 1 must find duplicates")
+        assert(dups.exists(_.getLong(1) < width),
+          s"$name: some batch-1 duplicate must verify against the batch-0 store")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 
   test("store compaction: the replay folds settled batches into a snapshot, and a crash AFTER the fold resumes identically") {
